@@ -196,7 +196,7 @@ object Bench {
       def onePass(i: Int): (Double, Double) = {
         val t0 = System.nanoTime()
         val c0 = cpuNanos
-        try { force(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
+        force(fn(spark, sfDir))
         val dt = (System.nanoTime() - t0) / 1e9
         val dc = if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9
         if (debug) System.err.println(

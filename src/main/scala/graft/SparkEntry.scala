@@ -431,20 +431,10 @@ object SparkEntry {
     "q53_curate" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val docs = Tables.documents(s, d)
-      // materializeStages: at 10 stages the recompute-lineage mode
-      // re-derives the 5-stage text prefix once per downstream action
-      // (~6×) — measured 24.0 s vs 7.3 s at sf0.1 when the chain grew
-      // from 7 stages. Production 100 TB runs persist stages to the
-      // distributed store between jobs; the disk-backed local
-      // checkpoint is that pattern's single-node analog, so the
-      // REGISTERED config materializes. Recompute mode stays the
-      // opt-out for storage-constrained runs (values identical —
-      // PipelineSpec-pinned).
       graft.operators.Pipeline.curate(
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
-        Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000),
-        materializeStages = true)
+        Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000))
     }),
     // q53b: the chain with the SOURCE-QUOTA knob ON (r13 — q90's
     // per-source release-recipe budgets replacing the per-language
@@ -456,7 +446,6 @@ object SparkEntry {
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
         Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000),
-        materializeStages = true,
         sourceQuotaMyriad =
           Map("src0" -> 3000, "src1" -> 2500, "src2" -> 1500, "src3" -> 500))
     }),
@@ -471,7 +460,6 @@ object SparkEntry {
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0),
         Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000),
-        materializeStages = true,
         urlGate = true)
     }),
     // q99: hybrid BM25+ANN retrieval fused by integer RRF — the
@@ -519,8 +507,7 @@ object SparkEntry {
       val rest = docs.filter(col("doc_id") % 97 =!= 0)
       val st = graft.operators.Pipeline.curateState(
         rest.filter(col("doc_id") % 7 =!= 0), bench,
-        Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000),
-        materializeStages = true)
+        Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000))
       graft.operators.Pipeline.curateDelta(rest.filter(col("doc_id") % 7 === 0), st)
     }),
     // q103b: the same incremental curation from the PERSISTED+LOADED

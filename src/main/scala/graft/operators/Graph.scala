@@ -167,8 +167,8 @@ object Graph {
     * billion-vertex graph (vertices fact-sized, rank vector too big to
     * ship) the same iteration therefore runs as co-partitioned shuffle
     * joins unaided; `broadcastRanks = Some(x)` is the manual override
-    * both ways — the same storage-vs-wall trade
-    * Pipeline.materializeStages documents. Each iteration's checkpoint
+    * both ways (executor memory for the shipped rank vector vs wall
+    * time for the per-step edge shuffle). Each iteration's checkpoint
     * frees its predecessor's blocks once materialized (only the LAST
     * checkpoint feeds the returned lineage), so executor storage holds
     * ~one rank vector, not `iters` of them. `iters` is a fixed

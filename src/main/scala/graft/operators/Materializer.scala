@@ -1,79 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
-/** STAGE MATERIALIZER (r17, the r16 verdict's scale-safety task): the
-  * single switchboard behind every multi-consumer stage checkpoint in
-  * the heavy chains (q53/q103 curation stages, the q104 KN level
-  * tables, the q102 passage index). A frame that feeds two or more
-  * consumers replays its WHOLE lineage per consumer when left lazy —
-  * the r16 measurement: q103's single executed plan carried 516
-  * parquet scans / 870 exchanges before per-stage materialization, 0 /
-  * 35 after — so the chains materialize each stage once. HOW it
-  * materializes is a deployment decision, not an algorithm decision,
-  * and `spark.graft.materializer` selects it per session:
-  *
-  *  - `local` (default): eager `localCheckpoint` — blocks live in
-  *    executor MEMORY_AND_DISK and lineage is TRUNCATED, so an
-  *    executor loss is unrecoverable. Right for single-node / bench
-  *    runs (this sandbox), where "executor loss" means the JVM died
-  *    anyway, and the cheapest option by far (no replication, no
-  *    distributed-store round-trip).
-  *  - `disk`: eager `persist(DISK_ONLY)` with lineage KEPT — an
-  *    executor loss recomputes the lost partitions from source (slow
-  *    but correct). The cluster-safe in-session mode for corpus-text
-  *    frames whose recompute is expensive but possible. Blocks are
-  *    released by the same paths as `local` (unpersist / the
-  *    ContextCleaner once the frame is GC'd).
-  *  - `reliable`: `checkpoint()` into `spark.graft.checkpointDir`
-  *    (default: `java.io.tmpdir`/graft_reliable_ckpt — POINT IT AT A
-  *    DISTRIBUTED STORE in production). Survives executor loss
-  *    outright; costs a write+read of the stage through the store.
-  *    The in-session analog of persisting stages as ModelStore tables
-  *    between jobs (which remains the right shape for multi-job
-  *    pipelines — see ModelStore.saveCurateState).
-  *  - `none`: pass-through — the fully-composed lazy plan. The
-  *    plan-audit / debugging surface (values identical, wall time
-  *    pays the recompute cascade).
-  *
-  * Executor-loss semantics, explicitly (the r16 verdict's ask): at
-  * 100 TB on ~1000 executors, `local` turns any single executor loss
-  * into a job failure with no recovery path (lineage gone); `disk`
-  * recovers by recomputation; `reliable` recovers from the store.
-  * Production 100 TB runs should set `disk` or `reliable`; the
-  * default stays `local` so single-node bench numbers remain
-  * comparable across rounds and no storage round-trip is smuggled
-  * into measured paths.
-  *
-  * All modes are EAGER (the frame is fully computed when this returns)
-  * — callers rely on construction-time execution to keep downstream
-  * plans flat, and the bench's timed region intentionally includes it.
+/** STAGE MATERIALIZER: the one checkpoint behind every multi-consumer
+  * stage of the curation chains ([[Pipeline]]). A frame that feeds two
+  * or more consumers replays its WHOLE lineage per consumer when left
+  * lazy (r16: q103's single executed plan carried 516 parquet scans /
+  * 870 exchanges before per-stage materialization, 0 / 35 after), so
+  * each stage is computed once, eagerly, and its lineage truncated.
+  * See [[Pipeline]] for the execution and fault-tolerance contract.
   */
 object Materializer {
-  final val ModeKey = "spark.graft.materializer"
-  final val DirKey = "spark.graft.checkpointDir"
-
-  def materialize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get(ModeKey, "local") match {
-      case "local" => df.localCheckpoint(true)
-      case "disk" =>
-        val p = df.persist(StorageLevel.DISK_ONLY)
-        // count() materializes the full InMemoryRelation (the cache
-        // sits below the aggregate, so every column is computed)
-        p.count()
-        p
-      case "reliable" =>
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(spark.conf.get(DirKey,
-            System.getProperty("java.io.tmpdir") + "/graft_reliable_ckpt"))
-        df.checkpoint(true)
-      case "none" => df
-      case other => throw new IllegalArgumentException(
-        s"$ModeKey must be local|disk|reliable|none, got '$other'")
-    }
-  }
-
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
 }

@@ -79,35 +79,26 @@ import org.apache.spark.sql.functions._
   * checkpointed token frame; q47 shard-local windows — no global
   * sort anywhere). The only driver-side materialization is the
   * tokenizer vocab (≤ m short strings, q51's documented collect).
+  *
+  * Execution: the chain functions ([[curate]], [[curateState]],
+  * [[curateDeltaDocs]], [[curateDelta]], [[advanceState]]) EXECUTE
+  * their stages while building the frame. Every stage that feeds two or
+  * more consumers is computed once through [[Materializer]] before the
+  * next stage is planned (left lazy, each consumer replays the whole
+  * upstream lineage), so construction runs the chain's jobs and the
+  * returned frame's plan starts at the last checkpoint. The checkpoints
+  * are `localCheckpoint` blocks: single-node semantics, held in executor
+  * storage with the lineage truncated, so they do NOT survive an
+  * executor loss — a lost executor fails the job instead of recomputing
+  * the stage. Blocks are freed when their frames are GC'd or unpersisted
+  * (`spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())`,
+  * the bench's per-slot hygiene). A multi-job production run writes the
+  * stages to the distributed store between jobs instead
+  * (ModelStore.saveCurateState is that path for the release state).
   */
 object Pipeline {
+  import Materializer.materialize
 
-  /** `materializeStages`: the cleaned and decontaminated corpus
-    * frames each feed several downstream consumers (decontaminate's
-    * two postings passes read cleaned; the vocab collect and the
-    * mixture both execute decon), which otherwise RECOMPUTE their
-    * lineage (parquet re-scans + per-row reassembly —
-    * throughput-cheap, no storage footprint: the 100 TB-safe
-    * default). Flipping it materializes each stage ONCE through
-    * [[Materializer]] — HOW is a per-session deployment choice
-    * (`spark.graft.materializer`): eager localCheckpoint by default
-    * (single-node semantics — non-fault-tolerant, corpus-sized
-    * executor storage), `disk`/`reliable` for cluster runs where an
-    * executor loss must not kill the job, `none` to audit the
-    * fully-composed plan. Production 100 TB multi-job pipelines
-    * should still write stages to the distributed store between jobs
-    * (ModelStore.saveCurateState is that path); the knob covers the
-    * in-session case.
-    *
-    * EAGER SIDE EFFECT (r16 ADVICE): with materialization on,
-    * DataFrame CONSTRUCTION executes the chain stage by stage —
-    * [[curate]], [[curateState]], [[curateDelta]], [[advanceState]]
-    * run their jobs before any action on the returned frame, and the
-    * materialized blocks stay resident until the frames are GC'd (or
-    * `spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())`
-    * — the bench's per-slot hygiene). Callers that only want the plan
-    * (explain, audits) must pass materialize = false.
-    */
   /** The chain's stage-0..6b intermediates — ONE definition (r14)
     * shared by [[curate]], [[curateState]] (q103's frozen-artifact
     * builder), and the specs, so the full chain and the incremental
@@ -124,7 +115,6 @@ object Pipeline {
              vocabM: Int = 64, maxN: Int = 4,
              capacity: Int = 512, shards: Int = 8,
              gatePct: Int = 5, subK: Int = 6,
-             materializeStages: Boolean = false,
              ruleGate: Boolean = true,
              memCutMyriad: Int = 2000,
              sourceQuotaMyriad: Map[String, Int] = Map.empty,
@@ -144,7 +134,7 @@ object Pipeline {
       if (!urlGate) documents
       else documents.filter(UrlFilter.plantedPassCol(col("doc_id")))
     val c = chainStages(corpus, benchmark, segWords, shingleN, gatePct,
-      subK, materializeStages, ruleGate, memCutMyriad)
+      subK, ruleGate, memCutMyriad)
     // 7. vocab trained on the curated corpus; token-budget admission —
     // per-LANGUAGE (q48b, the default) or per-SOURCE (q90, the
     // `sourceQuotaMyriad` knob, r13): release recipes increasingly
@@ -176,8 +166,7 @@ object Pipeline {
   private[graft] def chainStages(
       documents: DataFrame, benchmark: DataFrame,
       segWords: Int, shingleN: Int, gatePct: Int, subK: Int,
-      materializeStages: Boolean, ruleGate: Boolean,
-      memCutMyriad: Int): ChainOut = {
+      ruleGate: Boolean, memCutMyriad: Int): ChainOut = {
     // 0. unicode canonicalization (q75, since late r11) — the
     // production opening move: NFC + control/zero-width strip +
     // whitespace collapse BEFORE any hashing, so encoding-variant
@@ -203,50 +192,24 @@ object Pipeline {
     // pass set back evaluated the stage-0 normalize prefix TWICE and
     // paid a join; gopherFilter keeps one pass and zero joins
     // (identical rows — the rule expressions are shared).
-    val ruled0 =
-      if (!ruleGate) docs0
-      else QualityRules.gopherFilter(docs0)
     // ruled/canon each feed TWO+ consumers (the dedup pair below, plus
     // curateState's digest projections): un-checkpointed they replayed
     // the stage-0/0b prefix once per consumer (r16 measurement: q103's
     // single executed plan carried 516 parquet scans — the recompute
-    // cascade, not ReuseExchange, is what lazy sharing buys here), so
-    // the materialize knob now covers them like the later text stages.
-    val ruled = if (materializeStages) Materializer.materialize(ruled0) else ruled0
+    // cascade, not ReuseExchange, is what lazy sharing buys here).
+    val ruled = materialize(
+      if (!ruleGate) docs0
+      else QualityRules.gopherFilter(docs0))
     // 1. exact dedup — survivors keep their canonical text and lang
-    val canon0 = TextOps.dedupExact(ruled).select("doc_id")
-      .join(ruled, "doc_id")
-    val canon = if (materializeStages) Materializer.materialize(canon0) else canon0
+    val canon = materialize(TextOps.dedupExact(ruled).select("doc_id")
+      .join(ruled, "doc_id"))
     // 2. segment dedup — cleaned text replaces the original
-    val cleaned0 = TextOps.segmentDedup(canon, segWords)
+    val cleaned = materialize(TextOps.segmentDedup(canon, segWords)
       .select(col("doc_id"), col("clean_text").as("text"))
-      .join(canon.select("doc_id", "lang"), "doc_id")
-    val cleaned = if (materializeStages) Materializer.materialize(cleaned0) else cleaned0
+      .join(canon.select("doc_id", "lang"), "doc_id"))
     // 3. substring dedup — unaligned duplicated spans cut from the
-    // segment-cleaned text (q71 keep-first); a NULL original stays
-    // NULL (the stage-2 discipline), and the cut text is what every
-    // later stage sees. The marked-start frame is ALWAYS checkpointed:
-    // it is narrow (doc_id + int positions, no text — the q69 docB
-    // class), and without it every downstream consumer would re-derive
-    // the whole window machinery on top of the stage-1/2 lineage
-    // (measured past single-JVM execution memory at 10× bench scale).
-    // The cut itself is then one broadcast-scale join + a pure map, so
-    // each downstream pass still evaluates the corpus text exactly as
-    // often as it did before this stage existed.
-    val starts = Materializer.materialize(
-      ExactSubstr.windowStarts(cleaned, subK))
-    val subbed0 = cleaned
-      .join(starts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"), col("text"),
-        coalesce(col("starts"), array().cast("array<int>")).as("st"),
-        filter(split(lower(TextOps.wsTrim(col("text"))), "\\s+"),
-          t => length(t) > 0).as("toks"))
-      .select(col("doc_id"), col("lang"),
-        when(col("text").isNull, lit(null).cast("string"))
-          .otherwise(concat_ws(" ", expr(
-            s"filter(toks, (t, j) -> NOT exists(st, p -> j+1 >= p AND j+1 < p + $subK))")))
-          .as("text"))
-    val subbed = if (materializeStages) Materializer.materialize(subbed0) else subbed0
+    // segment-cleaned text (q71 keep-first)
+    val subbed = cutSubstrings(cleaned, ExactSubstr.windowStarts(cleaned, subK), subK)
     // 4. quality gate: p`gatePct` cutoffs from the cut corpus
     // (2-row driver collect — the trainCodebook scalar protocol),
     // applied as a filter. s21 receives these SAME cutoffs frozen.
@@ -256,20 +219,18 @@ object Pipeline {
     // form on both sides: a decomposed benchmark copy still hits)
     val bench0 = benchmark.select(col("doc_id"),
       TextOps.normalizeCol(col("text")).as("text"))
-    val decon0 = TextOps.decontaminate(gated, bench0, shingleN)
+    val decon = materialize(TextOps.decontaminate(gated, bench0, shingleN)
       .filter(col("contaminated") === 0).select("doc_id")
-      .join(gated, "doc_id")
-    val decon = if (materializeStages) Materializer.materialize(decon0) else decon0
+      .join(gated, "doc_id"))
     // 6. PII redaction — the redacted text is what trains + tokenizes
-    // (checkpointed with the other text stages when materializing: the
-    // vocab collect and the mixture solve both act on it).
+    // (checkpointed: the vocab collect and the mixture solve both act
+    // on it).
     // INLINE projection (r17): redaction is a pure per-row transform;
     // stage 6 only needs the redacted text, so the piiRedact
     // counts (three extra regexp passes over the corpus) and the
     // join-back are skipped — same rows, same (doc_id, text, lang).
-    val red0 = decon.select(col("doc_id"),
-      TextOps.piiRedactCol(col("text")).as("text"), col("lang"))
-    val red = if (materializeStages) Materializer.materialize(red0) else red0
+    val red = materialize(decon.select(col("doc_id"),
+      TextOps.piiRedactCol(col("text")).as("text"), col("lang")))
     // 6b. memorization gate (q84) — the duplication-risk drop before
     // training: risk computed ON the redacted corpus (both the df
     // table and the ratios — the stage sees exactly what would train),
@@ -281,17 +242,40 @@ object Pipeline {
     // whole stage-6b postings machinery on top of red.
     val mem =
       if (memCutMyriad < 0) red
-      else {
-        val mem0 = TextOps.memorizationRisk(red, shingleN)
-          .filter(col("n_dup") * lit(10000L) <=
-            lit(memCutMyriad.toLong) * col("n_shingles"))
-          .select("doc_id")
-          .join(red, "doc_id")
-        if (materializeStages) Materializer.materialize(mem0) else mem0
-      }
+      else materialize(TextOps.memorizationRisk(red, shingleN)
+        .filter(col("n_dup") * lit(10000L) <=
+          lit(memCutMyriad.toLong) * col("n_shingles"))
+        .select("doc_id")
+        .join(red, "doc_id"))
     ChainOut(ruled, canon, cleaned, subbed, lenCut, alphaCut,
       gated, decon, red, mem)
   }
+
+  /** Stage 3's cut, shared by the batch and delta chains: every token
+    * covered by a marked `subK`-word window start drops; a NULL
+    * original stays NULL (the stage-2 discipline), and the cut text is
+    * what every later stage sees. The marked-start frame is narrow
+    * (doc_id + int positions, no text — the q69 docB class) and is
+    * checkpointed: without it every downstream consumer would re-derive
+    * the whole window machinery on top of the stage-1/2 lineage
+    * (measured past single-JVM execution memory at 10× bench scale).
+    * The cut itself is then one broadcast-scale join + a pure map, so
+    * each downstream pass still evaluates the corpus text exactly as
+    * often as it did before this stage existed.
+    */
+  private def cutSubstrings(cleaned: DataFrame, starts: DataFrame,
+                            subK: Int): DataFrame =
+    materialize(cleaned
+      .join(materialize(starts), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("lang"), col("text"),
+        coalesce(col("starts"), array().cast("array<int>")).as("st"),
+        filter(split(lower(TextOps.wsTrim(col("text"))), "\\s+"),
+          t => length(t) > 0).as("toks"))
+      .select(col("doc_id"), col("lang"),
+        when(col("text").isNull, lit(null).cast("string"))
+          .otherwise(concat_ws(" ", expr(
+            s"filter(toks, (t, j) -> NOT exists(st, p -> j+1 >= p AND j+1 < p + $subK))")))
+          .as("text")))
 
   /** The frozen p`pct` quality cutoffs (n_chars, alpha_ratio) of a
     * corpus, from the q46 sketch — the pair batch stage 3 applies and
@@ -391,17 +375,14 @@ object Pipeline {
                   vocabM: Int = 64, maxN: Int = 4,
                   capacity: Int = 512, shards: Int = 8,
                   gatePct: Int = 5, subK: Int = 6,
-                  materializeStages: Boolean = false,
                   ruleGate: Boolean = true,
                   memCutMyriad: Int = 2000): CurateState = {
     val c = chainStages(v1docs, benchmark, segWords, shingleN, gatePct,
-      subK, materializeStages, ruleGate, memCutMyriad)
+      subK, ruleGate, memCutMyriad)
     // the mem stage feeds BOTH the vocab collect and the rate solve —
-    // chainStages materializes it once under the knob (r17), so both
-    // consumers read the checkpointed frame here
-    val mem = c.mem
-    val vocab = TextOps.tokenizerVocabSeq(mem, vocabM, maxN)
-    val rates = TextOps.tokenMixtureRates(mem, targetMyriad, vocab, maxN)
+    // chainStages materializes it once, so both read the checkpoint
+    val vocab = TextOps.tokenizerVocabSeq(c.mem, vocabM, maxN)
+    val rates = TextOps.tokenMixtureRates(c.mem, targetMyriad, vocab, maxN)
     val bench0 = benchmark.select(col("doc_id"),
       TextOps.normalizeCol(col("text")).as("text"))
     // Digest frames are NARROW (one digest/shingle column, the q69
@@ -412,19 +393,17 @@ object Pipeline {
     // production analog persists these tables to the store (which
     // ModelStore.saveCurateState does), so the checkpoint is the
     // single-node stand-in, not a new storage class.
-    def ck(df: DataFrame): DataFrame =
-      if (materializeStages) Materializer.materialize(df) else df
     CurateState(vocab, rates, c.lenCut, c.alphaCut, memCutMyriad, ruleGate,
       segWords, shingleN, maxN, capacity, shards, subK,
-      benchShingles = ck(Dedup.postings(bench0, shingleN)
+      benchShingles = materialize(Dedup.postings(bench0, shingleN)
         .select(col("shingle")).distinct()),
-      canonDigests = ck(c.ruled
+      canonDigests = materialize(c.ruled
         .select(md5(TextOps.normText(col("text"))).as("h")).distinct()),
-      segDigests = ck(TextOps.segmentHashFrame(c.canon, segWords)
+      segDigests = materialize(TextOps.segmentHashFrame(c.canon, segWords)
         .select(col("h")).distinct()),
-      winDigests = ck(ExactSubstr.windowHashFrame(c.cleaned, subK)
+      winDigests = materialize(ExactSubstr.windowHashFrame(c.cleaned, subK)
         .select(col("h")).distinct()),
-      corpusShingles = ck(Dedup.postings(c.red, shingleN)
+      corpusShingles = materialize(Dedup.postings(c.red, shingleN)
         .select(col("shingle")).distinct()))
   }
 
@@ -442,25 +421,21 @@ object Pipeline {
     * the delta" assertion (stage 7/8 diverge by the frozen vocab/rates
     * contract, so the equality claim lives here).
     */
-  def curateDeltaDocs(delta: DataFrame, st: CurateState,
-                      materialize: Boolean = true): DataFrame =
-    deltaChainStages(delta, st, materialize).mem
+  def curateDeltaDocs(delta: DataFrame, st: CurateState): DataFrame =
+    deltaChainStages(delta, st).mem
 
-  /** `materialize` (r16): the delta chain's text stages each feed two
-    * consumers (the composed-select pair per stage), and the frozen
-    * state frames are themselves referenced through every stage's
-    * lineage — left lazy, the registered q103 plan carried 516 parquet
-    * scans / 870 exchanges (q103c: 1354 / 2075) from the recompute
-    * cascade. The delta is increment-sized (a monthly run's NEW docs),
-    * so the eager per-stage checkpoint is cheap by construction and is
-    * exactly the persist-stages-between-jobs pattern a production
-    * incremental release runs. `false` keeps the fully-composed lazy
-    * plan (the plan-audit surface; values identical either way).
+  /** The delta chain's text stages each feed two consumers (the
+    * composed-select pair per stage), and the frozen state frames are
+    * themselves referenced through every stage's lineage — left lazy,
+    * the registered q103 plan carried 516 parquet scans / 870 exchanges
+    * (q103c: 1354 / 2075) from the recompute cascade (r16), so every
+    * stage is checkpointed. The delta is increment-sized (a monthly
+    * run's NEW docs), so the eager per-stage checkpoint is cheap by
+    * construction and is exactly the persist-stages-between-jobs
+    * pattern a production incremental release runs.
     */
-  private[graft] def deltaChainStages(delta: DataFrame, st: CurateState,
-                                      materialize: Boolean = true): DeltaChainOut = {
-    def ck(df: DataFrame): DataFrame =
-      if (materialize) Materializer.materialize(df) else df
+  private[graft] def deltaChainStages(delta: DataFrame,
+                                      st: CurateState): DeltaChainOut = {
     // 0 + 0b: stateless, delta only — inline filter, one text pass,
     // no join (the r17 batch-chain rewrite, shared expressions)
     val docs0 = delta.select(col("doc_id"), col("lang"),
@@ -472,40 +447,27 @@ object Pipeline {
     // within the delta the smallest doc_id is canonical (batch q20)
     val withH = ruled.select(col("doc_id"), col("lang"), col("text"),
       md5(TextOps.normText(col("text"))).as("h"))
-    val fresh = ck(withH.join(st.canonDigests, Seq("h"), "left_anti"))
-    val canon = ck(fresh.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
+    val fresh = materialize(withH.join(st.canonDigests, Seq("h"), "left_anti"))
+    val canon = materialize(fresh.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
       .join(fresh.drop("h"), "doc_id"))
     // 2. segment strip vs (within-delta dups ∪ v1 segments)
-    val cleaned = ck(TextOps.segmentDedupVs(canon, st.segWords, Some(st.segDigests))
+    val cleaned = materialize(TextOps.segmentDedupVs(canon, st.segWords, Some(st.segDigests))
       .select(col("doc_id"), col("clean_text").as("text"))
       .join(canon.select("doc_id", "lang"), "doc_id"))
-    // 3. substring cut vs (within-delta keep-first ∪ v1 windows); the
-    // marked-start frame is narrow and always checkpointed (the q53
-    // stage-3 discipline)
-    val starts = Materializer.materialize(
-      ExactSubstr.windowStartsVs(cleaned, st.subK, st.winDigests))
-    val subbed = ck(cleaned
-      .join(starts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"), col("text"),
-        coalesce(col("starts"), array().cast("array<int>")).as("st"),
-        filter(split(lower(TextOps.wsTrim(col("text"))), "\\s+"),
-          t => length(t) > 0).as("toks"))
-      .select(col("doc_id"), col("lang"),
-        when(col("text").isNull, lit(null).cast("string"))
-          .otherwise(concat_ws(" ", expr(
-            s"filter(toks, (t, j) -> NOT exists(st, p -> j+1 >= p AND j+1 < p + ${st.subK}))")))
-          .as("text")))
+    // 3. substring cut vs (within-delta keep-first ∪ v1 windows)
+    val subbed = cutSubstrings(cleaned,
+      ExactSubstr.windowStartsVs(cleaned, st.subK, st.winDigests), st.subK)
     // 4. quality gate at the FROZEN v1 cutoffs
-    val gated = ck(qualityGate(subbed, st.lenCut, st.alphaCut))
+    val gated = materialize(qualityGate(subbed, st.lenCut, st.alphaCut))
     // 5. decontamination against the frozen benchmark shingle set
     val dirty = Dedup.postings(gated, st.shingleN)
       .join(st.benchShingles, Seq("shingle"))
       .select(col("doc_id")).distinct()
-    val decon = ck(gated.join(dirty, Seq("doc_id"), "left_anti"))
+    val decon = materialize(gated.join(dirty, Seq("doc_id"), "left_anti"))
     // 6. PII redaction (stateless) — inline projection, no counts, no
     // join (the r17 batch-chain rewrite)
-    val red = ck(decon.select(col("doc_id"),
+    val red = materialize(decon.select(col("doc_id"),
       TextOps.piiRedactCol(col("text")).as("text"), col("lang")))
     // 6b. memorization gate: a shingle is duplicated when the delta
     // repeats it (df>1 within) OR v1 already contains it (that doc +
@@ -513,7 +475,7 @@ object Pipeline {
     val mem =
       if (st.memCutMyriad < 0) red
       else {
-        val post = Materializer.materialize(Dedup.postings(red, st.shingleN))
+        val post = materialize(Dedup.postings(red, st.shingleN))
         val dupSh = post.groupBy(col("shingle")).agg(count(lit(1)).as("c"))
           .filter(col("c") > 1).select(col("shingle"))
           .union(st.corpusShingles.select(col("shingle"))).distinct()
@@ -553,27 +515,24 @@ object Pipeline {
     * ModelStore `curate_state` version (save with version k+1; the
     * resolve/pin lifecycle handles rollback).
     */
-  def advanceState(delta: DataFrame, st: CurateState,
-                   materialize: Boolean = true): CurateState = {
-    val c = deltaChainStages(delta, st, materialize)
+  def advanceState(delta: DataFrame, st: CurateState): CurateState = {
+    val c = deltaChainStages(delta, st)
     // the advanced digest frames are the next increment's join sides —
     // materialize the unions (narrow frames) so month k+2's chain
     // reads frozen tables instead of replaying month k+1's delta chain
     // per reference (the production analog re-SAVES the superseding
     // ModelStore version, which is this checkpoint done durably)
-    def ck(df: DataFrame): DataFrame =
-      if (materialize) Materializer.materialize(df) else df
     st.copy(
-      canonDigests = ck(st.canonDigests
+      canonDigests = materialize(st.canonDigests
         .union(c.ruled.select(md5(TextOps.normText(col("text"))).as("h")))
         .distinct()),
-      segDigests = ck(st.segDigests
+      segDigests = materialize(st.segDigests
         .union(TextOps.segmentHashFrame(c.canon, st.segWords).select(col("h")))
         .distinct()),
-      winDigests = ck(st.winDigests
+      winDigests = materialize(st.winDigests
         .union(ExactSubstr.windowHashFrame(c.cleaned, st.subK).select(col("h")))
         .distinct()),
-      corpusShingles = ck(st.corpusShingles
+      corpusShingles = materialize(st.corpusShingles
         .union(Dedup.postings(c.red, st.shingleN).select(col("shingle")))
         .distinct()))
   }
@@ -652,7 +611,7 @@ object Pipeline {
             val docs = graft.sources.Tables.documents(spark, sfDir)
             val bench = docs.filter(col("doc_id") % 97 === 0)
             val v1 = docs.filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 7 =!= 0)
-            val st = curateState(v1, bench, targetMyriad, materializeStages = true)
+            val st = curateState(v1, bench, targetMyriad)
             graft.ModelStore.saveCurateState(spark, dir, st, ReleaseStateVersion)
           }
         } finally f.delete(lock, false)
@@ -673,9 +632,8 @@ object Pipeline {
     * index-214 'mixtok:' admission) and q47 packing of the delta into
     * its own shards.
     */
-  def curateDelta(delta: DataFrame, st: CurateState,
-                  materialize: Boolean = true): DataFrame = {
-    val mem = curateDeltaDocs(delta, st, materialize)
+  def curateDelta(delta: DataFrame, st: CurateState): DataFrame = {
+    val mem = curateDeltaDocs(delta, st)
     val admitted = TextOps.mixtureAdmitFrozen(mem, st.ratesMyriad,
       st.vocab, st.maxN)
     TextOps.packCore(

@@ -4,17 +4,19 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Write `.explain("formatted")` output (plus the AQE-final executed
-  * plan after a collect) for named SparkEntry queries to
+  * plan after a drain) for named SparkEntry queries to
   * `plans/<tag>/<name>_<suffix>.txt` — the r16 optimization round's
   * plan-evidence artifact (`runMain graft.tools.PlanSave <tag>
   * <suffix> <sfDir> <query...>`).
   */
 object PlanSave {
+  private val Usage = "usage: PlanSave <tag> <suffix> <sfDir> <query...>"
+
   def main(args: Array[String]): Unit = {
-    val tag = args(0)
-    val suffix = args(1)
-    val sfDir = args(2)
-    val names = args.drop(3)
+    require(args.length >= 3, Usage)
+    val Array(tag, suffix, sfDir) = args.take(3)
+    val names = args.drop(3).toSeq
+    PlanShow.requireQueries(names, Usage)
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -25,7 +27,7 @@ object PlanSave {
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      df.collect() // settle AQE so the final plan prints
+      graft.Bench.force(df) // settle AQE so the final plan prints
       val fin = df.queryExecution.executedPlan.toString
       val w = new java.io.PrintWriter(s"plans/$tag/${n}_$suffix.txt")
       try {

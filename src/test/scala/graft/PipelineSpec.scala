@@ -31,7 +31,7 @@ class PipelineSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val bench = docs.filter(col("doc_id") % 97 === 0)
-    val out = Pipeline.curate(corpus, bench, target, materializeStages = true)
+    val out = Pipeline.curate(corpus, bench, target)
     out.persist()
     try {
       // stage recomputation for the invariants (the real corpus is
@@ -97,9 +97,8 @@ class PipelineSpec extends AnyFunSuite {
       assert(byChunk.join(lastChunk, "shard")
         .filter(col("chunk") =!= col("last") && col("t") =!= 512).count() == 0)
 
-      // deterministic under repartitioning, AND the materialization
-      // knob changes execution, never values: `out` ran materialized,
-      // `again` runs the lazy default on a repartitioned corpus
+      // deterministic under repartitioning: `again` runs the same
+      // chain on a repartitioned corpus
       val again = Pipeline.curate(corpus.repartition(13), bench, target)
       val a = out.collect().map(_.toString).sorted
       assert(a.toSeq == again.collect().map(_.toString).sorted.toSeq)
@@ -112,7 +111,7 @@ class PipelineSpec extends AnyFunSuite {
     val bench = docs.filter(col("doc_id") % 97 === 0)
     val srcTargets = Map("src0" -> 3000, "src1" -> 2500, "src2" -> 1500, "src3" -> 500)
     val out = Pipeline.curate(corpus, bench, target,
-      materializeStages = true, sourceQuotaMyriad = srcTargets)
+      sourceQuotaMyriad = srcTargets)
     out.persist()
     try {
       // recompute the chain's curated prefix (stages 0..6b, as in the
@@ -177,7 +176,7 @@ class PipelineSpec extends AnyFunSuite {
         .filter(_._2 > 0).toMap
       assert(uniShares.values.sum <= 10000)
       val out2 = Pipeline.curate(corpus, bench, target,
-        materializeStages = true, sourceQuotaMyriad = uniShares)
+        sourceQuotaMyriad = uniShares)
       val ids2 = out2.select("doc_id").distinct()
       assert(ids2.count() > 0, "unimax-derived quota must admit documents")
       assert(ids2.join(srcOf, "doc_id")
@@ -334,10 +333,8 @@ class PipelineSpec extends AnyFunSuite {
     // stage: not the dedup groups, not the cutoffs, not the rates)
     val passSet = graft.operators.UrlFilter.urlFilterPlanted(corpus)
       .filter(col("pass") === 1L).select("doc_id")
-    val gated = Pipeline.curate(corpus, bench, target,
-      materializeStages = true, urlGate = true)
-    val prefiltered = Pipeline.curate(corpus.join(passSet, "doc_id"), bench, target,
-      materializeStages = true)
+    val gated = Pipeline.curate(corpus, bench, target, urlGate = true)
+    val prefiltered = Pipeline.curate(corpus.join(passSet, "doc_id"), bench, target)
     assertSameRows(gated, prefiltered)
     // the gate fires: blocked domains / flag words exist in the plant
     val nAll = corpus.count()
@@ -345,8 +342,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(nPass < nAll && nPass > 0,
       s"planted url gate must drop some docs and keep some ($nPass/$nAll)")
     // and gated output is NOT the ungated output (the knob matters)
-    val ungated = Pipeline.curate(corpus, bench, target,
-      materializeStages = true)
+    val ungated = Pipeline.curate(corpus, bench, target)
     assert(gated.count() != ungated.count() ||
       gated.exceptAll(ungated).count() > 0,
       "urlGate=true must change the chain's output on the planted corpus")
@@ -396,7 +392,7 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     val full = Pipeline.chainStages(v1df.union(ddf), bench,
         segWords = 8, shingleN = 4, gatePct = 5, subK = 6,
-        materializeStages = false, ruleGate = false, memCutMyriad = 2000)
+        ruleGate = false, memCutMyriad = 2000)
       .mem.filter(col("doc_id") >= 100L)
       .select("doc_id", "lang", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
@@ -447,7 +443,7 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     val full = Pipeline.chainStages(v1df.union(d2df).union(d3df), bench,
         segWords = 8, shingleN = 4, gatePct = 5, subK = 6,
-        materializeStages = false, ruleGate = false, memCutMyriad = 2000)
+        ruleGate = false, memCutMyriad = 2000)
       .mem.filter(col("doc_id") >= 200L)
       .select("doc_id", "lang", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet

@@ -23,9 +23,69 @@ class PlanAuditSpec extends AnyFunSuite {
     */
   private def finalPlanStr(df: DataFrame): String = {
     df.collect() // df.count() would execute a DIFFERENT (re-planned) query
-    // AQE prints "== Final Plan ==" then "== Initial Plan ==": audit the
-    // final section only, or every node double-counts.
-    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    finalSection(df.queryExecution.executedPlan.toString)
+  }
+  /** AQE prints "== Final Plan ==" then "== Initial Plan ==": audit the
+    * final section only, or every node double-counts.
+    */
+  private def finalSection(plan: String): String = plan.split("== Initial Plan ==")(0)
+
+  /** Executed plan of every query `run` triggers, as (action, plan).
+    * The curation chains checkpoint each stage while building the frame
+    * (Materializer), so each stage runs as its own query and its plan
+    * never shows in the returned frame's checkpoint-truncated plan —
+    * a QueryExecutionListener is the only place these SEGMENT plans
+    * can be audited.
+    */
+  private def segmentPlans(run: => Unit): Vector[(String, String)] = {
+    val captured = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        captured.synchronized {
+          captured += ((funcName, qe.executedPlan.toString))
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      // ExecutionListenerBus delivery is async: poll until the capture
+      // count is stable (segments arrive in bursts during construction)
+      var last = -1
+      var spins = 0
+      while (spins < 40 && captured.synchronized(captured.size) != last) {
+        last = captured.synchronized(captured.size)
+        Thread.sleep(250)
+        spins += 1
+      }
+    } finally spark.listenerManager.unregister(listener)
+    captured.synchronized(captured.toVector)
+  }
+
+  /** The scale invariants every curation-chain segment keeps: equi
+    * joins only (no cartesian, no nested loop), no global sort, and
+    * corpus text never a shuffle key (every exchange keys on a digest,
+    * id or shard — the chain's fixed-width-key rule end to end).
+    * `minSegments` guards against the audit going dark (localCheckpoint
+    * runs under withAction — if a Spark upgrade stops reporting it,
+    * the segment count collapses).
+    */
+  private def auditChainSegments(chain: String, segs: Vector[(String, String)],
+                                 minSegments: Int): Unit = {
+    assert(segs.size >= minSegments,
+      s"$chain: expected >=$minSegments materialized segments, got ${segs.size}")
+    for ((fn, p) <- segs) {
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$chain segment via $fn plans a cartesian or nested-loop join:\n$p")
+      assert(!p.contains("rangepartitioning"),
+        s"$chain segment via $fn plans a global sort:\n$p")
+      assert(!p.contains("Exchange hashpartitioning(text"),
+        s"$chain segment via $fn shuffles corpus text:\n$p")
+    }
   }
   private def countShuffles(df: DataFrame): Int =
     "Exchange hashpartitioning".r.findAllIn(finalPlanStr(df)).size
@@ -507,18 +567,15 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q53 curate: the composed chain plans no cartesian, no BNLJ, no corpus window") {
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sfDir)
-    val df = graft.operators.Pipeline.curate(
-      docs.filter(col("doc_id") % 97 =!= 0),
-      docs.filter(col("doc_id") % 97 === 0),
-      Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000))
-    val s = finalPlanStr(df)
-    assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"), s)
-    // no global sort anywhere in the chain (q47's cumsum windows are
-    // shard-partitioned; the rate solve's single-partition window is
-    // over the L-row rates frame, not a sort)
-    assert(!s.contains("rangepartitioning"), s)
+    // the registered q53 chain and its two knob variants (q53b source
+    // quota, q53c url gate), audited on the segment plans they ship
+    for (q <- Seq("q53_curate", "q53b_curate_srcquota", "q53c_curate_urlgate")) {
+      val segs = segmentPlans(SparkEntry.queries(q)(spark, sfDir).collect())
+      // no global sort in any segment is the corpus-window check here:
+      // q47's cumsum windows are shard-partitioned, and the rate
+      // solve's single-partition window is over the L-row rates frame
+      auditChainSegments(q, segs, minSegments = 9)
+    }
   }
 
   test("q49 fuzzy decontamination: bench side broadcasts, candidate join is equi") {
@@ -703,79 +760,48 @@ class PlanAuditSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sfDir)
     val bench = docs.filter(col("doc_id") % 97 === 0)
     val rest = docs.filter(col("doc_id") % 97 =!= 0)
+    // the frozen v1 state is built outside the capture: its stages are
+    // q53's, audited above; this audits the incremental pass alone
     val st = graft.operators.Pipeline.curateState(
       rest.filter(col("doc_id") % 7 =!= 0), bench,
-      Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000),
-      materializeStages = true)
-    // materialize=false: audit the fully-COMPOSED delta plan (the
-    // registered entry materializes per stage — same stages, same
-    // shapes, split across checkpoint boundaries)
-    val df = graft.operators.Pipeline.curateDelta(
-      rest.filter(col("doc_id") % 7 === 0), st, materialize = false)
-    val s = finalPlanStr(df)
-    assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"), s)
+      Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000))
+    val segs = segmentPlans(graft.operators.Pipeline.curateDelta(
+      rest.filter(col("doc_id") % 7 === 0), st).collect())
+    auditChainSegments("q103", segs, minSegments = 9)
+    val finals = segs.map { case (_, p) => finalSection(p) }
     // the v1-vs-delta drops are digest-keyed LEFT ANTI joins (canon
     // digests, bench shingles, stage-3 windows) — the frozen-state
     // contract's physical signature
-    assert("LeftAnti".r.findAllIn(s).size >= 2, "digest anti-joins missing: " + s)
-    // text never rides an exchange: every shuffle keys on a digest,
-    // id, or shard — the chain's fixed-width-key rule end to end
-    assert(!s.contains("Exchange hashpartitioning(text"),
-      "corpus text must never be a shuffle key: " + s)
+    val antis = finals.map("LeftAnti".r.findAllIn(_).size).sum
+    assert(antis >= 2, s"digest anti-joins missing ($antis):\n${finals.mkString("\n")}")
     // the ONLY window is q47's per-shard packing cumsum — no corpus
     // window anywhere in the incremental pass
-    val windows = "Window \\[".r.findAllIn(s).size
-    assert(windows == 1, s"expected exactly the packing window, got $windows:\n$s")
-    assert("Window \\[[^\\n]*\\], \\[shard".r.findFirstIn(s).isDefined,
-      "the packing window must partition by shard: " + s)
+    val windows = finals.flatMap("Window \\[[^\\n]*".r.findAllIn(_))
+    assert(windows.size == 1, s"expected exactly the packing window, got $windows")
+    assert(windows.head.contains("], [shard"),
+      s"the packing window must partition by shard: ${windows.head}")
   }
 
   test("materialized chains (r17): every checkpointed SEGMENT's executed plan is cartesian/BNLJ-free and never shuffles text") {
-    // The r16 ADVICE gap: the composed-plan audits above run with
-    // materialize = false, but the REGISTERED entries execute with
-    // per-stage materialization — each stage is its own QueryExecution
-    // and its plan never appears in the final (checkpoint-truncated)
-    // plan. This leg captures every segment execution through a
-    // QueryExecutionListener while the registered materialized paths
-    // run (q103's delta chain, the r17 KN level tables, the r17 RAG
-    // passage index) and asserts the same scale invariants on each.
+    // The registered entries execute with per-stage materialization —
+    // each stage is its own QueryExecution and its plan never appears
+    // in the final (checkpoint-truncated) plan. This leg captures every
+    // segment execution while the materialized paths run (q103's v1
+    // state and delta chain, the r17 KN level tables, the r17 RAG
+    // passage index) and asserts the scale invariants on each.
     import org.apache.spark.sql.functions.col
-    val captured = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        captured.synchronized {
-          captured += ((funcName, qe.executedPlan.toString))
-        }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val segs = segmentPlans {
       val docs = Tables.documents(spark, sfDir)
       val bench = docs.filter(col("doc_id") % 97 === 0)
       val rest = docs.filter(col("doc_id") % 97 =!= 0)
       val st = graft.operators.Pipeline.curateState(
         rest.filter(col("doc_id") % 7 =!= 0), bench,
-        Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000),
-        materializeStages = true)
+        Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000))
       graft.operators.Pipeline.curateDelta(
         rest.filter(col("doc_id") % 7 === 0), st).collect()
       graft.operators.NgramLm.knPerplexityN(docs, 5).collect()
       graft.operators.Rag.ragSearch(docs, Tables.embeddings(spark, sfDir)).collect()
-      // ExecutionListenerBus delivery is async: poll until the capture
-      // count is stable (segments arrive in bursts during construction)
-      var last = -1
-      var spins = 0
-      while (spins < 40 && captured.synchronized(captured.size) != last) {
-        last = captured.synchronized(captured.size)
-        Thread.sleep(250)
-        spins += 1
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val segs = captured.synchronized(captured.toVector)
+    }
     // the materialized paths must actually have produced per-segment
     // executions (localCheckpoint runs under withAction — if a Spark
     // upgrade stops reporting them, this audit has gone dark)
@@ -792,6 +818,16 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!p.contains("Exchange hashpartitioning(text"),
         s"segment via $fn shuffles corpus text:\n$p")
     }
+  }
+
+  test("plan tools reject a bad invocation before starting a session") {
+    for (main <- Seq[Array[String] => Unit](
+           graft.tools.PlanShow.main, graft.tools.PlanSave.main)) {
+      intercept[IllegalArgumentException](main(Array.empty))
+    }
+    intercept[IllegalArgumentException](graft.tools.PlanShow.main(Array("q0_no_such_query")))
+    intercept[IllegalArgumentException](
+      graft.tools.PlanSave.main(Array("tag", "sfx", sfDir, "q53_curate", "q0_no_such_query")))
   }
 
   test("q100 drift: bucket-sized totals broadcast back; count aggs are map-side partial") {
