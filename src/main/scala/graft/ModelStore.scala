@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import graft.sources.Tables
 
 /** MODEL-ARTIFACT PERSISTENCE (r13) — the serialized handoff between a
   * batch training run and the frozen-model streaming twins.
@@ -118,7 +119,7 @@ object ModelStore {
     // digest what a loader will READ (the written files), not the
     // in-memory frame — a write-path corruption must be caught here
     val dc = names.map(n =>
-      n -> tableDigestAndCount(spark.read.parquet(s"$dir/tables/$n"))).toMap
+      n -> tableDigestAndCount(Tables.parquet(spark, s"$dir/tables/$n"))).toMap
     val digests = dc.map { case (n, (d, _)) => n -> d }
     val rowCounts = dc.map { case (n, (_, c)) => n -> c }
     val m = Manifest(family, version, System.currentTimeMillis(), params,
@@ -210,7 +211,7 @@ object ModelStore {
     val m = manifest(spark, dir)
     require(m.family == expectFamily,
       s"model at $dir is family '${m.family}', expected '$expectFamily'")
-    val frames = m.tables.map(n => n -> spark.read.parquet(s"$dir/tables/$n")).toMap
+    val frames = m.tables.map(n => n -> Tables.parquet(spark, s"$dir/tables/$n")).toMap
     m.tables.foreach { n =>
       require(m.digests.contains(n),
         s"model at $dir has no content digest for table '$n' " +

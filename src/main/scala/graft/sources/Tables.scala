@@ -1,20 +1,81 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Typed loaders for the driver-generated TPC-H-ish parquet tables
-  * (see /root/repo/TESTDATA.md). These stand in for the reference's
+  * (see TESTDATA.md). These stand in for the reference's
   * Kafka-backed tables: purchase orders ↔ orders+lineitem, users ↔
   * customer, products ↔ part, stores ↔ supplier/nation/region
   * (reference: common/src/main/java/dev/buesing/ksd/common/domain).
   *
-  * All loads are plain parquet scans so Catalyst can push filters and
-  * prune columns into the scan — callers should select/filter on the
-  * returned frame, never pre-collect.
+  * Every program read of an existing parquet table goes through
+  * `parquet`: the schema comes from ONE footer read on the driver, so
+  * a read launches no Spark job, and it is the schema Spark's own
+  * non-merging inference would return. `spark.sql.parquet.mergeSchema`
+  * is rejected, not silently ignored. The returned frames are plain
+  * parquet scans, so Catalyst pushes filters and prunes columns into
+  * the scan — callers should select/filter on them, never pre-collect.
   */
 object Tables {
+
+  /** A parquet read of `paths` without the schema-inference job.
+    * Spark infers a parquet schema with a one-task job that reads a
+    * single footer; this reads that same footer on the driver and
+    * passes the result as the read's schema:
+    *   - list every path (a file is its own leaf), dropping hidden
+    *     names (`_x`, `.x`, `x._COPYING_`, but not `_metadata`,
+    *     `_common_metadata` or a `_k=v` partition directory); a file
+    *     below a subdirectory counts only under a `k=v` partition
+    *     directory, as in Spark's file index;
+    *   - sort the leaves by path and take `_common_metadata`, else
+    *     `_metadata`, else the first data file;
+    *   - convert its footer with Spark's own reader: the stored Spark
+    *     row schema if present, else the parquet schema under the
+    *     session's conversion settings (`nanosAsLong` among them).
+    * Partition columns still come from Spark's discovery at read time.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sessionState.conf
+    require(!conf.isParquetSchemaMergingEnabled,
+      "spark.sql.parquet.mergeSchema=true is not supported: Tables.parquet " +
+        "reads one footer, so it cannot merge per-file schemas")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+    val leaves = paths.flatMap { p =>
+      val root = new Path(p)
+      val fs = root.getFileSystem(hadoopConf)
+      def walk(dir: Path, top: Boolean, inPartition: Boolean): Seq[FileStatus] =
+        fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
+          if (s.isDirectory)
+            walk(s.getPath, top = false, inPartition || s.getPath.getName.contains("="))
+          else if (top || inPartition) Seq(s)
+          else Nil
+        }
+      walk(root, top = true, inPartition = false)
+    }.sortBy(_.getPath.toString)
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    val file = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(leaves.find(l => !Set("_common_metadata", "_metadata")(l.getPath.getName)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file under ${paths.mkString(", ")}"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS)
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(conf))
+    spark.read.schema(schema).parquet(paths: _*)
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "nation")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Exactly-once delivery into a keyed table — the Spark analog of the
   * reference's end-to-end EOS contract (streams config
@@ -190,7 +191,7 @@ object ExactlyOnceSink {
       deltaVs.map(v => s"$dir/delta/v=$v")
     if (paths.isEmpty) None
     else {
-      val all = spark.read.parquet(paths: _*)
+      val all = Tables.parquet(spark, paths: _*)
       val keyStruct = struct(keyCols.map(col): _*)
       val rowStruct = struct(all.columns.toIndexedSeq.map(col): _*)
       Some(all.groupBy(keyStruct.as("k"))
@@ -361,8 +362,9 @@ object ExactlyOnceSink {
   * static DataFrame in a stream-static join pins its file listing when
   * the plan is built; re-reading the dim INSIDE `foreachBatch` re-lists
   * and re-scans per microbatch — rate-limited dim refresh at exactly
-  * microbatch granularity (the dim is broadcast per batch, so the cost
-  * is one small-dim scan per trigger, never a fact shuffle).
+  * microbatch granularity. Per trigger the cost is one driver-side
+  * listing plus one footer read (`Tables.parquet`, no schema job) and
+  * one small-dim scan, broadcast — never a fact shuffle.
   */
 object RefreshingDim {
 
@@ -376,7 +378,7 @@ object RefreshingDim {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val dim = spark.read.parquet(dimDir) // fresh snapshot, fresh listing
+        val dim = Tables.parquet(spark, dimDir) // fresh listing and footer
         // one directory per batchId, OVERWRITTEN on write: a batch
         // replayed after checkpoint recovery rewrites its own partition
         // instead of appending duplicates (blind append is not

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import graft.SparkEntry
+import graft.sources.Tables
 
 /** Scaling-curve measurement for the heavy LLM-pipeline operators —
   * the empirical check behind the 100 TB design claims. Usage:
@@ -237,15 +238,15 @@ object BenchScale {
     })
 
     val work = java.nio.file.Files.createTempDirectory("benchscale").toString
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val evs = graft.sources.Tables.events(spark, sfDir)
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val part = spark.read.parquet(s"$sfDir/part.parquet")
+    val docs = Tables.load(spark, sfDir, "documents")
+    val embs = Tables.load(spark, sfDir, "embeddings")
+    val evs = Tables.events(spark, sfDir)
+    val li = Tables.load(spark, sfDir, "lineitem")
+    val part = Tables.load(spark, sfDir, "part")
     // q97's fact side (the QI aggregate scans customer; its Linear
     // classification was the r12 ADVICE gap, and the regen needs the
     // table in every scale dir)
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = Tables.load(spark, sfDir, "customer")
     val nd = docs.count(); val ne = embs.count(); val nv = evs.count()
     val nl = li.count(); val nc = cust.count()
     val divs = Seq(4, 2, 1)
@@ -348,7 +349,7 @@ object BenchScale {
       (s, dir) => {
         s.conf.set("graft.ivf.trainSampleCap", "256")
         try graft.operators.Similarity.trainCodebook(
-          graft.sources.Tables.embeddings(s, dir), nCentroids = 32, iters = 2)
+          Tables.embeddings(s, dir), nCentroids = 32, iters = 2)
         finally s.conf.unset("graft.ivf.trainSampleCap")
       }
     // registry = driver-facing queries + the retired FP ANN scale
@@ -373,7 +374,7 @@ object BenchScale {
       // registered fixed k the same query would read ~2.0 (it exists
       // for checkability, not scale; the scaladoc says so).
       ("q63_ivf_sqrtn", (s: SparkSession, dir: String) => {
-        val e = graft.sources.Tables.embeddings(s, dir)
+        val e = Tables.embeddings(s, dir)
         val k = math.max(8, math.ceil(math.sqrt(e.count().toDouble)).toInt)
         graft.operators.Similarity.knnIvfInt(e, k = k, iters = 1)
       }, "skew_bounded", dirs),
@@ -382,7 +383,7 @@ object BenchScale {
       // the registered fixed k the pair join would read ~2.0 (the q63
       // checkability-vs-scale split, same scaladoc note).
       ("q64_semdedup_sqrtn", (s: SparkSession, dir: String) => {
-        val e = graft.sources.Tables.embeddings(s, dir)
+        val e = Tables.embeddings(s, dir)
         val k = math.max(8, math.ceil(math.sqrt(e.count().toDouble)).toInt)
         graft.operators.Components.semDedup(e, k = k, iters = 1)
       }, "skew_bounded", dirs))

@@ -822,12 +822,17 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("plan tools reject a bad invocation before starting a session") {
     for (main <- Seq[Array[String] => Unit](
-           graft.tools.PlanShow.main, graft.tools.PlanSave.main)) {
+           graft.tools.PlanShow.main, graft.tools.PlanSave.main, graft.tools.StageCount.main)) {
       intercept[IllegalArgumentException](main(Array.empty))
     }
     intercept[IllegalArgumentException](graft.tools.PlanShow.main(Array("q0_no_such_query")))
     intercept[IllegalArgumentException](
       graft.tools.PlanSave.main(Array("tag", "sfx", sfDir, "q53_curate", "q0_no_such_query")))
+    intercept[IllegalArgumentException](graft.tools.StageCount.main(Array(sfDir)))
+    intercept[IllegalArgumentException](
+      graft.tools.StageCount.main(Array(s"$sfDir/no_such_dir", "q10_pickup_pipeline")))
+    intercept[IllegalArgumentException](
+      graft.tools.StageCount.main(Array(sfDir, "q10_pickup_pipeline", "q0_no_such_query")))
   }
 
   test("q100 drift: bucket-sized totals broadcast back; count aggs are map-side partial") {

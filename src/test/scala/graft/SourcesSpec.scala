@@ -110,6 +110,149 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  /** Jobs started while `body` runs. The listener bus is drained before
+    * the listener is added (so no earlier event reaches it) and after
+    * `body` (so every job `body` started has been delivered).
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    graft.tools.BenchScale.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { val r = body; graft.tools.BenchScale.drainListenerBus(spark); (r, n.get) }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** `Tables.parquet`'s schema equals Spark's own inference over the
+    * same paths (or both throw), and resolving it starts no job.
+    */
+  private def assertSchemaParity(paths: String*): Unit = {
+    import scala.util.{Failure, Success, Try}
+    val inferred = Try(spark.read.parquet(paths: _*).schema)
+    val (footer, jobs) = jobsDuring(Try(Tables.parquet(spark, paths: _*).schema))
+    assert(jobs == 0, s"${paths.mkString(",")}: $jobs Spark job(s) while resolving the schema")
+    (inferred, footer) match {
+      case (Success(a), Success(b)) => assert(b == a, s"${paths.mkString(",")}: $b != $a")
+      case (Failure(_), Failure(_)) => ()
+      case _ => fail(s"${paths.mkString(",")}: inference $inferred, footer $footer")
+    }
+  }
+
+  test("Tables.parquet: footer schema equals Spark's inference, with no Spark job") {
+    import org.apache.hadoop.fs.Path
+    import graft.streaming.ExactlyOnceSink
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_footer_schema").toString
+    // a TIMESTAMP(NANOS) column: the one type whose Spark type depends
+    // on nanosAsLong (long when on, an analysis error when off)
+    val nanos = s"$tmp/nanos/part-0.parquet"
+    val nanosType = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(new Path(nanos))
+      .withType(nanosType).build()
+    try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(nanosType)
+      .newGroup().append("id", 1L).append("ts", 1500L))
+    finally w.close()
+    val tables = for {
+      sf <- Seq(sfDir, s"${new java.io.File(sfDir).getParent}/sf0.01")
+      t <- new java.io.File(sf).list().filter(_.endsWith(".parquet")).sorted
+    } yield s"$sf/$t"
+    assert(tables.size == 20 && tables.exists(_.endsWith("/events.parquet")), tables)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.get(key)
+    try for (on <- Seq("true", "false")) {
+      spark.conf.set(key, on)
+      (tables :+ nanos :+ s"$tmp/nanos").foreach(assertSchemaParity(_))
+    } finally spark.conf.set(key, prev)
+
+    // a Spark-written directory of several files (_SUCCESS, .crc around
+    // them), read as a directory and as two explicit files
+    val multi = s"$tmp/multi"
+    spark.range(0, 400, 1, 4).select(col("id"), (col("id") % 7).as("m"),
+      col("id").cast("string").as("s")).write.parquet(multi)
+    assertSchemaParity(multi)
+    val parts = new java.io.File(multi).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted
+    assert(parts.length == 4)
+    assertSchemaParity(parts.take(2).toIndexedSeq: _*)
+    // which file's footer decides: files whose schemas differ, so only
+    // the file Spark's non-merging inference reads gives its schema —
+    // the first data file by path, unless a summary file is present
+    def lone(df: org.apache.spark.sql.DataFrame, to: String): Unit = {
+      val d = s"$tmp/lone"
+      df.coalesce(1).write.mode("overwrite").parquet(d)
+      val f = new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(f.toPath, new java.io.File(to).toPath)
+    }
+    val mixed = s"$tmp/mixed"
+    new java.io.File(mixed).mkdirs()
+    lone(spark.range(3).select(col("id").cast("string").as("x")), s"$mixed/b.parquet")
+    lone(spark.range(3).toDF("id"), s"$mixed/a.parquet")
+    assertSchemaParity(mixed)
+    assert(Tables.parquet(spark, mixed).columns.toSeq == Seq("id"))
+    val summarized = s"$tmp/summarized"
+    spark.range(0, 40, 1, 2).select(col("id"), (col("id") * 2).as("twice"))
+      .write.option("parquet.summary.metadata.level", "ALL").parquet(summarized)
+    assert(new java.io.File(s"$summarized/_common_metadata").exists())
+    lone(spark.range(3).select(col("id").cast("string").as("x")), s"$summarized/a.parquet")
+    assertSchemaParity(summarized)
+    assert(Tables.parquet(spark, summarized).columns.toSeq == Seq("id", "twice"))
+    // a data file below a plain (not `k=v`) subdirectory is not part of
+    // the table: Spark's file index leaves it out, so both reads refuse
+    val nested = s"$tmp/nested"
+    new java.io.File(s"$nested/sub").mkdirs()
+    lone(spark.range(3).toDF("id"), s"$nested/sub/a.parquet")
+    assertSchemaParity(nested)
+    // a partitioned directory: data columns from the footer, `p` from
+    // Spark's partition discovery
+    val part = s"$tmp/partitioned"
+    TableWriter.writePartitioned(spark.range(0, 60).select(col("id"),
+      (col("id") % 3).as("p")), part, "p")
+    assertSchemaParity(part)
+    // an ExactlyOnceSink table holding a base and a trailing delta
+    val sink = s"$tmp/sink"
+    for (b <- 0L to 2L)
+      ExactlyOnceSink.upsertBatch(sink, Seq("k"), compactEvery = 2)(
+        Seq((b, b * 1.5), (b + 1, b * 2.5)).toDF("k", "total"), b)
+    val bases = ExactlyOnceSink.committedBases(spark, sink)
+    val deltas = ExactlyOnceSink.committedDeltas(spark, sink).filter(_ > bases.last)
+    assert(bases.nonEmpty && deltas.nonEmpty, s"bases $bases, deltas $deltas")
+    assertSchemaParity(s"$sink/base/v=${bases.last}" +: deltas.map(v => s"$sink/delta/v=$v"): _*)
+    val (snap, snapJobs) = jobsDuring(ExactlyOnceSink.snapshot(spark, sink).get)
+    assert(snapJobs == 0, s"snapshot started $snapJobs job(s)")
+    assert(snap.columns.toSeq == Seq("k", "total"))
+    assert(snap.count() == 4)
+    // a ModelStore round trip: the saved tables, and the loaded frames
+    val model = s"$tmp/model"
+    ModelStore.save(spark, model, "kmeans", 1L, Map.empty,
+      Map("centroids" -> Seq((1, Seq(1L, 2L)), (2, Seq(3L))).toDF("cid", "vec")))
+    assertSchemaParity(s"$model/tables/centroids")
+    assert(ModelStore.loadKmeans(spark, model) == Seq((1, Seq(1L, 2L)), (2, Seq(3L))))
+  }
+
+  test("Tables.parquet fails fast on mergeSchema and on a path with no data file") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_footer_fail").toString
+    val key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    val e = try intercept[IllegalArgumentException](Tables.load(spark, sfDir, "region"))
+      finally spark.conf.unset(key)
+    assert(e.getMessage.contains(key), e.getMessage)
+    // empty, and holding only hidden files (a writer's _SUCCESS marker)
+    val empty = s"$tmp/empty"
+    new java.io.File(empty).mkdirs()
+    val onlyHidden = s"$tmp/hidden"
+    new java.io.File(onlyHidden).mkdirs()
+    new java.io.File(onlyHidden, "_SUCCESS").createNewFile()
+    for (dir <- Seq(empty, onlyHidden)) {
+      val e2 = intercept[IllegalArgumentException](Tables.parquet(spark, dir))
+      assert(e2.getMessage.contains(dir), e2.getMessage)
+      assertSchemaParity(dir) // Spark's own inference refuses it too
+    }
+  }
+
   test("nested orders round-trip losslessly back to line items") {
     val nested = Tables.nestedOrders(spark, sfDir)
     val li = Tables.lineitem(spark, sfDir)
