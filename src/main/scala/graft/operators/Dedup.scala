@@ -59,20 +59,6 @@ object Dedup {
       .select(col("doc_id"), graft.functions.VectorFunctions.poly_hash(col("sh")).as("shingle"))
       .distinct()
 
-  /** Per-document distinct character n-gram postings: (doc_id, shingle
-    * hash). Same materialize-before-lambda and hash-not-string rules.
-    */
-  private def charPostings(documents: DataFrame, n: Int): DataFrame =
-    documents
-      .select(col("doc_id"),
-        regexp_replace(lower(graft.operators.TextOps.wsTrim(col("text"))), "\\s+", " ").as("norm"))
-      // fused one-pass kernel (CharShingleSetExpr): the former
-      // transform(sequence, i -> xxhash64(substring(norm, i, n))) form
-      // re-walked the string per position — O(len²) per document, ~4 s
-      // of q27's runtime at sf0.1; the set is already distinct
-      .select(col("doc_id"), explode(
-        graft.functions.VectorFunctions.char_shingle_set(col("norm"), n)).as("shingle"))
-
   /** LSH candidate pairs with their EXACT (pruning-free) Jaccard —
     * the pair-level core of q25, exposed so recall gates can compare
     * the banded candidate set against `exactJaccardPairs` ground truth.

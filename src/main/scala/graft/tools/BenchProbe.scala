@@ -1,70 +1,48 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Bench, Session, SparkEntry}
 
 /** Per-pass timing probe for individual bench queries, in an isolated
-  * JVM with the exact Bench session config. Usage:
+  * JVM with the Bench session. Usage:
   *
-  *   runMain graft.tools.BenchProbe <sfDir> <passes> [warm] q19_inactive_customers ...
+  *   runMain graft.tools.BenchProbe <sfDir> <passes> [warm] <query...>
   *
-  * `warm` replays Bench's warmup family list first, so a query can be
-  * timed in the same codegen/JIT context the bench measures it in.
-  * Prints one line per pass — the shape of the sequence (flat vs
-  * decaying) distinguishes plan cost from cold-JIT noise.
+  * `warm` runs Bench's warm-up queries first, so a query can be timed
+  * in the same codegen/JIT context the bench measures it in. Each pass
+  * starts with Bench's block clearing and prints wall time, process
+  * CPU and the pass-local steal in cores: the shape of the sequence
+  * (flat vs decaying) distinguishes plan cost from cold-JIT noise, and
+  * a pass that moves wall but not CPU, or carries steal, was waiting.
   */
 object BenchProbe {
+  private val Usage = "usage: BenchProbe <sfDir> <passes> [warm] <query...>"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val passes = args.lift(1).map(_.toInt).getOrElse(5)
-    val warm = args.contains("warm")
-    val names = args.drop(2).filterNot(_ == "warm")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 3, Usage)
+    val sfDir = Args.sfDir(args(0), Usage)
+    val passes = Args.positiveInt(args(1), "passes", Usage)
+    val warm = args(2) == "warm"
+    val names = args.drop(if (warm) 3 else 2).toSeq
+    require(names.nonEmpty, Usage)
+    Args.queries(names, Usage)
+    val spark = Session()
     if (warm) {
-      for (w <- Seq("q11_pricing_summary", "q12_top_unshipped",
-          "q14_window_running", "q28b_knn_blocked", "q25_dedup_minhash",
-          "q31_multimodal_meta", "q42b_dedup_groups_lsh"))
-        SparkEntry.queries.get(w)
-          .foreach(fn => try graft.Bench.force(fn(spark, sfDir)) catch { case _: Throwable => () })
+      Bench.warmUp(spark, sfDir)
       println("[probe] warmup done")
     }
-    // per-pass process-CPU beside wall: the wait-vs-work discriminator
-    // (Bench.scala rationale) — an A/B that moves wall but not CPU is
-    // host contention, one that moves both is a real plan change
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def cpuNanos: Long = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
+    val load = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       val times = (1 to passes).map { i =>
-        // match Bench's per-slot hygiene (r17): drop every persistent
-        // block left by the previous pass OUTSIDE the timed region —
-        // checkpoint-heavy queries otherwise degrade pass over pass
-        // from accumulated block-manager storage, which the bench's
-        // slots never see
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-        val t0 = System.nanoTime()
-        val c0 = cpuNanos
-        graft.Bench.force(fn(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
-        val dc = if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9
-        println(f"[probe] $name pass $i: $dt%.3f s cpu=$dc%.3f s load=${osBean.getSystemLoadAverage}%.2f")
-        (dt, dc)
+        Bench.clearBlocks(spark)
+        val p = Bench.timePass(spark, sfDir, fn)
+        println(f"[probe] $name pass $i: ${p.wall}%.3f s cpu=${p.cpu}%.3f s " +
+          f"steal_cpus=${p.stealCpus}%.3f load=${load.getSystemLoadAverage}%.2f")
+        p
       }
-      println(f"[probe] $name min=${times.map(_._1).min}%.3f median=${times.map(_._1).sorted.apply(times.size / 2)}%.3f cpuMin=${times.map(_._2).min}%.3f")
+      println(f"[probe] $name min=${times.map(_.wall).min}%.3f " +
+        f"median=${times.map(_.wall).sorted.apply(times.size / 2)}%.3f " +
+        f"cpuMin=${times.map(_.cpu).min}%.3f")
     }
     spark.stop()
   }

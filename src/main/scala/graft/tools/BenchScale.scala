@@ -2,15 +2,16 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge.drainListenerBus
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 import graft.sources.Tables
 
 /** Scaling-curve measurement for the heavy LLM-pipeline operators —
   * the empirical check behind the 100 TB design claims. Usage:
   *
-  *   runMain graft.tools.BenchScale <sfDir> [passes]
+  *   runMain graft.tools.BenchScale <sfDir> [passes]   (passes default 3)
   *
   * Method: scale points n/4, n/2, n are materialized by subsetting the
   * input tables (every point rewritten through the SAME
@@ -53,34 +54,7 @@ import graft.sources.Tables
   */
 object BenchScale {
 
-  /** Deterministic drain of the async listener bus so the
-    * QueryExecutionListener row counter and the task-CPU listener have
-    * delivered every event from the just-finished job before counters
-    * are read. The earlier fixed Thread.sleep(200) silently
-    * UNDERCOUNTED `all_rows` whenever the ExecutionListenerBus lagged
-    * >200 ms under load (r9 ADVICE) — and that feeds the committed
-    * SCALING.json all-rows exponents. `LiveListenerBus.waitUntilEmpty`
-    * is `private[spark]` in source but, like all Scala
-    * package-qualified private members, PUBLIC in bytecode — invoked
-    * reflectively (both the 0-arg Spark 4 form and the older
-    * timeout-arg form are tried). Falls back to the old sleep only if
-    * the internal API ever disappears.
-    */
-  private[graft] def drainListenerBus(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m0 = bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      m0 match {
-        case Some(m) => m.invoke(bus)
-        case None =>
-          bus.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-            .foreach(_.invoke(bus, java.lang.Long.valueOf(10000L)))
-      }
-    } catch { case scala.util.control.NonFatal(_) => Thread.sleep(200) }
-  }
+  private val Usage = "usage: BenchScale <sfDir> [passes]"
 
   private val Scalable = Seq(
     "q25_dedup_minhash",
@@ -200,18 +174,11 @@ object BenchScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val passes = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 1 || args.length == 2, Usage)
+    val sfDir = Args.sfDir(args(0), Usage)
+    val passes = args.lift(1).fold(3)(Args.positiveInt(_, "passes", Usage))
+    val cpus = Session.cpus
+    val spark = Session(cpus)
 
     val cpuNs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -252,19 +219,19 @@ object BenchScale {
     val divs = Seq(4, 2, 1)
     val dirs = divs.map { div =>
       val dir = s"$work/div$div"
-      docs.limit((nd / div).toInt).repartition(cpus.toInt)
+      docs.limit((nd / div).toInt).repartition(cpus)
         .write.parquet(s"$dir/documents.parquet")
-      embs.limit((ne / div).toInt).repartition(cpus.toInt)
+      embs.limit((ne / div).toInt).repartition(cpus)
         .write.parquet(s"$dir/embeddings.parquet")
-      evs.limit((nv / div).toInt).repartition(cpus.toInt)
+      evs.limit((nv / div).toInt).repartition(cpus)
         .write.parquet(s"$dir/events.parquet")
       // graph scale points: the FACT side (lineitem incidences) scales,
       // the part dim stays whole — vertices are fixed, edge density
       // grows, matching how a real corpus densifies
-      li.limit((nl / div).toInt).repartition(cpus.toInt)
+      li.limit((nl / div).toInt).repartition(cpus)
         .write.parquet(s"$dir/lineitem.parquet")
       part.write.parquet(s"$dir/part.parquet")
-      cust.limit((nc / div).toInt).repartition(cpus.toInt)
+      cust.limit((nc / div).toInt).repartition(cpus)
         .write.parquet(s"$dir/customer.parquet")
       dir
     }
@@ -285,10 +252,10 @@ object BenchScale {
         // one closing edge so the answer is non-trivial (1 triangle)
         .unionAll(spark.range(1, 2).select(lit(1L).as("l_orderkey"), lit(1L).as("l_partkey")))
         .unionAll(spark.range(1, 2).select(lit(1L).as("l_orderkey"), lit(2L).as("l_partkey")))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.parquet(s"$dir/lineitem.parquet")
       spark.range(0, leaves + 1).select(col("id").as("p_partkey"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.parquet(s"$dir/part.parquet")
       dir
     }
@@ -303,7 +270,7 @@ object BenchScale {
         .withColumn("ts",
           org.apache.spark.sql.functions.expr(
             "timestamp_micros(1700000000000000 + pmod(unix_micros(ts), 300000000))"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.parquet(s"$dir/events.parquet")
       dir
     }

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graftbridge.Bridge.drainListenerBus
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import graft.{Bench, Session}
 
 /** Diagnostic: build and drain each query once and report its job,
   * stage and task counts. `planning` counts the jobs launched while
@@ -18,20 +19,9 @@ object StageCount {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, Usage)
-    val sfDir = args(0)
-    require(new java.io.File(sfDir).isDirectory, s"not a directory: $sfDir\n$Usage")
-    val names = args.drop(1).toSeq
-    PlanShow.requireQueries(names, Usage)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Args.sfDir(args(0), Usage)
+    val names = Args.queries(args.drop(1).toSeq, Usage)
+    val spark = Session()
     val jobs = new AtomicInteger
     val noExecutionId = new AtomicInteger
     val stages = new AtomicInteger
@@ -48,16 +38,16 @@ object StageCount {
     })
     var totalJobs = 0; var totalPlanning = 0
     for (n <- names) {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      BenchScale.drainListenerBus(spark)
+      Bench.clearBlocks(spark)
+      drainListenerBus(spark)
       jobs.set(0); noExecutionId.set(0); stages.set(0); tasks.set(0)
       val t0 = System.nanoTime()
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      BenchScale.drainListenerBus(spark)
+      drainListenerBus(spark)
       val planning = noExecutionId.get
-      graft.Bench.force(df)
+      Bench.force(df)
       val dt = (System.nanoTime() - t0) / 1e9
-      BenchScale.drainListenerBus(spark)
+      drainListenerBus(spark)
       totalJobs += jobs.get; totalPlanning += planning
       println(f"[stagecount] $n: $dt%.2f s jobs=${jobs.get} planning=$planning " +
         s"stagesRun=${stages.get} tasks=${tasks.get}")

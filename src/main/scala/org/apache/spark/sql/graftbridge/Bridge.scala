@@ -31,6 +31,12 @@ object Bridge {
       target.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.logical)
 
+  /** Block until every event posted so far has reached every listener,
+    * so counters kept by a listener are complete when read. The bus is
+    * `private[spark]`, hence this bridge's package.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
 
 /** `ImplicitCastInputTypes` with a public-type signature. Spark 4 made

@@ -4,25 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN (r17 test-budget fix): the chain tests emit
-    // thousands of per-operator WARNs (WindowExec single-partition on
-    // deliberate L-row frames, localCheckpoint lineage notes) — pages
-    // of log I/O that slow the run and bury the suite summary the
-    // driver's tail capture needs to see
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // 4 cores whatever the host: the suite's partitioning must not
+  // follow SPARK_GRAFT_CPUS
+  lazy val spark: SparkSession =
+    Session(4, Seq("spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse"))
   val sfDir = "/root/testdata/sf0.001"
 
   /** Order-insensitive full comparison of two small frames. */

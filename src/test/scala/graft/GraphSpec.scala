@@ -265,7 +265,7 @@ class GraphSpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(l)
-    try { body; graft.tools.BenchScale.drainListenerBus(spark) }
+    try { body; org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark) }
     finally spark.sparkContext.removeSparkListener(l)
     acc.get()
   }

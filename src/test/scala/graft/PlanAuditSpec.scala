@@ -821,18 +821,31 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("plan tools reject a bad invocation before starting a session") {
+    import graft.tools.{BenchProbe, BenchScale, PlanShow, StageCount}
+    val missing = s"$sfDir/no_such_dir"
     for (main <- Seq[Array[String] => Unit](
-           graft.tools.PlanShow.main, graft.tools.PlanSave.main, graft.tools.StageCount.main)) {
+           PlanShow.main, StageCount.main, BenchProbe.main, BenchScale.main)) {
       intercept[IllegalArgumentException](main(Array.empty))
     }
-    intercept[IllegalArgumentException](graft.tools.PlanShow.main(Array("q0_no_such_query")))
+    intercept[IllegalArgumentException](PlanShow.main(Array("q0_no_such_query")))
+    intercept[IllegalArgumentException](PlanShow.main(Array(missing, "q53_curate")))
     intercept[IllegalArgumentException](
-      graft.tools.PlanSave.main(Array("tag", "sfx", sfDir, "q53_curate", "q0_no_such_query")))
-    intercept[IllegalArgumentException](graft.tools.StageCount.main(Array(sfDir)))
+      PlanShow.main(Array(sfDir, "q53_curate", "q0_no_such_query")))
+    intercept[IllegalArgumentException](StageCount.main(Array(sfDir)))
     intercept[IllegalArgumentException](
-      graft.tools.StageCount.main(Array(s"$sfDir/no_such_dir", "q10_pickup_pipeline")))
+      StageCount.main(Array(missing, "q10_pickup_pipeline")))
     intercept[IllegalArgumentException](
-      graft.tools.StageCount.main(Array(sfDir, "q10_pickup_pipeline", "q0_no_such_query")))
+      StageCount.main(Array(sfDir, "q10_pickup_pipeline", "q0_no_such_query")))
+    for (bad <- Seq(Array(sfDir), Array(sfDir, "3"), Array(sfDir, "3", "warm"),
+                    Array(missing, "3", "q10_pickup_pipeline"),
+                    Array(sfDir, "x", "q10_pickup_pipeline"),
+                    Array(sfDir, "0", "q10_pickup_pipeline"),
+                    Array(sfDir, "3", "warm", "q0_no_such_query"),
+                    Array(sfDir, "3", "q10_pickup_pipeline", "warm")))
+      intercept[IllegalArgumentException](BenchProbe.main(bad))
+    for (bad <- Seq(Array(missing), Array(sfDir, "x"), Array(sfDir, "0"),
+                    Array(sfDir, "3", "extra")))
+      intercept[IllegalArgumentException](BenchScale.main(bad))
   }
 
   test("q100 drift: bucket-sized totals broadcast back; count aggs are map-side partial") {

@@ -120,9 +120,9 @@ class SourcesSpec extends AnyFunSuite {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         n.incrementAndGet()
     }
-    graft.tools.BenchScale.drainListenerBus(spark)
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(l)
-    try { val r = body; graft.tools.BenchScale.drainListenerBus(spark); (r, n.get) }
+    try { val r = body; org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark); (r, n.get) }
     finally spark.sparkContext.removeSparkListener(l)
   }
 
