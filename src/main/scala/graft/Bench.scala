@@ -176,19 +176,13 @@ object Bench {
     }
     // stdout gets a compact line that fits a 2,000-char tail even with
     // sbt's "[success] ..." trailer after it: keys shortened to their
-    // "qNN[b]" prefixes, mins at 2 decimals, medians and min-pass CPU
-    // as arrays in key order at 1 decimal, always sorted by name.
+    // "qNN[b]" prefixes, mins at 2 decimals, sorted by name. Medians
+    // and CPU stay in the full line only: at 122 queries the two
+    // arrays alone would take ~1,000 characters past the ~1,560 here.
     def short(n: String) = n.takeWhile(_ != '_')
-    val sortedR = results.sortBy(_._1)
-    val cQs = sortedR.map { case (k, v, _, _) => f""""${short(k)}":$v%.2f""" }
+    val cQs = results.sortBy(_._1).map { case (k, v, _, _) => f""""${short(k)}":$v%.2f""" }
       .mkString("{", ",", "}")
-    val cMed = sortedR.map { case (_, _, m, _) => f"$m%.1f" }.mkString("[", ",", "]")
-    val cCpu = sortedR.map { case (_, _, _, c) => f"$c%.1f" }.mkString("[", ",", "]")
-    val compact = f"""{"metric":"total","value":$total%.2f,"unit":"sec",$contended"order_seed":$OrderSeed,"queries":$cQs,"med":$cMed,"cpu":$cCpu,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f,"sf":"$sfDir","full":"BENCH_SELF.json"}"""
-    // past the tail budget, shed the arrays rather than truncate
-    val emit =
-      if (compact.length <= 1850) compact
-      else f"""{"metric":"total","value":$total%.2f,"unit":"sec",$contended"order_seed":$OrderSeed,"queries":$cQs,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f,"sf":"$sfDir","full":"BENCH_SELF.json"}"""
+    val emit = f"""{"metric":"total","value":$total%.2f,"unit":"sec",$contended"order_seed":$OrderSeed,"queries":$cQs,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f,"sf":"$sfDir","full":"BENCH_SELF.json"}"""
     spark.stop() // before the final println: nothing may follow the JSON line
     println(emit)
   }

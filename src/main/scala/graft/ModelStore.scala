@@ -6,21 +6,15 @@ import org.apache.hadoop.fs.Path
 import graft.sources.Tables
 
 /** MODEL-ARTIFACT PERSISTENCE (r13) — the serialized handoff between a
-  * batch training run and the frozen-model streaming twins.
-  *
-  * Every frozen-model stream (s25–s55) deploys a config a batch call
-  * derived: q60 centroids, PQ codebooks, the SQ8 grid, BPE merge
-  * rules, source-quota rate tables, the z-order grid, dup-shingle
-  * tables, BM25/LM/NB/DSIR/CCNet scorer tables, the q99 hybrid probe
-  * model, the whole s21 curation bundle, and the q100 drift
-  * baseline. Until r13 those existed only as in-memory values returned
-  * by the batch call inside one process — but a production ingest
-  * service is a DIFFERENT process (often a different cluster) from the
-  * training run, and the thing that crosses that boundary is a
-  * versioned artifact on shared storage. The reference's own analog:
-  * its compacted topics ARE its persisted model state — a Kafka
-  * Streams app bootstraps its GlobalKTable/KTable state from the topic
-  * before the stream flows (reference Streams.java:102-115,
+  * batch run that derives a frozen model and a LATER process that
+  * consumes it (q103's incremental curation loads the v1 release's
+  * `curate_state` before curating the v2 delta). A consumer is often a
+  * different process, or a different cluster, from the run that built
+  * the model, and the thing that crosses that boundary is a versioned
+  * artifact on shared storage. The reference's own analog: its
+  * compacted topics ARE its persisted model state — a Kafka Streams
+  * app bootstraps its GlobalKTable/KTable state from the topic before
+  * the stream flows (reference Streams.java:102-115,
   * builder/BuildSystem.java populates them); this store is the
   * lake-native restatement (parquet tables + a JSON manifest).
   *
@@ -37,18 +31,16 @@ import graft.sources.Tables
   * Manifest JSON goes through Jackson (on the Spark classpath — the
   * readMeta discipline), so params containing quotes round-trip.
   *
-  * Determinism: artifacts are integer/string tables, and every
-  * consumer (the streaming twins) is already pinned row-exact against
-  * its batch operator — so batch-train → save → load → stream must
-  * reproduce the batch output bit-for-bit. ModelStoreSpec asserts
-  * exactly that round trip per family, with the LOADED artifact, not
-  * the in-process value.
+  * Determinism: artifacts are integer/string tables, so save → load
+  * returns the saved rows exactly; the content digest (and, for
+  * duplication-sized families, the row-count proxy) refuses anything
+  * else. ModelStoreSpec pins the manifest, integrity, proxy and
+  * lifecycle contracts; PipelineSpec pins the q103 round trip.
   *
-  * Scale: artifacts are model-sized (k·dim centroids, S-row rate
-  * tables, ≤vocabCap rule lists), never corpus-sized — the one
-  * exception class (dup-shingle tables, duplication-sized) stays a
-  * DataFrame end to end and is saved/loaded as parquet without ever
-  * collecting.
+  * Scale: model-sized tables (k·dim centroids, vocab and rate tables)
+  * are collected by their typed loaders; duplication-sized tables
+  * (curate_state's digest and shingle tables) stay DataFrames end to
+  * end and are saved/loaded as parquet without ever collecting.
   */
 object ModelStore {
 
@@ -300,23 +292,10 @@ object ModelStore {
     drop
   }
 
-  // -------- typed per-family helpers: each returns EXACTLY the type
-  // -------- its streaming twin consumes, so the deploy path is
-  // -------- load(...) |> streamXxx(...) with no adaptation layer
+  // -------- typed per-family helpers: the families a registered
+  // -------- query or a contract test loads by name
 
-  /** q60 centroids (s26 router; also q79/q86's assignment input):
-    * table `centroids` = (cid INT, vec ARRAY<BIGINT>).
-    */
-  def saveKmeans(spark: SparkSession, dir: String,
-                 centroids: Seq[(Int, Seq[Long])], version: Long,
-                 params: Map[String, String] = Map.empty): Manifest = {
-    require(centroids.nonEmpty, "refusing to persist an empty centroid set")
-    import spark.implicits._
-    save(spark, dir, "kmeans", version,
-      params + ("k" -> centroids.size.toString, "dim" -> centroids.head._2.size.toString),
-      Map("centroids" -> centroids.toDF("cid", "vec")))
-  }
-
+  /** q60 centroids: table `centroids` = (cid INT, vec ARRAY<BIGINT>). */
   def loadKmeans(spark: SparkSession, dir: String): Seq[(Int, Seq[Long])] = {
     val (_, t) = load(spark, dir, "kmeans")
     t("centroids").collect() // k rows — the kmeansCentroids bounded protocol
@@ -324,473 +303,11 @@ object ModelStore {
       .sortBy(_._1).toSeq
   }
 
-  /** q65 PQ codebook (s28 encoder): table `codebook` =
-    * (sub INT, code INT, vec ARRAY<BIGINT>).
-    */
-  def savePq(spark: SparkSession, dir: String,
-             codebook: Map[(Int, Int), Seq[Long]], version: Long,
-             params: Map[String, String] = Map.empty): Manifest = {
-    require(codebook.nonEmpty, "refusing to persist an empty PQ codebook")
-    import spark.implicits._
-    val rows = codebook.toSeq.map { case ((m, j), c) => (m, j, c) }
-      .sortBy(x => (x._1, x._2))
-    save(spark, dir, "pq", version,
-      params + ("M" -> (rows.map(_._1).max + 1).toString,
-        "kcode" -> (rows.map(_._2).max + 1).toString),
-      Map("codebook" -> rows.toDF("sub", "code", "vec")))
-  }
-
-  def loadPq(spark: SparkSession, dir: String): Map[(Int, Int), Seq[Long]] = {
-    val (_, t) = load(spark, dir, "pq")
-    t("codebook").collect() // M·kcode rows — bounded
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toSeq).toMap
-  }
-
-  /** q82 SQ8 grid (s40 encoder): table `grid` =
-    * (pos INT, mn BIGINT, span BIGINT), position-ordered on load.
-    */
-  def saveSq8(spark: SparkSession, dir: String, grid: Seq[(Long, Long)],
-              version: Long, params: Map[String, String] = Map.empty): Manifest = {
-    require(grid.nonEmpty, "refusing to persist an empty SQ8 grid")
-    import spark.implicits._
-    save(spark, dir, "sq8", version, params + ("dim" -> grid.size.toString),
-      Map("grid" -> grid.zipWithIndex
-        .map { case ((mn, sp), i) => (i, mn, sp) }.toDF("pos", "mn", "span")))
-  }
-
-  def loadSq8(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
-    val (_, t) = load(spark, dir, "sq8")
-    t("grid").collect().sortBy(_.getInt(0)) // dim rows — bounded
-      .map(r => (r.getLong(1), r.getLong(2))).toSeq
-  }
-
-  /** q67 BPE merge rules (s31 tokenizer): table `rules` = bpeTrain's
-    * output (rank, lhs, rhs, cnt) verbatim; the load returns the
-    * rank-ordered (lhs, rhs) list streamBpeEncode consumes.
-    */
-  def saveBpeRules(spark: SparkSession, dir: String, rules: DataFrame,
-                   version: Long, params: Map[String, String] = Map.empty): Manifest =
-    save(spark, dir, "bpe", version, params, Map("rules" -> rules))
-
-  def loadBpeRules(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val (_, t) = load(spark, dir, "bpe")
-    t("rules").collect() // ≤ merges rows — bounded
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1).map(x => (x._2, x._3)).toSeq
-  }
-
-  /** q90 source-quota config (s47 admission gate): tables `rates` =
-    * (source STRING, rate BIGINT) and `vocab` = (idx INT, gram STRING)
-    * — the tokenizer vocabulary is PART of the model (admission counts
-    * tokens with it); maxN rides in params.
-    */
-  def saveSourceQuota(spark: SparkSession, dir: String,
-                      rates: Map[String, Long], vocab: Seq[String], maxN: Int,
-                      version: Long,
-                      params: Map[String, String] = Map.empty): Manifest = {
-    require(rates.nonEmpty, "refusing to persist an empty rate table")
-    import spark.implicits._
-    save(spark, dir, "source_quota", version,
-      params + ("maxN" -> maxN.toString),
-      Map("rates" -> rates.toSeq.sortBy(_._1).toDF("source", "rate"),
-        "vocab" -> vocab.zipWithIndex.map(_.swap).toDF("idx", "gram")))
-  }
-
-  def loadSourceQuota(spark: SparkSession, dir: String)
-      : (Map[String, Long], Seq[String], Int) = {
-    val (m, t) = load(spark, dir, "source_quota")
-    val rates = t("rates").collect() // S rows — bounded
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val vocab = t("vocab").collect().sortBy(_.getInt(0)) // ≤ m grams — bounded
-      .map(_.getString(1)).toSeq
-    (rates, vocab, m.params("maxN").toInt)
-  }
-
-  /** q93 z-order grid (s50 encoder): table `grid` = one row
-    * (pmin, pmax, smin, smax).
-    */
-  def saveZGrid(spark: SparkSession, dir: String,
-                grid: (Long, Long, Long, Long), version: Long,
-                params: Map[String, String] = Map.empty): Manifest = {
-    import spark.implicits._
-    save(spark, dir, "zgrid", version, params,
-      Map("grid" -> Seq(grid).toDF("pmin", "pmax", "smin", "smax")))
-  }
-
-  def loadZGrid(spark: SparkSession, dir: String): (Long, Long, Long, Long) = {
-    val (_, t) = load(spark, dir, "zgrid")
-    val r = t("grid").head() // 1 row
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-  }
-
-  /** q71 dup-window table (s34 cutter) — the DUPLICATION-sized family:
-    * table `dup_windows` = (h STRING md5-hex, fdoc BIGINT, fpos INT),
-    * exactly ExactSubstr.dupWindowTable's rows. [[loadDupTable]]
-    * returns the broadcastable Map s34 consumes today (bounded by the
-    * same cap the builder asserts); [[loadDupTableDf]] returns the
-    * parquet frame directly — the stream-static-join side for corpora
-    * whose dup set exceeds the broadcast cap, with no collect anywhere.
-    */
-  def saveDupTable(spark: SparkSession, dir: String,
-                   dup: Map[String, (Long, Int)], version: Long,
-                   params: Map[String, String] = Map.empty): Manifest = {
-    require(dup.nonEmpty, "refusing to persist an empty dup-window table")
-    import spark.implicits._
-    save(spark, dir, "dup_windows", version, params,
-      Map("dup_windows" -> dup.toSeq.map { case (h, (d, p)) => (h, d, p) }
-        .sortBy(_._1).toDF("h", "fdoc", "fpos")))
-  }
-
-  def loadDupTable(spark: SparkSession, dir: String): Map[String, (Long, Int)] =
-    loadDupTableDf(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getInt(2))).toMap
-
-  def loadDupTableDf(spark: SparkSession, dir: String): DataFrame =
-    load(spark, dir, "dup_windows")._2("dup_windows")
-
-  /** q62 BM25 query-term stats (s27 scorer): table `idf` =
-    * (token STRING, idf_q16 BIGINT); the two corpus scalars (N docs,
-    * A total tokens) ride in params — they are part of the model (the
-    * length normalization is meaningless without them).
-    */
-  def saveBm25(spark: SparkSession, dir: String,
-               index: graft.streaming.StreamOps.Bm25Index, version: Long,
-               params: Map[String, String] = Map.empty): Manifest = {
-    require(index.idfQ16.nonEmpty, "refusing to persist an empty BM25 term index")
-    import spark.implicits._
-    save(spark, dir, "bm25", version,
-      params + ("n_docs" -> index.nDocs.toString, "a_tok" -> index.aTok.toString),
-      Map("idf" -> index.idfQ16.toSeq.sortBy(_._1).toDF("token", "idf_q16")))
-  }
-
-  def loadBm25(spark: SparkSession, dir: String): graft.streaming.StreamOps.Bm25Index = {
-    val (m, t) = load(spark, dir, "bm25")
-    graft.streaming.StreamOps.Bm25Index(
-      t("idf").collect() // nQueryTerms rows — bounded
-        .map(r => r.getString(0) -> r.getLong(1)).toMap,
-      m.params("n_docs").toLong, m.params("a_tok").toLong)
-  }
-
-  /** q69 DSIR importance weights (s-family scorer): table `weights` =
-    * (bucket BIGINT, w BIGINT) — exactly B rows by construction.
-    */
-  def saveDsir(spark: SparkSession, dir: String,
-               index: graft.streaming.StreamOps.DsirIndex, version: Long,
-               params: Map[String, String] = Map.empty): Manifest = {
-    require(index.weights.nonEmpty, "refusing to persist an empty DSIR weight table")
-    import spark.implicits._
-    save(spark, dir, "dsir", version,
-      params + ("buckets" -> index.buckets.toString),
-      Map("weights" -> index.weights.toSeq.sortBy(_._1).toDF("bucket", "w")))
-  }
-
-  def loadDsir(spark: SparkSession, dir: String): graft.streaming.StreamOps.DsirIndex = {
-    val (m, t) = load(spark, dir, "dsir")
-    graft.streaming.StreamOps.DsirIndex(
-      t("weights").collect() // B rows — bounded
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      m.params("buckets").toInt)
-  }
-
-  /** q61 bigram LM (s25 scorer, s36's perplexity half): tables `nll`
-    * = (w1, w2, nll_q16) — the observed-bigram model, vocab²-bounded
-    * in principle, observed-bigram-sized in fact (the KenLM pruned-
-    * model deployment shape) — and `il_den` = (w1, il_den) for the
-    * unseen-continuation smoothing ladder; the OOV default rides in
-    * params.
-    */
-  def saveBigramLm(spark: SparkSession, dir: String,
-                   index: graft.streaming.StreamOps.BigramLmIndex, version: Long,
-                   params: Map[String, String] = Map.empty): Manifest = {
-    require(index.ilDen.nonEmpty, "refusing to persist an empty bigram LM")
-    import spark.implicits._
-    save(spark, dir, "bigram_lm", version,
-      params + ("oov_nll" -> index.oovNll.toString),
-      Map("nll" -> index.nll.toSeq.map { case ((w1, w2), v) => (w1, w2, v) }
-          .sortBy(x => (x._1, x._2)).toDF("w1", "w2", "nll_q16"),
-        "il_den" -> index.ilDen.toSeq.sortBy(_._1).toDF("w1", "il_den")))
-  }
-
-  def loadBigramLm(spark: SparkSession, dir: String)
-      : graft.streaming.StreamOps.BigramLmIndex = {
-    val (m, t) = load(spark, dir, "bigram_lm")
-    graft.streaming.StreamOps.BigramLmIndex(
-      t("nll").collect() // observed-bigram rows — model-sized
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
-      t("il_den").collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      m.params("oov_nll").toLong)
-  }
-
-  /** q104 Kneser-Ney trigram LM (s58 scorer): the ARPA file's
-    * structure as five tables — `tri` (w1,w2,w3,nll_q16: the scored
-    * trigram entries), `ctx` (w1,w2,lam3: context backoff weights),
-    * `mid` (w2,w3,p2: bigram-level Q30 probabilities), `midctx`
-    * (w2,lam2), `uni` (w3,p1) — probability + backoff per entry,
-    * exactly what an ARPA dump carries (Heafield, WMT 2011 §2).
-    * Tables come straight from [[graft.operators.NgramLm
-    * .knModelFrames]]; trigram-type-sized (production models prune
-    * counts first, the standard ARPA discipline — the bigram_lm
-    * precedent one order up).
-    */
-  def saveKnLm(spark: SparkSession, dir: String,
-               tables: Map[String, DataFrame], version: Long,
-               params: Map[String, String] = Map.empty): Manifest = {
-    require(Set("tri", "ctx", "mid", "midctx", "uni").subsetOf(tables.keySet),
-      s"kn_lm needs tables tri/ctx/mid/midctx/uni, got ${tables.keys.toSeq.sorted}")
-    save(spark, dir, "kn_lm", version, params + ("order" -> "3", "d" -> "3/4"),
-      tables)
-  }
-
-  def loadKnLm(spark: SparkSession, dir: String)
-      : graft.operators.NgramLm.KnLmModel = {
-    val (_, t) = load(spark, dir, "kn_lm")
-    graft.operators.NgramLm.KnLmModel(
-      t("tri").collect() // trigram-type rows — LM-model-sized
-        .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap,
-      t("ctx").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
-      t("mid").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
-      t("midctx").collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      t("uni").collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-  }
-
-  /** q104b/q104c order-n Kneser-Ney LM (s58's generic scorer), the
-    * PRUNABLE layout (r16, verdict tasks #1/#4): `p1` (w1, p) plus per
-    * level k ∈ 2..n a KEPT-entries table `p$k` (w1..wk, p) and a
-    * STORED-contexts table `lam$k` (w1..w_{k-1}, lam) — the ARPA
-    * probability/backoff pair per level, pruned by the
-    * [[graft.operators.NgramLm.knModelFramesN]] thresholds that ride
-    * in params (`order`, `min_count`, `min_ctx`). Size bound: kept
-    * entries ≤ T_k/min_count and contexts ≤ T_k/min_ctx per level
-    * (Heafield WMT 2011 §4) — with min_count > 1 this artifact stops
-    * scaling with corpus size, closing the r15 verdict's unbounded-
-    * collect caveat on the trigram layout.
-    */
-  def saveKnLmN(spark: SparkSession, dir: String,
-                tables: Map[String, DataFrame], version: Long, order: Int,
-                minCount: Long, minCtx: Long,
-                params: Map[String, String] = Map.empty): Manifest = {
-    val want = Set("p1") ++ (2 to order).flatMap(k => Seq(s"p$k", s"lam$k"))
-    require(want.subsetOf(tables.keySet),
-      s"order-$order kn_lm needs tables ${want.toSeq.sorted.mkString("/")}, " +
-        s"got ${tables.keys.toSeq.sorted}")
-    save(spark, dir, "kn_lm", version,
-      params + ("order" -> order.toString, "d" -> "3/4",
-        "min_count" -> minCount.toString, "min_ctx" -> minCtx.toString),
-      tables)
-  }
-
-  def loadKnLmN(spark: SparkSession, dir: String)
-      : graft.operators.NgramLm.KnLmModelN = {
-    val (m, t) = load(spark, dir, "kn_lm")
-    require(t.contains("p1"),
-      s"kn_lm at $dir has the legacy trigram layout (tri/ctx/mid) — " +
-        "load it with loadKnLm, or re-save via knModelFramesN")
-    val n = m.params("order").toInt
-    def keyed(name: String, keys: Int): Map[Seq[String], Long] =
-      t(name).collect() // pruned-model rows — bounded by T_k/min_count (manifest params)
-        .map(r => (0 until keys).map(r.getString).toSeq -> r.getLong(keys)).toMap
-    graft.operators.NgramLm.KnLmModelN(n,
-      (1 to n).map(k => keyed(s"p$k", k)),
-      (2 to n).map(k => keyed(s"lam$k", k - 1)))
-  }
-
-  /** q72 Naive-Bayes classifier (s-family admission scorer): table
-    * `weights` = (bucket BIGINT, w BIGINT), exactly B rows (the
-    * streaming twin requires full bucket coverage); the class prior
-    * and bucket count ride in params.
-    */
-  def saveNbModel(spark: SparkSession, dir: String,
-                  model: graft.operators.Classifier.NbModel, version: Long,
-                  params: Map[String, String] = Map.empty): Manifest = {
-    require(model.weights.size == model.buckets,
-      s"NB model must cover all ${model.buckets} buckets, has ${model.weights.size}")
-    import spark.implicits._
-    save(spark, dir, "nb", version,
-      params + ("prior_q16" -> model.priorQ16.toString,
-        "buckets" -> model.buckets.toString),
-      Map("weights" -> model.weights.toSeq.sortBy(_._1).toDF("bucket", "w")))
-  }
-
-  def loadNbModel(spark: SparkSession, dir: String)
-      : graft.operators.Classifier.NbModel = {
-    val (m, t) = load(spark, dir, "nb")
-    graft.operators.Classifier.NbModel(
-      t("weights").collect() // B rows — bounded
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      m.params("prior_q16").toLong, m.params("buckets").toInt)
-  }
-
-  /** q74 CCNet per-language cutoffs (s36's routing half): table
-    * `cuts` = (lang STRING, c33 BIGINT, c67 BIGINT) — languages-count
-    * rows. Deployed TOGETHER with a [[saveBigramLm]] artifact (the
-    * two halves version independently: re-cutting quantiles on a new
-    * corpus mix does not retrain the LM).
-    */
-  def saveCcnetCuts(spark: SparkSession, dir: String,
-                    cuts: Map[String, (Long, Long)], version: Long,
-                    params: Map[String, String] = Map.empty): Manifest = {
-    require(cuts.nonEmpty, "refusing to persist an empty cutoff table")
-    import spark.implicits._
-    save(spark, dir, "ccnet_cuts", version, params,
-      Map("cuts" -> cuts.toSeq.map { case (l, (a, b)) => (l, a, b) }
-        .sortBy(_._1).toDF("lang", "c33", "c67")))
-  }
-
-  def loadCcnetCuts(spark: SparkSession, dir: String): Map[String, (Long, Long)] = {
-    val (_, t) = load(spark, dir, "ccnet_cuts")
-    t("cuts").collect() // languages-count rows — bounded
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-  }
-
-  /** q99 hybrid retrieval model (s54 scorer): tables `qterms` =
-    * (qid, token, idf_q16) — nQueries·mTerms rows — and `probe_vecs`
-    * = (qid, vec ARRAY<BIGINT>) — nQueries rows; the BM25 corpus
-    * scalars ride in params.
-    */
-  def saveHybrid(spark: SparkSession, dir: String,
-                 model: graft.operators.Hybrid.HybridModel, version: Long,
-                 params: Map[String, String] = Map.empty): Manifest = {
-    require(model.qterms.nonEmpty && model.probeVecs.nonEmpty,
-      "refusing to persist an empty hybrid model")
-    import spark.implicits._
-    save(spark, dir, "hybrid", version,
-      params + ("n_docs" -> model.nDocs.toString, "a_tok" -> model.aTok.toString),
-      Map("qterms" -> model.qterms.toSeq
-          .flatMap { case (q, m) => m.toSeq.map { case (t, i) => (q, t, i) } }
-          .sortBy(x => (x._1, x._2)).toDF("qid", "token", "idf_q16"),
-        "probe_vecs" -> model.probeVecs.toSeq.sortBy(_._1)
-          .toDF("qid", "vec")))
-  }
-
-  def loadHybrid(spark: SparkSession, dir: String)
-      : graft.operators.Hybrid.HybridModel = {
-    val (m, t) = load(spark, dir, "hybrid")
-    graft.operators.Hybrid.HybridModel(
-      t("qterms").collect() // nQueries·mTerms rows — bounded
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-        .groupBy(_._1).map { case (q, rs) => q -> rs.map(x => x._2 -> x._3).toMap },
-      t("probe_vecs").collect() // nQueries rows — bounded
-        .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap,
-      m.params("n_docs").toLong, m.params("a_tok").toLong)
-  }
-
-  /** The s21 WHOLE-CHAIN deployment bundle (family `curate_config`):
-    * every offline-solved value the continuous curation service
-    * consumes in ONE versioned artifact — tables `bench_shingles` /
-    * `dup_shingles` (h BIGINT; benchmark- and duplication-sized),
-    * `vocab` (idx, gram — ORDER IS THE MODEL, the greedy tokenizer
-    * walks it by index), `rates` (lang, rate); scalars and gate knobs
-    * in params (the optional Double cutoffs round-trip through
-    * Double.toString — exact by Java's shortest-repr contract).
-    */
-  def saveCurateConfig(spark: SparkSession, dir: String,
-                       cfg: graft.streaming.StreamOps.CurateConfig, version: Long,
-                       params: Map[String, String] = Map.empty): Manifest = {
-    require(cfg.vocab.nonEmpty && cfg.ratesMyriad.nonEmpty,
-      "refusing to persist a curate config with no vocab or rates")
-    import spark.implicits._
-    val p = params ++ Map(
-      "mem_cut_myriad" -> cfg.memCutMyriad.toString,
-      "rule_gate" -> cfg.ruleGate.toString,
-      "seg_words" -> cfg.segWords.toString, "shingle_n" -> cfg.shingleN.toString,
-      "max_n" -> cfg.maxN.toString, "capacity" -> cfg.capacity.toString,
-      "shards" -> cfg.shards.toString, "sub_k" -> cfg.subK.toString) ++
-      cfg.lenCut.map(v => "len_cut" -> v.toString) ++
-      cfg.alphaCut.map(v => "alpha_cut" -> v.toString)
-    save(spark, dir, "curate_config", version, p, Map(
-      "bench_shingles" -> cfg.benchShingles.toSeq.sorted.toDF("h"),
-      "dup_shingles" -> cfg.dupShingles.toSeq.sorted.toDF("h"),
-      "vocab" -> cfg.vocab.zipWithIndex.map(_.swap).toDF("idx", "gram"),
-      "rates" -> cfg.ratesMyriad.toSeq.sortBy(_._1).toDF("lang", "rate")))
-  }
-
-  def loadCurateConfig(spark: SparkSession, dir: String)
-      : graft.streaming.StreamOps.CurateConfig = {
-    val (m, t) = load(spark, dir, "curate_config")
-    graft.streaming.StreamOps.CurateConfig(
-      t("bench_shingles").collect().map(_.getLong(0)).toSet,
-      t("vocab").collect().sortBy(_.getInt(0)).map(_.getString(1)).toSeq,
-      t("rates").collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      t("dup_shingles").collect().map(_.getLong(0)).toSet,
-      m.params.get("len_cut").map(java.lang.Double.parseDouble),
-      m.params.get("alpha_cut").map(java.lang.Double.parseDouble),
-      m.params("mem_cut_myriad").toInt, m.params("rule_gate").toBoolean,
-      m.params("seg_words").toInt, m.params("shingle_n").toInt,
-      m.params("max_n").toInt, m.params("capacity").toInt,
-      m.params("shards").toInt, m.params("sub_k").toInt)
-  }
-
-  /** q101's trained unigram model (family `unigram`, s56's segmenter):
-    * table `pieces` = (piece STRING, cnt BIGINT, cost_q16 BIGINT) —
-    * vocab-sized; the segmentation maxLen rides in params (pieces must
-    * be walked on the grid they were trained with).
-    */
-  def saveUnigram(spark: SparkSession, dir: String,
-                  model: graft.operators.Unigram.Model, maxLen: Int,
-                  version: Long,
-                  params: Map[String, String] = Map.empty): Manifest = {
-    require(model.pieces.nonEmpty, "refusing to persist an empty unigram model")
-    import spark.implicits._
-    save(spark, dir, "unigram", version, params + ("max_len" -> maxLen.toString),
-      Map("pieces" -> model.pieces.sortBy(_._1).toDF("piece", "cnt", "cost_q16")))
-  }
-
-  def loadUnigram(spark: SparkSession, dir: String)
-      : (graft.operators.Unigram.Model, Int) = {
-    val (m, t) = load(spark, dir, "unigram")
-    (graft.operators.Unigram.Model(
-      t("pieces").collect() // vocab-sized — bounded
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1).toSeq),
-      m.params("max_len").toInt)
-  }
-
-  /** q102's frozen retrieval index (s57 scorer, family `rag_index`):
-    * tables `qterms` = (qid, token, idf_q16) — the nQueries·mTerms
-    * probe terms with their PASSAGE-collection idf — and `probe_vecs`
-    * = (qid, pos, v) exploded quantized probe vectors; the collection
-    * scalars (P passages, A passage tokens) and the chunk geometry
-    * (window, stride — arrivals must chunk on the index's grid, the
-    * drift_expected grid rule) ride in params.
-    */
-  def saveRagIndex(spark: SparkSession, dir: String,
-                   model: graft.operators.Rag.RagModel, version: Long,
-                   params: Map[String, String] = Map.empty): Manifest = {
-    import spark.implicits._
-    save(spark, dir, "rag_index", version,
-      params + ("n_pass" -> model.nPass.toString, "a_tok" -> model.aTok.toString,
-        "window" -> model.window.toString, "stride" -> model.stride.toString),
-      Map("qterms" -> model.qterms.toSeq
-          .flatMap { case (q, ts) => ts.toSeq.map { case (t, w) => (q, t, w) } }
-          .sortBy(x => (x._1, x._2)).toDF("qid", "token", "idf_q16"),
-        "probe_vecs" -> model.probeVecs.toSeq
-          .flatMap { case (q, v) => v.zipWithIndex.map { case (x, i) => (q, i, x) } }
-          .sortBy(x => (x._1, x._2)).toDF("qid", "pos", "v")))
-  }
-
-  def loadRagIndex(spark: SparkSession, dir: String)
-      : graft.operators.Rag.RagModel = {
-    val (m, t) = load(spark, dir, "rag_index")
-    graft.operators.Rag.RagModel(
-      t("qterms").collect() // nQueries·mTerms rows — bounded
-        .groupBy(_.getLong(0)).map { case (q, rs) =>
-          q -> rs.map(r => r.getString(1) -> r.getLong(2)).toMap
-        },
-      t("probe_vecs").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) =>
-          q -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toVector
-        },
-      m.params("n_pass").toLong, m.params("a_tok").toLong,
-      m.params("window").toInt, m.params("stride").toInt)
-  }
-
   /** q103's incremental-curation state (family `curate_state`): the
     * v1 release's frozen cross-document tables — `canon_digests` /
     * `seg_digests` / `win_digests` (h STRING; duplication-sized,
     * DataFrame end to end, never collected) and `corpus_shingles` /
-    * `bench_shingles` (shingle BIGINT) — plus the s21 scalars (vocab,
+    * `bench_shingles` (shingle BIGINT) — plus the q53 chain's scalars (vocab,
     * rates, cutoffs, gate knobs) in tables/params. One artifact is the
     * whole monthly-release handoff: v2's delta curates from exactly
     * this, nothing else.
@@ -841,35 +358,5 @@ object ModelStore {
       segDigests = t("seg_digests"),
       winDigests = t("win_digests"),
       corpusShingles = t("corpus_shingles"))
-  }
-
-  /** q100's frozen baseline (s55 drift monitor): table `expected` =
-    * (feature, bucket, n1) — bucket-cardinality rows; the length grid
-    * (lenDiv, lenCap) rides in params because arrivals must bucket on
-    * the same grid the baseline counted on.
-    */
-  def saveDriftExpected(spark: SparkSession, dir: String,
-                        expected: Map[(String, String), Long],
-                        lenDiv: Long, lenCap: Long, version: Long,
-                        params: Map[String, String] = Map.empty): Manifest = {
-    require(expected.nonEmpty, "refusing to persist an empty drift baseline")
-    import spark.implicits._
-    save(spark, dir, "drift_expected", version,
-      params + ("len_div" -> lenDiv.toString, "len_cap" -> lenCap.toString),
-      Map("expected" -> expected.toSeq.map { case ((f, b), n) => (f, b, n) }
-        .sortBy(x => (x._1, x._2)).toDF("feature", "bucket", "n1")))
-  }
-
-  /** Returns the TYPED baseline bundle (r13 ADVICE): the grid cannot
-    * be detached from the counts it produced — s55 consumes this
-    * directly.
-    */
-  def loadDriftExpected(spark: SparkSession, dir: String)
-      : graft.operators.Drift.DriftBaseline = {
-    val (m, t) = load(spark, dir, "drift_expected")
-    graft.operators.Drift.DriftBaseline(
-      t("expected").collect() // bucket-cardinality rows — bounded
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
-      m.params("len_div").toLong, m.params("len_cap").toLong)
   }
 }

@@ -499,7 +499,7 @@ object SparkEntry {
       graft.operators.Rag.ragSearch(Tables.documents(s, d), Tables.embeddings(s, d))),
     // q103: incremental release curation — the delta (doc_id % 7 = 0)
     // curated against the v1 release's frozen artifacts (digests,
-    // cutoffs, vocab, rates — the s21 contract, now batch)
+    // cutoffs, vocab, rates)
     "q103_curate_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val docs = Tables.documents(s, d)

@@ -1,9 +1,9 @@
 package graft.functions
 
 /** The one MD5-hex implementation for imperative (non-Catalyst)
-  * sites — the multimodal codec passes and s20's segment keys all
-  * hash content to the same 32-char lowercase hex as SQL `md5()`,
-  * and the discipline (charset, casing) must not drift between them.
+  * sites — the multimodal codec passes hash content to the same
+  * 32-char lowercase hex as SQL `md5()`, and the discipline (charset,
+  * casing) must not drift between them.
   * Thread-local digest: per-row calls reuse one instance per task
   * thread instead of re-allocating.
   */

@@ -133,8 +133,8 @@ object QuantileFunctions {
       Bridge.expression(value), k).toAggregateExpression())
 }
 
-/** Buffer wire format, shared by the batch aggregate and the s18
-  * streaming state (the `Cms` object precedent): (k, n, then n
+/** Buffer wire format of the batch aggregate (the `Cms` object
+  * precedent): (k, n, then n
   * (hash, value) pairs). Deserialization re-inserts, so a truncated
   * or over-k payload can never corrupt the invariants.
   */

@@ -125,7 +125,7 @@ object Classifier {
     (docB, wt, prior)
   }
 
-  /** The frozen q72 model for s35's streaming scorer: bucket → w_q16
+  /** The frozen q72 model as driver-side maps: bucket → w_q16
     * (exactly B entries) plus the prior — the bounded-collect
     * protocol (the weight table is B rows by construction, never
     * corpus-sized).

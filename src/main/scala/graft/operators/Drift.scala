@@ -48,43 +48,12 @@ import org.apache.spark.sql.functions._
   * 10⁸·2¹⁶/ln2-factor, documented rather than baked in).
   */
 object Drift {
-  /** The per-arrival bucketing rule, shared verbatim by the column
-    * path ([[driftPsi]]'s feats) and s55's JVM scorer — lang/source
-    * coalesce to "<null>", n_chars maps to the capped fixed grid.
+  /** The length-bucketing rule of [[driftPsi]]'s feats as a JVM
+    * function — n_chars maps to the capped fixed grid, a null length
+    * to "<null>".
     */
   def lenBucket(nChars: Option[Long], lenDiv: Long, lenCap: Long): String =
     nChars.map(c => math.min(c / lenDiv, lenCap).toString).getOrElse("<null>")
-
-  /** The TYPED frozen-baseline bundle s55 consumes (r13 ADVICE): the
-    * expected counts and the length grid that produced them are one
-    * model — bucket labels like "3" exist on EVERY (lenDiv, lenCap)
-    * grid, so counts detached from their grid silently misattribute
-    * length buckets instead of failing. Construct via [[baseline]] or
-    * [[graft.ModelStore.loadDriftExpected]]; there is deliberately no
-    * API that accepts the counts and the grid separately.
-    */
-  case class DriftBaseline(expected: Map[(String, String), Long],
-                           lenDiv: Long, lenCap: Long) {
-    require(lenDiv > 0 && lenCap >= 0, "positive length grid required")
-  }
-
-  /** Freeze a corpus snapshot into the s55 baseline bundle. */
-  def baseline(oldSnap: DataFrame,
-               lenDiv: Long = 256L, lenCap: Long = 15L): DriftBaseline =
-    DriftBaseline(expectedCounts(oldSnap, lenDiv, lenCap), lenDiv, lenCap)
-
-  /** The frozen baseline side for s55: (feature, bucket) → n1 — a
-    * bucket-cardinality collect (the bigramLmIndex scalar protocol).
-    * lenDiv/lenCap are PART of the model (arrivals must bucket on the
-    * same grid the baseline counted on).
-    */
-  def expectedCounts(oldSnap: DataFrame,
-                     lenDiv: Long = 256L, lenCap: Long = 15L)
-      : Map[(String, String), Long] =
-    feats(oldSnap, lenDiv, lenCap)
-      .groupBy(col("feature"), col("bucket")).agg(count(lit(1)).as("n1"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
 
   private def feats(df: DataFrame, lenDiv: Long, lenCap: Long): DataFrame =
     df.select(explode(array(
@@ -113,8 +82,8 @@ object Drift {
   final val PsiMinorE8Q16: Long = 945484621996L
   final val PsiMajorE8Q16: Long = 2L * PsiMinorE8Q16
 
-  /** The shared decision rule (used by the q100b column path via the
-    * same literals, and by s55 consumers JVM-side).
+  /** The q100b decision rule JVM-side (the column path uses the same
+    * literals).
     */
   def alertLevel(psiE8Q16: Long): String =
     if (psiE8Q16 < PsiMinorE8Q16) "stable"

@@ -54,8 +54,7 @@ object Dsir {
 
   /** The shared q69 model build: the per-(doc, bucket) count frame
     * (narrow, checkpointed — reused by both model aggregates and the
-    * scoring join) and the ≤B-row Q16 weight table. Also the s32
-    * frozen-model source (dsirWeights collects the weight frame).
+    * scoring join) and the ≤B-row Q16 weight table.
     */
   private[operators] def dsirModel(documents: DataFrame, targetLang: String,
                                    buckets: Int): (DataFrame, DataFrame) = {
@@ -96,14 +95,6 @@ object Dsir {
       (L(col("c_t") + lit(1L)) - lit(lT) - L(col("c_r") + lit(1L)) + lit(lR)).as("w"))
     (docB, wt)
   }
-
-  /** The frozen q69 weight table alone (for s32's streaming scorer):
-    * bucket → w_q16, ≤ B entries — the bounded-collect protocol.
-    */
-  def dsirWeights(documents: DataFrame, targetLang: String = "en",
-                  buckets: Int = 1024): Map[Long, Long] =
-    dsirModel(documents, targetLang, buckets)._2.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** The q69 oracle: bigram buckets via the q37 char-fold + index-216
     * universal hash, both bag models, the Q16 log-ratio through the

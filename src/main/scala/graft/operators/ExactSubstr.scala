@@ -154,14 +154,12 @@ object ExactSubstr {
       .agg(sort_array(collect_list(col("pos"))).as("starts"))
   }
 
-  /** The frozen first-occurrence table for s34's streaming twin:
+  /** The frozen first-occurrence table as a driver-side map:
     * digest -> (first doc_id, first pos) for every duplicated window
     * of the training corpus. Bounded-collect protocol with an
     * asserted cap: the dup set is the corpus's DUPLICATED windows
-    * only (not all windows), small on curated corpora; a stream
-    * against a corpus whose dup set exceeds the cap needs the
-    * stream-static explode-join shape instead, and this fails loudly
-    * rather than OOM the driver.
+    * only (not all windows), small on curated corpora; past the cap
+    * this fails loudly rather than OOM the driver.
     */
   def dupWindowTable(documents: DataFrame, k: Int = 6,
                      maxDupWindows: Int = 1000000): Map[String, (Long, Int)] = {

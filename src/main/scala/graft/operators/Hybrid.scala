@@ -76,20 +76,8 @@ object Hybrid {
   /** ReplayableHash index reserved for the q99 probe draw. */
   final val ProbeHashIdx = 250
 
-  /** The frozen q99 retrieval model for s54's online scorer: per-probe
-    * query terms with their idf, per-probe quantized vectors, and the
-    * two corpus scalars the BM25 length normalization needs —
-    * nQueries·mTerms + nQueries·dim values, the bm25Index/codebook
-    * bounded protocol.
-    */
-  case class HybridModel(qterms: Map[Long, Map[String, Long]],
-                         probeVecs: Map[Long, Seq[Long]],
-                         nDocs: Long, aTok: Long)
-
   /** Shared q99 derivation: corpus frames, scalars, and the collected
-    * probe rows — ONE definition so [[hybridRrf]] (batch) and
-    * [[hybridIndex]] (the s54 freeze) cannot drift in the draw, the
-    * tokenization, or the stats.
+    * probe rows [[hybridRrf]] scores against.
     */
   private case class Prep(ta: DataFrame, qv: DataFrame, tf: DataFrame,
                           dl: DataFrame, dfv: DataFrame,
@@ -153,21 +141,6 @@ object Hybrid {
           .orderBy((col("tf") * col("idf_q16")).desc, col("token").asc)))
       .filter(col("rn") <= mTerms)
       .select(col("qid"), col("token"), col("idf_q16"))
-  }
-
-  /** Freeze the q99 model for streaming deployment (s54): the same
-    * prep/qtermFrame path as the batch operator, collected at its
-    * bounded sizes (nQueries·mTerms term rows + nQueries vectors).
-    */
-  def hybridIndex(documents: DataFrame, embeddings: DataFrame,
-                  nQueries: Int = 8, mTerms: Int = 8): HybridModel = {
-    val p = prep(documents, embeddings, nQueries)
-    require(p.probeRows.nonEmpty, "no eligible probe documents to freeze")
-    val qt = qtermFrame(p, mTerms).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .groupBy(_._1).map { case (q, rs) => q -> rs.map(x => x._2 -> x._3).toMap }
-    HybridModel(qt, p.probeRows.map { case (q, v) => q -> v }.toMap,
-      p.nDocs, p.aTok)
   }
 
   def hybridRrf(documents: DataFrame, embeddings: DataFrame,

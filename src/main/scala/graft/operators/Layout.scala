@@ -68,11 +68,11 @@ object Layout {
     zEncodeFrozen(lineitem, pmin, pmax, smin, smax)
   }
 
-  /** s50: the q93 encode against a FROZEN grid (the s40 SQ8 contract):
-    * a stream cannot re-derive global min/max per batch without the
-    * encoding of old rows drifting, so the grid is solved offline on
-    * the reference corpus and novel out-of-range keys CLAMP to the
-    * grid edge (deterministic, order-free — the s40 clamping rule).
+  /** s50: the q93 encode against a FROZEN grid: a stream cannot
+    * re-derive global min/max per batch without the encoding of old
+    * rows drifting, so the grid is solved offline on the reference
+    * corpus and novel out-of-range keys CLAMP to the grid edge
+    * (deterministic, order-free).
     * With the grid = the batch min/max, in-range rows encode
     * bit-identically to [[zorderEncode]] (spec-pinned).
     */

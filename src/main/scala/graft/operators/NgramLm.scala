@@ -90,8 +90,8 @@ object NgramLm {
   }
 
   /** The five ARPA-shaped model frames + the one scalar — exposed so
-    * the batch scorer, the ModelStore `kn_lm` family, and the s58
-    * streaming twin all freeze EXACTLY the same tables.
+    * the batch scorer and the JVM-side [[KnLmModel]] scorer freeze
+    * EXACTLY the same tables.
     *
     *  - tri(w1,w2,w3, c3):          trigram type counts
     *  - ctx(w1,w2, c12, n3):        context totals + distinct continuations
@@ -127,7 +127,7 @@ object NgramLm {
   /** The trained model as probability frames: (w2,w3 → p2_q30),
     * (w2 → lam2_q30), (w1,w2 → lam3_q30), (w3 → p1_q30), and the
     * scored trigram table (w1,w2,w3 → nll_q16). Shared by the batch
-    * scorer and [[knModelFrames]] (the ModelStore artifact).
+    * scorer and [[knModelFrames]] (the frozen tables).
     */
   private[graft] def knProbFrames(c: KnCounts): (DataFrame, DataFrame, DataFrame) = {
     import graft.functions.{VectorFunctions => VF}
@@ -177,7 +177,7 @@ object NgramLm {
         col("ppl_q16"))
   }
 
-  /** The s58 deployment bundle — the ARPA file's structure exactly
+  /** The frozen model as driver-side maps — the ARPA file's structure exactly
     * (probability + backoff weight per entry, Heafield 2011 §2): the
     * trigram nll table plus the lower-order (prob, backoff) ladders a
     * scorer walks for NOVEL n-grams. Collected maps are LM-model-sized
@@ -200,7 +200,7 @@ object NgramLm {
       * (ARPA semantics: backoff weights multiply down the whole
       * ladder, Chen & Goodman eq. 18). Novel n-grams only — on the
       * training corpus the first rung always hits, which is what
-      * makes s58 row-exact vs batch q104.
+      * makes [[score]] row-exact vs batch q104.
       */
     def nll(w1: String, w2: String, w3: String): Long =
       tri.getOrElse((w1, w2, w3), {
@@ -219,7 +219,7 @@ object NgramLm {
         NllCeilQ16 - graft.functions.Log2Q16Expr.compute(p)
       })
 
-    /** Score one document (the s58 kernel): (n_trigrams, nll_sum,
+    /** Score one document: (n_trigrams, nll_sum,
       * ppl) with the batch <3-token degradation.
       */
     def score(toks: Array[String]): (Long, Long, Option[Long]) =
@@ -232,8 +232,8 @@ object NgramLm {
       }
   }
 
-  /** The five ModelStore `kn_lm` tables, derived in one pass from the
-    * shared count frames (so batch, artifact, and stream cannot drift).
+  /** The five frozen-model tables, derived in one pass from the
+    * shared count frames (so batch and the frozen model cannot drift).
     */
   def knModelFrames(documents: DataFrame): Map[String, DataFrame] = {
     val c = knCounts(documents)
@@ -369,7 +369,7 @@ object NgramLm {
 
   /** The per-level KN model frames for order n with pruning knobs —
     * the shared builder behind [[knPerplexityNPruned]], the order-n
-    * ModelStore `kn_lm` family ([[knModelFramesN]]), and the generic
+    * frozen tables ([[knModelFramesN]]), and the generic
     * scorer's spec crosschecks. Arithmetic is bit-identical to
     * [[knModelN]]'s ladder (same Q30 expressions, levels keyed
     * canonically w1..wk instead of suffix-aligned).
@@ -447,7 +447,7 @@ object NgramLm {
         col("ppl_q16"))
   }
 
-  /** The order-n `kn_lm` ModelStore tables, PRUNED: per level k ≥ 2 a
+  /** The order-n frozen-model tables, PRUNED: per level k ≥ 2 a
     * `p$k` table of KEPT entries (cnt ≥ minCount → exact Q30 p) and a
     * `lam$k` table of STORED contexts (tot ≥ minCtx); `p1` is the full
     * (vocab-sized) continuation-unigram table. Entry bound:
@@ -470,8 +470,8 @@ object NgramLm {
     b.result()
   }
 
-  /** The generic order-n deployed scorer (s58's model, any order, any
-    * pruning): `levels(k-1)` maps a kept k-gram (last-k-words key) to
+  /** The generic order-n JVM-side scorer ([[KnLmModel]] at any order,
+    * any pruning): `levels(k-1)` maps a kept k-gram (last-k-words key) to
     * its Q30 p; `lams(k-2)` maps a stored level-k context to its λ.
     * The ladder is the ARPA walk: stored entry → λ(context)·lower when
     * the context is stored → lower directly — recursively to the
@@ -503,7 +503,7 @@ object NgramLm {
       NllCeilQ16 - graft.functions.Log2Q16Expr.compute(prob(n, words))
     }
 
-    /** Score one document (the s58 kernel, order-n): (n_ngrams,
+    /** Score one document (order-n): (n_ngrams,
       * nll_sum, ppl) with the batch <n-token degradation.
       */
     def score(toks: Array[String]): (Long, Long, Option[Long]) =

@@ -212,7 +212,7 @@ object Pipeline {
     val subbed = cutSubstrings(cleaned, ExactSubstr.windowStarts(cleaned, subK), subK)
     // 4. quality gate: p`gatePct` cutoffs from the cut corpus
     // (2-row driver collect — the trainCodebook scalar protocol),
-    // applied as a filter. s21 receives these SAME cutoffs frozen.
+    // applied as a filter. q103 freezes these SAME cutoffs for a delta.
     val (lenCut, alphaCut) = qualityCutoffs(subbed, gatePct)
     val gated = qualityGate(subbed, lenCut, alphaCut)
     // 5. decontamination against the CANONICALIZED benchmark (stage-0
@@ -279,7 +279,7 @@ object Pipeline {
 
   /** The frozen p`pct` quality cutoffs (n_chars, alpha_ratio) of a
     * corpus, from the q46 sketch — the pair batch stage 3 applies and
-    * s21 receives as its offline-solved config. None = the metric's
+    * q103 freezes from the v1 release. None = the metric's
     * sample was empty (no distribution → no gate on that metric).
     * Driver-side cost: ONE 2-row collect.
     */
@@ -315,10 +315,10 @@ object Pipeline {
   // release's FROZEN artifacts, emitting the same span schema.
   // ------------------------------------------------------------------
 
-  /** Everything q103 freezes from the v1 release — the s21 CurateConfig
-    * contract EXTENDED with the cross-document state the batch chain's
-    * dedup stages need (a streaming twin accumulates this state
-    * arrival-by-arrival; the incremental batch reads it as tables):
+  /** Everything q103 freezes from the v1 release — the chain's
+    * offline-solved scalars (vocab, rates, quality cutoffs, gate knobs)
+    * plus the cross-document state the batch chain's dedup stages
+    * need, read as tables:
     *
     *  - `canonDigests` (h): md5 of every v1 RULED doc's normalized
     *    text — a delta doc matching one is an exact dup of shipped
@@ -334,25 +334,25 @@ object Pipeline {
     *    of v1's REDACTED corpus — a delta doc's shingle matching one
     *    has document frequency ≥ 2 across the combined release, so it
     *    counts toward the stage-6b memorization ratio (note this is
-    *    the FULL distinct set, not the df>1 `dupShingles` the s21
-    *    config carries: the df=1 shingles are exactly the ones a
-    *    single delta re-occurrence flips to duplicated);
+    *    the FULL distinct set, not only the df>1 shingles: the df=1
+    *    shingles are exactly the ones a single delta re-occurrence
+    *    flips to duplicated);
     *  - `benchShingles` (shingle): the frozen benchmark set (stage 5);
     *  - `vocab`/`ratesMyriad`/`lenCut`/`alphaCut` and the gate knobs:
-    *    the s21 frozen-scalar contract, now batch — a delta must admit
+    *    the frozen scalars — a delta must admit
     *    under the release's published tokenizer, mixture, and quality
     *    percentiles, not re-derive them from its own skewed sample.
     *
-    * Frame fields are DataFrames end to end (the dup_windows ModelStore
-    * discipline — duplication-sized state never collects); persist and
+    * Frame fields are DataFrames end to end (duplication-sized state
+    * never collects); persist and
     * reload the whole bundle via ModelStore family `curate_state`.
     *
     * DOCUMENTED DIVERGENCES from a full q53 re-run on v1 ∪ delta,
     * restricted to the delta (PipelineSpec pins equality outside them):
     * vocab/rates/cutoffs are frozen (above); v1's own text is frozen —
     * a NEW v1↔delta segment duplication re-cleans the v1 doc in a full
-    * re-run (changing its windows) but never retroactively here (the
-    * s20 no-retraction contract); and the delta packs into its OWN
+    * re-run (changing its windows) but never retroactively here (v1
+    * is shipped and never retracted); and the delta packs into its OWN
     * shards from offset 0 (an incremental release ships new shard
     * files, never rewrites v1's).
     */

@@ -148,8 +148,8 @@ object QualityRules {
        |            AND n_stop >= $MinStopwords AS BIGINT) AS pass
        |FROM m""".stripMargin
 
-  /** JVM-side twin of the `pass` conjunction for the streaming chain
-    * (s21) — same tokenization contract as the Column battery
+  /** The `pass` conjunction as a JVM function, for per-record callers
+    * outside a query plan — same tokenization contract as the Column battery
     * (trim + ROOT-locale lower + \\s+ split, empties dropped), same
     * integer myriad ratios, same thresholds. Null/blank text fails
     * (n_words = 0 misses MinWords), matching the batch filter's

@@ -150,10 +150,8 @@ object Rag {
         col("passage_id"), col("score").as("score_q16"))
   }
 
-  /** The shared index+probe preparation: probe draw, passage index,
-    * probe query terms — ONE definition feeding both the batch
-    * retrieval ([[ragSearch]]) and the frozen-model extraction
-    * ([[ragModel]], the s57 deployment), so the two cannot drift.
+  /** The index+probe preparation [[ragSearch]] runs: probe draw,
+    * passage index, probe query terms.
     */
   private case class RagPrep(probes: Array[(Long, Seq[Long])],
                              idx: PassageIndex, qterms: DataFrame, qv: DataFrame)
@@ -260,85 +258,6 @@ object Rag {
       .filter(col("rank") <= topK)
       .select(col("qid").as("query_id"), col("rank"), col("doc_id"),
         col("passage_id"), col("rrf_e6"), col("lex_rank"), col("sem_rank"))
-  }
-
-  /** The s57 deployment bundle — q102's index FROZEN (the s27/s54
-    * protocol composed): per-probe query terms with their
-    * passage-collection idf, the probe vectors, and the collection
-    * scalars (P passages, A passage tokens). Everything an arrival
-    * needs to score itself LOCALLY: chunking is per-document, so a
-    * streaming doc can derive its own passages, score them against
-    * every probe, and reduce to its best passage — no postings state
-    * at all. The index's only cross-document content (idf, P, A) is
-    * exactly what freezes. ModelStore family `rag_index`.
-    */
-  case class RagModel(qterms: Map[Long, Map[String, Long]],
-                      probeVecs: Map[Long, Vector[Long]],
-                      nPass: Long, aTok: Long, window: Int, stride: Int) {
-    require(qterms.nonEmpty && probeVecs.nonEmpty,
-      "frozen RAG index must carry probe terms and vectors")
-    require(qterms.keySet.subsetOf(probeVecs.keySet),
-      "every lexical probe needs its vector (the q102 probe draw joins both)")
-
-    /** One arrival's lexical candidates: (qid, bestScore, bestChunk)
-      * for every probe sharing ≥1 term with any of the doc's passages
-      * — the JVM twin of the batch chunk → per-passage BM25 →
-      * per-doc best-passage chain (normalizeStr + the q85 window
-      * geometry + the q62 integer formula + (score DESC, chunk ASC)).
-      */
-    def lexicalBest(text: String): Iterator[(Long, Long, Long)] = {
-      val norm = TextOps.normalizeStr(text)
-      if (norm == null) return Iterator.empty
-      val ws = norm.split("\\s+", -1) // "" → [""], the batch split shape
-      val k = 1 + (math.max(ws.length - window, 0) + stride - 1) / stride
-      // per chunk: lowered non-empty tokens (the batch ptoks recipe)
-      val chunks: Array[(Long, Array[String])] = (0 until k).map { i =>
-        (i.toLong, ws.slice(i * stride, i * stride + window)
-          .map(_.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty))
-      }.toArray
-      qterms.iterator.flatMap { case (qid, terms) =>
-        var best: (Long, Long) = null // (score, chunk), (DESC, ASC)
-        chunks.foreach { case (cid, toks) =>
-          val pdl = toks.length.toLong
-          var tfm: scala.collection.mutable.HashMap[String, Long] = null
-          toks.foreach { t =>
-            if (terms.contains(t)) {
-              if (tfm == null) tfm = scala.collection.mutable.HashMap.empty
-              tfm.update(t, tfm.getOrElse(t, 0L) + 1L)
-            }
-          }
-          if (tfm != null) {
-            val lenTerm = (pdl * (9000L * nPass)) / aTok
-            var s = 0L
-            tfm.foreach { case (t, tf) =>
-              s += (terms(t) * tf * 22000L) / (tf * 10000L + 3000L + lenTerm)
-            }
-            if (best == null || s > best._1 || (s == best._1 && cid < best._2))
-              best = (s, cid)
-          }
-        }
-        if (best == null) Iterator.empty
-        else Iterator.single((qid, best._1, best._2))
-      }
-    }
-  }
-
-  /** Extract the frozen q102 index — the SAME [[ragPrep]] the batch
-    * retrieval runs, collected (nQueries·mTerms term rows + nQueries
-    * vectors, the bounded trainCodebook protocol).
-    */
-  def ragModel(documents: DataFrame, embeddings: DataFrame,
-               window: Int = 64, stride: Int = 32,
-               nQueries: Int = 8, mTerms: Int = 8): RagModel = {
-    val prep = ragPrep(documents, embeddings, window, stride, nQueries, mTerms)
-    require(prep.probes.nonEmpty, "no probes drawable — empty corpus or embeddings")
-    val terms = prep.qterms.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(t => t._2 -> t._3).toMap
-      }
-    RagModel(terms, prep.probes.map { case (q, v) => q -> v.toVector }.toMap,
-      prep.idx.nPass, prep.idx.aTok, window, stride)
   }
 
   /** The q102 chain oracle: normalize → chunk (the q85 CTEs) →

@@ -811,8 +811,8 @@ object Similarity {
             col("best.d2").as("d2"))
     }
 
-  /** The trained q60 centroids alone (for s26's frozen-model streaming
-    * assignment): same fit, the quantized frame discarded.
+  /** The trained q60 centroids alone: same fit, the quantized frame
+    * discarded.
     */
   def kmeansCentroids(embeddings: DataFrame, k: Int = 8,
                       iters: Int = 3): Seq[(Int, Seq[Long])] =
@@ -1224,13 +1224,6 @@ object Similarity {
     Some((cents, ex))
   }
 
-  /** The trained q65 codebook alone (for s28's frozen-model streaming
-    * encoder): same fit, the exploded frames discarded.
-    */
-  def pqCodebook(embeddings: DataFrame, kcode: Int = 8,
-                 iters: Int = 2): Map[(Int, Int), Seq[Long]] =
-    pqFit(embeddings, kcode, iters).map(_._1).getOrElse(Map.empty)
-
   /** One encoding pass over the exploded frame: per (vector, sub) the
     * argmin codeword via array_min over (d2, cid) structs from
     * LITERAL codewords, dispatched on `sub` by a when-chain — a PURE
@@ -1392,20 +1385,6 @@ object Similarity {
       .select(col("vec_id"), col("pos"), col("code"),
         expr("(v - mn) - (code * sp) div 255").as("err"))
   }
-
-  /** The trained q82 grid alone — per-dimension (min, span) pairs in
-    * the quantized integer domain, position-ordered — for s40's
-    * frozen-model streaming encode (the kmeansCentroids/pqCodebook
-    * protocol: a drifting grid would re-encode history). ONE 64-group
-    * aggregate, one bounded collect.
-    */
-  def sq8Grid(embeddings: DataFrame): Seq[(Long, Long)] =
-    embeddings.select(
-        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0 + 0.5) AS BIGINT) + 1048576)").as("q"))
-      .select(posexplode(col("q")).as(Seq("pos", "v")))
-      .groupBy(col("pos")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
-      .collect().sortBy(_.getInt(0))
-      .map(r => (r.getLong(1), r.getLong(2) - r.getLong(1))).toSeq
 
   /** The q82 oracle: identical quantize-shift, per-dim min/max as one
     * grouped aggregate, same truncating `//` (nonnegative domain makes
@@ -1723,22 +1702,6 @@ object Similarity {
             .join(rq.select(col("vec_id"), col("cid")), Seq("vec_id"))
           (coarse, book, codes, q)
       }
-    }
-
-  /** The trained q66 model alone (for s30's frozen-model streaming
-    * search): coarse codebook, residual PQ codebooks, and the
-    * hash-smallest query set with full integer vectors.
-    */
-  def ivfadcModel(embeddings: DataFrame, kCoarse: Int = 8, coarseIters: Int = 3,
-                  kcode: Int = 16, pqIters: Int = 2, nQueries: Int = 10)
-      : Option[(Seq[(Int, Seq[Long])], Map[(Int, Int), Seq[Long]], Seq[(Long, Seq[Long])])] =
-    ivfadcFit(embeddings, kCoarse, coarseIters, kcode, pqIters).map {
-      case (coarse, book, _, q) =>
-        val spark = embeddings.sparkSession
-        import spark.implicits._
-        val qrows = q.orderBy(col("h"), col("vec_id")).limit(nQueries)
-          .select(col("vec_id"), col("q")).as[(Long, Seq[Long])].collect()
-        (coarse, book, qrows.toSeq)
     }
 
   private[operators] def intD2(a: Seq[Long], b: Seq[Long]): Long =

@@ -516,8 +516,7 @@ object TextOps {
     */
   /** The q75 strip class: C0 (less \t \n \r), DEL, C1, ZWSP..ZWJ, BOM
     * — in the Java∩RE2-identical subset (the q58 discipline). Shared
-    * by the operator, the q53 chain's stage 0, and the s21 stream
-    * twin's JVM-side mirror.
+    * by the operator and the q53 chain's stage 0.
     */
   private[graft] val CtrlClass =
     "[\\x{0000}-\\x{0008}\\x{000B}\\x{000C}\\x{000E}-\\x{001F}" +
@@ -530,19 +529,6 @@ object TextOps {
     regexp_replace(wsTrim(regexp_replace(
       graft.functions.VectorFunctions.nfc_normalize(text), CtrlClass, "")),
       "\\s+", " ")
-
-  /** The byte-identical JVM-side twin of `normalizeCol` for streaming
-    * mappers (java.util.regex is the SAME engine Spark's
-    * regexp_replace runs, and NfcNormalizeExpr.nfc is the shared NFC
-    * kernel) — null-propagating like the column form.
-    */
-  private[graft] def normalizeStr(text: String): String =
-    if (text == null) null
-    else graft.functions.NfcNormalizeExpr.nfc(
-      org.apache.spark.unsafe.types.UTF8String.fromString(text)).toString
-      .replaceAll(CtrlClass, "")
-      .replaceAll("^\\s+|\\s+$", "")
-      .replaceAll("\\s+", " ")
 
   def normalizeText(documents: DataFrame): DataFrame = {
     val ctrl = CtrlClass
@@ -1031,8 +1017,8 @@ object TextOps {
       hashIndex = 214, keyPrefix = "mixtok:", Seq(col("n_tokens")))
   }
 
-  /** q48b admission at FROZEN rates (q103's stage 7, the s21 contract
-    * in batch): the same tokenFrame + index-214 'mixtok:' hash rule as
+  /** q48b admission at FROZEN rates (q103's stage 7): the same
+    * tokenFrame + index-214 'mixtok:' hash rule as
     * [[mixtureSolveTokenized]], but the rate table is GIVEN (solved on
     * the prior release) instead of re-solved — an incremental delta
     * must admit under the release's published mixture, not re-derive
@@ -1048,13 +1034,12 @@ object TextOps {
       hashIndex = 214, keyPrefix = "mixtok:", Seq(col("n_tokens")))
   }
 
-  /** The q48b rate table as a driver-side map — the configuration a
-    * STREAMING admission gate (s21) needs: rates are solved offline
-    * from a corpus snapshot, then applied per-arrival. L rows, one
-    * per target language — a documented bounded collect (the same
-    * class as the tokenizer vocab). Shares tokenFrame/tokenRates
-    * with mixtureSolveTokenized so the stream's admission can never
-    * drift from batch q48b's.
+  /** The q48b rate table as a driver-side map — the configuration
+    * q103 freezes from a release and [[mixtureAdmitFrozen]] applies to
+    * a delta. L rows, one per target language — a documented bounded
+    * collect (the same class as the tokenizer vocab). Shares
+    * tokenFrame/tokenRates with mixtureSolveTokenized so frozen
+    * admission can never drift from batch q48b's.
     */
   def tokenMixtureRates(documents: DataFrame, targetMyriad: Map[String, Int],
                         vocab: Seq[String], maxN: Int = 4): Map[String, Long] = {
@@ -1167,8 +1152,7 @@ object TextOps {
         expr("CASE WHEN n_tokens = 0 THEN NULL ELSE (10000 * alloc) DIV n_tokens END"))
   }
 
-  /** The q90 rate table as a driver-side map — the frozen config the
-    * s47 streaming admission gate applies per-arrival (the
+  /** The q90 rate table as a driver-side map (the
     * tokenMixtureRates protocol keyed by source; S rows, bounded).
     */
   def sourceQuotaRates(documents: DataFrame, targetMyriad: Map[String, Int],
@@ -1337,7 +1321,7 @@ object TextOps {
     * the prior release already contains its digest (`priorDigests`,
     * one `h` column: a v1 copy plus this one is cross-document
     * duplication by definition; v1's own text is frozen and never
-    * re-cleaned — the s20 no-retraction contract).
+    * re-cleaned).
     */
   private[operators] def segmentDedupVs(documents: DataFrame, segWords: Int,
                                         priorDigests: Option[DataFrame]): DataFrame = {
@@ -1464,25 +1448,25 @@ object TextOps {
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
   }
 
-  /** The add-one-smoothed bigram LM over a corpus, scored in Q16
-    * fixed-point: one row per observed bigram with its negative log2
-    * probability `nll_q16 = log2_q16(c1(w1) + V) - log2_q16(c12 + 1)`
-    * where c1 = prefix occurrences, c12 = bigram occurrences, V =
-    * corpus distinct-token count. Built once, joined by scorers (q61
-    * batch, s25 streaming). V is a single driver-collected scalar
-    * (one row — the trainCodebook collect protocol).
-    */
   /** Corpus distinct-token count — the LM smoothing constant V. */
-  def vocabSize(corpus: DataFrame): Long =
+  private def vocabSize(corpus: DataFrame): Long =
     tokArrays(corpus)
       .select(explode(col("toks")).as("t"))
       .agg(countDistinct(col("t")).as("v"))
       .collect()(0).getLong(0)
 
   /** (w1, c1) — bigram-prefix occurrence counts (vocab-sized). */
-  def bigramPrefixCounts(corpus: DataFrame): DataFrame =
+  private def bigramPrefixCounts(corpus: DataFrame): DataFrame =
     bigrams(corpus).groupBy(col("w1")).agg(count(lit(1)).as("c1"))
 
+  /** The add-one-smoothed bigram LM over a corpus, scored in Q16
+    * fixed-point: one row per observed bigram with its negative log2
+    * probability `nll_q16 = log2_q16(c1(w1) + V) - log2_q16(c12 + 1)`
+    * where c1 = prefix occurrences, c12 = bigram occurrences, V =
+    * corpus distinct-token count. Built once, joined by the q61
+    * scorer. V is a single driver-collected scalar
+    * (one row — the trainCodebook collect protocol).
+    */
   def bigramModel(corpus: DataFrame): DataFrame = {
     val vocabV = vocabSize(corpus)
     val uniIl = bigramPrefixCounts(corpus)
@@ -1499,8 +1483,7 @@ object TextOps {
     * filter (score every document by how surprising its token stream
     * is under a language model; high perplexity ⇒ boilerplate/garbage,
     * low ⇒ fluent text). The LM here is self-trained on the corpus
-    * (add-one-smoothed bigrams); s25 scores a stream against the same
-    * model frozen.
+    * (add-one-smoothed bigrams).
     *
     * ORACLE-EXACT BY CONSTRUCTION: perplexity needs logarithms, and
     * `Math.log`'s last ulp differs between engines — so the entire
@@ -1573,16 +1556,6 @@ object TextOps {
         (graft.functions.VectorFunctions.log2_q16(lit(2 * nDocs + 2)) -
           graft.functions.VectorFunctions.log2_q16(col("df") * 2 + 1)).as("idf_q16"))
     (qIdf, tf, dl, nDocs, aTok)
-  }
-
-  /** The frozen q62 query-term stats for s27's online scorer:
-    * (token → idf_q16, N, A) — a 20-row collect plus two bounded
-    * scalars (the bigramLmIndex protocol).
-    */
-  def bm25QueryIndex(documents: DataFrame, nQueryTerms: Int = 20,
-                     minDf: Long = 5L): (Map[String, Long], Long, Long) = {
-    val (qIdf, _, _, nDocs, aTok) = bm25Parts(documents, nQueryTerms, minDf)
-    (qIdf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap, nDocs, aTok)
   }
 
   def bm25Search(documents: DataFrame, nQueryTerms: Int = 20, k: Int = 10,
@@ -1663,17 +1636,6 @@ object TextOps {
           .cast("long").as("c33"),
         expr("try_element_at(sample, CAST(67 * (size(sample) - 1) DIV 100 AS INT) + 1)")
           .cast("long").as("c67"))
-  }
-
-  /** The frozen per-language cutoffs for s36's online bucketer:
-    * lang → (c33, c67) — a languages-count collect (the
-    * bigramLmIndex scalar protocol).
-    */
-  def ccnetCutoffs(documents: DataFrame, k: Int = 1024): Map[String, (Long, Long)] = {
-    val withLang = documents.select(col("doc_id"), col("lang"))
-      .join(perplexity(documents), Seq("doc_id"))
-    ccnetCutFrame(withLang, k).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
   }
 
   /** q76: the CORPUS CARD — the per-language summary table every

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming re-expression of the reference's streaming
-  * topology (SURVEY.md §2 s01–s04; reference
-  * streams/src/main/java/dev/buesing/ksd/streams/Streams.java).
+  * topology (SURVEY.md §2 s01–s06, s08, s12 and s23; reference
+  * streams/src/main/java/dev/buesing/ksd/streams/Streams.java), plus
+  * the per-record shingle and minhash helpers that reproduce the batch
+  * q25/q38 hashing outside a query plan.
   *
   * Each op is a pure stream→stream transform usable under any source
   * (Kafka in production, MemoryStream in tests, files in the driver
@@ -252,27 +254,6 @@ object StreamOps {
     streamOrderReassembly(enriched)
   }
 
-  /** s07: streaming exact deduplication — the streaming analog of the
-    * q20 batch pass. Keyed on the content hash, not the payload, so
-    * dedup state is a fixed-width key per distinct document. With an
-    * event-time column + watermark, `withinWatermark` bounds state
-    * (late duplicates beyond the watermark pass through — the standard
-    * trade; unbounded mode is exact-forever at O(distinct) state).
-    */
-  def streamDedupExact(docs: DataFrame,
-                       eventTimeCol: Option[String] = None,
-                       watermark: String = "1 hour"): DataFrame = {
-    val hashed = docs.withColumn("text_hash",
-      md5(regexp_replace(lower(graft.operators.TextOps.wsTrim(col("text"))), "\\s+", " ")))
-    eventTimeCol match {
-      case Some(tsCol) =>
-        hashed.withWatermark(tsCol, watermark)
-          .dropDuplicatesWithinWatermark("text_hash")
-      case None =>
-        hashed.dropDuplicates("text_hash")
-    }
-  }
-
   /** s03: stream ⋈ static-table join (Streams.java:137/147 — joining
     * the order stream against KTable dims). The static side is a plain
     * DataFrame; Spark broadcasts it when small, exactly the
@@ -419,256 +400,12 @@ object StreamOps {
       }
   }
 
-  /** s48 per-key state: the OPEN SCD2 version plus the (ts, event_id)
-    * high-water mark that guards against stale cross-batch replays.
-    */
-  case class Scd2State(version: Long, state: Option[String],
-                       valid_from_us: Long, last_ts_us: Long, last_event_id: Long)
-
-  /** s48 output: one batch-q92 row in the micros domain; the open
-    * version re-emits each batch (Update mode) with `is_current` true
-    * until a change closes it.
-    */
-  case class Scd2Row(user_id: Long, version: Long, state: Option[String],
-                     valid_from_us: Long, valid_to_us: Option[Long],
-                     is_current: Boolean)
-
-  /** s48: q92's SCD Type-2 history maintained CONTINUOUSLY — the
-    * warehouse-dimension twin of s23 (s23 keeps "state now", this
-    * keeps the whole validity history): each arriving change CLOSES
-    * the open version (emitting it with its final valid_to) and opens
-    * the next; re-asserting the current state is a no-op (the
-    * IS-DISTINCT-FROM rule, null-safe — batch q92's contract).
-    *
-    * Batch-order contract (the s24 discipline): rows are folded in
-    * (ts_us, event_id) order WITHIN a batch — one batch, or any
-    * per-key-monotone batch split, is row-exact vs batch q92 on the
-    * final emission per (user, version). An event arriving BELOW the
-    * key's (ts, event_id) high-water mark is IGNORED (an online
-    * history cannot retroactively split an already-closed interval —
-    * the same no-retract class as s20/s24, spec-asserted), where the
-    * batch fold would have inserted it; in-order delivery is the
-    * converge condition.
-    *
-    * Scale: state is ONE open version + two longs per key (closed
-    * versions are emitted, never retained), hash-partitioned; per
-    * batch one fold pass per key, no sort beyond the per-key batch
-    * slice, no window.
-    */
-  /** One dead-letter row (s53): an arriving event REJECTED by its
-    * key's (ts, event_id) high-water mark, with the HWM that rejected
-    * it — the attribution an ingest SLA needs (which key, which event,
-    * how far behind the key's clock it arrived).
-    */
-  case class LateDrop(user_id: Long, event_id: Long, ts_us: Long,
-                      event_type: Option[String],
-                      hwm_ts_us: Long, hwm_event_id: Long)
-
-  /** s53 union output: `kind` = "version" (a batch-q92 row, the s48
-    * emission) or "late_drop" (a [[LateDrop]] flattened in) — one
-    * stream, two sinks at the writer (the foreachBatch split-by-kind
-    * pattern), so the audit needs NO second stateful query.
-    */
-  case class Scd2Emit(kind: String, user_id: Long,
-                      version: Long, state: Option[String], valid_from_us: Long,
-                      valid_to_us: Option[Long], is_current: Boolean,
-                      event_id: Long, ts_us: Long,
-                      hwm_ts_us: Long, hwm_event_id: Long)
-
-  /** THE s48/s53 fold — single definition so the audited and
-    * unaudited operators cannot drift: processes a batch's rows for
-    * one key in (ts_us, event_id) order against the open-version
-    * state, returning (closed+open version emissions, late drops,
-    * new state). The HWM advances only on ACCEPTED rows, and (the r12
-    * ADVICE fix) a key's initial null run opens no version — matching
-    * batch q92's null <=> null lag filter.
-    */
-  private def scd2FoldBatch(key: Long, batchRows: Seq[ChangelogEvent],
-                            st0: Option[Scd2State])
-      : (Seq[Scd2Row], Seq[LateDrop], Option[Scd2State]) = {
-    val out = collection.mutable.ArrayBuffer[Scd2Row]()
-    val drops = collection.mutable.ArrayBuffer[LateDrop]()
-    var st = st0.orNull
-    batchRows.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      val stale = st != null && (e.ts_us < st.last_ts_us ||
-        (e.ts_us == st.last_ts_us && e.event_id <= st.last_event_id))
-      if (stale)
-        drops += LateDrop(key, e.event_id, e.ts_us, Option(e.event_type),
-          st.last_ts_us, st.last_event_id)
-      else {
-        val et = Option(e.event_type)
-        if (st == null) {
-          if (et.isDefined)
-            st = Scd2State(1L, et, e.ts_us, e.ts_us, e.event_id)
-        } else if (et != st.state) { // null-safe: Option equality
-          out += Scd2Row(key, st.version, st.state, st.valid_from_us,
-            Some(e.ts_us), is_current = false)
-          st = Scd2State(st.version + 1, et, e.ts_us, e.ts_us, e.event_id)
-        } else
-          st = st.copy(last_ts_us = e.ts_us, last_event_id = e.event_id)
-      }
-    }
-    val opens =
-      if (st == null) Seq.empty
-      else Seq(Scd2Row(key, st.version, st.state,
-        st.valid_from_us, None, is_current = true))
-    (out.toSeq ++ opens, drops.toSeq, Option(st))
-  }
-
-  def streamScd2(changelog: Dataset[ChangelogEvent]): Dataset[Scd2Row] = {
-    import changelog.sparkSession.implicits._
-    changelog
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Scd2State, Scd2Row](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[ChangelogEvent], state: GroupState[Scd2State]) =>
-          val (versions, _, st) = scd2FoldBatch(key, rows.toSeq, state.getOption)
-          st.foreach(state.update)
-          versions.iterator
-      }
-  }
-
-  /** s53: the s48 SCD2 stream WITH dead-letter accounting — the one
-    * streaming production surface the family left silent: every
-    * below-watermark arrival s48 ignores by contract (the s20/s24
-    * no-retract class) is COUNTED AND ATTRIBUTED here instead of
-    * vanishing. The fold is [[scd2FoldBatch]], shared verbatim with
-    * [[streamScd2]], so the version emissions are identical by
-    * construction and the audit rows are EXACTLY the events the
-    * unaudited twin dropped (spec-asserted); each drop carries the
-    * HWM that rejected it, so the SLA dashboard can histogram
-    * lateness (hwm_ts_us − ts_us) per key. State is unchanged (one
-    * open version + the HWM — late rows never touch it); the writer
-    * splits the union by `kind` into the dimension table and the
-    * dead-letter queue in one foreachBatch.
-    */
-  def streamScd2Audited(changelog: Dataset[ChangelogEvent]): Dataset[Scd2Emit] = {
-    import changelog.sparkSession.implicits._
-    changelog
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Scd2State, Scd2Emit](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[ChangelogEvent], state: GroupState[Scd2State]) =>
-          val (versions, drops, st) = scd2FoldBatch(key, rows.toSeq, state.getOption)
-          st.foreach(state.update)
-          versions.iterator.map(v =>
-            Scd2Emit("version", v.user_id, v.version, v.state, v.valid_from_us,
-              v.valid_to_us, v.is_current, -1L, -1L, -1L, -1L)) ++
-            drops.iterator.map(d =>
-              Scd2Emit("late_drop", d.user_id, -1L, d.event_type, -1L,
-                None, is_current = false, d.event_id, d.ts_us,
-                d.hwm_ts_us, d.hwm_event_id))
-      }
-  }
-
-  /** The s24 tagged input: side 0 = QUOTE (an order version — t_us is
-    * o_orderdate as epoch micros, orderkey set), side 1 = QUERY (an
-    * event — t_us is the event time, event_id set). One stream carries
-    * both, the union-tag shape batch q34 uses.
-    */
-  case class AsofInput(user_id: Long, side: Int, t_us: Long,
-                       event_id: Long, orderkey: Long)
-
-  /** s24 output: batch q34's row with timestamps in epoch micros
-    * (None where the user had no quote at or before the event). */
-  case class AsofOut(event_id: Long, user_id: Long, event_ts_us: Long,
-                     last_orderkey: Option[Long], last_orderdate_us: Option[Long])
-
-  /** s24: the as-of join run CONTINUOUSLY — each arriving event is
-    * enriched with the latest order version at or before its event
-    * time, which is exactly what the reference's stream-KTable join
-    * semantics deliver (the KTable holds "the latest value as of now",
-    * Streams.java:137; batch q34 reconstructs it point-in-time,
-    * this maintains it live).
-    *
-    * State per user: the quote book — (o_orderdate_us → max orderkey),
-    * stored sorted by date. Bounded by DISTINCT order dates per key
-    * (quotes on the same date compact to max orderkey, batch q34's
-    * pre-dedup), i.e. the compacted-topic retention a KTable holds; a
-    * deployment facing unbounded version churn adds watermark-based
-    * eviction of versions older than the event watermark.
-    *
-    * Batch-order contract (the s16/s17 as-of-ARRIVAL discipline):
-    * within a batch, quotes fold into the book BEFORE any query is
-    * answered (the GlobalKTable bootstrap order — the reference
-    * populates dim tables before streams flow) and queries are
-    * answered in (t_us, event_id) order; a quote at t == query-t IS
-    * visible (inclusive as-of, batch q34's (t, side) sort). So a run
-    * whose quotes arrive no later than their queries — one batch, or
-    * dims-first batches — is ROW-EXACT vs batch q34. A quote arriving
-    * in a LATER batch than a query it would have matched does NOT
-    * retract the already-emitted row (an online enricher cannot
-    * retract; the same keep-first divergence class as s20, asserted
-    * both ways in the spec).
-    *
-    * Scale: one shuffle on user_id per batch; state lookups are a
-    * sorted scan per query (versions-per-key bounded); no sort, no
-    * window, no dim re-read per batch.
-    */
-  def streamAsofJoin(inputs: Dataset[AsofInput]): Dataset[AsofOut] = {
-    import inputs.sparkSession.implicits._
-    inputs
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[(Long, Long)], AsofOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[AsofInput], state: GroupState[List[(Long, Long)]]) =>
-          val rs = rows.toSeq
-          // 1. quotes first: fold into the book, same-date compaction
-          //    to max orderkey (batch q34's per-(user, date) pre-dedup)
-          var book: Map[Long, Long] = state.getOption.getOrElse(Nil).toMap
-          val quotes = rs.filter(_.side == 0)
-          quotes.foreach { qr =>
-            book = book.updated(qr.t_us,
-              math.max(qr.orderkey, book.getOrElse(qr.t_us, Long.MinValue)))
-          }
-          if (quotes.nonEmpty) state.update(book.toList.sortBy(_._1))
-          val sorted = book.toSeq.sortBy(_._1)
-          // 2. queries in (t, event_id) order — iterator order is a
-          //    shuffle artifact (the s12 class of fix)
-          rs.filter(_.side == 1).sortBy(r => (r.t_us, r.event_id)).iterator.map { e =>
-            val m = sorted.takeWhile(_._1 <= e.t_us).lastOption
-            AsofOut(e.event_id, key, e.t_us, m.map(_._2), m.map(_._1))
-          }
-      }
-  }
-
-  /** A document with its minhash signature, exploded per LSH band —
-    * the streaming unit of s11. band_key packs (band_id, band_sig).
-    */
-  case class BandedDoc(band_key: Long, doc_id: Long, sig: Array[Long])
-
-  /** s11 output: one row per (document, band) group visit; downstream
-    * takes max per doc_id for the current dup verdict.
-    */
-  case class DupReport(doc_id: Long, n_candidates: Long, n_dups: Long,
-                       best_match: Long, best_est: Double)
-
-  /** Minhash of one text, evaluated INSIDE executors (called from
-    * `Dataset.flatMap` below) — IDENTICAL hashing to the batch q25
-    * pipeline (PolyHashExpr.hash shingles, universal-hash
-    * permutations), so stream and batch agree exactly on signatures.
-    */
   /** Distinct word n-gram poly-hashes of one text, evaluated INSIDE
     * executors — IDENTICAL normalization + hashing to the batch
     * `Dedup.postings` (wsTrim → lower → split → n-gram join → base-31
     * poly hash), asserted in specs, so stream and batch agree on
     * shingle sets exactly.
     */
-  /** The batch tokenization (wsTrim → lower → split → drop empties),
-    * evaluated INSIDE executors — byte-identical to the q39/q40/q45
-    * token stream (asserted by the s14/s15 parity specs).
-    */
-  def normTokens(text: String): Array[String] =
-    // null-safe: the batch twins evaluate split(lower(NULL)) to NULL
-    // and explode nothing — one bad record must degrade the same way
-    // here, not kill the query with an NPE
-    if (text == null) Array.empty
-    else text.replaceAll("^\\s+|\\s+$", "")
-      // Locale.ROOT: Spark's lower() is locale-independent; the JVM
-      // default-locale overload would break the row-exact-vs-batch
-      // contracts under e.g. a Turkish locale ('I' → dotless i)
-      .toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-
   def wordShingleHashes(text: String, shingleN: Int): Set[Long] = {
     val toks = text.replaceAll("^\\s+|\\s+$", "")
       .toLowerCase(java.util.Locale.ROOT).split("\\s+")
@@ -678,13 +415,15 @@ object StreamOps {
       .map(graft.functions.PolyHashExpr.hash).toSet
   }
 
+  /** Minhash of one text — IDENTICAL hashing to the batch q25
+    * pipeline (PolyHashExpr.hash shingles, universal-hash
+    * permutations), so a per-record caller and batch agree exactly on
+    * signatures.
+    */
   def minhashSignature(text: String, numPerm: Int = 32, shingleN: Int = 3): Array[Long] =
     minhashSignatureOf(wordShingleHashes(text, shingleN).toArray, numPerm)
 
-  /** Signature over an ALREADY-SHINGLED set — shared by s11 (same-set
-    * dedup) and s19 (cross-set decontamination), so both band folds
-    * consume identical bytes.
-    */
+  /** Signature over an ALREADY-SHINGLED set (the q25 permutations). */
   def minhashSignatureOf(shingles: Array[Long], numPerm: Int): Array[Long] = {
     import graft.operators.Dedup.ReplayableHash
     Array.tabulate(numPerm) { i =>
@@ -699,10 +438,6 @@ object StreamOps {
     }
   }
 
-  /** s13 output: one row per streamed document — the q38 columns. */
-  case class ContamReport(doc_id: Long, n_shingles: Long, n_overlap: Long,
-                          contaminated: Long)
-
   /** Collect a benchmark's distinct shingle hashes to the driver —
     * eval sets are small by definition (thousands of docs against a
     * corpus of billions), so the set broadcasts; the same assumption
@@ -714,2491 +449,6 @@ object StreamOps {
     graft.operators.Dedup.postings(benchmark, shingleN)
       .select(col("shingle")).distinct()
       .collect().map(_.getLong(0)).toSet
-  }
-
-  /** The q53 chain's frozen benchmark shingles: the benchmark is
-    * stage-0-canonicalized FIRST (batch `Pipeline.curate` parity — a
-    * decomposed benchmark copy must still register), then shingled as
-    * in q38. s13's plain `benchmarkShingleSet` stays un-normalized,
-    * matching batch q38.
-    */
-  def curateBenchShingles(benchmark: org.apache.spark.sql.DataFrame,
-                          shingleN: Int = 4): Set[Long] = {
-    import org.apache.spark.sql.functions.col
-    benchmarkShingleSet(benchmark.select(col("doc_id"),
-      graft.operators.TextOps.normalizeCol(col("text")).as("text")), shingleN)
-  }
-
-  /** s43: STREAMING memorization-risk scoring — q84 as an online
-    * admission signal: every arriving document scored against the
-    * FROZEN duplicate-shingle table (the shingles with corpus df >
-    * dfCap — q84's `dfreq` frame, frozen exactly as s34 freezes the
-    * dup-window table: a drifting df table would re-score history).
-    * The dup table is corpus-derived but DUPLICATION-sized, not
-    * corpus-sized; it still stays a DataFrame (stream-static equi-join
-    * on the 8-byte hash — at 100 TB the static side shuffles/
-    * broadcasts digests only, the s41 discipline, never a driver
-    * collect). Shingle bytes are IDENTICAL to batch (shared
-    * wordShingleHashes ↔ Dedup.postings), so a training-corpus stream
-    * reproduces q84 ROW-EXACTLY under any batching (spec).
-    *
-    * State note (the s01 stateful-agg class): each document arrives
-    * WHOLE in one input row, so its aggregate finalizes in the batch
-    * it arrives in and never updates again — but Spark's streaming
-    * aggregation cannot know that and keeps the (n_shingles, n_dup)
-    * pair per doc_id. Three longs per scored doc: a production ingest
-    * deployment bounds the scoring window with a watermark/state TTL
-    * (transformWithState TTLConfig), exactly as it would for s01.
-    */
-  def streamMemorizationRisk(docs: Dataset[(Long, String)],
-                             dupShingles: org.apache.spark.sql.DataFrame,
-                             shingleN: Int = 4): org.apache.spark.sql.DataFrame = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, lit, when, count, coalesce}
-    val perDoc = docs.flatMap { case (id, text) =>
-      if (text == null) Iterator.single((id, None: Option[Long]))
-      else {
-        val shs = wordShingleHashes(text, shingleN)
-        if (shs.isEmpty) Iterator.single((id, None))
-        else shs.iterator.map(h => (id, Some(h)))
-      }
-    }.toDF("doc_id", "shingle")
-    perDoc
-      .join(dupShingles.select(col("shingle"), lit(1L).as("dup")), Seq("shingle"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(col("shingle")).as("n_shingles"),
-        count(col("dup")).as("n_dup"))
-      .select(col("doc_id"), col("n_shingles"), col("n_dup"),
-        when(col("n_shingles") > 0,
-          col("n_dup").cast("double") / col("n_shingles").cast("double"))
-          .otherwise(lit(null).cast("double")).as("dup_ratio"))
-  }
-
-  /** The frozen duplicate-shingle table for s43: q84's over-dfCap
-    * shingle set, as a (shingle) frame.
-    */
-  def dupShingleTable(corpus: org.apache.spark.sql.DataFrame,
-                      shingleN: Int = 4, dfCap: Int = 1): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    graft.operators.Dedup.postings(
-        corpus.filter(col("text").isNotNull), shingleN)
-      .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select(col("shingle"))
-  }
-
-  /** s46 output: one composition CELL per (source, lang) — the q88
-    * cell columns minus the share (see the contract below).
-    */
-  case class MixCell(source: String, lang: String, n_docs: Long,
-                     n_tokens: Long)
-
-  /** s46: STREAMING source-mix composition — q88's (source × lang)
-    * CELLS maintained as documents arrive (the live composition
-    * dashboard of an ingest run). Keyed state per (source, lang) =
-    * TWO longs; token counts are the byte-identical normTokens twin
-    * of q88's column, and integer sums commute, so after any prefix
-    * each cell equals batch q88's cell on the docs seen and
-    * end-of-stream is ROW-EXACT under ANY batching (spec).
-    *
-    * CONTRACT (the s42 discipline): the stream emits the CELLS only —
-    * marginals, the corpus total, and the myriad shares are
-    * close-of-stream reconciliation (one bounded aggregate over the
-    * emitted cells); maintaining them online would route every row
-    * through the same "__total__" state keys (a hotspot), and a share
-    * re-emitted on every arrival would churn ALL cells per batch.
-    */
-  def streamSourceMix(docs: Dataset[(Long, String, String, String)])
-      : Dataset[MixCell] = { // (doc_id, source, lang, text)
-    import docs.sparkSession.implicits._
-    docs.groupByKey(r => (r._2, r._3))
-      .flatMapGroupsWithState[(Long, Long), MixCell](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key, rows, state: GroupState[(Long, Long)]) =>
-          var (nd, nt) = state.getOption.getOrElse((0L, 0L))
-          rows.foreach { case (_, _, _, text) =>
-            nd += 1
-            if (text != null) nt += normTokens(text).length.toLong
-          }
-          state.update((nd, nt))
-          Iterator.single(MixCell(key._1, key._2, nd, nt))
-      }
-  }
-
-  /** s51 output: the q98 release row — ONLY the noised count leaves
-    * (the exact counter stays in state).
-    */
-  case class DpCell(source: String, lang: String, n_noised: Long)
-
-  /** s51: STREAMING ε-DP noised counts — q98's release maintained as
-    * documents arrive: keyed state per (source, lang) is ONE exact
-    * counter (the s46 cell family); every emission re-releases
-    * max(n + z(key), 0) with the SAME seeded discrete-Laplace draw as
-    * batch q98 (noise is a pure function of the FROZEN (seed, key)
-    * pair — the s21 frozen-config discipline: a per-batch fresh draw
-    * would compose ε per emission). Counters are commutative integer
-    * sums, so after any prefix each cell equals batch q98 (same seed)
-    * on the docs seen, and end-of-stream is ROW-EXACT under ANY
-    * batching/ordering (spec: two cuts + reversed).
-    *
-    * WHAT THE DP GUARANTEE COVERS (r13, from the r12 review): the
-    * ε = ln 2 bound protects the FINAL count only if the close-of-
-    * stream release is the SOLE published value. The intermediate
-    * Update-mode emissions share one frozen z per key, so consecutive
-    * emissions differ by the exact count increment — an observer of
-    * the full update stream recovers per-batch deltas exactly (the
-    * likelihood ratio of the emission SEQUENCE between neighboring
-    * streams is unbounded). Intermediate emissions are an OPERATIONAL
-    * dashboard for the pipeline operator (who holds the raw data
-    * anyway); a privacy-bound release publishes only the final row
-    * per key (the s42 close-of-stream discipline) — or switches to a
-    * per-emission fresh draw and accounts ε per emission. The q98
-    * seed-secrecy contract applies here unchanged.
-    */
-  def streamDpCounts(docs: Dataset[(Long, String, String)], seed: Long = 0L)
-      : Dataset[DpCell] = { // (doc_id, source, lang)
-    import docs.sparkSession.implicits._
-    def geo(i: Int, s: Long): Long = {
-      import graft.functions.ReplayableHash.{a, b, P}
-      val u = ((a(i) * s + b(i)) % P) % 65535L + 1L
-      16L - (64 - java.lang.Long.numberOfLeadingZeros(u)) // 16 - bitlength
-    }
-    docs.groupByKey(r => (r._2, r._3))
-      .flatMapGroupsWithState[Long, DpCell](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key, rows, state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + rows.size
-          state.update(n)
-          val s = graft.functions.PolyHashExpr.hash(s"q98:$seed:${key._1}:${key._2}")
-          Iterator.single(DpCell(key._1, key._2,
-            math.max(n + geo(240, s) - geo(241, s), 0L)))
-      }
-  }
-
-  /** s52 output: one QI-group disposition row (the q97 group table —
-    * the per-row suppression join is downstream batch work, the s42
-    * close-of-stream discipline).
-    */
-  case class KanonGroup(nk: Long, seg: String, bb: Long,
-                        group_size: Long, released: Boolean)
-
-  /** s52: STREAMING k-anonymity group dispositions — q97's group-size
-    * table maintained as customers arrive: keyed state per QI triple
-    * is ONE counter; a group crossing k flips suppressed→released
-    * (Update mode re-emits the disposition — monotone, a release can
-    * never un-release, spec-asserted). End-of-stream group table is
-    * ROW-EXACT vs batch q97's sizes under any batching.
-    */
-  def streamKanonGroups(cust: Dataset[(Long, Long, String, Double)],
-                        k: Int = 5): Dataset[KanonGroup] = {
-    import cust.sparkSession.implicits._
-    cust.groupByKey(r => (r._2, r._3, math.floor(r._4 / 1000.0).toLong))
-      .flatMapGroupsWithState[Long, KanonGroup](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key, rows, state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + rows.size
-          state.update(n)
-          Iterator.single(KanonGroup(key._1, key._2, key._3, n, n >= k))
-      }
-  }
-
-  /** s47 output: one ADMITTED document (the q90 row) plus its
-    * source's live admitted totals (the running spend against the
-    * quota — what an ingest dashboard actually watches).
-    */
-  case class QuotaAdmit(doc_id: Long, source: String, n_tokens: Long,
-                        adm_docs: Long, adm_tokens: Long)
-
-  /** s47: STREAMING source-quota admission — q90's gate applied
-    * per-arrival (the s21 frozen-config discipline: rates are solved
-    * OFFLINE from a corpus snapshot via TextOps.sourceQuotaRates and
-    * frozen, exactly how a release recipe deploys — admission must
-    * not drift as the stream changes the empirical mix), plus live
-    * per-source admitted-token counters (the s46 stateful-counter
-    * family).
-    *
-    * The admission decision is a PURE per-row function of the frozen
-    * config (GreedyTokenStatsExpr.walk with the frozen vocab — the
-    * byte-identical JVM twin of the batch kernel — and the index-236
-    * 'srcq:' hash against the frozen rate), so the admitted SET is
-    * row-exact vs batch q90 run at the same rates under ANY
-    * batching/ordering; the counters are commutative integer sums, so
-    * each source's totals converge to the batch aggregate (spec: two
-    * cuts + reversed stream). Keyed state per source = TWO longs —
-    * catalog-bounded, never stream-sized. Unlisted sources (rate 0 or
-    * absent) never touch state.
-    */
-  def streamSourceQuota(docs: Dataset[(Long, String, String)],
-                        ratesMyriad: Map[String, Long],
-                        vocab: Seq[String], maxN: Int = 4)
-      : Dataset[QuotaAdmit] = { // (doc_id, source, text)
-    import docs.sparkSession.implicits._
-    import graft.operators.Dedup.ReplayableHash.{a, b, P}
-    val sc = docs.sparkSession.sparkContext
-    val bcVocab = sc.broadcast {
-      val hs = new java.util.HashSet[String]()
-      vocab.foreach(hs.add); hs
-    }
-    val bcRates = sc.broadcast(ratesMyriad)
-    docs
-      .flatMap { case (id, source, text) =>
-        val rate = bcRates.value.getOrElse(source, 0L)
-        if (rate <= 0L || text == null) Iterator.empty
-        else {
-          val (nTok, _) = graft.functions.GreedyTokenStatsExpr
-            .walk(text.toLowerCase(java.util.Locale.ROOT), bcVocab.value, maxN)
-          if (nTok <= 0L) Iterator.empty
-          else {
-            val s = graft.functions.PolyHashExpr.hash("srcq:" + id)
-            val bucket = ((a(236) * s + b(236)) % P) % 10000L
-            if (bucket < rate) Iterator.single((id, source, nTok))
-            else Iterator.empty
-          }
-        }
-      }
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[(Long, Long), QuotaAdmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (source, rows, state: GroupState[(Long, Long)]) =>
-          var (nd, nt) = state.getOption.getOrElse((0L, 0L))
-          // deterministic intra-batch order; per-row counter snapshots
-          // are prefix-dependent (they reflect arrival history), but
-          // the FINAL totals are batching-invariant commutative sums
-          val rs = rows.toSeq.sortBy(_._1)
-          val out = rs.map { case (id, _, tok) =>
-            nd += 1; nt += tok
-            QuotaAdmit(id, source, tok, nd, nt)
-          }
-          state.update((nd, nt))
-          out.iterator
-      }
-  }
-
-  /** s45 output: the q89 columns — the part's CURRENT top-k. */
-  case class CoRec(part: Long, rank: Long, other: Long, n_co: Long,
-                   conf_myriad: Long)
-
-  /** s45: CONTINUOUSLY-MAINTAINED co-purchase recommendations — q89
-    * as a live KTable: complete baskets arrive (the s06 pickup stream
-    * emits exactly these reassembled orders — the ops compose), every
-    * pair updates its co-count, and each affected part re-emits its
-    * current top-k. This is the REFERENCE's own aggregation shape —
-    * Streams.java's groupByKey→aggregate maintaining a per-sku map
-    * (quantityByStore) in a state store — applied to the basket
-    * graph: state per part = (its order count, its co-occurrence
-    * neighborhood counts), CATALOG-bounded (parts × their co-bought
-    * neighbors), never order-stream-sized.
-    *
-    * Counts are commutative sums of per-basket contributions, so
-    * after ANY batching/ordering of the same baskets the maintained
-    * table CONVERGES row-exact to batch q89 (spec, two cuts +
-    * reversed stream): n_co, the (n_co DESC, other ASC) ranking, and
-    * the myriad confidence all replay exactly. Baskets must be
-    * deduplicated item sets (q89's DISTINCT contract) — the flatMap
-    * applies .distinct defensively.
-    */
-  def streamCopurchaseTopK(baskets: Dataset[(Long, Seq[Long])],
-                           k: Int = 5): Dataset[CoRec] = {
-    import baskets.sparkSession.implicits._
-    baskets
-      .flatMap { case (_, items) =>
-        val ps = items.distinct
-        ps.iterator.map(p => (p, ps.filterNot(_ == p)))
-      }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Map[Long, Long]), CoRec](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (part, rows, state: GroupState[(Long, Map[Long, Long])]) =>
-          var (cnt, co) = state.getOption.getOrElse((0L, Map.empty[Long, Long]))
-          rows.foreach { case (_, others) =>
-            cnt += 1
-            others.foreach(o => co = co.updated(o, co.getOrElse(o, 0L) + 1))
-          }
-          state.update((cnt, co))
-          co.toSeq.sortBy { case (o, n) => (-n, o) }.take(k)
-            .iterator.zipWithIndex.map { case ((o, n), i) =>
-              CoRec(part, i + 1L, o, n, n * 10000L / cnt)
-            }
-      }
-  }
-
-  /** s42 output: one corpus-card row per language (the q76 columns,
-    * minus the `__total__` rollup — see the contract below).
-    */
-  case class CardRow(lang: String, n_docs: Long, n_text: Long,
-                     n_tokens: Long, n_chars: Long,
-                     avg_tokens: Option[Long],
-                     p50_chars: Option[Long], p90_chars: Option[Long])
-
-  /** s42 state: the four integer masses plus the bottom-k-by-hash
-    * sketch (the q46/q76 deterministic sample — k smallest (h, nc)
-    * pairs, MERGEABLE: union-then-keep-k commutes with any batching).
-    */
-  case class CardState(nDocs: Long, nText: Long, nToks: Long,
-                       nChars: Long, sketch: List[(Long, Long)])
-
-  /** s42: STREAMING corpus card — q76 maintained continuously: the
-    * per-language release statistics updated as documents arrive (the
-    * live ingest dashboard a corpus-building run watches). Keyed
-    * state per LANGUAGE — languages-count entries, each four longs +
-    * the ≤k-pair sketch: bounded by design, never by corpus size.
-    * Every per-doc quantity is the byte-identical JVM twin of batch
-    * q76's columns (normTokens ↔ the lower/wsTrim/split tokenization,
-    * PolyHashExpr.hash("q76:"+id) with draws 222/223 ↔ the sketch
-    * hash), and bottom-k-by-hash is a pure function of the SET — so
-    * after any prefix of batches each language's row equals batch q76
-    * on the documents seen so far, and at end-of-stream the card is
-    * ROW-EXACT vs q76 under ANY batching (spec).
-    *
-    * CONTRACT (the s41 discipline): the `__total__` ROLLUP row is a
-    * close-of-stream reconciliation — emitting it online would
-    * require a second all-languages state key updated by every row (a
-    * single-partition hotspot at scale); the batch rollup over the
-    * emitted rows is one languages-count aggregate.
-    */
-  def streamCorpusCard(docs: Dataset[(Long, String, String)],
-                       k: Int = 1024): Dataset[CardRow] = {
-    import docs.sparkSession.implicits._
-    import graft.operators.Dedup.ReplayableHash.{a, b, P}
-    docs.groupByKey(_._2)
-      .flatMapGroupsWithState[CardState, CardRow](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (lang, rows, state: GroupState[CardState]) =>
-          var st = state.getOption.getOrElse(CardState(0L, 0L, 0L, 0L, Nil))
-          rows.foreach { case (id, _, text) =>
-            if (text == null)
-              st = st.copy(nDocs = st.nDocs + 1)
-            else {
-              val s = graft.functions.PolyHashExpr.hash("q76:" + id)
-              val h = ((a(222) * s + b(222)) % P) * P + (a(223) * s + b(223)) % P
-              val nc = text.codePointCount(0, text.length).toLong
-              val nt = normTokens(text).length.toLong
-              st = CardState(st.nDocs + 1, st.nText + 1, st.nToks + nt,
-                st.nChars + nc,
-                ((h, nc) :: st.sketch).sorted.take(k))
-            }
-          }
-          state.update(st)
-          val vs = st.sketch.map(_._2).sorted.toIndexedSeq
-          def pct(p: Int): Option[Long] =
-            if (vs.isEmpty) None else Some(vs(p * (vs.size - 1) / 100))
-          Iterator.single(CardRow(lang, st.nDocs, st.nText, st.nToks,
-            st.nChars,
-            if (st.nText > 0) Some(st.nToks / st.nText) else None,
-            pct(50), pct(90)))
-      }
-  }
-
-  /** s41: STREAMING snapshot diff — q83 as an online ingest auditor:
-    * every arriving v2 document is classified added / changed /
-    * unchanged against the FROZEN v1 snapshot by a STREAM-STATIC left
-    * join on the digest frame. The old side is corpus-sized, so it is
-    * NOT collected (the s13 broadcast-set shortcut is for eval-sized
-    * sets only): it stays a static DataFrame and Spark plans the join
-    * per micro-batch — at scale the static side's digest projection
-    * is what shuffles/broadcasts, never its text (q83's
-    * fixed-width-key rule carried over).
-    *
-    * CONTRACT (deliberately different from batch q83, the s06/s29
-    * contract-difference discipline): `removed` is UNDECIDABLE online
-    * — a v1 doc absent so far may still arrive — so the stream emits
-    * only the three decidable statuses and the removed set is a
-    * close-of-stream reconciliation (batch q83 on the accumulated
-    * snapshot). For every streamed doc the verdict is row-exact vs
-    * q83 (spec), under any batching: the decision is a pure function
-    * of (doc_id, text) and the frozen v1.
-    */
-  def streamDatasetDiff(newDocs: Dataset[(Long, String)],
-                        oldSnap: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, md5, when}
-    val a = oldSnap.select(col("doc_id"), md5(col("text")).as("h_old"),
-      lit(1L).as("in_old"))
-    newDocs.toDF("doc_id", "text")
-      .select(col("doc_id"), md5(col("text")).as("h_new"))
-      .join(a, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("in_old").isNull, lit("added"))
-          .when(col("h_old") <=> col("h_new"), lit("unchanged"))
-          .otherwise(lit("changed")).as("status"),
-        col("h_old"), col("h_new"))
-  }
-
-  /** s13: STREAMING train/eval decontamination — q38 as an online
-    * admission check (the shape an ingest service runs: score each
-    * arriving document against the frozen eval set BEFORE it enters
-    * the training corpus). Stateless: the benchmark set rides as a
-    * broadcast value, each doc maps to its overlap report — no state
-    * store, no shuffle, scales with input rate. Shingle bytes are
-    * IDENTICAL to batch q38 (shared wordShingleHashes), so the spec
-    * asserts row-exact parity with `TextOps.decontaminate`.
-    */
-  def streamDecontaminate(docs: Dataset[(Long, String)], benchShingles: Set[Long],
-                          shingleN: Int = 4, minOverlap: Int = 1): Dataset[ContamReport] = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(benchShingles)
-    docs.map { case (id, text) =>
-      val shs = wordShingleHashes(text, shingleN)
-      val bench = bc.value
-      val overlap = shs.count(bench.contains)
-      ContamReport(id, shs.size.toLong, overlap.toLong,
-        if (overlap >= minOverlap) 1L else 0L)
-    }
-  }
-
-  /** s19 output: one row per streamed document — the q49 columns.
-    * worst_* are None when no benchmark bucket collided (the batch
-    * left-join NULLs).
-    */
-  case class FuzzyContamReport(doc_id: Long, n_candidates: Long,
-                               n_contaminated: Long,
-                               worst_bench: Option[Long],
-                               worst_jaccard: Option[Double])
-
-  /** The benchmark set pre-indexed for s19: LSH band buckets (band
-    * key → bench ids) plus each bench doc's exact shingle set (for
-    * verification) — built ONCE from the frozen eval set and
-    * broadcast. Band key = band_id·M + fold (fold < M, injective).
-    */
-  case class BenchFuzzyIndex(buckets: Map[Long, Array[Long]],
-                             shingles: Map[Long, Array[Long]])
-
-  /** Index a benchmark set for streaming fuzzy decontamination. Same
-    * bytes as the batch q49 machinery: wordShingleHashes == postings,
-    * minhashSignature == the per-permutation min aggregate, and the
-    * base-131 band fold == bandBuckets (the s11 parity precedent).
-    * Driver-side by design — eval sets are thousands of docs against
-    * a corpus of billions (the s13 benchmarkShingleSet assumption,
-    * made explicit).
-    */
-  def benchmarkFuzzyIndex(benchmark: org.apache.spark.sql.DataFrame,
-                          numPerm: Int = 32, bands: Int = 8,
-                          shingleN: Int = 3): BenchFuzzyIndex = {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Dedup.ReplayableHash
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    val rows = numPerm / bands
-    val docs = benchmark.select(col("doc_id").cast("long"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    // UNION shingles per doc_id: batch postings() collapses repeated
-    // doc_id rows (an eval set assembled from several files) into one
-    // distinct shingle set per doc — a last-row-wins Map here would
-    // silently break the asserted row-exact parity (review catch)
-    val shingleSets = docs
-      .flatMap { case (id, text) =>
-        if (text == null) None // batch: NULL text explodes no postings
-        else Some(id -> wordShingleHashes(text, shingleN))
-      }
-      .groupBy(_._1).view
-      .mapValues(_.iterator.map(_._2).reduce(_ ++ _).toArray).toMap
-    val buckets = scala.collection.mutable.HashMap.empty[Long, List[Long]]
-    shingleSets.toSeq.sortBy(_._1).foreach { case (id, shs) =>
-      val sig = minhashSignatureOf(shs, numPerm)
-      var b = 0
-      while (b < bands) {
-        val key = bandKey(sig, b, rows)
-        buckets.update(key, id :: buckets.getOrElse(key, Nil))
-        b += 1
-      }
-    }
-    BenchFuzzyIndex(
-      buckets.view.mapValues(_.toArray.sorted).toMap,
-      shingleSets)
-  }
-
-  /** The LSH band key of band `b` over a minhash signature: base-131
-    * fold of the band's `rows` mins (mod M) disambiguated by band id —
-    * ONE definition shared by the s11 state key, the s19 index build
-    * and the s19 stream lookup (a fold edited in one copy but not
-    * another would silently produce zero collisions = every
-    * contaminated doc admitted). Matches Dedup.bandBuckets's column
-    * fold exactly (the parity specs pin all of it).
-    */
-  private[streaming] def bandKey(sig: Array[Long], b: Int, rows: Int): Long = {
-    import graft.operators.Dedup.ReplayableHash
-    var c = 0L
-    var i = b * rows
-    while (i < (b + 1) * rows) { c = (c * 131L + sig(i)) % ReplayableHash.M; i += 1 }
-    b.toLong * ReplayableHash.M + c
-  }
-
-  /** s19: STREAMING fuzzy decontamination — q49 as an online admission
-    * check with attribution: every arriving document is LSH-banded,
-    * looked up against the broadcast benchmark buckets, exact-verified
-    * by shingle-set Jaccard against the colliding bench docs, and
-    * emits (n_candidates, n_contaminated, worst partner) — the guard a
-    * live ingest actually runs, continuously (the reference's
-    * accumulate-and-emit shape, Streams.java:205-220, with the
-    * decision BEFORE the corpus instead of after).
-    *
-    * STATELESS like s13, deliberately: q49 compares the stream against
-    * a FROZEN benchmark, so nothing needs remembering between docs —
-    * the per-band bucket STATE pattern (s11) is for a growing
-    * comparison set, which here would re-implement s11. No state
-    * store, no shuffle; scales with input rate times bucket occupancy.
-    *
-    * Byte-identical to batch q49 per row (shared shingle/minhash/fold
-    * kernels; jaccard divides the same ints in the same IEEE order;
-    * worst tie-break (jaccard DESC, bench_id ASC)) — the parity spec
-    * asserts single-batch row-exactness vs decontaminateFuzzy.
-    */
-  def streamDecontaminateFuzzy(docs: Dataset[(Long, String)],
-                               bench: BenchFuzzyIndex, numPerm: Int = 32,
-                               bands: Int = 8, shingleN: Int = 3,
-                               tau: Double = 0.5): Dataset[FuzzyContamReport] = {
-    import docs.sparkSession.implicits._
-    import graft.operators.Dedup.ReplayableHash
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    val rows = numPerm / bands
-    val bc = docs.sparkSession.sparkContext.broadcast(bench)
-    docs.map { case (id, text) =>
-      if (text == null) FuzzyContamReport(id, 0L, 0L, None, None)
-      else {
-        val idx = bc.value
-        val shs = wordShingleHashes(text, shingleN)
-        val sig = minhashSignatureOf(shs.toArray, numPerm)
-        val cands = scala.collection.mutable.SortedSet.empty[Long]
-        var b = 0
-        while (b < bands) {
-          idx.buckets.get(bandKey(sig, b, rows)).foreach(_.foreach(cands.add))
-          b += 1
-        }
-        if (cands.isEmpty) FuzzyContamReport(id, 0L, 0L, None, None)
-        else {
-          var nContam = 0L
-          var bestId = -1L
-          var bestJac = Double.NegativeInfinity
-          cands.foreach { benchId =>
-            val bshs = idx.shingles(benchId)
-            var common = 0L
-            var i = 0
-            while (i < bshs.length) { if (shs.contains(bshs(i))) common += 1; i += 1 }
-            // the exact batch expression: count / (n_c + n_b - count),
-            // both sides cast from ints — bit-identical IEEE division
-            val jac = common.toDouble / (shs.size.toLong + bshs.length - common).toDouble
-            if (jac >= tau) nContam += 1
-            // (jaccard DESC, bench_id ASC): ascending-id iteration means
-            // strictly-greater wins replay the batch struct-max exactly
-            if (jac > bestJac) { bestJac = jac; bestId = benchId }
-          }
-          FuzzyContamReport(id, cands.size.toLong, nContam, Some(bestId), Some(bestJac))
-        }
-      }
-    }
-  }
-
-  /** s14 output: one row per streamed document — the q39 columns. */
-  case class RepetitionReport(doc_id: Long, n_tokens: Long, n_distinct: Long,
-                              distinct_ratio: Double, top2gram_frac: Double,
-                              dup3gram_frac: Double)
-
-  /** s14: STREAMING repetition/quality stats — q39 as an online
-    * admission filter (the Gopher/C4 repetitiousness gates applied to
-    * each document BEFORE it enters the corpus). Stateless: every
-    * ratio is intra-document, so this is a pure map — no state store,
-    * no shuffle, scales with input rate. Tokenization and the
-    * integer-count ratios are IDENTICAL to batch q39 (shared
-    * normTokens; IEEE double division of small ints), so the spec
-    * asserts row-exact parity vs `TextOps.repetitionStats`.
-    */
-  def streamRepetitionStats(docs: Dataset[(Long, String)]): Dataset[RepetitionReport] = {
-    import docs.sparkSession.implicits._
-    docs.map { case (id, text) =>
-      val toks = normTokens(text)
-      val n = toks.length.toLong
-      val nDistinct = toks.toSet.size.toLong
-      def gramFracs(g: Int): (Double, Double) = {
-        if (toks.length < g) (0.0, 0.0)
-        else {
-          val counts = scala.collection.mutable.HashMap.empty[String, Long]
-          var i = 0
-          while (i <= toks.length - g) {
-            val key = toks.slice(i, i + g).mkString(" ")
-            counts.update(key, counts.getOrElse(key, 0L) + 1L)
-            i += 1
-          }
-          val total = (toks.length - g + 1).toLong
-          val mx = counts.values.max
-          val dups = counts.values.filter(_ > 1L).sum
-          (mx.toDouble / total.toDouble, dups.toDouble / total.toDouble)
-        }
-      }
-      val top2 = gramFracs(2)._1
-      val dup3 = gramFracs(3)._2
-      RepetitionReport(id, n, nDistinct,
-        if (n > 0) nDistinct.toDouble / n.toDouble else 0.0, top2, dup3)
-    }
-  }
-
-  /** One hashed token routed to its sketch shard — the s15 input unit. */
-  case class TokenShard(shard: Int, s: Long)
-
-  /** s15 output: a shard's current serialized CMS after each batch. */
-  case class ShardSketch(shard: Int, sketch: Array[Byte])
-
-  /** s15 state machine: one Count-Min sketch per shard key on Spark 4's
-    * transformWithState (requires the RocksDB state store provider, as
-    * s08). State is the serialized counter array — FIXED width·depth·8
-    * bytes per shard regardless of stream volume, the bounded-state
-    * property that makes the sketch the right streaming frequency
-    * primitive (vs the unbounded per-token counts the reference's
-    * V1 stats carry; Streams.java:205-259 is the same
-    * accumulate-and-emit-changelog shape).
-    */
-  class CmsShardProcessor(width: Int, depth: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Int, TokenShard, ShardSketch] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode, TimerValues, TTLConfig, ValueState}
-    import graft.functions.Cms
-    @transient private var state: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OM, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Array[Byte]]("cms", Encoders.BINARY, TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[TokenShard],
-                                 timers: TimerValues): Iterator[ShardSketch] = {
-      val counters =
-        if (state.exists()) Cms.deserialize(state.get()) else Cms.empty(width, depth)
-      rows.foreach(r => Cms.add(counters, r.s, width, depth))
-      val bytes = Cms.serialize(counters)
-      state.update(bytes)
-      Iterator.single(ShardSketch(key, bytes))
-    }
-  }
-
-  /** s15: STREAMING heavy-hitter sketch — q45's CMS maintained
-    * continuously. Tokens are hashed with the SAME SQL-replayable
-    * poly_hash as batch and sharded by hash; each shard accumulates
-    * its own sketch (update-mode changelog of serialized sketches).
-    * Because CMS partials merge by counter-wise ADDITION and the
-    * shards partition the token stream, summing the final shard
-    * sketches counter-wise reproduces the batch q45 sketch EXACTLY —
-    * the spec asserts byte-equality. At scale: nShards spreads hot
-    * token traffic across executors; state is nShards × 32 KiB total.
-    */
-  def streamHeavyHittersCms(docs: Dataset[(Long, String)], nShards: Int = 8,
-                            width: Int = 1024, depth: Int = 4): Dataset[ShardSketch] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode}
-    docs.flatMap { case (_, text) =>
-      normTokens(text).iterator.map { t =>
-        val s = graft.functions.PolyHashExpr.hash(t)
-        TokenShard(math.floorMod(s, nShards.toLong).toInt, s)
-      }
-    }
-      .groupByKey(_.shard)
-      .transformWithState(new CmsShardProcessor(width, depth),
-        TimeMode.None(), OM.Update())
-  }
-
-  /** One scored document routed to its quantile shard — the s18 input
-    * unit: the q46 row hash and the two gated metrics.
-    */
-  case class DocScore(shard: Int, h: Long, len_v: Double, alpha_v: Double)
-
-  /** s18 output: a shard's current serialized bottom-k sample for one
-    * metric, after each batch.
-    */
-  case class ShardQuantiles(shard: Int, metric: String, sample: Array[Byte])
-
-  /** s18 state machine: one bottom-k-by-hash sample per (shard ×
-    * metric) on transformWithState — state is the serialized buffer,
-    * FIXED ≤ 16·k bytes per shard regardless of stream volume.
-    */
-  class QuantileShardProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Int, DocScore, ShardQuantiles] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode, TimerValues, TTLConfig, ValueState}
-    import graft.functions.{BottomKByHash, BottomKByHashBuffer}
-    @transient private var lenState: ValueState[Array[Byte]] = _
-    @transient private var alphaState: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OM, timeMode: TimeMode): Unit = {
-      lenState = getHandle.getValueState[Array[Byte]]("len", Encoders.BINARY, TTLConfig.NONE)
-      alphaState = getHandle.getValueState[Array[Byte]]("alpha", Encoders.BINARY, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: Int, rows: Iterator[DocScore],
-                                 timers: TimerValues): Iterator[ShardQuantiles] = {
-      val len =
-        if (lenState.exists()) BottomKByHash.deserialize(lenState.get())
-        else new BottomKByHashBuffer(k)
-      val alpha =
-        if (alphaState.exists()) BottomKByHash.deserialize(alphaState.get())
-        else new BottomKByHashBuffer(k)
-      rows.foreach { r =>
-        len.insert(r.h, r.len_v)
-        // NaN marks "batch saw NULL here" (empty text): skip, like the
-        // batch aggregate's null-skip
-        if (!r.alpha_v.isNaN) alpha.insert(r.h, r.alpha_v)
-      }
-      val lenB = BottomKByHash.serialize(len)
-      val alphaB = BottomKByHash.serialize(alpha)
-      lenState.update(lenB); alphaState.update(alphaB)
-      Iterator(ShardQuantiles(key, "n_chars", lenB),
-        ShardQuantiles(key, "alpha_ratio", alphaB))
-    }
-  }
-
-  /** s18: STREAMING quantile gate — q46 maintained continuously,
-    * completing the sketch trio's streaming twins (HLL s01b, CMS s15,
-    * quantiles here): a corpus filter's length/alpha cutoffs stay
-    * current as documents arrive, with FIXED per-shard state. Rows
-    * hash with the SAME q46 key (indices 210/211, 62-bit) and shard by
-    * hash; each shard keeps its own bottom-k-by-(hash, value) sample.
-    * Because the sample is a deterministic function of the SET of
-    * rows, merging the final shard buffers reproduces the batch q46
-    * sample EXACTLY — the spec asserts value-for-value equality, the
-    * s15 parity statement for the quantile sketch. Per-shard metrics
-    * mirror qualityScore's columns bit-for-bit (integer counts cast to
-    * IEEE double, same division).
-    */
-  def streamQuantileGate(docs: Dataset[(Long, String)], k: Int = 1024,
-                         nShards: Int = 8): Dataset[ShardQuantiles] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode}
-    import graft.operators.Dedup.ReplayableHash.{a, b, P}
-    docs.flatMap { case (id, text) =>
-      if (text == null) Iterator.empty // batch: length(NULL) is NULL, both sketches skip the row
-      else Iterator.single { (id, text) }
-    }.map { case (id, text) =>
-      val s = graft.functions.PolyHashExpr.hash("q46:" + id)
-      val h = ((a(210) * s + b(210)) % P) * P + ((a(211) * s + b(211)) % P)
-      val nAlpha = text.count(c => (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z'))
-      // CODE POINTS, not String.length: Spark's length() counts code
-      // points, and a supplementary-plane char (emoji, CJK ext-B —
-      // routine in web corpora) is 2 UTF-16 units but 1 code point —
-      // String.length would silently break the asserted parity with
-      // batch q46 (r6 review finding). The alpha numerator is safe
-      // either way: surrogate units are never in [A-Za-z].
-      val nChars = text.codePointCount(0, text.length)
-      // EMPTY text: batch q46's alpha_ratio is a Spark SQL division
-      // 0/0 = NULL and QuantileSketchAgg skips nulls — so the alpha
-      // sketch must NOT see this row (0.0/0.0 here is NaN, which WOULD
-      // insert and break the asserted value-for-value parity). NaN is
-      // a safe absent-marker: with nChars >= 1 the ratio is always
-      // finite. The length sketch still gets 0 (batch length('') = 0,
-      // non-null).
-      val alphaV = if (nChars == 0) Double.NaN
-                   else nAlpha.toDouble / nChars.toDouble
-      DocScore(math.floorMod(h, nShards.toLong).toInt, h,
-        nChars.toDouble, alphaV)
-    }
-      .groupByKey(_.shard)
-      .transformWithState(new QuantileShardProcessor(k), TimeMode.None(), OM.Update())
-  }
-
-  /** s11: STREAMING MinHash near-duplicate detection — the q25
-    * pipeline as an online state machine (the shape a training-data
-    * ingest service runs: every arriving document is checked against
-    * everything already admitted, continuously).
-    *
-    * Per document: minhash signature (same bytes as batch q25) →
-    * explode to `bands` LSH band keys → groupByKey(band_key) →
-    * flatMapGroupsWithState where the state is this bucket's admitted
-    * signatures. A new arrival estimates Jaccard against each bucket
-    * member as matching-mins/numPerm (the classic unbiased minhash
-    * estimator — full shingle sets never enter state), reports
-    * candidates/dups, then joins the bucket.
-    *
-    * Scale: state is partitioned by band_key (RocksDB on a cluster);
-    * per-bucket membership is capped at `maxBucket` (admission beyond
-    * that reports against the cap window — ubiquitous-content buckets
-    * are exactly the df-cap trade-off q27 makes in batch). Emission is
-    * per (doc, band); take max(n_dups) per doc downstream.
-    */
-  def streamDedupMinHash(docs: Dataset[(Long, String)], numPerm: Int = 32,
-                         bands: Int = 8, tau: Double = 0.5,
-                         maxBucket: Int = 256): Dataset[DupReport] = {
-    import docs.sparkSession.implicits._
-    import graft.operators.Dedup.ReplayableHash
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    val rows = numPerm / bands
-
-    val banded = docs.flatMap { case (id, text) =>
-      val sig = minhashSignature(text, numPerm)
-      (0 until bands).iterator.map(b => BandedDoc(bandKey(sig, b, rows), id, sig))
-    }
-
-    banded
-      .groupByKey(_.band_key)
-      .flatMapGroupsWithState[List[(Long, Array[Long])], DupReport](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, docs: Iterator[BandedDoc], state: GroupState[List[(Long, Array[Long])]]) =>
-          var members = state.getOption.getOrElse(Nil)
-          val out = scala.collection.mutable.ListBuffer.empty[DupReport]
-          // deterministic within-batch order: the group iterator''s
-          // order is a shuffle-fetch artifact (see DimUpdate doc), so
-          // folding in arrival order makes the emitted reports — and,
-          // at the maxBucket admission edge, the STATE — differ
-          // between a task retry and the rows already delivered to the
-          // sink. Sorting by doc_id pins both (the s12 class of fix).
-          docs.toSeq.sortBy(_.doc_id).foreach { d =>
-            if (!members.exists(_._1 == d.doc_id)) {
-              var nDups = 0L
-              var bestId = -1L
-              var bestEst = -1.0
-              members.foreach { case (mid, msig) =>
-                var same = 0
-                var i = 0
-                while (i < msig.length) { if (msig(i) == d.sig(i)) same += 1; i += 1 }
-                val est = same.toDouble / msig.length
-                if (est >= tau) nDups += 1
-                if (est > bestEst || (est == bestEst && mid < bestId)) {
-                  bestEst = est; bestId = mid
-                }
-              }
-              out += DupReport(d.doc_id, members.size.toLong, nDups, bestId, bestEst)
-              if (members.size < maxBucket) members = (d.doc_id, d.sig) :: members
-            }
-          }
-          state.update(members)
-          out.iterator
-      }
-  }
-
-  /** One routed document for s17: its pack shard, avalanche hash,
-    * doc id and token count (batch q47's `base` row).
-    */
-  case class RoutedDoc(shard: Int, h: Long, doc_id: Long, n_tok: Long)
-
-  /** s17 output: one doc-chunk span — exactly batch q47's schema. */
-  case class PackedSpan(shard: Long, chunk: Long, doc_id: Long,
-                        tok_start: Long, n_toks: Long)
-
-  /** s17: STREAMING sequence packing — q47 maintained continuously:
-    * every arriving document is appended to its shard's token stream
-    * and split into fixed-capacity chunks AS IT ARRIVES, the shape a
-    * training-data ingest service runs (sequences become available the
-    * moment their tokens do, no end-of-corpus re-pack).
-    *
-    * One stateful stage keyed by shard: ValueState holds a single Long
-    * — the shard's running token offset. Within a batch the shard's
-    * docs pack in (hash, doc_id) order, exactly batch q47's order, so
-    * a single-batch run reproduces batch q47 row-exactly (asserted).
-    * Across batches the contract is PACK-ON-ARRIVAL: earlier batches'
-    * docs occupy earlier offsets (batch q47 on the union would
-    * interleave them differently — re-sorting history on every arrival
-    * is precisely what a continuous packer must not do). Chunk
-    * boundaries are preserved across batches: a batch ending mid-chunk
-    * leaves the offset mid-chunk, and the next batch's first doc
-    * continues the same chunk — every chunk except each shard's last
-    * still gets exactly `capacity` tokens (asserted across batches).
-    *
-    * Scale: state is ONE Long per shard; each batch shuffles its docs
-    * once by shard; per-shard work is linear in the batch's tokens.
-    */
-  def streamPackSequences(docs: Dataset[(Long, String)], capacity: Int = 2048,
-                          shards: Int = 32): Dataset[PackedSpan] = {
-    import docs.sparkSession.implicits._
-    require(capacity >= 1 && shards >= 1)
-    packRouted(docs.map { case (id, text) =>
-      routeDoc(id, normTokens(text).length.toLong, shards)
-    }.filter(_.n_tok > 0), capacity)
-  }
-
-  /** Batch q47's shard routing for one doc (index-212 hash). */
-  private[streaming] def routeDoc(id: Long, nTok: Long, shards: Int): RoutedDoc = {
-    import graft.operators.Dedup.ReplayableHash.{a, b, P}
-    val s = graft.functions.PolyHashExpr.hash("pack:" + id)
-    val h = (a(212) * s + b(212)) % P
-    RoutedDoc((h % shards).toInt, h, id, nTok)
-  }
-
-  /** The s17 state machine over an already-routed doc stream — shared
-    * with s21, whose token counts come from the tokenizer rather than
-    * whitespace.
-    */
-  private def packRouted(routed: Dataset[RoutedDoc],
-                         capacity: Int): Dataset[PackedSpan] = {
-    import routed.sparkSession.implicits._
-    routed.groupByKey(_.shard)
-      .flatMapGroupsWithState[Long, PackedSpan](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (shard: Int, rows: Iterator[RoutedDoc], state: GroupState[Long]) =>
-          var off = state.getOption.getOrElse(0L)
-          val out = scala.collection.mutable.ListBuffer.empty[PackedSpan]
-          // batch-internal order = batch q47's (hash, doc_id) order
-          rows.toSeq.sortBy(r => (r.h, r.doc_id)).foreach { r =>
-            var chunk = off / capacity
-            val last = (off + r.n_tok - 1) / capacity
-            while (chunk <= last) {
-              val start = math.max(0L, chunk * capacity - off)
-              val end = math.min(r.n_tok, (chunk + 1) * capacity - off)
-              out += PackedSpan(shard.toLong, chunk, r.doc_id, start, end - start)
-              chunk += 1
-            }
-            off += r.n_tok
-          }
-          state.update(off)
-          out.iterator
-      }
-  }
-
-  /** One (doc, token) term-frequency row — s16's unit, batch q40's tf
-    * frame emitted statelessly per arriving document.
-    */
-  case class TokenTf(doc_id: Long, token: String, tf: Long)
-
-  /** s16 intermediate: a (doc, token, tf) row enriched with the corpus
-    * document frequency as of the END of the row's arrival batch.
-    */
-  case class TokenTfDf(doc_id: Long, token: String, tf: Long, df: Long)
-
-  /** s16 output: one ranked keyword row — exactly batch q40's schema. */
-  case class KeywordRow(doc_id: Long, rank: Long, token: String, tf: Long, df: Long)
-
-  /** s16: STREAMING salient terms — q40 as an online topic tagger: each
-    * arriving document is ranked against the corpus-so-far, the shape an
-    * ingest pipeline tags with (a doc's keywords are assigned ONCE, on
-    * admission — re-ranking history against every later df change would
-    * mean unbounded retraction traffic; see the contract below).
-    *
-    * Two chained stateful stages, both Append-mode fMGWS (Spark permits
-    * chaining only when every fMGWS is Append — Update-mode chains are
-    * rejected by the unsupported-operations check):
-    *
-    *  1. keyed by token: ValueState one Long — the running corpus df.
-    *     Each batch adds the group's row count (one row per (doc,token)
-    *     by construction) and emits every row with the UPDATED df, so
-    *     docs arriving in the same batch see each other — df is
-    *     exactly batch q40's df over all documents arrived so far.
-    *  2. keyed by doc_id: the SAME TopKLexBuffer kernel as batch q40
-    *     ranks the doc's complete token set under (tf DESC, df ASC,
-    *     token ASC). Stateless (all of a doc's tokens arrive in one
-    *     batch with it); state type Byte is a placeholder.
-    *
-    * CONTRACT (df-as-of-arrival): a document's emitted keywords use the
-    * corpus df at the end of its arrival batch. Therefore feeding the
-    * whole corpus in ONE batch reproduces batch q40 row-exactly, and a
-    * multi-batch run reproduces, for each batch's documents, batch q40
-    * over the PREFIX corpus — both asserted in StreamingSpec.
-    *
-    * Scale: stage-1 state is one Long per distinct token (vocabulary-
-    * bounded, hash-partitioned; RocksDB on a cluster); stage-2 holds no
-    * state. Traffic is two shuffles of the (doc, token) frame — the
-    * same two exchanges batch q40 pays.
-    */
-  def streamKeywords(docs: Dataset[(Long, String)], k: Int = 3): Dataset[KeywordRow] = {
-    import docs.sparkSession.implicits._
-    // per-doc tf, stateless — tokenization identical to batch q40
-    // (lower + trim + \s+ split, empty tokens dropped)
-    val tf = docs.flatMap { case (id, text) =>
-      val counts = scala.collection.mutable.HashMap.empty[String, Long]
-      normTokens(text).foreach(t => counts.update(t, counts.getOrElse(t, 0L) + 1L))
-      counts.iterator.map { case (t, c) => TokenTf(id, t, c) }
-    }
-    val withDf = tf.groupByKey(_.token)
-      .flatMapGroupsWithState[Long, TokenTfDf](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[TokenTf], state: GroupState[Long]) =>
-          val rs = rows.toList
-          val df = state.getOption.getOrElse(0L) + rs.size
-          state.update(df)
-          rs.iterator.map(r => TokenTfDf(r.doc_id, r.token, r.tf, df))
-      }
-    withDf.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[Byte, KeywordRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (doc: Long, rows: Iterator[TokenTfDf], _: GroupState[Byte]) =>
-          val buf = new graft.functions.TopKLexBuffer(k)
-          rows.foreach(r => buf.insert(r.tf, r.df,
-            org.apache.spark.unsafe.types.UTF8String.fromString(r.token)))
-          (0 until buf.n).iterator.map(i =>
-            KeywordRow(doc, i + 1L, buf.keys(i).toString, buf.ds(i), buf.as(i)))
-      }
-  }
-
-  /** One segment arrival for s20: the segment's md5 hex (the batch
-    * q52 equivalence key), owner doc, position, text. marker < 0
-    * encodes the null-text (-1) and blank-text (-2) documents, which
-    * carry no segments but must still appear in the report (batch
-    * q52's NULL-triple / (0,0,"") conventions).
-    */
-  case class SegArrival(h: String, doc_id: Long, seg_idx: Int,
-                        seg: String, marker: Int)
-
-  /** s20 intermediate: one segment with its admission verdict. */
-  case class SegVerdict(doc_id: Long, seg_idx: Int, seg: String,
-                        dup: Boolean, marker: Int)
-
-  /** s20 output: batch q52's per-document schema (Option = nullable,
-    * the NULL-text passthrough).
-    */
-  case class SegDocReport(doc_id: Long, n_segments: Option[Long],
-                          n_dup_segments: Option[Long],
-                          clean_text: Option[String])
-
-  /** s20: STREAMING segment-level dedup — q52 as an online ingest
-    * cleaner: every arriving document's fixed-width segments are
-    * checked against every segment ever admitted, boilerplate already
-    * seen in ANOTHER document is stripped before the doc reaches the
-    * corpus, continuously (the reference's accumulate-and-emit shape,
-    * Streams.java:205-220, with the accumulator keyed by content).
-    *
-    * CONTRACT (keep-first): batch q52 drops a cross-doc duplicated
-    * segment from EVERY document — an online cleaner cannot retract
-    * the copy it already emitted, so the FIRST document to present a
-    * segment keeps it and every later presenter drops it. Within one
-    * batch "first" is the smallest doc_id (the s11/s12 sorted-fold
-    * determinism rule). Consequences, both spec-asserted: on a corpus
-    * with no cross-doc duplicates a single-batch run reproduces batch
-    * q52 row-exactly; on a planted duplicate the earlier doc keeps
-    * the segment where batch q52 would strip both. Within-doc repeats
-    * stay (owner == self), exactly batch q52's rule.
-    *
-    * Two chained Append-mode fMGWS stages (the s16 chaining shape):
-    *  1. keyed by segment md5: ValueState one Long — the owning
-    *     doc_id, claimed by the first presenter. Emits every segment
-    *     with its verdict. State is one Long per DISTINCT segment
-    *     (content-bounded, hash-partitioned; RocksDB on a cluster —
-    *     the same cardinality the batch dup-count aggregate shuffles).
-    *  2. keyed by doc_id, stateless (a doc's segments all arrive in
-    *     its batch): reassembles kept segments in seg_idx order.
-    * Traffic is two shuffles of the segment frame — batch q52's own
-    * exchange count.
-    */
-  def streamSegmentDedup(docs: Dataset[(Long, String)],
-                         segWords: Int = 8): Dataset[SegDocReport] = {
-    import docs.sparkSession.implicits._
-    require(segWords > 0, "segWords must be positive")
-    val segs = docs.flatMap { case (id, text) =>
-      if (text == null)
-        Iterator.single(SegArrival("m:" + id, id, -1, "", -1))
-      else {
-        val toks = normTokens(text)
-        if (toks.isEmpty)
-          Iterator.single(SegArrival("m:" + id, id, -2, "", -2))
-        else toks.grouped(segWords).zipWithIndex.map { case (ws, i) =>
-          val seg = ws.mkString(" ")
-          SegArrival(graft.functions.Md5.hex(seg), id, i, seg, 0)
-        }
-      }
-    }
-    val verdicts = segs.groupByKey(_.h)
-      .flatMapGroupsWithState[Long, SegVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[SegArrival], state: GroupState[Long]) =>
-          // sorted fold: the group iterator's order is a shuffle-fetch
-          // artifact; smallest doc_id claims deterministically
-          val rs = rows.toSeq.sortBy(r => (r.doc_id, r.seg_idx))
-          if (rs.head.marker < 0)
-            rs.iterator.map(r => SegVerdict(r.doc_id, r.seg_idx, r.seg, dup = false, r.marker))
-          else {
-            val owner = state.getOption.getOrElse(rs.head.doc_id)
-            if (!state.exists) state.update(owner)
-            rs.iterator.map(r =>
-              SegVerdict(r.doc_id, r.seg_idx, r.seg, dup = r.doc_id != owner, 0))
-          }
-      }
-    verdicts.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[Byte, SegDocReport](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (doc: Long, rows: Iterator[SegVerdict], _: GroupState[Byte]) =>
-          val rs = rows.toList
-          rs.head.marker match {
-            case -1 => Iterator.single(SegDocReport(doc, None, None, None))
-            case -2 => Iterator.single(SegDocReport(doc, Some(0L), Some(0L), Some("")))
-            case _ =>
-              val kept = rs.filter(!_.dup).sortBy(_.seg_idx).map(_.seg)
-              Iterator.single(SegDocReport(doc,
-                Some(rs.size.toLong),
-                Some(rs.count(_.dup).toLong),
-                Some(kept.mkString(" "))))
-          }
-      }
-  }
-
-  /** One arriving document for s21: id, language, text. */
-  case class CurDoc(doc_id: Long, lang: String, text: String)
-
-  /** s21 intermediate: one segment verdict with the doc's language
-    * carried through to reassembly.
-    */
-  case class CurSegV(doc_id: Long, lang: String, seg_idx: Int,
-                     seg: String, dup: Boolean)
-
-  /** s21 intermediate: a segment-cleaned document awaiting the
-    * substring-dedup stage.
-    */
-  case class CurClean(doc_id: Long, lang: String, clean: String)
-
-  /** s21 intermediate: one q71 window verdict. pos is 1-based; the
-    * pos==0 row is the doc's SENTINEL, carrying the cleaned text as
-    * `payload` so the final regroup needs no second stream (its state
-    * key "d:<id>" can never collide with a 32-char md5 digest).
-    */
-  case class CurWinV(doc_id: Long, lang: String, pos: Int,
-                     dup: Boolean, payload: String)
-
-  /** s21: the STREAMING curation pipeline — q53's stage chain running
-    * continuously on arriving documents, the full ingest path a live
-    * training-data service operates: exact dedup → segment strip →
-    * substring dedup → quality gate → decontamination → PII
-    * redaction → tokenize → admit → pack, each doc flowing the whole
-    * chain in its arrival batch.
-    *
-    * Contracts, each inherited from the stage's own streaming twin:
-    *  - exact dedup, segment dedup, and substring dedup are
-    *    KEEP-FIRST (s20's argument: an online cleaner cannot retract
-    *    what it already emitted); within a batch the smallest
-    *    (doc_id, pos) claims (sorted fold) — the batch q71 rule
-    *    exactly;
-    *  - the benchmark shingle set is FROZEN (s13's broadcast
-    *    assumption) and the VOCAB and per-language ADMISSION RATES
-    *    are given — solved OFFLINE from a corpus snapshot
-    *    (TextOps.tokenizerVocabSeq / tokenMixtureRates): a stream
-    *    cannot train its tokenizer or solve a global mixture on data
-    *    it has not seen (batch q53 derives both from its own curated
-    *    corpus — the documented divergence); the QUALITY CUTOFFS
-    *    (`lenCut`/`alphaCut`, batch stage 4's q46 pair) are frozen
-    *    for the identical reason — a stream cannot know the corpus
-    *    percentile of a document it has not seen;
-    *  - packing is PACK-ON-ARRIVAL with chunk boundaries carried
-    *    across batches (s17's contract).
-    *
-    * On a single batch whose canonical docs share no cross-doc
-    * segments, with vocab/rates taken from batch q53's own derivation,
-    * the emitted spans are ROW-EXACT equal to batch q53 (asserted).
-    *
-    * Scale: three stateful stages (dedup owners: one Long per distinct
-    * normalized doc; segment owners: one Long per distinct segment —
-    * the s20 state; pack offsets: one Long per shard) plus a stateless
-    * decontaminate/tokenize/admit mapper; null/blank docs drop at the
-    * door (they can never pack — batch q53 likewise never packs them).
-    */
-  /** The COMPLETE frozen deployment bundle for [[streamCurate]] — every
-    * offline-solved value the continuous curation service consumes
-    * (benchmark shingles, tokenizer vocab, admission rates, dup-shingle
-    * table, quality cutoffs, the gate knobs), so the whole chain
-    * deploys from ONE [[graft.ModelStore]] artifact (family
-    * `curate_config`) instead of five ad-hoc side channels.
-    */
-  case class CurateConfig(benchShingles: Set[Long], vocab: Seq[String],
-                          ratesMyriad: Map[String, Long],
-                          dupShingles: Set[Long],
-                          lenCut: Option[Double], alphaCut: Option[Double],
-                          memCutMyriad: Int, ruleGate: Boolean,
-                          segWords: Int, shingleN: Int, maxN: Int,
-                          capacity: Int, shards: Int, subK: Int)
-
-  /** s21 from a frozen bundle: the deploy path is
-    * `streamCurate(docs, ModelStore.loadCurateConfig(...))`.
-    */
-  def streamCurate(docs: Dataset[CurDoc], cfg: CurateConfig): Dataset[PackedSpan] =
-    streamCurate(docs, cfg.benchShingles, cfg.vocab, cfg.ratesMyriad,
-      cfg.segWords, cfg.shingleN, cfg.maxN, cfg.capacity, cfg.shards,
-      cfg.lenCut, cfg.alphaCut, cfg.subK, cfg.ruleGate,
-      cfg.dupShingles, cfg.memCutMyriad)
-
-  def streamCurate(docs: Dataset[CurDoc], benchShingles: Set[Long],
-                   vocab: Seq[String], ratesMyriad: Map[String, Long],
-                   segWords: Int = 8, shingleN: Int = 4, maxN: Int = 4,
-                   capacity: Int = 512, shards: Int = 8,
-                   lenCut: Option[Double] = None,
-                   alphaCut: Option[Double] = None,
-                   subK: Int = 6,
-                   ruleGate: Boolean = true,
-                   dupShingles: Set[Long] = Set.empty,
-                   memCutMyriad: Int = -1): Dataset[PackedSpan] = {
-    import docs.sparkSession.implicits._
-    import graft.operators.Dedup.ReplayableHash.{a, b, P}
-    require(segWords > 0 && capacity >= 1 && shards >= 1)
-    val sc = docs.sparkSession.sparkContext
-    val bcBench = sc.broadcast(benchShingles)
-    // stage 6b's frozen config (the s43 discipline): the over-df-1
-    // shingle set of the snapshot's REDACTED corpus — batch q53
-    // computes the same table in-chain; freezing it keeps streaming
-    // admission order-free
-    val bcDup = sc.broadcast(dupShingles)
-    // 0. unicode canonicalization — the batch chain's stage 0 run as
-    // a stateless pure map (normalizeStr is the byte-identical JVM
-    // mirror of normalizeCol: shared NFC kernel + the same
-    // java.util.regex patterns Spark's regexp_replace compiles)
-    val docs00 = docs.map(d => d.copy(text = graft.operators.TextOps.normalizeStr(d.text)))
-    // 0b. rule battery — the batch chain's stateless q70 conjunction
-    // (gopherPassJvm mirrors the Column battery's tokenization and
-    // integer myriad thresholds exactly); null/junk documents drop
-    // before any keyed state is touched
-    val docs0 =
-      if (!ruleGate) docs00
-      else docs00.filter(d => graft.operators.QualityRules.gopherPassJvm(d.text))
-    val bcVocab = sc.broadcast {
-      val hs = new java.util.HashSet[String]()
-      vocab.foreach(hs.add); hs
-    }
-
-    // 1. exact dedup, keep-first, keyed by md5 of the normalized text
-    val canon = docs0
-      .filter(d => d.text != null && normTokens(d.text).nonEmpty)
-      .groupByKey(d => graft.functions.Md5.hex(normTokens(d.text).mkString(" ")))
-      .flatMapGroupsWithState[Long, CurDoc](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[CurDoc], state: GroupState[Long]) =>
-          val rs = rows.toSeq.sortBy(_.doc_id)
-          val owner = state.getOption.getOrElse(rs.head.doc_id)
-          if (!state.exists) state.update(owner)
-          rs.iterator.filter(_.doc_id == owner)
-      }
-
-    // 2. segment verdicts, keep-first, keyed by segment md5 (s20 fold)
-    val verdicts = canon.flatMap { d =>
-      normTokens(d.text).grouped(segWords).zipWithIndex.map { case (ws, i) =>
-        val seg = ws.mkString(" ")
-        (graft.functions.Md5.hex(seg), CurSegV(d.doc_id, d.lang, i, seg, dup = false))
-      }
-    }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, CurSegV](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[(String, CurSegV)], state: GroupState[Long]) =>
-          val rs = rows.map(_._2).toSeq.sortBy(r => (r.doc_id, r.seg_idx))
-          val owner = state.getOption.getOrElse(rs.head.doc_id)
-          if (!state.exists) state.update(owner)
-          rs.iterator.map(r => r.copy(dup = r.doc_id != owner))
-      }
-
-    // 3. reassemble per doc into the segment-cleaned text
-    val cleanDocs = verdicts.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[Byte, CurClean](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (doc: Long, rows: Iterator[CurSegV], _: GroupState[Byte]) =>
-          val rs = rows.toList
-          Iterator.single(CurClean(doc, rs.head.lang,
-            rs.filter(!_.dup).sortBy(_.seg_idx).map(_.seg).mkString(" ")))
-      }
-
-    // 3b. substring dedup (batch stage 3, q71): window digests keyed
-    // by md5, keep-first on (doc_id, pos) — the sorted fold makes a
-    // single batch exactly batch q71's global first; across batches
-    // first-arrival-wins (the s20 contract). Each doc also ships one
-    // sentinel row carrying its text, so stage 4 regroups the cut
-    // input without a second stream.
-    val winVerdicts = cleanDocs.flatMap { d =>
-      val toks: Array[String] =
-        if (d.clean.isEmpty) Array.empty else d.clean.split(" ")
-      val wins = (0 to toks.length - subK).iterator.map { j =>
-        (graft.functions.Md5.hex(toks.slice(j, j + subK).mkString(" ")),
-          CurWinV(d.doc_id, d.lang, j + 1, dup = false, payload = null))
-      }
-      wins ++ Iterator.single(
-        ("d:" + d.doc_id, CurWinV(d.doc_id, d.lang, 0, dup = false, payload = d.clean)))
-    }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Int), CurWinV](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[(String, CurWinV)], state: GroupState[(Long, Int)]) =>
-          val rs = rows.map(_._2).toSeq.sortBy(r => (r.doc_id, r.pos))
-          val owner = state.getOption.getOrElse((rs.head.doc_id, rs.head.pos))
-          if (!state.exists) state.update(owner)
-          rs.iterator.map(r => r.copy(dup = (r.doc_id, r.pos) != owner))
-      }
-
-    // 4. per-doc span cut, then the stateless tail of the chain:
-    // gate (frozen cutoffs) → decontaminate (frozen benchmark) →
-    // tokenize (given vocab) → admit (given rates, index-214 hash) →
-    // route to a pack shard
-    val routed = winVerdicts.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[Byte, RoutedDoc](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (doc: Long, rows: Iterator[CurWinV], _: GroupState[Byte]) =>
-          val rs = rows.toList
-          // single-batch contract: a doc's sentinel and windows share
-          // its arrival batch (the same contract the seg regroup has)
-          val sentinel = rs.find(_.pos == 0).get
-          val lang = sentinel.lang
-          val toks: Array[String] =
-            if (sentinel.payload.isEmpty) Array.empty else sentinel.payload.split(" ")
-          val starts = rs.collect { case r if r.pos > 0 && r.dup => r.pos }
-          val clean = toks.indices.collect {
-            case j if !starts.exists(p => j + 1 >= p && j + 1 < p + subK) => toks(j)
-          }.mkString(" ")
-          // quality gate against the FROZEN cutoffs (batch stage 4):
-          // same >= predicate, same NULL-ratio-fails-a-present-cutoff
-          // three-valued semantics as the batch filter
-          val alpha: Option[Double] =
-            if (clean.isEmpty) None
-            else Some(clean.replaceAll("[^A-Za-z]", "").length / clean.length.toDouble)
-          val gatePass =
-            lenCut.forall(c => clean.length.toDouble >= c) &&
-            alphaCut.forall(c => alpha.exists(_ >= c))
-          val shs = wordShingleHashes(clean, shingleN)
-          if (!gatePass || shs.exists(bcBench.value.contains)) Iterator.empty
-          else {
-            // PII redaction (batch stage 6) — the same java.util.regex
-            // chain Spark's codegen'd regexp_replace runs; the REDACTED
-            // text is what tokenizes, exactly as in batch
-            val red = clean
-              .replaceAll(graft.operators.TextOps.EmailRe, "<EMAIL>")
-              .replaceAll(graft.operators.TextOps.Ipv4Re, "<IP>")
-              .replaceAll(graft.operators.TextOps.PhoneRe, "<PHONE>")
-            // stage 6b: memorization gate against the FROZEN dup table
-            // (batch computes the same distinct-shingle ratio in-chain;
-            // wordShingleHashes is postings' byte-identical JVM twin)
-            val memOk = memCutMyriad < 0 || {
-              val shs2 = wordShingleHashes(red, shingleN)
-              shs2.count(bcDup.value.contains) * 10000L <=
-                memCutMyriad.toLong * shs2.size
-            }
-            if (!memOk) Iterator.empty
-            else {
-            val (nTok, _) = graft.functions.GreedyTokenStatsExpr
-              .walk(red.toLowerCase(java.util.Locale.ROOT), bcVocab.value, maxN)
-            if (nTok <= 0L) Iterator.empty
-            else {
-              val s = graft.functions.PolyHashExpr.hash("mixtok:" + doc)
-              val bucket = ((a(214) * s + b(214)) % P) % 10000L
-              if (bucket < ratesMyriad.getOrElse(lang, 0L))
-                Iterator.single(routeDoc(doc, nTok, shards))
-              else Iterator.empty
-            }
-            }
-          }
-      }
-
-    // 4. continuous packing — the s17 state machine
-    packRouted(routed, capacity)
-  }
-
-  /** s27 scored-arrival intermediate: one query term hit per doc. */
-  case class TermScore(token: String, doc_id: Long, score_q16: Long)
-
-  /** s27 output: the q62 columns — a term's CURRENT top-k, re-emitted
-    * in full whenever a batch touches the term (generational Append,
-    * the s16 contract: consumers take the latest generation per term).
-    */
-  case class Bm25Hit(token: String, rank: Long, doc_id: Long, score_q16: Long)
-
-  /** The frozen q62 retrieval stats for s27: query-term idf table plus
-    * the corpus constants (N docs, A tokens) the length normalization
-    * needs. 20 rows + two scalars — the bigramLmIndex protocol.
-    */
-  case class Bm25Index(idfQ16: Map[String, Long], nDocs: Long, aTok: Long)
-
-  def bm25Index(corpus: org.apache.spark.sql.DataFrame,
-                nQueryTerms: Int = 20, minDf: Long = 5L): Bm25Index = {
-    val (m, n, a) = graft.operators.TextOps.bm25QueryIndex(corpus, nQueryTerms, minDf)
-    Bm25Index(m, n, a)
-  }
-
-  /** s27: STREAMING BM25 retrieval — q62 as a continuously-maintained
-    * search result: each arriving document is scored against the
-    * FROZEN query-term stats (idf, N, A — a live-updating idf would
-    * re-rank history, exactly what the s25/s26 frozen-model family
-    * forbids), and each query term's top-k is MAINTAINED ACROSS
-    * BATCHES in state. Convergence contract (spec-asserted): after
-    * streaming the index's own training corpus — in ANY batching —
-    * each term's final generation is ROW-EXACT batch q62, because
-    * per-doc scores are arrival-independent and a bounded top-k fold
-    * is merge-invariant (the TopKBuffer property, here in state).
-    *
-    * Plan: one stateless flatMap scores a doc entirely locally (tf of
-    * query terms + dl from its own token stream — no corpus join at
-    * all, unlike batch q62's inverted-index build), then ONE shuffle
-    * on term into the k·20-row state. Scale: per-batch traffic is
-    * (docs × matched terms); state is 20 terms × k pairs — constant.
-    */
-  def streamBm25(docs: Dataset[(Long, String)], index: Bm25Index,
-                 topK: Int = 10): Dataset[Bm25Hit] = {
-    import docs.sparkSession.implicits._
-    require(index.idfQ16.nonEmpty, "frozen query-term index must be non-empty")
-    val bc = docs.sparkSession.sparkContext.broadcast(index)
-    val scored = docs.flatMap { case (id, text) =>
-      val ix = bc.value
-      val ts = normTokens(text)
-      val dl = ts.length.toLong
-      val counts = scala.collection.mutable.HashMap.empty[String, Long]
-      ts.foreach(t =>
-        if (ix.idfQ16.contains(t)) counts.update(t, counts.getOrElse(t, 0L) + 1L))
-      // EXACT batch arithmetic: (idf·tf·22000) div (10000·tf + 3000 +
-      // (dl·9000·N) div A), all positive-operand truncating int64
-      val lenTerm = (dl * (9000L * ix.nDocs)) / math.max(ix.aTok, 1L)
-      counts.iterator.map { case (t, tf) =>
-        TermScore(t, id,
-          (ix.idfQ16(t) * tf * 22000L) / (tf * 10000L + 3000L + lenTerm))
-      }
-    }
-    scored.groupByKey(_.token)
-      .flatMapGroupsWithState[List[(Long, Long)], Bm25Hit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (token: String, rows: Iterator[TermScore], state: GroupState[List[(Long, Long)]]) =>
-          // state: the term's current top-k as (score, doc_id), held in
-          // (score DESC, doc ASC) order — eviction is safe because each
-          // doc is scored exactly once (bounded top-k merge invariance)
-          var top = state.getOption.getOrElse(Nil)
-          rows.foreach { r =>
-            top = ((-r.score_q16, r.doc_id) :: top.map { case (s, d) => (-s, d) })
-              .sorted.take(topK).map { case (ns, d) => (-ns, d) }
-          }
-          state.update(top)
-          top.iterator.zipWithIndex.map { case ((s, d), i) =>
-            Bm25Hit(token, i + 1L, d, s)
-          }
-      }
-  }
-
-  /** s26 output: the q60 columns — one assignment per vector. */
-  case class KmAssign(vec_id: Long, cluster: Long, d2: Long)
-
-  /** s26: STREAMING k-means assignment — q60 as an online router
-    * (the shape a training pipeline runs once a clustering exists:
-    * every arriving embedding is bucketed to its semantic shard by a
-    * FROZEN codebook; the model must not drift with the stream).
-    * Stateless: the k·dim centroid table rides as a broadcast, each
-    * vector maps to its (cluster, d2) — no state store, no shuffle.
-    * The quantization (`floor(v·2²⁰+0.5)+2²⁰`) and the (d2 ASC, cid
-    * ASC) argmin replay batch q60's integer arithmetic EXACTLY, so
-    * streaming the training corpus against
-    * `Similarity.kmeansCentroids` reproduces q60 row-for-row
-    * (spec-asserted).
-    */
-  def streamKmeansAssign(vecs: Dataset[(Long, Seq[Float])],
-                         centroids: Seq[(Int, Seq[Long])]): Dataset[KmAssign] = {
-    import vecs.sparkSession.implicits._
-    require(centroids.nonEmpty, "frozen codebook must be non-empty")
-    val bc = vecs.sparkSession.sparkContext.broadcast(
-      centroids.map { case (cid, c) => (cid, c.toArray) }.toArray)
-    vecs.map { case (id, emb) =>
-      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
-      var bestD = Long.MaxValue
-      var bestC = Int.MaxValue
-      bc.value.foreach { case (cid, c) =>
-        var d = 0L
-        var i = 0
-        while (i < q.length) { val x = q(i) - c(i); d += x * x; i += 1 }
-        if (d < bestD || (d == bestD && cid < bestC)) { bestD = d; bestC = cid }
-      }
-      KmAssign(id, bestC.toLong, bestD)
-    }
-  }
-
-  /** s28 output: the q65 columns — M rows per vector. */
-  case class PqCode(vec_id: Long, sub: Long, code: Long, d2: Long)
-
-  /** s28: STREAMING PQ ENCODING — q65 as an online compressor: every
-    * arriving embedding is encoded to its M sub-codes by a FROZEN
-    * codebook (Similarity.pqCodebook — the s26 frozen-model protocol:
-    * a drifting codebook would re-encode history). Stateless: the
-    * M·kcode·PQ_D-long codeword table rides as a broadcast, each
-    * vector flatMaps to M (sub, code, d2) rows — no state store, no
-    * shuffle. The quantization and (d2 ASC, cid ASC) argmin replay
-    * batch q65's integer arithmetic EXACTLY, so streaming the
-    * training corpus reproduces q65 row-for-row (spec-asserted).
-    */
-  def streamPqEncode(vecs: Dataset[(Long, Seq[Float])],
-                     codebook: Map[(Int, Int), Seq[Long]]): Dataset[PqCode] = {
-    import vecs.sparkSession.implicits._
-    require(codebook.nonEmpty, "frozen PQ codebook must be non-empty")
-    val M = codebook.keys.map(_._1).max + 1
-    val subDim = codebook.values.head.length
-    val bc = vecs.sparkSession.sparkContext.broadcast(
-      codebook.map { case ((m, j), c) => (m, j) -> c.toArray })
-    vecs.flatMap { case (id, emb) =>
-      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
-      (0 until M).iterator.map { m =>
-        var bestD = Long.MaxValue
-        var bestJ = Int.MaxValue
-        bc.value.foreach { case ((mm, j), c) =>
-          if (mm == m) {
-            var d = 0L
-            var i = 0
-            while (i < subDim) { val x = q(m * subDim + i) - c(i); d += x * x; i += 1 }
-            if (d < bestD || (d == bestD && j < bestJ)) { bestD = d; bestJ = j }
-          }
-        }
-        PqCode(id, m.toLong, bestJ.toLong, bestD)
-      }
-    }
-  }
-
-  /** s40 output: the q82 columns — one row per dimension. */
-  case class Sq8Code(vec_id: Long, pos: Long, code: Long, err: Long)
-
-  /** s40: STREAMING SQ8 ENCODING — q82 as an online compressor: every
-    * arriving embedding is encoded to its per-dimension byte codes by
-    * a FROZEN grid (Similarity.sq8Grid — the s26/s28 frozen-model
-    * protocol: a drifting grid would re-encode history). Stateless:
-    * the 64 (min, span) pairs ride as a broadcast-closure array, each
-    * vector flatMaps to its 64 (pos, code, err) rows — no state
-    * store, no shuffle. The quantize-shift and truncating division
-    * replay batch q82's integer arithmetic EXACTLY on in-grid inputs,
-    * so streaming the training corpus reproduces q82 row-for-row
-    * under any batching (spec-asserted).
-    *
-    * Novel inputs (a streamed vector OUTSIDE the frozen grid — the
-    * case batch training never sees) CLAMP to the grid ends, the
-    * production SQ rule: code pins to 0/255 and `err` carries the
-    * signed residual vs the clamped reconstruction — attributable,
-    * never an exception (the s36 unknown-lang-→-tail discipline).
-    * In-grid rows never clamp, so the batch contract is untouched.
-    */
-  def streamSq8Encode(vecs: Dataset[(Long, Seq[Float])],
-                      grid: Seq[(Long, Long)]): Dataset[Sq8Code] = {
-    import vecs.sparkSession.implicits._
-    require(grid.nonEmpty, "frozen SQ8 grid must be non-empty")
-    val g = grid.toArray
-    vecs.flatMap { case (id, emb) =>
-      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
-      q.indices.iterator.map { i =>
-        val (mn, sp) = g(i)
-        val x = q(i) - mn
-        // in-grid (0 <= x <= sp): identical to batch q82 (nonnegative
-        // operands make / floor); out-of-grid: clamp to the byte ends
-        val code =
-          if (sp <= 0L) 0L
-          else if (x < 0L) 0L
-          else if (x > sp) 255L
-          else x * 255L / sp
-        val err = if (sp <= 0L) x else x - code * sp / 255L
-        Sq8Code(id, i.toLong, code, err)
-      }
-    }
-  }
-
-  /** s29 output: one keep/drop decision per vector; `rep` is the
-    * retained near-dup it was folded into (itself when kept).
-    */
-  case class SemKeep(vec_id: Long, cluster: Long, rep: Long, keep: Long)
-
-  /** s29: ONLINE SEMANTIC DEDUP — the streaming counterpart of q64:
-    * every arriving embedding routes to its cluster under the FROZEN
-    * q60 codebook (s26 protocol), then is compared against that
-    * cluster's RETAINED representatives held in state; within `tau2`
-    * of any → dropped (folded into the first such rep in id order),
-    * else retained and added to state.
-    *
-    * CONTRACT (deliberately different from batch q64, the s06
-    * retraction-difference discipline): a stream cannot apply
-    * keep-the-outlier — the outlier may arrive last, and retraction
-    * of an already-emitted keep is not available in Append mode — so
-    * the online rule is KEEP-FIRST, the classic streaming-dedup
-    * greedy (s07/s11/s20's family). Decisions follow vec_id order
-    * WITHIN each micro-batch (state rows have no arrival order after
-    * the shuffle, so id order is the deterministic tiebreak): a
-    * corpus streamed in ascending id order therefore produces the
-    * SAME retained set under ANY batching (spec-asserted), and that
-    * set is mutually > tau2 within every cluster — a maximal
-    * independent set built greedily, each dropped vector within tau2
-    * of its (smaller-id) keeper.
-    *
-    * Scale: state per cluster is the retained reps' quantized vectors
-    * — bounded by the corpus's semantic diversity at radius tau2 (the
-    * packing number), not its row count; exactly the memory a
-    * production online dedup (e.g. a dataset-ingest near-dup gate)
-    * must budget.
-    */
-  def streamSemDedup(vecs: Dataset[(Long, Seq[Float])],
-                     centroids: Seq[(Int, Seq[Long])],
-                     tau2: Long = 1500000000000L): Dataset[SemKeep] = {
-    import vecs.sparkSession.implicits._
-    require(centroids.nonEmpty, "frozen codebook must be non-empty")
-    val bc = vecs.sparkSession.sparkContext.broadcast(
-      centroids.map { case (cid, c) => (cid, c.toArray) }.toArray)
-    def d2(a: Array[Long], b: Array[Long]): Long = {
-      var d = 0L
-      var i = 0
-      while (i < a.length) { val x = a(i) - b(i); d += x * x; i += 1 }
-      d
-    }
-    val assigned = vecs.map { case (id, emb) =>
-      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
-      var bestD = Long.MaxValue
-      var bestC = Int.MaxValue
-      bc.value.foreach { case (cid, c) =>
-        val d = d2(q, c)
-        if (d < bestD || (d == bestD && cid < bestC)) { bestD = d; bestC = cid }
-      }
-      (bestC.toLong, id, q)
-    }
-    assigned.groupByKey(_._1)
-      .flatMapGroupsWithState[List[(Long, Array[Long])], SemKeep](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (cluster: Long, rows: Iterator[(Long, Long, Array[Long])],
-         state: GroupState[List[(Long, Array[Long])]]) =>
-          // state: retained reps (id ASC) — append-only under keep-first
-          var kept = state.getOption.getOrElse(Nil)
-          val out = rows.toSeq.sortBy(_._2).map { case (_, id, q) =>
-            kept.find { case (_, kq) => d2(q, kq) <= tau2 } match {
-              case Some((kid, _)) => SemKeep(id, cluster, kid, 0L)
-              case None =>
-                kept = kept :+ ((id, q))
-                SemKeep(id, cluster, id, 1L)
-            }
-          }
-          state.update(kept)
-          out.iterator
-      }
-  }
-
-  /** s39 output: one admit/reject decision per vector; `r` is the
-    * 1-based admission rank within the cluster (0 when rejected).
-    */
-  case class QuotaKeep(vec_id: Long, cluster: Long, r: Long, keep: Long)
-
-  /** s39: ONLINE CLUSTER-QUOTA ADMISSION — q79 as an ingest gate:
-    * every arriving embedding routes to its cluster under the FROZEN
-    * q60 codebook (the s26 protocol) and is ADMITTED while the
-    * cluster's quota has room, else rejected — the streaming form of
-    * cluster-balanced selection (cap each semantic region's intake;
-    * dense regions saturate early and stop consuming budget).
-    *
-    * CONTRACT (the s29 contract-difference discipline): batch q79
-    * keeps the quota hash-SMALLEST members per cluster over the whole
-    * corpus; a stream cannot know the global hash order, so the
-    * online rule is quota'd KEEP-FIRST. Within each micro-batch,
-    * decisions follow the batch operator's selection order — the
-    * (universal-hash(232), vec_id) draw — so a stream presented in
-    * that global order (any prefix batching of it) reproduces q79
-    * ROW-EXACTLY, ranks included (spec-asserted); under ANY arrival
-    * order, every cluster still admits exactly min(quota, |cluster|)
-    * vectors (spec-asserted on a reversed stream).
-    *
-    * Scale: state per cluster is ONE long (the admitted count) —
-    * the cheapest stateful operator in the library; routing and the
-    * hash draw are stateless broadcast maps.
-    */
-  def streamClusterSample(vecs: Dataset[(Long, Seq[Float])],
-                          centroids: Seq[(Int, Seq[Long])],
-                          quota: Int = 40): Dataset[QuotaKeep] = {
-    import vecs.sparkSession.implicits._
-    require(centroids.nonEmpty, "frozen codebook must be non-empty")
-    require(quota >= 1, "quota >= 1")
-    val bc = vecs.sparkSession.sparkContext.broadcast(
-      centroids.map { case (cid, c) => (cid, c.toArray) }.toArray)
-    val P = graft.functions.ReplayableHash.P
-    val ha = graft.functions.ReplayableHash.a(232)
-    val hb = graft.functions.ReplayableHash.b(232)
-    val assigned = vecs.map { case (id, emb) =>
-      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
-      var bestD = Long.MaxValue
-      var bestC = Int.MaxValue
-      bc.value.foreach { case (cid, c) =>
-        var d = 0L
-        var i = 0
-        while (i < q.length) { val x = q(i) - c(i); d += x * x; i += 1 }
-        if (d < bestD || (d == bestD && cid < bestC)) { bestD = d; bestC = cid }
-      }
-      // the batch selection draw, byte-identical (PolyHashExpr.hash is
-      // the expression's own fold; ROOT-locale-free: pure digits)
-      val h = (ha * graft.functions.PolyHashExpr.hash("cbal:" + id) + hb) % P
-      (bestC.toLong, id, h)
-    }
-    assigned.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, QuotaKeep](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (cluster: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[Long]) =>
-          var n = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(r => (r._3, r._2)).map { case (_, id, _) =>
-            if (n < quota) { n += 1; QuotaKeep(id, cluster, n, 1L) }
-            else QuotaKeep(id, cluster, 0L, 0L)
-          }
-          state.update(n)
-          out.iterator
-      }
-  }
-
-  /** s30 output: the q66 columns — a query's CURRENT top-k, re-emitted
-    * in full whenever a batch touches it (the s27 generational-Append
-    * contract: consumers take the latest generation per query).
-    */
-  case class AdcHit(query_id: Long, rank: Long, neighbor_id: Long, adist: Long)
-
-  /** The frozen q66 retrieval model for s30: coarse centroids (for
-    * routing), residual PQ codebooks (for encoding), and per-(query,
-    * probed-list) ADC lookup tables `lut[(qid, ccid)](m)(code)` —
-    * nQueries·nProbe·M·kcode longs, the bm25Index bounded-collect
-    * protocol.
-    */
-  case class IvfadcIndex(coarse: Array[(Int, Array[Long])],
-                         book: Map[(Int, Int), Array[Long]],
-                         lut: Map[(Long, Int), Array[Array[Long]]])
-
-  /** Index a reference corpus's IVFADC model for streaming search —
-    * same fit as batch q66 (`Similarity.ivfadcModel`), LUTs computed
-    * driver-side with the same integer fold.
-    */
-  def ivfadcIndex(embeddings: org.apache.spark.sql.DataFrame, kCoarse: Int = 8,
-                  coarseIters: Int = 3, kcode: Int = 16, pqIters: Int = 2,
-                  nProbe: Int = 3, nQueries: Int = 10): IvfadcIndex = {
-    val (coarse, book, queries) = graft.operators.Similarity
-      .ivfadcModel(embeddings, kCoarse, coarseIters, kcode, pqIters, nQueries)
-      .getOrElse(throw new IllegalArgumentException(
-        "ivfadcIndex: reference corpus is empty"))
-    val kc = book.keys.map(_._2).max + 1
-    def d2(a: Seq[Long], b: Seq[Long]): Long =
-      a.iterator.zip(b.iterator).map { case (x, y) => val d = x - y; d * d }.sum
-    val shift = 4194304L // IVFADC_SHIFT: residuals re-shifted nonnegative
-    val coarseMap = coarse.toMap
-    val lut = (for {
-      (qid, qv) <- queries
-      (_, pcid) <- coarse.map { case (cid, c) => (d2(qv, c), cid) }.sorted.take(nProbe)
-      rqv = qv.zip(coarseMap(pcid)).map { case (a, b) => a - b + shift }
-    } yield (qid, pcid) -> Array.tabulate(8, kc)((m, j) =>
-      d2(rqv.slice(m * 8, m * 8 + 8), book((m, j)).toSeq))).toMap
-    IvfadcIndex(coarse.map { case (cid, c) => (cid, c.toArray) }.toArray,
-      book.map { case (k, v) => k -> v.toArray }, lut)
-  }
-
-  /** s30: STREAMING IVFADC — q66 as a continuously-maintained ANN
-    * result over a FROZEN model (coarse codebook, residual PQ
-    * codebooks, query LUTs — the s25/s26/s27 frozen-model family: a
-    * drifting codebook would re-encode history). Each arriving
-    * vector: route to its coarse list, encode its residual to M
-    * codes, look up its ADC distance to every query probing that
-    * list (pure broadcast-table sums — no corpus join), then ONE
-    * shuffle on query_id into the per-query top-k state (the s27
-    * maintained-top-k shape). Convergence contract (spec-asserted):
-    * streaming the index's training corpus in ANY batching makes
-    * each query's final generation ROW-EXACT batch q66 — per-vector
-    * scores are arrival-independent ints and a bounded (adist ASC,
-    * id ASC) top-k fold is merge-invariant.
-    */
-  def streamIvfadc(vecs: Dataset[(Long, Seq[Float])], index: IvfadcIndex,
-                   topK: Int = 5): Dataset[AdcHit] = {
-    import vecs.sparkSession.implicits._
-    require(index.lut.nonEmpty, "frozen IVFADC index must be non-empty")
-    val bc = vecs.sparkSession.sparkContext.broadcast(index)
-    val scored = vecs.flatMap { case (id, emb) =>
-      val ix = bc.value
-      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
-      var bestD = Long.MaxValue
-      var bestC = Int.MaxValue
-      ix.coarse.foreach { case (cid, c) =>
-        var d = 0L; var i = 0
-        while (i < q.length) { val x = q(i) - c(i); d += x * x; i += 1 }
-        if (d < bestD || (d == bestD && cid < bestC)) { bestD = d; bestC = cid }
-      }
-      val shift = 4194304L
-      val cvec = ix.coarse.find(_._1 == bestC).get._2
-      val r = Array.tabulate(q.length)(i => q(i) - cvec(i) + shift)
-      val codes = Array.tabulate(8) { m =>
-        var bd = Long.MaxValue; var bj = Int.MaxValue
-        ix.book.foreach { case ((mm, j), c) =>
-          if (mm == m) {
-            var d = 0L; var i = 0
-            while (i < 8) { val x = r(m * 8 + i) - c(i); d += x * x; i += 1 }
-            if (d < bd || (d == bd && j < bj)) { bd = d; bj = j }
-          }
-        }
-        bj
-      }
-      ix.lut.iterator.collect {
-        case ((qid, ccid), tab) if ccid == bestC && qid != id =>
-          (qid, id, (0 until 8).map(m => tab(m)(codes(m))).sum)
-      }
-    }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState[List[(Long, Long)], AdcHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (qid: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[List[(Long, Long)]]) =>
-          // state: the query's current top-k as (adist, vec_id) in
-          // (adist ASC, id ASC) order — each vector scored exactly
-          // once, so bounded-top-k eviction is merge-safe
-          var top = state.getOption.getOrElse(Nil)
-          rows.foreach { case (_, vid, ad) =>
-            top = ((ad, vid) :: top).sorted.take(topK)
-          }
-          state.update(top)
-          top.iterator.zipWithIndex.map { case ((ad, vid), i) =>
-            AdcHit(qid, i + 1L, vid, ad)
-          }
-      }
-  }
-
-  /** s31 output: the q68 columns — one row per arriving document. */
-  case class BpeDoc(doc_id: Long, n_subwords: Long, subtext: String)
-
-  /** s31: STREAMING BPE ENCODING — q68 as an online tokenizer: every
-    * arriving document is subword-encoded by a FROZEN rule list
-    * (Bpe.bpeTrain's output collected once — the s26/s28 frozen-model
-    * protocol: evolving rules would re-segment history). Stateless: a
-    * rank-ordered array of (pattern, replacement) pairs rides as a
-    * broadcast, each doc maps to its subword stream with plain
-    * java String.replace per rule — the same left-to-right
-    * non-overlapping semantics as the batch expression and the DuckDB
-    * oracle (the q67 run contract), so streaming the training corpus
-    * reproduces q68 row-for-row (spec-asserted).
-    */
-  def streamBpeEncode(docs: Dataset[(Long, String)],
-                      rules: Seq[(String, String)]): Dataset[BpeDoc] = {
-    import docs.sparkSession.implicits._
-    require(rules.nonEmpty, "frozen BPE rule list must be non-empty")
-    val SEP = "\u0001"
-    val bc = docs.sparkSession.sparkContext.broadcast(rules.map { case (l, r) =>
-      (SEP + l + SEP + r + SEP, SEP + l + r + SEP)
-    }.toArray)
-    docs.map { case (id, text) =>
-      val toks = Option(text).getOrElse("").trim.toLowerCase(java.util.Locale.ROOT)
-        .split("\\s+").filter(t => t.nonEmpty && !t.contains(SEP))
-      val subtext = toks.map { t =>
-        var packed = SEP + t.map(c => s"$c$SEP").mkString
-        bc.value.foreach { case (p, s) => packed = packed.replace(p, s) }
-        packed.replace(SEP, " ").trim
-      }.mkString(" ")
-      val n = if (subtext.isEmpty) 0L else subtext.split(" ").length.toLong
-      BpeDoc(id, n, subtext)
-    }
-  }
-
-  /** s34 output: the q71 columns — one row per arriving document. */
-  case class CleanDoc(doc_id: Long, n_tokens: Long, n_removed: Long, clean_text: String)
-
-  /** s34: STREAMING ExactSubstr — q71 as an online duplicated-span
-    * cutter: every arriving document is cleaned against the FROZEN
-    * dup-window table of the reference corpus
-    * (ExactSubstr.dupWindowTable: digest → first (doc_id, pos), dup
-    * digests only — the s26/s28/s31 frozen-model protocol; a
-    * live-updating dup set would re-cut history). An arriving window
-    * is cut unless it IS the table's recorded first occurrence, so
-    * replaying the training corpus itself is ROW-EXACT vs batch q71
-    * (the first copy survives, every later copy is cut), and a NEW
-    * document is cut wherever it repeats the frozen corpus — the
-    * ingest-dedup semantics. Stateless: a broadcast table + one pure
-    * map, no shuffle, no state store. The table's boundedness is
-    * asserted at build time (dupWindowTable's cap); past the cap the
-    * stream-static explode-join shape is the scale path.
-    *
-    * Window digests are Md5.hex over the space-joined window — the
-    * same bytes SQL md5() hashes in batch q71, and tokenization is
-    * Locale.ROOT-lowercased to match Spark's locale-independent
-    * lower() (the s25/s27 lesson).
-    */
-  def streamSubstringDedup(docs: Dataset[(Long, String)],
-                           dupTable: Map[String, (Long, Int)],
-                           k: Int = 6): Dataset[CleanDoc] = {
-    import docs.sparkSession.implicits._
-    require(k >= 2, "substring window must span at least 2 tokens")
-    val bc = docs.sparkSession.sparkContext.broadcast(dupTable)
-    docs.map { case (id, text) =>
-      val toks = Option(text).getOrElse("").trim
-        .toLowerCase(java.util.Locale.ROOT)
-        .split("\\s+").filter(_.nonEmpty)
-      val n = toks.length
-      val covered = new Array[Boolean](n)
-      var i = 0
-      while (i + k <= n) {
-        val h = graft.functions.Md5.hex(toks.slice(i, i + k).mkString(" "))
-        bc.value.get(h) match {
-          case Some((fdoc, fpos)) if fdoc != id || fpos != i + 1 =>
-            var j = i; while (j < i + k) { covered(j) = true; j += 1 }
-          case _ =>
-        }
-        i += 1
-      }
-      val kept = toks.indices.collect { case j if !covered(j) => toks(j) }
-      CleanDoc(id, n.toLong, (n - kept.length).toLong, kept.mkString(" "))
-    }
-  }
-
-  /** s35 output: the q72 columns — one row per arriving document. */
-  case class NbScore(doc_id: Long, is_train: Long, n_feats: Long,
-                     score_q16: Long, pred: Long)
-
-  /** s35: STREAMING NB classification — q72 as an online scorer:
-    * every arriving document is scored by the FROZEN weight table +
-    * prior (Classifier.nbModel, exactly B entries — the s26/s28/s31
-    * frozen-model protocol: a live-updating model would re-score
-    * history). Every possible bucket has a weight (add-one smoothing
-    * covers unseen features), so scoring is total: stateless
-    * broadcast + one pure map, no shuffle, no state. Streams are
-    * ROW-EXACT vs batch q72 on any corpus (spec, multi-batch) because
-    * per-doc scores depend only on the doc and the frozen model.
-    */
-  def streamNbClassify(docs: Dataset[(Long, String)],
-                       model: graft.operators.Classifier.NbModel): Dataset[NbScore] = {
-    import docs.sparkSession.implicits._
-    require(model.weights.size == model.buckets, "frozen model must cover all buckets")
-    val bc = docs.sparkSession.sparkContext.broadcast(model)
-    val ha = graft.operators.Dedup.ReplayableHash.a(218)
-    val hb = graft.operators.Dedup.ReplayableHash.b(218)
-    val P = graft.operators.Dedup.ReplayableHash.P
-    docs.map { case (id, text) =>
-      val m = bc.value
-      val ts = normTokens(text)
-      val feats = ts.iterator ++
-        ts.iterator.sliding(2).withPartial(false).map(_.mkString(" "))
-      var n = 0L; var s = m.priorQ16
-      feats.foreach { f =>
-        val b = ((ha * graft.functions.PolyHashExpr.hash(f) + hb) % P) % m.buckets
-        n += 1L; s += m.weights(b)
-      }
-      NbScore(id, if (id % 2 == 0) 1L else 0L, n, s, if (s >= 0L) 1L else 0L)
-    }
-  }
-
-  /** s32 output: the current top-M selection, re-emitted in full
-    * whenever a batch changes it (generational Append, the s27/s30
-    * contract: consumers take the latest generation).
-    */
-  case class DsirPick(rank: Long, doc_id: Long, imp_q16: Long)
-
-  /** The frozen q69 model for s32: the bucket→w_q16 table (≤ B rows,
-    * Dsir.dsirWeights) plus the hash constants the bucketing needs.
-    */
-  case class DsirIndex(weights: Map[Long, Long], buckets: Int)
-
-  def dsirIndex(corpus: org.apache.spark.sql.DataFrame, targetLang: String = "en",
-                buckets: Int = 1024): DsirIndex =
-    DsirIndex(graft.operators.Dsir.dsirWeights(corpus, targetLang, buckets), buckets)
-
-  /** s32: STREAMING DSIR — q69 as a continuously-maintained data
-    * selection: each arriving document scores against the FROZEN
-    * weight table (a live-updating model would re-score history — the
-    * s25/s26/s27 frozen-model rule) and the corpus-wide top-M keep
-    * set is MAINTAINED ACROSS BATCHES in state. Buckets a frozen
-    * model never saw carry weight 0 (the OOV rule, documented —
-    * impossible when streaming the training corpus itself, where
-    * every bucket is corpus-present by construction).
-    *
-    * Plan: one stateless map scores a doc entirely locally (tokens →
-    * bigrams → PolyHashExpr.hash + index-216 post-mix → Σ w), then
-    * ONE shuffle into the single M-pair selection state. Convergence
-    * contract (spec-asserted): after streaming the training corpus in
-    * ANY batching, the final generation is EXACTLY batch q69's keep
-    * set in (imp DESC, doc_id ASC) order — per-doc scores are
-    * arrival-independent ints and a bounded top-M fold is
-    * merge-invariant.
-    */
-  def streamDsir(docs: Dataset[(Long, String)], index: DsirIndex,
-                 keepTop: Int = 100): Dataset[DsirPick] = {
-    import docs.sparkSession.implicits._
-    require(index.weights.nonEmpty, "frozen DSIR weight table must be non-empty")
-    val P = graft.functions.ReplayableHash.P
-    val ha = graft.functions.ReplayableHash.a(216)
-    val hb = graft.functions.ReplayableHash.b(216)
-    val bc = docs.sparkSession.sparkContext.broadcast(index)
-    val scored = docs.map { case (id, text) =>
-      val ix = bc.value
-      val ts = normTokens(text)
-      var imp = 0L
-      var i = 0
-      while (i < ts.length - 1) {
-        val h = graft.functions.PolyHashExpr.hash(ts(i) + " " + ts(i + 1))
-        val b = ((ha * h + hb) % P) % ix.buckets
-        imp += ix.weights.getOrElse(b, 0L)
-        i += 1
-      }
-      (id, imp)
-    }
-    scored.groupByKey(_ => 0)
-      .flatMapGroupsWithState[List[(Long, Long)], DsirPick](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Int, rows: Iterator[(Long, Long)], state: GroupState[List[(Long, Long)]]) =>
-          // state: the current top-M as (-imp, doc_id), ascending ==
-          // (imp DESC, doc_id ASC); each doc scored exactly once, so
-          // bounded eviction is merge-safe
-          var top = state.getOption.getOrElse(Nil)
-          rows.foreach { case (id, imp) =>
-            top = ((-imp, id) :: top).sorted.take(keepTop)
-          }
-          state.update(top)
-          top.iterator.zipWithIndex.map { case ((ni, id), i) =>
-            DsirPick(i + 1L, id, -ni)
-          }
-      }
-  }
-
-  /** s25 output: the q61 columns — ppl None for <2-token docs. */
-  case class PplReport(doc_id: Long, n_bigrams: Long, nll_q16: Long,
-                       ppl_q16: Option[Long])
-
-  /** The frozen bigram LM pre-indexed for s25: observed-bigram nll
-    * (the q61 model rows), per-prefix smoothing mass il_den =
-    * L(c1+V), and the out-of-vocabulary default L(V). Built ONCE from
-    * the frozen reference corpus and broadcast — the standard LM
-    * deployment shape (a KenLM/CCNet filter ships a PRUNED model file
-    * to every worker; driver-side by design, the s13/s19 frozen-index
-    * assumption made explicit).
-    */
-  case class BigramLmIndex(nll: Map[(String, String), Long],
-                           ilDen: Map[String, Long],
-                           oovNll: Long)
-
-  /** Index a corpus's bigram LM for streaming scoring. Same bytes as
-    * batch q61: TextOps.bigramModel computes the observed-bigram nll
-    * rows and the prefix counts DISTRIBUTED (the vocab-sized frames
-    * collect, never the corpus), and the Log2Q16 arithmetic is the
-    * shared kernel — so scoring the training corpus itself reproduces
-    * q61 row-exactly (spec-asserted).
-    */
-  def bigramLmIndex(corpus: org.apache.spark.sql.DataFrame): BigramLmIndex = {
-    val L = graft.functions.Log2Q16Expr.compute _
-    val vocabV = graft.operators.TextOps.vocabSize(corpus)
-    val model = graft.operators.TextOps.bigramModel(corpus)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    // per-prefix il_den = nll of an UNSEEN continuation of a seen
-    // prefix (c12 = 0 ⇒ L(c1+V) − L(1) = L(c1+V)); oov = unseen
-    // prefix (c1 = 0 ⇒ L(V))
-    val uni = graft.operators.TextOps.bigramPrefixCounts(corpus)
-      .collect().map(r => r.getString(0) -> L(r.getLong(1) + vocabV)).toMap
-    BigramLmIndex(model, uni, L(math.max(vocabV, 1L)))
-  }
-
-  /** s25: STREAMING perplexity scoring — q61 as an online quality
-    * filter (the CCNet deployment shape: every arriving document is
-    * scored against a FROZEN reference LM before admission; the model
-    * does not drift with the stream). Stateless: the index rides as a
-    * broadcast, each doc maps to its report — no state store, no
-    * shuffle, scales with input rate. Tokenization (normTokens) and
-    * the Q16 log arithmetic are byte-identical to batch q61, so
-    * scoring the training corpus reproduces q61 row-exactly; genuinely
-    * novel text degrades gracefully through the smoothing ladder
-    * (unseen bigram → L(c1+V); unseen prefix → L(V)).
-    */
-  def streamPerplexity(docs: Dataset[(Long, String)],
-                       index: BigramLmIndex): Dataset[PplReport] = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(index)
-    docs.map { case (id, text) =>
-      val ts = normTokens(text)
-      val ix = bc.value
-      if (ts.length < 2) PplReport(id, 0L, 0L, None)
-      else {
-        var nll = 0L
-        var i = 0
-        while (i < ts.length - 1) {
-          nll += ix.nll.getOrElse((ts(i), ts(i + 1)),
-            ix.ilDen.getOrElse(ts(i), ix.oovNll))
-          i += 1
-        }
-        val n = (ts.length - 1).toLong
-        PplReport(id, n, nll, Some(nll / n))
-      }
-    }
-  }
-
-  /** s36 output: the q74 columns — bucket None when ppl is None. */
-  case class BucketReport(doc_id: Long, lang: String,
-                          ppl_q16: Option[Long], bucket: Option[String])
-
-  /** s36: STREAMING CCNet bucketing — q74 as an online corpus router:
-    * every arriving (doc_id, lang, text) is perplexity-scored by the
-    * FROZEN reference LM (the s25 index — byte-identical Q16
-    * arithmetic) and routed head/middle/tail by the FROZEN
-    * per-language cutoffs (TextOps.ccnetCutoffs; a drifting cutoff
-    * table would re-bucket history — the s26/s28/s31/s35 frozen-model
-    * rule). Stateless: two broadcast tables + one pure map, no
-    * shuffle, no state. Streaming the training corpus is ROW-EXACT vs
-    * batch q74 (spec, multi-batch): on it every bigram is
-    * model-present and every scored lang has cutoffs, so the
-    * smoothing ladder and the unknown-lang rule (no cutoffs → "tail",
-    * matching batch's null-propagating CASE) never fire; both are the
-    * documented graceful paths for genuinely novel input.
-    */
-  def streamCcnetBuckets(docs: Dataset[(Long, String, String)],
-                         index: BigramLmIndex,
-                         cuts: Map[String, (Long, Long)]): Dataset[BucketReport] = {
-    import docs.sparkSession.implicits._
-    val bcIx = docs.sparkSession.sparkContext.broadcast(index)
-    val bcCuts = docs.sparkSession.sparkContext.broadcast(cuts)
-    docs.map { case (id, lang, text) =>
-      val ts = normTokens(text)
-      val ix = bcIx.value
-      if (ts.length < 2) BucketReport(id, lang, None, None)
-      else {
-        var nll = 0L
-        var i = 0
-        while (i < ts.length - 1) {
-          nll += ix.nll.getOrElse((ts(i), ts(i + 1)),
-            ix.ilDen.getOrElse(ts(i), ix.oovNll))
-          i += 1
-        }
-        val ppl = nll / (ts.length - 1).toLong
-        val bucket = bcCuts.value.get(lang) match {
-          case Some((c33, c67)) =>
-            if (ppl <= c33) "head" else if (ppl <= c67) "middle" else "tail"
-          case None => "tail"
-        }
-        BucketReport(id, lang, Some(ppl), Some(bucket))
-      }
-    }
-  }
-
-  /** s55 arrival: the drift-relevant document metadata (text itself is
-    * not consumed — composition drift is a metadata property).
-    */
-  case class DriftDoc(doc_id: Long, lang: String, source: String,
-                      n_chars: Option[Long])
-
-  /** s55 output: the q100 columns — one row per union-grid bucket of
-    * a touched feature; each batch re-emits every touched feature's
-    * FULL report (generational Append, the s16/s27 contract).
-    */
-  case class DriftRow(feature: String, bucket: String, n1: Long, n2: Long,
-                      p_e8: Long, q_e8: Long, psi_contrib: Long)
-
-  /** s55: LIVE CORPUS-DRIFT MONITOR — q100 as a continuously-updated
-    * PSI report: the baseline side is FROZEN (expected (feature,
-    * bucket) counts + the length grid, [[graft.operators.Drift
-    * .expectedCounts]] — the s21 frozen-config discipline: a drifting
-    * baseline would re-score history), the candidate side is the live
-    * arrival stream. State per feature = its live bucket counters
-    * (bucket-cardinality Longs, catalog-bounded); every batch
-    * re-derives the touched features' full PSI report from (frozen
-    * baseline ∪ live counters) — the q100 arithmetic verbatim
-    * (add-one e8 shares, greatest-clamp, Log2Q16Expr.compute), so
-    * end-of-stream generations are ROW-EXACT vs batch q100 run on
-    * (baseline, streamed corpus) under ANY batching/ordering
-    * (commutative integer counters; spec-asserted with a seeded
-    * shuffle). Buckets only the BASELINE saw still emit (n2 = 0 —
-    * the "source stopped delivering" alarm a live-only grid would
-    * silently drop). The baseline arrives as the TYPED
-    * [[graft.operators.Drift.DriftBaseline]] bundle (r13 ADVICE —
-    * counts and the grid they were bucketed on are one model; a
-    * detached grid would silently misattribute len buckets).
-    */
-  def streamDriftPsi(docs: Dataset[DriftDoc],
-                     baseline: graft.operators.Drift.DriftBaseline): Dataset[DriftRow] = {
-    import docs.sparkSession.implicits._
-    val lenDiv = baseline.lenDiv; val lenCap = baseline.lenCap
-    val bc = docs.sparkSession.sparkContext.broadcast(baseline.expected)
-    val hits = docs.flatMap { d =>
-      Iterator(("lang", Option(d.lang).getOrElse("<null>")),
-        ("source", Option(d.source).getOrElse("<null>")),
-        ("len", graft.operators.Drift.lenBucket(d.n_chars, lenDiv, lenCap)))
-    }
-    hits.groupByKey(_._1)
-      .flatMapGroupsWithState[Map[String, Long], DriftRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (feature: String, rows: Iterator[(String, String)],
-         state: GroupState[Map[String, Long]]) =>
-          var live = state.getOption.getOrElse(Map.empty)
-          rows.foreach { case (_, b) => live = live.updated(b, live.getOrElse(b, 0L) + 1L) }
-          state.update(live)
-          val exp = bc.value.collect { case ((f, b), n) if f == feature => b -> n }
-          val buckets = (exp.keySet ++ live.keySet).toSeq.sorted
-          val t1 = exp.values.sum; val t2 = live.values.sum
-          val nb = buckets.size.toLong
-          val L = graft.functions.Log2Q16Expr.compute _
-          buckets.iterator.map { b =>
-            val n1 = exp.getOrElse(b, 0L); val n2 = live.getOrElse(b, 0L)
-            val p = math.max(((n1 + 1L) * 100000000L) / (t1 + nb), 1L)
-            val q = math.max(((n2 + 1L) * 100000000L) / (t2 + nb), 1L)
-            DriftRow(feature, b, n1, n2, p, q, (p - q) * (L(p) - L(q)))
-          }
-      }
-  }
-
-  /** s56 output: the q101b columns per arrival. */
-  case class UnigramSegDoc(doc_id: Long, n_pieces: Long, subtext: String)
-
-  /** s56: STREAMING UNIGRAM ENCODE — q101b as a continuous tokenizer
-    * service: each arriving document is Viterbi-segmented against the
-    * FROZEN q101 model (the s25/s31 frozen-model rule — a live-trained
-    * vocab would re-segment history; ModelStore family `unigram` is
-    * the artifact). A pure stateless map — the cheapest streaming
-    * class: no state, no shuffle, trivially row-exact vs batch q101b
-    * under any batching (ModelStoreSpec asserts it from the LOADED
-    * artifact; StreamingSpec under shuffled multi-batch arrival). The
-    * normalization is the batch column chain's JVM twin
-    * (lower(wsTrim(coalesce(text,''))) — Locale.ROOT lowering, the
-    * s21 GreedyTokenStats parity precedent; the segmenter itself
-    * skips whitespace, so the trim is absorbed).
-    */
-  def streamUnigramEncode(docs: Dataset[(Long, String)],
-                          model: graft.operators.Unigram.Model,
-                          maxLen: Int = 4): Dataset[UnigramSegDoc] = {
-    import docs.sparkSession.implicits._
-    require(model.pieces.nonEmpty, "frozen unigram model must be non-empty")
-    val bc = docs.sparkSession.sparkContext.broadcast {
-      val m = new java.util.HashMap[String, java.lang.Long]()
-      model.costs.foreach { case (p, c) => m.put(p, c) }
-      m
-    }
-    docs.map { case (id, text) =>
-      val norm = (if (text == null) "" else text)
-        .toLowerCase(java.util.Locale.ROOT)
-      val pieces = graft.functions.UnigramSegExpr.segment(
-        norm, bc.value, maxLen, graft.operators.Unigram.UnkCostQ16)
-      UnigramSegDoc(id, pieces.length.toLong, pieces.mkString(" "))
-    }
-  }
-
-  /** s57 scored-arrival intermediate: one probe's view of one doc —
-    * the best-passage lexical score WITH its passage attribution, and
-    * the integer d2 (None per missing modality), the s54 shape plus
-    * the citation.
-    */
-  case class RagScore(qid: Long, doc_id: Long,
-                      lex: Option[(Long, Long)], d2: Option[Long])
-
-  /** s57 output: the q102 columns — a probe's CURRENT fused top-k with
-    * best-passage attribution, re-emitted in full whenever a batch
-    * touches the probe (generational Append, the s16/s27 contract).
-    */
-  case class RagHit(query_id: Long, rank: Long, doc_id: Long,
-                    passage_id: Option[Long], rrf_e6: Long,
-                    lex_rank: Option[Long], sem_rank: Option[Long])
-
-  /** s57: STREAMING RAG — q102's indexing+retrieval chain as a
-    * continuously-maintained result over a multimodal arrival stream
-    * (doc_id, text, embedding): each arrival normalizes, CHUNKS
-    * ITSELF (q85's geometry is per-document — the one structural fact
-    * that makes a streaming RAG index stateless on the corpus side),
-    * scores every passage against the FROZEN
-    * [[graft.operators.Rag.RagModel]] (probe terms + passage-collection
-    * idf + P/A scalars — live stats would re-rank history, the s27
-    * rule), reduces to its per-probe BEST passage (score DESC, chunk
-    * ASC — the q102 struct-max, locally since all of a doc's passages
-    * are in hand), then ONE shuffle on qid maintains the two bounded
-    * pools per probe (the s54 state machine with the lexical pool
-    * carrying the passage attribution). Self-exclusion and the s54
-    * at-least-once dedup-by-doc and dim-mismatch fail-loud contracts
-    * apply unchanged. Convergence (spec): streaming the model's own
-    * training corpus — any batching, any order — makes each probe's
-    * final generation ROW-EXACT vs batch q102 (per-doc scores are
-    * arrival-independent; bounded top-k folds merge-invariant; fusion
-    * a pure function of the final pools).
-    */
-  def streamRagSearch(docs: Dataset[(Long, String, Seq[Float])],
-                      model: graft.operators.Rag.RagModel,
-                      poolR: Int = 20, topK: Int = 10,
-                      rrfK: Int = 60): Dataset[RagHit] = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(model)
-    val scored = docs.flatMap { case (id, text, emb) =>
-      val m = bc.value
-      val lexBest: Map[Long, (Long, Long)] =
-        m.lexicalBest(text).filter(_._1 != id)
-          .map(t => t._1 -> ((t._2, t._3))).toMap
-      val q: Array[Long] =
-        if (emb == null || emb.isEmpty) null
-        else emb.iterator.map(v =>
-          math.floor(v.toDouble * 1048576.0 + 0.5).toLong).toArray
-      m.probeVecs.keysIterator.flatMap { qid =>
-        if (qid == id) Iterator.empty
-        else {
-          val d2: Option[Long] = if (q == null) None else {
-            val pv = m.probeVecs(qid)
-            if (q.length != pv.length) throw new IllegalArgumentException(
-              s"s57: arrival doc_id=$id embedding dim ${q.length} != " +
-                s"frozen probe $qid dim ${pv.length}")
-            var s = 0L; var i = 0
-            while (i < q.length) { val d = q(i) - pv(i); s += d * d; i += 1 }
-            Some(s)
-          }
-          val lex = lexBest.get(qid)
-          if (lex.isEmpty && d2.isEmpty) Iterator.empty
-          else Iterator.single(RagScore(qid, id, lex, d2))
-        }
-      }
-    }
-    // state per probe: lexical pool (score DESC, doc ASC) carrying the
-    // best-passage citation, semantic pool (d2 ASC, doc ASC)
-    scored.groupByKey(_.qid)
-      .flatMapGroupsWithState[(List[(Long, Long, Long)], List[(Long, Long)]), RagHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (qid: Long, rows: Iterator[RagScore],
-         state: GroupState[(List[(Long, Long, Long)], List[(Long, Long)])]) =>
-          var (lexTop, semTop) = state.getOption.getOrElse((Nil, Nil))
-          rows.foreach { r =>
-            r.lex.foreach { case (s, passage) =>
-              lexTop = ((-s, r.doc_id, passage) ::
-                lexTop.collect { case (x, d, p) if d != r.doc_id => (-x, d, p) })
-                .sortBy(t => (t._1, t._2)).take(poolR)
-                .map { case (nx, d, p) => (-nx, d, p) }
-            }
-            r.d2.foreach { s =>
-              semTop = ((s, r.doc_id) :: semTop.filterNot(_._2 == r.doc_id))
-                .sorted.take(poolR)
-            }
-          }
-          state.update((lexTop, semTop))
-          val lexRank = lexTop.zipWithIndex
-            .map { case ((_, d, p), i) => d -> ((i + 1L, p)) }.toMap
-          val semRank = semTop.zipWithIndex
-            .map { case ((_, d), i) => d -> (i + 1L) }.toMap
-          (lexRank.keySet ++ semRank.keySet).iterator.map { d =>
-            val rrf = lexRank.get(d).map { case (r, _) => 1000000L / (rrfK + r) }
-              .getOrElse(0L) +
-              semRank.get(d).map(r => 1000000L / (rrfK + r)).getOrElse(0L)
-            (d, rrf)
-          }.toSeq.sortBy { case (d, rrf) => (-rrf, d) }.take(topK)
-            .iterator.zipWithIndex.map { case ((d, rrf), i) =>
-              RagHit(qid, i + 1L, d, lexRank.get(d).map(_._2), rrf,
-                lexRank.get(d).map(_._1), semRank.get(d))
-            }
-      }
-  }
-
-  /** s58 output: the q104 columns per arrival. */
-  case class KnScoreDoc(doc_id: Long, n_trigrams: Long, nll_q16: Long,
-                        ppl_q16: Option[Long])
-
-  /** s58: STREAMING KNESER-NEY TRIGRAM SCORING — q104 as a continuous
-    * quality filter: each arriving document scores against the FROZEN
-    * ARPA-shaped [[graft.operators.NgramLm.KnLmModel]] (ModelStore
-    * family `kn_lm` — the s25 frozen-model rule one order up: a
-    * live-trained LM would re-score history). A pure stateless map, no
-    * state, no shuffle; tokenization is the batch twin ([[normTokens]]).
-    * Streaming the training corpus is ROW-EXACT vs batch q104 under any
-    * batching/order (every corpus trigram hits the exact table — spec,
-    * multi-batch shuffled); NOVEL trigrams walk the model's backoff
-    * ladder (exact → λ3·p2 → p2 → λ2·p1 → p1 → OOV floor), the
-    * documented graceful path an ARPA scorer ships for genuinely new
-    * input (hand-pinned in the spec).
-    */
-  def streamKnPerplexity(docs: Dataset[(Long, String)],
-                         model: graft.operators.NgramLm.KnLmModel): Dataset[KnScoreDoc] = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(model)
-    docs.map { case (id, text) =>
-      val (n, s, p) = bc.value.score(normTokens(text))
-      KnScoreDoc(id, n, s, p)
-    }
-  }
-
-  /** s58 output, order-n form: the q104b columns per arrival. */
-  case class KnScoreDocN(doc_id: Long, n_ngrams: Long, nll_q16: Long,
-                         ppl_q16: Option[Long])
-
-  /** s58 generalized to ORDER n (r16, the r15 verdict's task #4): the
-    * same stateless frozen-model map scoring against the generic
-    * [[graft.operators.NgramLm.KnLmModelN]] (ModelStore `kn_lm`,
-    * order-n PRUNABLE layout). From an UNPRUNED artifact, streaming
-    * the training corpus is row-exact vs batch q104b under any
-    * batching/order; from a PRUNED one it reproduces batch q104c's
-    * `peff` ladder bit-for-bit — both spec-pinned, including
-    * pruned-away entries walking the generic backoff recursion.
-    */
-  def streamKnPerplexityN(docs: Dataset[(Long, String)],
-                          model: graft.operators.NgramLm.KnLmModelN): Dataset[KnScoreDocN] = {
-    import docs.sparkSession.implicits._
-    val bc = docs.sparkSession.sparkContext.broadcast(model)
-    docs.map { case (id, text) =>
-      val (n, s, p) = bc.value.score(normTokens(text))
-      KnScoreDocN(id, n, s, p)
-    }
-  }
-
-  /** s54 scored-arrival intermediate: one probe's view of one doc —
-    * the lexical BM25 sum (None when the doc shares no probe term)
-    * and the integer d2 (None when the arrival carries no vector).
-    */
-  case class HybridScore(qid: Long, doc_id: Long,
-                         lex: Option[Long], d2: Option[Long])
-
-  /** s54 output: the q99 columns — a probe's CURRENT fused top-k,
-    * re-emitted in full whenever a batch touches the probe
-    * (generational Append, the s16/s27 contract).
-    */
-  case class HybridHit(query_id: Long, rank: Long, doc_id: Long,
-                       rrf_e6: Long, lex_rank: Option[Long], sem_rank: Option[Long])
-
-  /** s54: STREAMING HYBRID RETRIEVAL — q99 as a continuously-maintained
-    * search result over a multimodal arrival stream (doc_id, text,
-    * embedding): each arrival is scored against the FROZEN
-    * [[graft.operators.Hybrid.HybridModel]] (probe terms + idf, probe
-    * vectors, corpus scalars — live stats would re-rank history, the
-    * frozen-model family rule), both leg pools are MAINTAINED ACROSS
-    * BATCHES in per-probe state, and each touched probe re-emits its
-    * full fused generation. Convergence contract (spec-asserted):
-    * streaming the model's own training corpus — any batching, any
-    * order — converges each probe's final generation ROW-EXACT to
-    * batch q99, because per-doc scores are arrival-independent and
-    * bounded top-k folds are merge-invariant (the s27 argument, twice),
-    * while the RRF fusion is a pure function of the two final pools.
-    *
-    * Plan: one stateless map scores a doc entirely locally against all
-    * Q probes (no corpus join — the batch inverted index exists to
-    * avoid scanning N docs per term; a stream touches each doc exactly
-    * once so the local score IS the candidate generation), then ONE
-    * shuffle on qid into Q·2·poolR state. A row may carry text only
-    * (lexical candidate), a vector only (semantic candidate), or both.
-    */
-  def streamHybridRrf(docs: Dataset[(Long, String, Seq[Float])],
-                      model: graft.operators.Hybrid.HybridModel,
-                      poolR: Int = 20, topK: Int = 10,
-                      rrfK: Int = 60): Dataset[HybridHit] = {
-    import docs.sparkSession.implicits._
-    require(model.qterms.nonEmpty && model.probeVecs.nonEmpty,
-      "frozen hybrid model must carry probe terms and vectors")
-    val bc = docs.sparkSession.sparkContext.broadcast(model)
-    val scored = docs.flatMap { case (id, text, emb) =>
-      val m = bc.value
-      // lexical: tf over the union of probe terms, one pass
-      val ts = if (text == null) Array.empty[String] else normTokens(text)
-      val dl = ts.length.toLong
-      val counts = scala.collection.mutable.HashMap.empty[String, Long]
-      ts.foreach(t => counts.update(t, counts.getOrElse(t, 0L) + 1L))
-      val lenTerm = (dl * (9000L * m.nDocs)) / math.max(m.aTok, 1L)
-      // semantic: quantize once (the q63 grid, offset-free)
-      val q: Array[Long] =
-        if (emb == null || emb.isEmpty) null
-        else emb.iterator.map(v =>
-          math.floor(v.toDouble * 1048576.0 + 0.5).toLong).toArray
-      m.probeVecs.keysIterator.flatMap { qid =>
-        if (qid == id) Iterator.empty
-        else {
-          val lex: Option[Long] = if (ts.isEmpty) None else {
-            var s = 0L; var hit = false
-            m.qterms.getOrElse(qid, Map.empty).foreach { case (t, idf) =>
-              val tf = counts.getOrElse(t, 0L)
-              if (tf > 0L) {
-                hit = true
-                s += (idf * tf * 22000L) / (tf * 10000L + 3000L + lenTerm)
-              }
-            }
-            if (hit) Some(s) else None
-          }
-          val d2: Option[Long] = if (q == null) None else {
-            val pv = m.probeVecs(qid)
-            // batch parity (r13 ADVICE): the batch leg's L2DistExpr
-            // throws on unequal lengths — a malformed arrival must
-            // fail loudly here too, not truncate into a silently
-            // wrong distance that then occupies persistent pool state
-            if (q.length != pv.length) throw new IllegalArgumentException(
-              s"s54: arrival doc_id=$id embedding dim ${q.length} != " +
-                s"frozen probe $qid dim ${pv.length}")
-            var s = 0L; var i = 0
-            while (i < q.length) { val d = q(i) - pv(i); s += d * d; i += 1 }
-            Some(s)
-          }
-          if (lex.isEmpty && d2.isEmpty) Iterator.empty
-          else Iterator.single(HybridScore(qid, id, lex, d2))
-        }
-      }
-    }
-    // state per probe: the two bounded pools, each held best-first —
-    // (score DESC, doc ASC) lexical, (d2 ASC, doc ASC) semantic.
-    // Inserts DEDUP BY doc_id first (r13 ADVICE): an at-least-once
-    // source replaying a doc must not occupy two bounded slots and
-    // permanently evict a legitimate candidate — scores are
-    // arrival-independent, so drop-then-insert is idempotent and the
-    // pool stays exactly "best poolR distinct docs seen so far".
-    scored.groupByKey(_.qid)
-      .flatMapGroupsWithState[(List[(Long, Long)], List[(Long, Long)]), HybridHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (qid: Long, rows: Iterator[HybridScore],
-         state: GroupState[(List[(Long, Long)], List[(Long, Long)])]) =>
-          var (lexTop, semTop) = state.getOption.getOrElse((Nil, Nil))
-          rows.foreach { r =>
-            r.lex.foreach { s =>
-              lexTop = ((-s, r.doc_id) ::
-                lexTop.collect { case (x, d) if d != r.doc_id => (-x, d) })
-                .sorted.take(poolR).map { case (nx, d) => (-nx, d) }
-            }
-            r.d2.foreach { s =>
-              semTop = ((s, r.doc_id) :: semTop.filterNot(_._2 == r.doc_id))
-                .sorted.take(poolR)
-            }
-          }
-          state.update((lexTop, semTop))
-          // fusion: a pure function of the two pools (the batch
-          // arithmetic verbatim — floor(1e6/(rrfK+rank)) per leg)
-          val lexRank = lexTop.zipWithIndex
-            .map { case ((_, d), i) => d -> (i + 1L) }.toMap
-          val semRank = semTop.zipWithIndex
-            .map { case ((_, d), i) => d -> (i + 1L) }.toMap
-          (lexRank.keySet ++ semRank.keySet).iterator.map { d =>
-            val rrf = lexRank.get(d).map(r => 1000000L / (rrfK + r)).getOrElse(0L) +
-              semRank.get(d).map(r => 1000000L / (rrfK + r)).getOrElse(0L)
-            (d, rrf)
-          }.toSeq.sortBy { case (d, rrf) => (-rrf, d) }.take(topK)
-            .iterator.zipWithIndex.map { case ((d, rrf), i) =>
-              HybridHit(qid, i + 1L, d, rrf, lexRank.get(d), semRank.get(d))
-            }
-      }
   }
 }
 

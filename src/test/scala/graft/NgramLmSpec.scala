@@ -2,8 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 
 /** q104 / s58: interpolated Kneser-Ney trigram LM. The value-level
   * gate is the driver's DuckDB compare; these pin (1) distributed ==
@@ -241,34 +239,6 @@ class NgramLmSpec extends AnyFunSuite {
       t("mid").collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
       t("midctx").collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
       t("uni").collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-  }
-
-  test("s58 streaming KN scorer equals batch q104 under shuffled multi-batch arrival") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val batch = NgramLm.knPerplexity(docs).collect().map { r =>
-      r.getLong(0) -> ((r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3))))
-    }.toMap
-    val model = fitModel(docs)
-    val feed = docs.select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
-    val shuffled = new scala.util.Random(58L).shuffle(feed.toVector).toArray
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, Option[Long])]()
-    val q = StreamOps.streamKnPerplexity(source.toDS(), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KnScoreDoc], _: Long) =>
-        b.collect().foreach(d => got(d.doc_id) = ((d.n_trigrams, d.nll_q16, d.ppl_q16))); ()
-      }.start()
-    try {
-      val third = shuffled.length / 3 + 1
-      shuffled.grouped(third).foreach { ch =>
-        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(got.toMap == batch, "stateless KN scorer must equal batch q104 per arrival")
   }
 
   test("s58 backoff ladder: each rung hand-checked against the frozen tables") {

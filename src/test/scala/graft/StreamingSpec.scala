@@ -238,30 +238,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(j.filter(abs(col("order_total") - col("stream_total")) > 1e-3).count() == 0)
   }
 
-  test("s07 streaming dedup emits each distinct document exactly once") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .as[graft.sources.Models.Document].collect()
-    // duplicate the whole corpus across two batches under new ids
-    val clones = docs.map(d => d.copy(doc_id = d.doc_id + 100000))
-
-    val source = MemoryStream[graft.sources.Models.Document]
-    val q = graft.streaming.StreamOps.streamDedupExact(source.toDF())
-      .writeStream.format("memory").queryName("s07_out")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      source.addData(docs.toSeq); q.processAllAvailable()
-      source.addData(clones.toSeq); q.processAllAvailable()
-    } finally q.stop()
-
-    val out = spark.table("s07_out")
-    assert(out.count() == docs.length)             // clones all suppressed
-    assert(out.select("text_hash").distinct().count() == docs.length)
-    assert(out.filter(col("doc_id") >= 100000).count() == 0) // first wins
-  }
-
   private def freshDir(name: String): String = {
     val dir = new java.io.File(s"/tmp/graft-test-$name")
     if (dir.exists()) { import scala.reflect.io.Directory; new Directory(dir).deleteRecursively() }
@@ -435,41 +411,6 @@ class StreamingSpec extends AnyFunSuite {
       val streamSig = StreamOps.minhashSignature(text).toVector
       assert(streamSig == batchSig(id), s"signature mismatch for doc $id")
     }
-  }
-
-  test("s11 streaming minhash dedup flags planted clones online") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      .as[(Long, String)].collect()
-    val clones = docs.take(10).map { case (id, text) => (id + 100000L, text) }
-
-    val source = MemoryStream[(Long, String)]
-    val q = StreamOps.streamDedupMinHash(source.toDS())
-      .writeStream.format("memory").queryName("s11_out")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      source.addData(docs.toSeq); q.processAllAvailable()   // originals admitted
-      source.addData(clones.toSeq); q.processAllAvailable() // clones arrive later
-    } finally q.stop()
-
-    val out = spark.table("s11_out")
-    // every clone must be flagged in at least one band bucket with a
-    // perfect estimate against its original
-    val flagged = out.filter(col("doc_id") >= 100000L)
-      .groupBy("doc_id")
-      .agg(max("n_dups").as("n_dups"), max("best_est").as("best_est"))
-    assert(flagged.count() == 10)
-    assert(flagged.filter(col("n_dups") < 1).count() == 0)
-    assert(flagged.filter(col("best_est") < 1.0).count() == 0)
-    // originals arrived FIRST, so they can only match OTHER ORIGINALS.
-    // This corpus carries ~11 natural near-identical pairs (measured
-    // true Jaccard up to 0.986, where an identical 32-perm signature
-    // is likely); only the later arrival of such a pair may see a
-    // perfect estimate — a bounded handful, never a broad smear.
-    val perfectOriginals = out.filter(col("doc_id") < 100000L && col("best_est") >= 1.0)
-      .select("doc_id").distinct().count()
-    assert(perfectOriginals <= 30, s"$perfectOriginals originals scored est 1.0")
   }
 
   test("s09 log-structured: per-batch bytes scale with the batch, not the table") {
@@ -687,829 +628,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("s13 streaming decontamination is row-exact vs batch q38") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docsAll = Tables.documents(spark, sfDir)
-    val bench = docsAll.filter(col("doc_id") % 97 === 0)
-    val corpus = docsAll.filter(col("doc_id") % 97 =!= 0)
-
-    val batch = graft.operators.TextOps.decontaminate(corpus, bench)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-
-    val benchSet = StreamOps.benchmarkShingleSet(bench)
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, Long)]()
-    val q = StreamOps.streamDecontaminate(source.toDS(), benchSet)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.ContamReport], _: Long) =>
-        b.collect().foreach(r =>
-          got(r.doc_id) = (r.n_shingles, r.n_overlap, r.contaminated))
-        ()
-      }.start()
-    try {
-      val rows = corpus.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      // stream in two uneven batches
-      source.addData(rows.take(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size, s"stream ${got.size} vs batch ${batch.size}")
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    // and some contamination actually occurred, so the parity is non-vacuous
-    assert(got.values.exists(_._3 == 1L))
-  }
-
-  test("s25 streaming perplexity is row-exact vs batch q61 on the training corpus") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val batch = graft.operators.TextOps.perplexity(docs)
-      .collect()
-      .map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      .toMap
-
-    val index = StreamOps.bigramLmIndex(docs)
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, Option[Long])]()
-    val q = StreamOps.streamPerplexity(source.toDS(), index)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PplReport], _: Long) =>
-        b.collect().foreach(r => got(r.doc_id) = (r.n_bigrams, r.nll_q16, r.ppl_q16))
-        ()
-      }.start()
-    try {
-      val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-      source.addData(rows.take(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size, s"stream ${got.size} vs batch ${batch.size}")
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    assert(got.values.exists(_._1 > 0))
-  }
-
-  test("s27 streaming bm25: final per-term generation converges to batch q62 under any batching") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val batch = graft.operators.TextOps.bm25Search(docs).collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val index = StreamOps.bm25Index(docs)
-
-    def run(order: Array[(Long, String)], cuts: Seq[Int]): Map[(String, Long), (Long, Long)] = {
-      val source = MemoryStream[(Long, String)]
-      // latest generation per term: overwrite the term's whole block
-      val got = collection.mutable.Map[(String, Long), (Long, Long)]()
-      val q = StreamOps.streamBm25(source.toDS(), index)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Bm25Hit], _: Long) =>
-          val rows = b.collect()
-          rows.map(_.token).distinct.foreach(t =>
-            got.keys.filter(_._1 == t).toSeq.foreach(got.remove))
-          rows.foreach(r => got((r.token, r.rank)) = (r.doc_id, r.score_q16))
-          ()
-        }.start()
-      try {
-        var prev = 0
-        (cuts :+ order.length).foreach { c =>
-          source.addData(order.slice(prev, c).toSeq: _*)
-          q.processAllAvailable()
-          prev = c
-        }
-      } finally q.stop()
-      got.toMap
-    }
-
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val forward = run(rows, Seq(rows.length / 3, 2 * rows.length / 3))
-    assert(forward == batch,
-      s"forward-run mismatch: ${(forward.toSet diff batch.toSet).take(3)} / ${(batch.toSet diff forward.toSet).take(3)}")
-    // arrival order must not matter: reversed corpus, different cuts
-    val backward = run(rows.reverse, Seq(rows.length / 5))
-    assert(backward == batch, "reversed-arrival run diverged from batch q62")
-  }
-
-  test("s26 streaming k-means assignment is row-exact vs batch q60 under the frozen codebook") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val embs = Tables.embeddings(spark, sfDir)
-    val batch = graft.operators.Similarity.kmeansAssign(embs, k = 8, iters = 3)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val cents = graft.operators.Similarity.kmeansCentroids(embs, k = 8, iters = 3)
-    assert(cents.size == 8)
-
-    val source = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map[Long, (Long, Long)]()
-    val q = StreamOps.streamKmeansAssign(source.toDS(), cents)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KmAssign], _: Long) =>
-        b.collect().foreach(r => got(r.vec_id) = (r.cluster, r.d2)); ()
-      }.start()
-    try {
-      val rows = embs.select(col("vec_id"), col("embedding"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size)
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    // non-vacuous: more than one cluster is actually used
-    assert(got.values.map(_._1).toSet.size > 1)
-  }
-
-  test("s28 streaming PQ encoding is row-exact vs batch q65 under the frozen codebook") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val embs = Tables.embeddings(spark, sfDir)
-    val batch = graft.operators.Similarity.pqCodes(embs, kcode = 16, iters = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val book = graft.operators.Similarity.pqCodebook(embs, kcode = 16, iters = 3)
-    assert(book.size == 8 * 16)
-
-    val source = MemoryStream[(Long, Seq[Float])]
-    val got = collection.mutable.Map[(Long, Long), (Long, Long)]()
-    val q = StreamOps.streamPqEncode(source.toDS(), book)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PqCode], _: Long) =>
-        b.collect().foreach(r => got((r.vec_id, r.sub)) = (r.code, r.d2)); ()
-      }.start()
-    try {
-      val rows = embs.select(col("vec_id"), col("embedding"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size)
-    val mismatches = batch.collect {
-      case (k, b) if got(k) != b => s"$k: stream ${got(k)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    assert(got.values.map(_._1).toSet.size > 1, "more than one code in use")
-  }
-
-  test("s43 streaming memorization risk is row-exact vs batch q84 under the frozen dup table") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir)
-    val batch = graft.operators.TextOps.memorizationRisk(docs)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap
-    val dup = StreamOps.dupShingleTable(docs).localCheckpoint(true)
-
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, Option[Double])]()
-    val q = StreamOps.streamMemorizationRisk(source.toDS(), dup)
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r => got(r.getLong(0)) = (r.getLong(1), r.getLong(2),
-          if (r.isNullAt(3)) None else Some(r.getDouble(3)))); ()
-      }.start()
-    try {
-      val rows = docs.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size)
-    val mism = batch.collect { case (k, b) if got(k) != b => s"$k: stream ${got(k)} batch $b" }
-    assert(mism.isEmpty, mism.take(5).mkString("; "))
-    assert(got.values.exists(_._2 > 0), "some repeated content scored")
-  }
-
-  test("s46 streaming source mix converges row-exact to batch q88 cells") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir)
-    val batch = graft.operators.TextOps.sourceMix(docs)
-      .filter(col("source") =!= "__total__" && col("lang") =!= "__total__")
-      .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-
-    val source = MemoryStream[(Long, String, String, String)]
-    val got = collection.mutable.Map[(String, String), (Long, Long)]()
-    val q = StreamOps.streamSourceMix(source.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.MixCell], _: Long) =>
-        b.collect().foreach(r => got((r.source, r.lang)) = (r.n_docs, r.n_tokens)); ()
-      }.start()
-    try {
-      val rows = docs.select(col("doc_id"), col("source"), col("lang"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size)
-    val mism = batch.collect { case (kk, b) if got(kk) != b => s"$kk: stream ${got(kk)} batch $b" }
-    assert(mism.isEmpty, mism.take(5).mkString("; "))
-    // close-of-stream reconciliation reproduces q88's total share
-    val totTokens = got.values.map(_._2).sum
-    val batchTot = graft.operators.TextOps.sourceMix(docs)
-      .filter(col("source") === "__total__" && col("lang") === "__total__").head()
-    assert(totTokens == batchTot.getLong(3))
-  }
-
-  test("s47 streaming source-quota admission: admitted set row-exact vs q90, totals batching-invariant") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir)
-    val targets = Map("src0" -> 3000, "src1" -> 2500, "src2" -> 1500, "src3" -> 500)
-    val vocab = graft.operators.TextOps.tokenizerVocabSeq(docs, m = 64, maxN = 4)
-    // frozen config: rates solved offline from the snapshot (the s21
-    // protocol) — the SAME rates batch q90 solves internally
-    val rates = graft.operators.TextOps.sourceQuotaRates(docs, targets, vocab)
-    val batch = graft.operators.TextOps.sourceQuota(docs, targets, vocab)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-
-    def run(rows: Seq[(Long, String, String)], cut: Int)
-        : (Map[Long, (String, Long)], Map[String, (Long, Long)]) = {
-      val source = MemoryStream[(Long, String, String)]
-      val admitted = collection.mutable.Map[Long, (String, Long)]()
-      val totals = collection.mutable.Map[String, (Long, Long)]()
-      val q = StreamOps.streamSourceQuota(source.toDS(), rates, vocab)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.QuotaAdmit], _: Long) =>
-          b.collect().foreach { r =>
-            admitted(r.doc_id) = (r.source, r.n_tokens)
-            val (d0, t0) = totals.getOrElse(r.source, (0L, 0L))
-            totals(r.source) = (math.max(d0, r.adm_docs), math.max(t0, r.adm_tokens))
-          }; ()
-        }.start()
-      try {
-        source.addData(rows.take(cut): _*)
-        q.processAllAvailable()
-        source.addData(rows.drop(cut): _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      (admitted.toMap, totals.toMap)
-    }
-
-    val rows = docs.select(col("doc_id"), col("source"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-    val (adm, tot) = run(rows, rows.length / 2)
-    // admitted set row-exact vs batch q90 (same frozen rates)
-    assert(adm == batch, s"stream ${adm.size} rows vs batch ${batch.size}")
-    // final totals equal the batch per-source aggregate
-    val batchTot = batch.toSeq.groupBy(_._2._1)
-      .map { case (s, rs) => s -> ((rs.size.toLong, rs.map(_._2._2).sum)) }
-    assert(tot == batchTot)
-    // batching/order invariance of the admitted set and final totals
-    val (admR, totR) = run(rows.reverse, rows.length / 3)
-    assert(admR == adm && totR == tot)
-    // unlisted sources never admit
-    assert(adm.values.forall { case (s, _) => targets.contains(s) })
-  }
-
-  test("s45 maintained co-purchase top-k converges row-exact to batch q89 under any batching") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val li = Tables.lineitem(spark, sfDir)
-    val batch = graft.operators.Analytics.copurchaseTopK(li, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val baskets = li.select(col("l_orderkey"), col("l_partkey")).distinct()
-      .groupBy(col("l_orderkey")).agg(collect_list(col("l_partkey")).as("items"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
-
-    def run(rows: Seq[(Long, Seq[Long])], cut: Int): Map[(Long, Long), (Long, Long, Long)] = {
-      val source = MemoryStream[(Long, Seq[Long])]
-      val got = collection.mutable.Map[Long, List[(Long, Long, Long, Long)]]()
-      val q = StreamOps.streamCopurchaseTopK(source.toDS(), k = 5)
-        .writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.CoRec], _: Long) =>
-          b.collect().groupBy(_.part).foreach { case (p, rs) =>
-            got(p) = rs.sortBy(_.rank).map(r => (r.rank, r.other, r.n_co, r.conf_myriad)).toList
-          }; ()
-        }.start()
-      try {
-        source.addData(rows.take(cut): _*)
-        q.processAllAvailable()
-        source.addData(rows.drop(cut): _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      got.toMap.flatMap { case (p, rs) =>
-        rs.map { case (rank, o, n, c) => (p, rank) -> ((o, n, c)) }
-      }
-    }
-
-    val got = run(baskets, baskets.length / 2)
-    assert(got.size == batch.size)
-    val mism = batch.collect { case (kk, b) if got.get(kk) != Some(b) =>
-      s"$kk: stream ${got.get(kk)} batch $b" }
-    assert(mism.isEmpty, mism.take(5).mkString("; "))
-    // order independence: the reversed stream converges to the same table
-    assert(run(baskets.reverse, baskets.length / 3) == got)
-  }
-
-  test("s42 streaming corpus card converges row-exact to batch q76 per language") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir)
-    val batch = graft.operators.TextOps.corpusCard(docs)
-      .filter(col("lang") =!= "__total__")
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4),
-        if (r.isNullAt(5)) None else Some(r.getLong(5)),
-        if (r.isNullAt(6)) None else Some(r.getLong(6)),
-        if (r.isNullAt(7)) None else Some(r.getLong(7)))).toMap
-
-    def run(cut: Int): Map[String, (Long, Long, Long, Long, Option[Long], Option[Long], Option[Long])] = {
-      val source = MemoryStream[(Long, String, String)]
-      val got = collection.mutable.Map[String, (Long, Long, Long, Long, Option[Long], Option[Long], Option[Long])]()
-      val q = StreamOps.streamCorpusCard(source.toDS())
-        .writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.CardRow], _: Long) =>
-          b.collect().foreach(r => got(r.lang) =
-            (r.n_docs, r.n_text, r.n_tokens, r.n_chars,
-             r.avg_tokens, r.p50_chars, r.p90_chars)); ()
-        }.start()
-      try {
-        val rows = docs.select(col("doc_id"), col("lang"), col("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-        source.addData(rows.take(cut).toSeq: _*)
-        q.processAllAvailable()
-        source.addData(rows.drop(cut).toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      got.toMap
-    }
-
-    val n = docs.count().toInt
-    val got = run(n / 2)
-    assert(got.keySet == batch.keySet)
-    val mism = batch.collect { case (l, b) if got(l) != b => s"$l: stream ${got(l)} batch $b" }
-    assert(mism.isEmpty, mism.take(3).mkString("; "))
-    // batching-invariance: a different cut converges to the same card
-    assert(run(n / 3) == got)
-  }
-
-  test("s41 streaming snapshot diff is row-exact vs batch q83 on decidable statuses") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir)
-    // the registered q83 v2 derivation, streamed
-    val base = docs.filter(col("doc_id") % 17 =!= 0)
-      .select(col("doc_id"),
-        when(col("doc_id") % 13 === 0, concat(col("text"), lit(" v2")))
-          .otherwise(col("text")).as("text"))
-    val added = docs.filter(col("doc_id") % 19 === 0)
-      .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-    val v2rows = base.unionByName(added)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val batch = graft.SparkEntry.queries("q83_dataset_diff")(spark, sfDir)
-      .filter(col("status") =!= "removed")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, String]()
-    val q = StreamOps.streamDatasetDiff(source.toDS(), docs)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.collect().foreach(r => got(r.getLong(0)) = r.getString(1)); ()
-      }.start()
-    try {
-      source.addData(v2rows.take(v2rows.length / 2): _*)
-      q.processAllAvailable()
-      source.addData(v2rows.drop(v2rows.length / 2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    // every streamed doc classified, row-exact vs batch; no 'removed'
-    // can exist online (the declared contract difference)
-    assert(got.size == batch.size)
-    val mism = batch.collect { case (k, s) if got(k) != s => s"$k: stream ${got(k)} batch $s" }
-    assert(mism.isEmpty, mism.take(5).mkString("; "))
-    assert(!got.values.exists(_ == "removed"))
-    assert(Set("added", "changed", "unchanged").subsetOf(got.values.toSet),
-      s"all three decidable statuses exercised: ${got.values.toSet}")
-  }
-
-  test("s40 streaming SQ8 encoding is row-exact vs batch q82 under the frozen grid; novel inputs clamp") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val embs = Tables.embeddings(spark, sfDir)
-    val batch = graft.operators.Similarity.sq8Codes(embs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val grid = graft.operators.Similarity.sq8Grid(embs)
-    assert(grid.size == 64)
-
-    def run(rows: Seq[(Long, Seq[Float])], cut: Int): Map[(Long, Long), (Long, Long)] = {
-      val source = MemoryStream[(Long, Seq[Float])]
-      val got = collection.mutable.Map[(Long, Long), (Long, Long)]()
-      val q = StreamOps.streamSq8Encode(source.toDS(), grid)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Sq8Code], _: Long) =>
-          b.collect().foreach(r => got((r.vec_id, r.pos)) = (r.code, r.err)); ()
-        }.start()
-      try {
-        source.addData(rows.take(cut): _*)
-        q.processAllAvailable()
-        source.addData(rows.drop(cut): _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      got.toMap
-    }
-
-    val rows = embs.select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val got = run(rows, rows.length / 2)
-    assert(got.size == batch.size)
-    val mism = batch.collect { case (k, b) if got(k) != b => s"$k: stream ${got(k)} batch $b" }
-    assert(mism.isEmpty, mism.take(5).mkString("; "))
-
-    // novel out-of-grid vectors clamp to the byte ends, never throw:
-    // far below every dim -> code 0 (negative residual), far above ->
-    // code 255 (positive residual)
-    val novel = run(Seq((-1L, Seq.fill(64)(-100.0f)), (-2L, Seq.fill(64)(100.0f))), 1)
-    assert(novel.size == 128)
-    assert(novel.collect { case ((-1L, _), (c, e)) => c == 0L && e < 0L }.forall(identity))
-    assert(novel.collect { case ((-2L, _), (c, e)) => c == 255L && e > 0L }.forall(identity))
-  }
-
-  test("s29 online semdedup: keep-first greedy, batching-invariant on an id-ordered stream") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val embs = Tables.embeddings(spark, sfDir)
-    val cents = graft.operators.Similarity.kmeansCentroids(embs, k = 8, iters = 3)
-    val tau2 = 1500000000000L
-    val rows = embs.select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
-
-    def run(cuts: Seq[Int]): Map[Long, (Long, Long, Long)] = {
-      val source = MemoryStream[(Long, Seq[Float])]
-      val got = collection.mutable.Map[Long, (Long, Long, Long)]()
-      val q = StreamOps.streamSemDedup(source.toDS(), cents, tau2)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.SemKeep], _: Long) =>
-          b.collect().foreach(r => got(r.vec_id) = (r.cluster, r.rep, r.keep)); ()
-        }.start()
-      try {
-        (cuts :+ rows.length).foldLeft(0) { (from, to) =>
-          source.addData(rows.slice(from, to).toSeq: _*)
-          q.processAllAvailable()
-          to
-        }
-      } finally q.stop()
-      got.toMap
-    }
-
-    val a = run(Seq(rows.length / 3, 2 * rows.length / 3))
-    val b = run(Seq(rows.length / 5))
-    assert(a == b, "id-ordered stream must be batching-invariant")
-    assert(a.size == rows.length)
-
-    // routing agrees with the frozen codebook = batch q60 clusters
-    val clusters = graft.operators.Similarity.kmeansAssign(embs, k = 8, iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a.forall { case (id, (c, _, _)) => clusters(id) == c })
-
-    // keep-first invariants, checked against true integer distances
-    val qv = rows.map { case (id, e) =>
-      id -> e.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
-    }.toMap
-    def d2(x: Array[Long], y: Array[Long]): Long =
-      x.zip(y).map { case (p, r) => val d = p - r; d * d }.sum
-    val keptByCluster = a.collect { case (id, (c, _, 1L)) => (c, id) }
-      .groupBy(_._1).map { case (c, s) => c -> s.map(_._2).toSeq.sorted }
-    // retained reps are mutually > tau2 within every cluster
-    keptByCluster.foreach { case (_, ks) =>
-      for (i <- ks.indices; j <- i + 1 until ks.length)
-        assert(d2(qv(ks(i)), qv(ks(j))) > tau2, s"kept pair ${ks(i)},${ks(j)} within tau2")
-    }
-    // every dropped vector: within tau2 of its keeper, keeper kept,
-    // keeper id smaller (keep-first in id order), same cluster
-    a.foreach { case (id, (c, rep, keep)) =>
-      if (keep == 0L) {
-        assert(rep < id && a(rep) == ((c, rep, 1L)))
-        assert(d2(qv(id), qv(rep)) <= tau2)
-      } else assert(rep == id)
-    }
-    // non-vacuous both ways
-    assert(a.values.exists(_._3 == 0L), "corpus must exercise a drop")
-    assert(a.values.count(_._3 == 1L) > 1)
-  }
-
-  test("s39 online cluster-quota admission: selection-ordered stream is row-exact vs batch q79; any order fills quotas exactly") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val embs = Tables.embeddings(spark, sfDir)
-    val cents = graft.operators.Similarity.kmeansCentroids(embs, k = 8, iters = 3)
-    val batch = graft.operators.Similarity.clusterSample(embs, k = 8, iters = 3, quota = 40)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val P = graft.functions.ReplayableHash.P
-    val ha = graft.functions.ReplayableHash.a(232)
-    val hb = graft.functions.ReplayableHash.b(232)
-    def hOf(id: Long): Long =
-      (ha * graft.functions.PolyHashExpr.hash("cbal:" + id) + hb) % P
-    val rows = embs.select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val ordered = rows.sortBy(t => (hOf(t._1), t._1)).toSeq
-
-    def run(data: Seq[(Long, Seq[Float])], cuts: Seq[Int]): Seq[StreamOps.QuotaKeep] = {
-      val source = MemoryStream[(Long, Seq[Float])]
-      val got = collection.mutable.ArrayBuffer[StreamOps.QuotaKeep]()
-      val q = StreamOps.streamClusterSample(source.toDS(), cents, quota = 40)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.QuotaKeep], _: Long) =>
-          got ++= b.collect(); ()
-        }.start()
-      try {
-        (cuts :+ data.length).foldLeft(0) { (from, to) =>
-          source.addData(data.slice(from, to): _*)
-          q.processAllAvailable()
-          to
-        }
-      } finally q.stop()
-      got.toSeq
-    }
-
-    // a stream in the batch operator's selection order — any prefix
-    // batching of it — reproduces q79 row-exactly, ranks included
-    val a = run(ordered, Seq(ordered.length / 3, 2 * ordered.length / 3))
-    assert(a.size == rows.length, "every vector gets a decision")
-    assert(a.filter(_.keep == 1L).map(k => (k.vec_id, k.cluster, k.r)).toSet == batch)
-    a.filter(_.keep == 0L).foreach(k => assert(k.r == 0L))
-
-    // ANY arrival order still admits exactly min(quota, |cluster|):
-    // the reversed stream fills every quota, on a different member set
-    val sizes = graft.operators.Similarity.kmeansAssign(embs, k = 8, iters = 3)
-      .groupBy("cluster").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = run(ordered.reverse, Seq(ordered.length / 2))
-    val keptBy = b.filter(_.keep == 1L).groupBy(_.cluster)
-    assert(keptBy.keySet == sizes.keySet)
-    keptBy.foreach { case (c, ks) =>
-      assert(ks.size.toLong == math.min(40L, sizes(c)), s"cluster $c quota not filled")
-      assert(ks.map(_.r).sorted == (1L to ks.size.toLong), s"cluster $c ranks not dense")
-    }
-    // the contract DIFFERENCE is real: arrival order changes the set
-    assert(b.filter(_.keep == 1L).map(k => (k.vec_id, k.cluster, k.r)).toSet != batch,
-      "reversed stream should admit a different set when the cap bites")
-  }
-
-  test("s30 streaming ivfadc converges to batch q66 under any batching") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val embs = Tables.embeddings(spark, sfDir)
-    val batch = graft.operators.Similarity.ivfadcSearch(embs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .groupBy(_._1).map { case (q, rows) => q -> rows.sortBy(_._2).map(t => (t._3, t._4)).toSeq }
-    assert(batch.nonEmpty)
-    val index = StreamOps.ivfadcIndex(embs)
-    val rows = embs.select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-
-    def run(data: Array[(Long, Seq[Float])], cuts: Seq[Int]): Map[Long, Seq[(Long, Long)]] = {
-      val source = MemoryStream[(Long, Seq[Float])]
-      // generational Append: keep only the LATEST generation per query
-      val got = collection.mutable.Map[Long, Seq[(Long, Long)]]()
-      val q = StreamOps.streamIvfadc(source.toDS(), index)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.AdcHit], _: Long) =>
-          b.collect().groupBy(_.query_id).foreach { case (qid, hs) =>
-            got(qid) = hs.sortBy(_.rank).map(h => (h.neighbor_id, h.adist)).toSeq
-          }; ()
-        }.start()
-      try {
-        (cuts :+ data.length).foldLeft(0) { (from, to) =>
-          source.addData(data.slice(from, to).toSeq: _*)
-          q.processAllAvailable()
-          to
-        }
-      } finally q.stop()
-      got.toMap
-    }
-
-    val forward = run(rows, Seq(rows.length / 3, 2 * rows.length / 3))
-    assert(forward == batch,
-      s"forward mismatch: ${(forward.toSet diff batch.toSet).take(2)} / ${(batch.toSet diff forward.toSet).take(2)}")
-    val backward = run(rows.reverse, Seq(rows.length / 5))
-    assert(backward == batch, "reversed-arrival run diverged from batch q66")
-  }
-
-  test("s31 streaming BPE encoding is row-exact vs batch q68 under the frozen rules") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val d = Tables.documents(spark, sfDir)
-    val batch = graft.operators.Bpe.bpeEncode(d)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val rules = graft.operators.Bpe.bpeTrain(d)
-      .collect().sortBy(_.getLong(0)).map(r => (r.getString(1), r.getString(2))).toSeq
-    assert(rules.size == 24)
-
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, String)]()
-    val q = StreamOps.streamBpeEncode(source.toDS(), rules)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.BpeDoc], _: Long) =>
-        b.collect().foreach(r => got(r.doc_id) = (r.n_subwords, r.subtext)); ()
-      }.start()
-    try {
-      val rows = d.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size)
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)._1} batch ${b._1}"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    assert(got.values.exists(_._1 > 0L))
-  }
-
-  test("s32 streaming DSIR selection converges to batch q69 under any batching") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val d = Tables.documents(spark, sfDir)
-    val batchKeep = graft.operators.Dsir.dsirSelect(d)
-      .filter(col("keep") === 1L)
-      .collect().map(r => (r.getLong(0), r.getLong(2)))
-      .sortBy { case (id, imp) => (-imp, id) }
-      .zipWithIndex.map { case ((id, imp), i) => (i + 1L, id, imp) }.toSeq
-    assert(batchKeep.nonEmpty)
-    val index = StreamOps.dsirIndex(d)
-    val rows = d.select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-
-    def run(data: Array[(Long, String)], cuts: Seq[Int]): Seq[(Long, Long, Long)] = {
-      val source = MemoryStream[(Long, String)]
-      var gen = Seq.empty[(Long, Long, Long)]
-      val q = StreamOps.streamDsir(source.toDS(), index)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.DsirPick], _: Long) =>
-          val g = b.collect()
-          if (g.nonEmpty) gen = g.sortBy(_.rank).map(p => (p.rank, p.doc_id, p.imp_q16)).toSeq
-          ()
-        }.start()
-      try {
-        (cuts :+ data.length).foldLeft(0) { (from, to) =>
-          source.addData(data.slice(from, to).toSeq: _*)
-          q.processAllAvailable()
-          to
-        }
-      } finally q.stop()
-      gen
-    }
-
-    val forward = run(rows, Seq(rows.length / 3, 2 * rows.length / 3))
-    assert(forward == batchKeep,
-      s"forward mismatch: ${forward.take(3)} vs ${batchKeep.take(3)}")
-    val backward = run(rows.reverse, Seq(rows.length / 5))
-    assert(backward == batchKeep, "reversed-arrival run diverged from batch q69")
-  }
-
-  test("s25 smoothing ladder: unseen bigram -> L(c1+V), unseen prefix -> L(V)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val L = graft.functions.Log2Q16Expr.compute _
-    // train on "a b a b" + "a c": V = 3 {a,b,c}; prefixes a×3, b×1
-    val corpus = Seq((1L, "a b a b"), (2L, "a c")).toDF("doc_id", "text")
-    val index = StreamOps.bigramLmIndex(corpus)
-    assert(index.oovNll == L(3L))
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, StreamOps.PplReport]()
-    val q = StreamOps.streamPerplexity(source.toDS(), index)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PplReport], _: Long) =>
-        b.collect().foreach(r => got(r.doc_id) = r); ()
-      }.start()
-    try {
-      source.addData((10L, "a z"), (11L, "z a"), (12L, "a b"), (13L, ""), (14L, null))
-      q.processAllAvailable()
-    } finally q.stop()
-    // seen prefix 'a' (c1=3), unseen bigram (a,z): nll = L(3+3)
-    assert(got(10L).nll_q16 == L(6L) && got(10L).n_bigrams == 1)
-    // unseen prefix 'z': nll = L(V) = L(3)
-    assert(got(11L).nll_q16 == L(3L))
-    // seen bigram (a,b) c12=2, c1=3: nll = L(6) - L(3)
-    assert(got(12L).nll_q16 == L(6L) - L(3L))
-    // degenerate docs: no bigrams, null ppl
-    assert(got(13L) == StreamOps.PplReport(13L, 0L, 0L, None))
-    assert(got(14L) == StreamOps.PplReport(14L, 0L, 0L, None))
-  }
-
-  test("s19 streaming fuzzy decontamination is row-exact vs batch q49") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docsAll = Tables.documents(spark, sfDir)
-    // the q49 driver split: %7 puts real crossing near-dups in play
-    val bench = docsAll.filter(col("doc_id") % 7 === 0)
-    val corpus = docsAll.filter(col("doc_id") % 7 =!= 0)
-
-    def key(nc: Long, nk: Long, wb: Option[Long], wj: Option[Double]) = (nc, nk, wb, wj)
-    val batch = graft.operators.Dedup.decontaminateFuzzy(corpus, bench)
-      .collect().map(r => r.getLong(0) -> key(r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toMap
-
-    val idx = StreamOps.benchmarkFuzzyIndex(bench)
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, Option[Long], Option[Double])]()
-    val q = StreamOps.streamDecontaminateFuzzy(source.toDS(), idx)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.FuzzyContamReport], _: Long) =>
-        b.collect().foreach(r =>
-          got(r.doc_id) = key(r.n_candidates, r.n_contaminated, r.worst_bench, r.worst_jaccard))
-        ()
-      }.start()
-    try {
-      val rows = corpus.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      source.addData(rows.take(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size, s"stream ${got.size} vs batch ${batch.size}")
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    // non-vacuous: real candidates AND real contamination crossed the split
-    assert(got.values.exists(_._1 > 0), "no candidates — vacuous parity")
-    assert(got.values.exists(_._2 > 0), "no contamination — vacuous parity")
-
-    // planted exact copy of a benchmark doc: every band collides, so
-    // it is caught with probability 1, attributed at jaccard 1.0
-    val benchRow = bench.select(col("doc_id"), col("text")).head()
-    val source2 = MemoryStream[(Long, String)]
-    val got2 = collection.mutable.Map[Long, (Long, Long, Option[Long], Option[Double])]()
-    val q2 = StreamOps.streamDecontaminateFuzzy(source2.toDS(), idx)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.FuzzyContamReport], _: Long) =>
-        b.collect().foreach(r =>
-          got2(r.doc_id) = key(r.n_candidates, r.n_contaminated, r.worst_bench, r.worst_jaccard))
-        ()
-      }.start()
-    try {
-      source2.addData((900001L, benchRow.getString(1)), (900002L, null.asInstanceOf[String]))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val planted = got2(900001L)
-    assert(planted._2 >= 1 && planted._4.contains(1.0),
-      s"planted copy not caught: $planted")
-    assert(got2(900002L) == ((0L, 0L, None, None))) // null text degrades, not NPEs
-
-    // duplicate bench doc_id rows (eval set assembled from several
-    // files): shingles UNION per id — batch postings() semantics, not
-    // last-row-wins (review catch)
-    val dup = Seq((5L, "alpha beta gamma delta"), (5L, "epsilon zeta eta theta"))
-      .toDF("doc_id", "text")
-    val di = StreamOps.benchmarkFuzzyIndex(dup)
-    assert(di.shingles(5L).toSet ==
-      StreamOps.wordShingleHashes("alpha beta gamma delta", 3) ++
-      StreamOps.wordShingleHashes("epsilon zeta eta theta", 3))
-  }
-
   test("s09+s04 source re-delivery lands exactly-once through the keyed sink") {
     import spark.implicits._
     import graft.streaming.{ExactlyOnceSink, KafkaIO}
@@ -1552,321 +670,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(snap.count() == 3)
     assert(snap.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
       Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0))
-  }
-
-  test("s14 streaming repetition stats are row-exact vs batch q39") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val docs = Tables.documents(spark, sfDir)
-    val batch = graft.operators.TextOps.repetitionStats(docs)
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
-
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, Double, Double, Double)]()
-    val q = StreamOps.streamRepetitionStats(source.toDS())
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.RepetitionReport], _: Long) =>
-        b.collect().foreach(r => got(r.doc_id) =
-          (r.n_tokens, r.n_distinct, r.distinct_ratio, r.top2gram_frac, r.dup3gram_frac))
-        ()
-      }.start()
-    try {
-      val rows = docs.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      source.addData(rows.take(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 3).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size, s"stream ${got.size} vs batch ${batch.size}")
-    // row-exact INCLUDING the double ratios: both sides divide the same
-    // integer counts in IEEE double, so == is the right comparison
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    // non-vacuous: repetitious docs exist
-    assert(batch.values.exists(_._5 > 0.0))
-  }
-
-  test("s15 streaming CMS shards merge to the exact batch q45 sketch") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.functions.{Cms, CmsFunctions, VectorFunctions}
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val docs = Tables.documents(spark, sfDir)
-      // batch ground truth: the q45 sketch over the same token stream
-      val batchBytes = docs
-        .select(explode(split(lower(graft.operators.TextOps.wsTrim(col("text"))), "\\s+")).as("token"))
-        .filter(length(col("token")) > 0)
-        .select(VectorFunctions.poly_hash(col("token")).as("s"))
-        .agg(CmsFunctions.cms_sketch(col("s"), 1024, 4).as("sk"))
-        .head().getAs[Array[Byte]](0)
-
-      val source = MemoryStream[(Long, String)]
-      val latest = collection.mutable.Map[Int, Array[Byte]]()
-      val q = StreamOps.streamHeavyHittersCms(source.toDS())
-        .writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.ShardSketch], _: Long) =>
-          b.collect().foreach(r => latest(r.shard) = r.sketch)
-          ()
-        }.start()
-      try {
-        val rows = docs.select(col("doc_id"), col("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        source.addData(rows.take(rows.length / 2).toSeq: _*)
-        q.processAllAvailable()
-        source.addData(rows.drop(rows.length / 2).toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-
-      // shards partition the token stream and CMS partials add
-      // counter-wise, so the shard-sum must equal the batch sketch
-      // EXACTLY, byte for byte
-      val merged = Cms.empty(1024, 4)
-      latest.values.foreach(b => Cms.merge(merged, Cms.deserialize(b)))
-      assert(latest.nonEmpty)
-      assert(java.util.Arrays.equals(Cms.serialize(merged), batchBytes),
-        "merged shard sketches != batch sketch")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("s18 streaming quantile shards merge to the exact batch q46 sample") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.functions.{BottomKByHash, BottomKByHashBuffer, QuantileFunctions}
-    import graft.operators.Dedup.ReplayableHash.{a, b, P}
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // corpus plus one supplementary-plane doc: Spark length() counts
-      // CODE POINTS — the streaming metric must agree (an emoji is 2
-      // UTF-16 units, 1 code point; String.length would break parity).
-      // Plus one EMPTY doc: batch alpha_ratio is 0/0 = NULL (skipped by
-      // the sketch), so streaming must skip its alpha insert too while
-      // still inserting n_chars = 0 (r6 advisor finding).
-      val extra = Seq((999999L, "hello 😀 world 😀"), (999998L, ""))
-      val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-        .unionAll(extra.toDF("doc_id", "text"))
-      val k = 64 // < corpus size so the bottom-k SELECTION is exercised
-      // batch ground truth: the q46 sample over the same rows (same
-      // 62-bit row hash, same metric columns)
-      val s = graft.functions.VectorFunctions.poly_hash(
-        concat(lit("q46:"), col("doc_id").cast("string")))
-      val h = ((lit(a(210)) * s + lit(b(210))) % lit(P)) * lit(P) +
-        ((lit(a(211)) * s + lit(b(211))) % lit(P))
-      val scored = graft.operators.TextOps.qualityScore(docs)
-      val batch = docs.select(col("doc_id"), h.as("h"))
-        .join(scored.select(col("doc_id"), col("n_chars"), col("alpha_ratio")), "doc_id")
-        .agg(
-          QuantileFunctions.quantile_sketch(col("h"), col("n_chars").cast("double"), k).as("len_s"),
-          QuantileFunctions.quantile_sketch(col("h"), col("alpha_ratio"), k).as("alpha_s"))
-        .head()
-      val batchLen = batch.getSeq[Double](0)
-      val batchAlpha = batch.getSeq[Double](1)
-
-      val source = MemoryStream[(Long, String)]
-      val latest = collection.mutable.Map[(Int, String), Array[Byte]]()
-      val q = StreamOps.streamQuantileGate(source.toDS(), k = k)
-        .writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (bt: org.apache.spark.sql.Dataset[StreamOps.ShardQuantiles], _: Long) =>
-          bt.collect().foreach(r => latest((r.shard, r.metric)) = r.sample)
-          ()
-        }.start()
-      try {
-        val rows = docs.select(col("doc_id"), col("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        source.addData(rows.take(rows.length / 2).toSeq: _*)
-        q.processAllAvailable()
-        source.addData(rows.drop(rows.length / 2).toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-
-      // shards partition the row stream and bottom-k merges to the
-      // bottom-k of the union, so shard-merge == batch sample EXACTLY
-      def mergedFor(metric: String): Seq[Double] = {
-        val buf = new BottomKByHashBuffer(k)
-        latest.collect { case ((_, m), bytes) if m == metric =>
-          buf.mergeFrom(BottomKByHash.deserialize(bytes))
-        }
-        buf.sortedValues.toSeq
-      }
-      assert(latest.nonEmpty)
-      assert(mergedFor("n_chars") == batchLen, "n_chars sample mismatch")
-      assert(mergedFor("alpha_ratio") == batchAlpha, "alpha_ratio sample mismatch")
-      assert(batchLen.size == k) // selection exercised, not keep-everything
-
-      // keep-everything pass over a tiny corpus INCLUDING the emoji
-      // doc and the empty doc: sample == all rows, so the parity is
-      // sensitive to every document's metrics — the code-point
-      // counting and the empty-text null-skip in particular
-      val tiny = docs.filter(col("doc_id") < 8 || col("doc_id") >= 999998L)
-      val tinyBatch = tiny.select(col("doc_id"), h.as("h"))
-        .join(graft.operators.TextOps.qualityScore(tiny)
-          .select(col("doc_id"), col("n_chars"), col("alpha_ratio")), "doc_id")
-        .agg(
-          QuantileFunctions.quantile_sketch(col("h"), col("n_chars").cast("double"), 2048).as("ls"),
-          QuantileFunctions.quantile_sketch(col("h"), col("alpha_ratio"), 2048).as("as2"))
-        .head()
-      val latest2 = collection.mutable.Map[(Int, String), Array[Byte]]()
-      val source2 = MemoryStream[(Long, String)]
-      val q2 = StreamOps.streamQuantileGate(source2.toDS(), k = 2048, nShards = 2)
-        .writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (bt: org.apache.spark.sql.Dataset[StreamOps.ShardQuantiles], _: Long) =>
-          bt.collect().foreach(r => latest2((r.shard, r.metric)) = r.sample)
-          ()
-        }.start()
-      try {
-        source2.addData(tiny.select(col("doc_id"), col("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1))).toSeq: _*)
-        q2.processAllAvailable()
-      } finally q2.stop()
-      def merged2(metric: String): Seq[Double] = {
-        val buf = new BottomKByHashBuffer(2048)
-        latest2.collect { case ((_, m), bytes) if m == metric =>
-          buf.mergeFrom(BottomKByHash.deserialize(bytes))
-        }
-        buf.sortedValues.toSeq
-      }
-      assert(merged2("n_chars") == tinyBatch.getSeq[Double](0), "emoji-doc n_chars parity")
-      assert(merged2("alpha_ratio") == tinyBatch.getSeq[Double](1), "emoji-doc alpha parity")
-      assert(merged2("n_chars").size == 10) // all rows kept, incl. emoji + empty docs
-      // the empty doc appears in the length sample but NOT the alpha
-      // sample — the batch null-skip mirrored exactly
-      assert(merged2("alpha_ratio").size == 9, "empty doc must be absent from alpha sample")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("s16 streaming keywords: single batch row-exact vs q40; prefixes exact vs prefix q40") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val all = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-
-    def q40On(rows: Seq[(Long, String)]): Set[(Long, Long, String, Long, Long)] =
-      graft.operators.TextOps.keywords(rows.toDF("doc_id", "text"), k = 3)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3), r.getLong(4)))
-        .toSet
-
-    def drive(batches: Seq[Seq[(Long, String)]]): Seq[Set[(Long, Long, String, Long, Long)]] = {
-      val source = MemoryStream[(Long, String)]
-      val perBatch = collection.mutable.ArrayBuffer.empty[Set[(Long, Long, String, Long, Long)]]
-      val q = StreamOps.streamKeywords(source.toDS(), k = 3)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KeywordRow], _: Long) =>
-          val rows = b.collect().map(r => (r.doc_id, r.rank, r.token, r.tf, r.df)).toSet
-          if (rows.nonEmpty) perBatch.synchronized { perBatch += rows }
-          ()
-        }.start()
-      try batches.foreach { batch =>
-        source.addData(batch: _*); q.processAllAvailable()
-      } finally q.stop()
-      perBatch.toSeq
-    }
-
-    // one batch = the whole corpus: row-exact against batch q40
-    assert(drive(Seq(all.toSeq)) == Seq(q40On(all.toSeq)))
-
-    // three batches: each batch's emissions equal batch q40 run on the
-    // PREFIX corpus, restricted to that batch's documents (the
-    // df-as-of-arrival contract — df counts everything arrived so far)
-    val thirds = Seq(all.take(all.length / 3).toSeq,
-      all.slice(all.length / 3, 2 * all.length / 3).toSeq,
-      all.drop(2 * all.length / 3).toSeq)
-    val got = drive(thirds)
-    assert(got.length == 3)
-    var prefix = Seq.empty[(Long, String)]
-    thirds.zip(got).foreach { case (batch, emitted) =>
-      prefix = prefix ++ batch
-      val ids = batch.map(_._1).toSet
-      val expect = q40On(prefix).filter(t => ids.contains(t._1))
-      assert(emitted == expect,
-        s"batch of ${batch.size}: ${emitted.size} emitted vs ${expect.size} expected")
-    }
-    // non-vacuous: early-batch ranks really differ from full-corpus ranks
-    // (df drift changes the df column at minimum, usually order too)
-    val fullForFirst = q40On(all.toSeq).filter(t => thirds.head.map(_._1).toSet.contains(t._1))
-    assert(got.head != fullForFirst, "prefix semantics untested: first batch matches full corpus")
-  }
-
-  test("s17 streaming packing: single batch row-exact vs q47; chunks stay full across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val cap = 128
-    val sh = 4
-    val all = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-
-    def drive(batches: Seq[Seq[(Long, String)]]): Seq[(Long, Long, Long, Long, Long)] = {
-      val source = MemoryStream[(Long, String)]
-      val rowsOut = collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
-      val q = StreamOps.streamPackSequences(source.toDS(), capacity = cap, shards = sh)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PackedSpan], _: Long) =>
-          rowsOut.synchronized {
-            rowsOut ++= b.collect().map(r => (r.shard, r.chunk, r.doc_id, r.tok_start, r.n_toks))
-          }
-          ()
-        }.start()
-      try batches.foreach { batch =>
-        source.addData(batch: _*); q.processAllAvailable()
-      } finally q.stop()
-      rowsOut.toSeq
-    }
-
-    // single batch: row-exact vs batch q47 (same order within shard)
-    val batch47 = graft.operators.TextOps
-      .packSequences(Tables.documents(spark, sfDir), capacity = cap, shards = sh)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(drive(Seq(all.toSeq)).toSet == batch47.toSet)
-    assert(batch47.nonEmpty)
-
-    // three batches: pack-on-arrival — spans still partition every doc,
-    // and chunk boundaries carry across batch edges (all chunks except
-    // each shard's LAST hold exactly `cap` tokens)
-    val thirds = Seq(all.take(all.length / 3).toSeq,
-      all.slice(all.length / 3, 2 * all.length / 3).toSeq,
-      all.drop(2 * all.length / 3).toSeq)
-    val got = drive(thirds)
-    val nTokByDoc = all.map { case (id, t) =>
-      id -> StreamOps.normTokens(t).length.toLong
-    }.toMap.filter(_._2 > 0)
-    // every non-empty doc fully covered from offset 0
-    val byDoc = got.groupBy(_._3)
-    assert(byDoc.keySet == nTokByDoc.keySet)
-    byDoc.foreach { case (id, spans) =>
-      assert(spans.map(_._5).sum == nTokByDoc(id), s"doc $id")
-      assert(spans.map(_._4).min == 0L, s"doc $id")
-    }
-    // full chunks everywhere but each shard's tail — across batch edges
-    val byChunk = got.groupBy(s => (s._1, s._2)).view.mapValues(_.map(_._5).sum)
-    val lastChunk = got.groupBy(_._1).view.mapValues(_.map(_._2).max)
-    byChunk.foreach { case ((shard, chunk), tot) =>
-      if (chunk != lastChunk(shard)) assert(tot == cap, s"shard $shard chunk $chunk: $tot")
-      else assert(tot <= cap, s"shard $shard tail: $tot")
-    }
   }
 
   test("s09 sink survives a checkpoint reset: new lineage applies, old skips (txnId)") {
@@ -1927,309 +730,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(s2.filter(col("l_orderkey") === 7L).count() == 0,
         "retraction lost: order 7 still shows completed")
     } finally q.stop()
-  }
-
-  test("s16/s17 blank docs and empty batches: no rows, no crash, state intact") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val source = MemoryStream[(Long, String)]
-    val kwRows = collection.mutable.ArrayBuffer.empty[StreamOps.KeywordRow]
-    val q = StreamOps.streamKeywords(source.toDS())
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KeywordRow], _: Long) =>
-        kwRows.synchronized { kwRows ++= b.collect() }; ()
-      }.start()
-    try {
-      source.addData((1L, "alpha beta"), (2L, "   "), (3L, ""))
-      q.processAllAvailable()
-      // an entirely blank batch advances cleanly
-      source.addData((4L, " \t "))
-      q.processAllAvailable()
-      // and a later real doc still ranks against intact df state
-      source.addData((5L, "alpha gamma"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(!kwRows.exists(r => r.doc_id == 2L || r.doc_id == 3L || r.doc_id == 4L))
-    // doc 5's "alpha" sees df = 2 (docs 1 and 5) — blank docs never
-    // touched the token state
-    val a5 = kwRows.filter(r => r.doc_id == 5L && r.token == "alpha")
-    assert(a5.map(_.df) == Seq(2L), kwRows.mkString("; "))
-
-    val source2 = MemoryStream[(Long, String)]
-    val spans = collection.mutable.ArrayBuffer.empty[StreamOps.PackedSpan]
-    val q2 = StreamOps.streamPackSequences(source2.toDS(), capacity = 4, shards = 2)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PackedSpan], _: Long) =>
-        spans.synchronized { spans ++= b.collect() }; ()
-      }.start()
-    try {
-      source2.addData((1L, "a b c"), (2L, "   "))
-      q2.processAllAvailable()
-      source2.addData((3L, "d e f g h"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    // blank doc contributes no spans; offsets stay contiguous per shard
-    assert(!spans.exists(_.doc_id == 2L))
-    assert(spans.filter(_.doc_id == 1L).map(_.n_toks).sum == 3L)
-    assert(spans.filter(_.doc_id == 3L).map(_.n_toks).sum == 5L)
-    spans.groupBy(s => (s.shard, s.chunk)).foreach { case (_, ss) =>
-      assert(ss.map(_.n_toks).sum <= 4L)
-    }
-  }
-
-  test("s20 streaming segment dedup: clean corpus row-exact vs q52; keep-first across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-
-    type Rep = (Long, Option[Long], Option[Long], Option[String])
-    def q52On(rows: Seq[(Long, String)]): Set[Rep] =
-      graft.operators.TextOps.segmentDedup(rows.toDF("doc_id", "text"), segWords = 8)
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)),
-          if (r.isNullAt(3)) None else Some(r.getString(3)))).toSet
-
-    def drive(batches: Seq[Seq[(Long, String)]]): Seq[Set[Rep]] = {
-      val source = MemoryStream[(Long, String)]
-      val perBatch = collection.mutable.ArrayBuffer.empty[Set[Rep]]
-      val q = StreamOps.streamSegmentDedup(source.toDS(), segWords = 8)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.SegDocReport], _: Long) =>
-          val rows = b.collect()
-            .map(r => (r.doc_id, r.n_segments, r.n_dup_segments, r.clean_text)).toSet
-          if (rows.nonEmpty) perBatch.synchronized { perBatch += rows }
-          ()
-        }.start()
-      try batches.foreach { batch =>
-        source.addData(batch: _*); q.processAllAvailable()
-      } finally q.stop()
-      perBatch.toSeq
-    }
-
-    val boiler = "all rights reserved subscribe to our newsletter today" // 8 words
-    // corpus with NO cross-doc duplicate segments (unique word stems),
-    // plus a within-doc repeat, a partial tail, a null, and a blank —
-    // keep-first and drop-all agree here, so stream must equal batch
-    val clean = Seq(
-      (1L, (0 until 20).map(i => s"a${i}x").mkString(" ")),
-      (2L, (0 until 11).map(i => s"b${i}y").mkString(" ")),
-      (3L, Seq.fill(2)((0 until 8).map(i => s"r${i}z").mkString(" ")).mkString(" ")),
-      (4L, "lone tail"),
-      (5L, null.asInstanceOf[String]),
-      (6L, "   "))
-    assert(drive(Seq(clean)) == Seq(q52On(clean)))
-
-    // keep-first across batches: doc 10 presents the boilerplate
-    // first and keeps it; doc 11 presents it a batch later and drops
-    // it (batch q52 on the union would strip BOTH — the documented
-    // online-cleaner divergence)
-    val first = Seq(10L -> s"alpha beta gamma delta epsilon zeta eta theta $boiler")
-    val second = Seq(11L -> s"one two three four five six seven eight $boiler")
-    val got = drive(Seq(first, second))
-    assert(got(0) == Set((10L, Some(2L), Some(0L),
-      Some(s"alpha beta gamma delta epsilon zeta eta theta $boiler"))))
-    assert(got(1) == Set((11L, Some(2L), Some(1L),
-      Some("one two three four five six seven eight"))))
-    val union = q52On(first ++ second)
-    assert(union.forall(_._3 == Some(1L)), s"batch must strip both: $union")
-
-    // within one batch the smaller doc_id claims deterministically
-    val sameBatch = drive(Seq(Seq(
-      20L -> s"$boiler twenty one twenty two twenty three tail",
-      21L -> s"$boiler thirty one thirty two thirty three tail")))
-    val m = sameBatch.head.map(r => r._1 -> r).toMap
-    assert(m(20L)._3 == Some(0L) && m(21L)._3 == Some(1L))
-
-    // against the real corpus in one batch: segment counts match batch
-    // exactly; stream never drops what batch keeps (keep-first drops a
-    // strict subset), and docs batch leaves untouched are identical
-    val all = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val streamed = drive(Seq(all)).head.map(r => r._1 -> r).toMap
-    val batch = q52On(all).map(r => r._1 -> r).toMap
-    assert(streamed.keySet == batch.keySet)
-    batch.foreach { case (id, b) =>
-      val s = streamed(id)
-      assert(s._2 == b._2, s"doc $id n_segments: ${s._2} vs ${b._2}")
-      assert(s._3.get <= b._3.get, s"doc $id stream drops more than batch")
-      if (b._3 == Some(0L)) assert(s == b, s"untouched doc $id differs: $s vs $b")
-    }
-    // non-vacuous: the corpus' planted near-dups make drops happen,
-    // and ownership makes the stream keep strictly more than batch
-    assert(streamed.values.map(_._3.get).sum > 0)
-    assert(streamed.values.map(_._3.get).sum < batch.values.map(_._3.get).sum)
-  }
-
-  test("s21 streaming curation: single batch row-exact vs q53; keep-first + continuity across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.{Pipeline, TextOps}
-    val target = Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000)
-    val cap = 64
-    // lowercase single-spaced texts: q52's normalized reassembly is
-    // then the identity, so cleaned == original for the clean docs
-    val uniq = (i: Int) => (0 until 24).map(j => s"w${i}_$j").mkString(" ")
-    val corpusRows = Seq(
-      StreamOps.CurDoc(1L, "en", uniq(1)),
-      StreamOps.CurDoc(2L, "en", uniq(1)),   // exact dup of 1: drops
-      StreamOps.CurDoc(3L, "en", uniq(900)), // benchmark copy: drops
-      StreamOps.CurDoc(4L, "en", uniq(4)),
-      StreamOps.CurDoc(5L, "es", uniq(5)),
-      StreamOps.CurDoc(6L, "de", uniq(6)),
-      StreamOps.CurDoc(7L, "fr", uniq(7)),
-      StreamOps.CurDoc(8L, "zh", uniq(8)),
-      StreamOps.CurDoc(9L, "en", null))      // null: dropped at the door
-    val benchRows = Seq((9001L, uniq(900)), (9002L, uniq(901)))
-    val corpusDF = corpusRows.map(d => (d.doc_id, d.lang, d.text)).toDF("doc_id", "lang", "text")
-    val benchDF = benchRows.toDF("doc_id", "text")
-
-    type Span = (Long, Long, Long, Long, Long)
-    // ruleGate off on BOTH sides: the hand corpus's digit-bearing
-    // words cannot satisfy the q70 alpha rule (the battery's
-    // batch/stream parity is pinned by QualityRulesSpec's JVM-twin
-    // test and the chain's own attribution test)
-    val batchSpans: Set[Span] = Pipeline.curate(corpusDF, benchDF, target, capacity = cap,
-      ruleGate = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-
-    // the stream's offline-solved config, derived exactly as batch
-    // q53 derives it: quality cutoffs from the CLEANED corpus (= all
-    // canon docs — q52 is the identity here; only exact-dup doc 2
-    // drops before the gate), vocab/rates from its decon+redacted set
-    // (docs 1,4,5,6,7,8 — no PII patterns, so redaction is identity)
-    val cleanedDF = corpusDF.filter(col("doc_id") =!= 2L)
-    val (lenCut, alphaCut) = Pipeline.qualityCutoffs(cleanedDF, pct = 5)
-    assert(lenCut.nonEmpty && alphaCut.nonEmpty, "tiny corpus still yields cutoffs")
-    val deconDF = corpusDF.filter(col("doc_id").isin(1L, 4L, 5L, 6L, 7L, 8L))
-    val vocab = TextOps.tokenizerVocabSeq(deconDF, m = 64, maxN = 4)
-    val rates = TextOps.tokenMixtureRates(deconDF, target, vocab)
-    val benchShingles = StreamOps.curateBenchShingles(benchDF, shingleN = 4)
-
-    def drive(batches: Seq[Seq[StreamOps.CurDoc]]): Seq[Set[Span]] = {
-      val source = MemoryStream[StreamOps.CurDoc]
-      val perBatch = collection.mutable.ArrayBuffer.empty[Set[Span]]
-      val q = StreamOps.streamCurate(source.toDS(), benchShingles, vocab, rates,
-        capacity = cap, lenCut = lenCut, alphaCut = alphaCut, ruleGate = false)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PackedSpan], _: Long) =>
-          val rows = b.collect()
-            .map(s => (s.shard, s.chunk, s.doc_id, s.tok_start, s.n_toks)).toSet
-          if (rows.nonEmpty) perBatch.synchronized { perBatch += rows }
-          ()
-        }.start()
-      try batches.foreach { batch =>
-        source.addData(batch: _*); q.processAllAvailable()
-      } finally q.stop()
-      perBatch.toSeq
-    }
-
-    // one batch = the whole corpus: row-exact against batch q53
-    assert(drive(Seq(corpusRows)) == Seq(batchSpans))
-    assert(batchSpans.nonEmpty)
-
-    // across batches: a later duplicate emits nothing (keep-first);
-    // new docs keep packing with chunk continuity (spans well-formed)
-    val got = drive(Seq(corpusRows,
-      Seq(StreamOps.CurDoc(10L, "en", uniq(1)),   // dup of doc 1, later batch
-          StreamOps.CurDoc(11L, "en", uniq(11)))))
-    assert(got.head == batchSpans)
-    val second = got.lift(1).getOrElse(Set.empty)
-    assert(!second.exists(_._3 == 10L), "later duplicate must not pack")
-    assert(second.exists(_._3 == 11L), "new doc must pack")
-    second.groupBy(s => (s._1, s._2)).foreach { case (_, ss) =>
-      assert(ss.map(_._5).sum <= cap)
-    }
-
-    // substring stage (q71) bites ACROSS batches: doc 15 embeds doc
-    // 1's full 24-token run UNALIGNED (3-token prefix, so no 8-word
-    // segment matches and the seg stage passes it intact); the window
-    // state from batch 1 marks the run dup, the cut leaves 6 tokens,
-    // and the frozen length gate drops it. The control doc 14 — same
-    // token count, all fresh — packs.
-    // (both scenario docs reuse id 11 — fresh streams each drive, and
-    // 11's admission bucket is known to clear the en rate above)
-    val extras = (0 until 6).map(j => s"x9${j}_pad").mkString(" ")
-    val docA = StreamOps.CurDoc(11L, "en", uniq(14) + " " + extras)
-    val docB = StreamOps.CurDoc(11L, "en",
-      extras.split(" ").take(3).mkString(" ") + " " + uniq(1) + " " +
-        extras.split(" ").drop(3).mkString(" "))
-    val gotA = drive(Seq(corpusRows, Seq(docA)))
-    assert(gotA.lift(1).exists(_.exists(_._3 == 11L)), "fresh 30-token doc must pack")
-    val gotB = drive(Seq(corpusRows, Seq(docB)))
-    assert(!gotB.lift(1).exists(_.exists(_._3 == 11L)),
-      "unaligned span-copy must be cut by the window state and dropped at the gate")
-  }
-
-  test("s21 stage 6b: frozen dup table drops the memorization-heavy arrival exactly as batch q53") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.operators.{Pipeline, TextOps}
-    val target = Map("en" -> 2000, "es" -> 2000, "de" -> 2000, "fr" -> 2000, "zh" -> 2000)
-    val uniq = (i: Int) => (0 until 24).map(j => s"w${i}_$j").mkString(" ")
-    // the PipelineSpec stage-6b geometry: 5-word phrases shared between
-    // docs 10 and 11, separated by doc-unique words (q52/q71 cannot cut
-    // them); doc 10 is 40% duplicated shingles, doc 11 is 13%
-    val phrase = (i: Int) => s"p${i}a p${i}b p${i}c p${i}d p${i}e"
-    val memHeavy = (1 to 4).map(phrase).zipWithIndex
-      .map { case (p, j) => if (j < 3) s"$p ux$j" else p }.mkString(" ")
-    val memLight = (1 to 4).map(phrase).zipWithIndex
-      .map { case (p, j) => if (j < 3) s"$p uy$j" else p }.mkString(" ") +
-      " " + (0 until 40).map(j => s"pad_$j").mkString(" ")
-    // non-en languages get 200-word docs so en is strictly the scarcest
-    // token mass -> rate_en = 10000 exactly and the doc-10 assertions
-    // cannot be masked by the admission hash (the PipelineSpec 6b rule)
-    val fat = (i: Int) => (0 until 200).map(j => s"f${i}_$j").mkString(" ")
-    val corpusRows = Seq(
-      StreamOps.CurDoc(1L, "en", uniq(1)), StreamOps.CurDoc(4L, "en", uniq(4)),
-      StreamOps.CurDoc(5L, "es", fat(5)), StreamOps.CurDoc(6L, "de", fat(6)),
-      StreamOps.CurDoc(7L, "fr", fat(7)), StreamOps.CurDoc(8L, "zh", fat(8)),
-      StreamOps.CurDoc(10L, "en", memHeavy), StreamOps.CurDoc(11L, "en", memLight))
-    val corpusDF = corpusRows.map(d => (d.doc_id, d.lang, d.text)).toDF("doc_id", "lang", "text")
-    val benchDF = Seq((9001L, uniq(900))).toDF("doc_id", "text")
-
-    type Span = (Long, Long, Long, Long, Long)
-    val batchSpans: Set[Span] = Pipeline.curate(corpusDF, benchDF, target,
-      capacity = 64, ruleGate = false, memCutMyriad = 2000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-
-    // frozen config, derived exactly as the batch chain derives it: on
-    // this corpus stages 0-3 are the identity and nothing drops before
-    // the gate, so cleaned == corpus; no bench overlap, no PII -> the
-    // redacted corpus is the corpus; the dup table is its over-df-1
-    // shingle set; the mem survivors (all but doc 10) train vocab/rates
-    val (lenCut, alphaCut) = Pipeline.qualityCutoffs(corpusDF, pct = 5)
-    val dupTable = StreamOps.dupShingleTable(corpusDF, shingleN = 4, dfCap = 1)
-      .collect().map(_.getLong(0)).toSet
-    assert(dupTable.nonEmpty, "planted phrases must produce a dup table")
-    val memDF = corpusDF.filter(col("doc_id") =!= 10L)
-    val vocab = TextOps.tokenizerVocabSeq(memDF, m = 64, maxN = 4)
-    val rates = TextOps.tokenMixtureRates(memDF, target, vocab)
-    val benchShingles = StreamOps.curateBenchShingles(benchDF, shingleN = 4)
-
-    def drive(cut: Int, dup: Set[Long]): Set[Span] = {
-      val source = MemoryStream[StreamOps.CurDoc]
-      val acc = collection.mutable.Set.empty[Span]
-      val q = StreamOps.streamCurate(source.toDS(), benchShingles, vocab, rates,
-        capacity = 64, lenCut = lenCut, alphaCut = alphaCut, ruleGate = false,
-        dupShingles = dup, memCutMyriad = cut)
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PackedSpan], _: Long) =>
-          b.collect().foreach(s => acc.synchronized {
-            acc += ((s.shard, s.chunk, s.doc_id, s.tok_start, s.n_toks)) }); ()
-        }.start()
-      try { source.addData(corpusRows: _*); q.processAllAvailable() } finally q.stop()
-      acc.toSet
-    }
-
-    val streamSpans = drive(2000, dupTable)
-    assert(streamSpans == batchSpans, s"stream $streamSpans vs batch $batchSpans")
-    assert(!streamSpans.exists(_._3 == 10L), "memorization-heavy doc must not pack")
-    // attribution: gate off on both sides -> doc 10 packs in both
-    val batchOff = Pipeline.curate(corpusDF, benchDF, target,
-      capacity = 64, ruleGate = false, memCutMyriad = -1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    assert(batchOff.exists(_._3 == 10L), "gate-off batch must keep doc 10")
   }
 
   test("s04 kafka config surface builds; file substitution streams real rows") {
@@ -2393,141 +893,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.table("s44_out").collect().map(_.toString).sorted.toSeq == batch)
   }
 
-  test("s34 streaming substring dedup is row-exact vs batch q71 under the frozen dup table") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val d = Tables.documents(spark, sfDir)
-    val batch = graft.operators.ExactSubstr.substringDedup(d)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    val table = graft.operators.ExactSubstr.dupWindowTable(d)
-    assert(table.nonEmpty)
-
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, String)]()
-    val q = StreamOps.streamSubstringDedup(source.toDS(), table)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.CleanDoc], _: Long) =>
-        b.collect().foreach(r => got(r.doc_id) = (r.n_tokens, r.n_removed, r.clean_text)); ()
-      }.start()
-    try {
-      val rows = d.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      // a NEW document that repeats a frozen-corpus span is cut on
-      // ingest even though batch never saw its doc_id: clone the text
-      // of a doc the batch run cut
-      val victim = batch.collect { case (id, (_, rm, _)) if rm > 0 => id }.min
-      val vtext = rows.find(_._1 == victim).get._2
-      source.addData((999999L, vtext))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    // ingest semantics: the clone is cut at least as hard as the
-    // batch-cut original (its whole duplicated region repeats the
-    // frozen corpus, and the original's kept first copy now also
-    // counts against it)
-    val victim = batch.collect { case (id, (_, rm, _)) if rm > 0 => id }.min
-    assert(got(999999L)._2 >= batch(victim)._2,
-      s"clone cut ${got(999999L)._2} < original's ${batch(victim)._2}")
-  }
-
-  test("s35 streaming NB classification is row-exact vs batch q72 under the frozen model") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val d = Tables.documents(spark, sfDir)
-    val batch = graft.operators.Classifier.nbClassify(d)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val model = graft.operators.Classifier.nbModel(d)
-
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, Long, Long, Long)]()
-    val q = StreamOps.streamNbClassify(source.toDS(), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.NbScore], _: Long) =>
-        b.collect().foreach(r =>
-          got(r.doc_id) = (r.is_train, r.n_feats, r.score_q16, r.pred)); ()
-      }.start()
-    try {
-      val rows = d.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size)
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    // both classes actually predicted (the model is not a constant)
-    assert(got.values.exists(_._4 == 1L) && got.values.exists(_._4 == 0L))
-  }
-
-  test("s36 streaming ccnet bucketing is row-exact vs batch q74 under the frozen model") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    val d = Tables.documents(spark, sfDir)
-    val batch = graft.operators.TextOps.ccnetBuckets(d, k = 256)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
-          Option(r.getString(3))))).toMap
-    val index = StreamOps.bigramLmIndex(d)
-    val cuts = graft.operators.TextOps.ccnetCutoffs(d, k = 256)
-
-    val source = MemoryStream[(Long, String, String)]
-    val got = collection.mutable.Map[Long, (String, Option[Long], Option[String])]()
-    val q = StreamOps.streamCcnetBuckets(source.toDS(), index, cuts)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.BucketReport], _: Long) =>
-        b.collect().foreach(r => got(r.doc_id) = (r.lang, r.ppl_q16, r.bucket)); ()
-      }.start()
-    try {
-      val rows = d.select(col("doc_id"), col("lang"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      source.addData(rows.take(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-      source.addData(rows.drop(rows.length / 2).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.size == batch.size)
-    val mismatches = batch.collect {
-      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
-    }
-    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
-    // all three buckets actually emitted
-    val bs = got.values.flatMap(_._3).toSet
-    assert(bs == Set("head", "middle", "tail"), bs.toString)
-    // a genuinely novel doc (unseen lang + unseen vocab) routes to the
-    // documented graceful path: smoothed ppl, bucket tail
-    val source2 = MemoryStream[(Long, String, String)]
-    val got2 = collection.mutable.Map[Long, (String, Option[Long], Option[String])]()
-    val q2 = StreamOps.streamCcnetBuckets(source2.toDS(), index, cuts)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.BucketReport], _: Long) =>
-        b.collect().foreach(r => got2(r.doc_id) = (r.lang, r.ppl_q16, r.bucket)); ()
-      }.start()
-    try {
-      source2.addData((900001L, "zz", "zzq wwk vvt uup"), (900002L, "zz", "solo"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(got2(900001L)._2.nonEmpty && got2(900001L)._3.contains("tail"))
-    assert(got2(900002L) == (("zz", None, None)))
-  }
-
   test("s23 streaming restore: multi-batch changelog converges row-exact to the batch LWW fold") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -2617,344 +982,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  /** Render s24's micros-typed output through the SAME Spark
-    * date_format/session-tz path batch q34 uses, so the parity compare
-    * is string-identical end to end. */
-  private def renderAsof(outs: Seq[StreamOps.AsofOut]): Seq[String] = {
-    import spark.implicits._
-    outs.toDS()
-      .select(col("event_id"), col("user_id"),
-        date_format(timestamp_micros(col("event_ts_us")), "yyyy-MM-dd HH:mm:ss").as("event_ts"),
-        col("last_orderkey"),
-        date_format(timestamp_micros(col("last_orderdate_us")), "yyyy-MM-dd").as("last_orderdate"))
-      .collect().map(_.toString).sorted.toSeq
-  }
-
-  private def asofFeeds(): (Seq[StreamOps.AsofInput], Seq[StreamOps.AsofInput], Seq[String]) = {
-    import spark.implicits._
-    val events = Tables.events(spark, sfDir)
-    val orders = Tables.orders(spark, sfDir)
-    // RAW orders as quotes — the state fold performs batch q34's
-    // per-(user, date) max-orderkey compaction itself
-    val quotes = orders.select(col("o_custkey").as("user_id"), lit(0).as("side"),
-        unix_micros(col("o_orderdate").cast("timestamp")).as("t_us"),
-        lit(0L).as("event_id"), col("o_orderkey").as("orderkey"))
-      .as[StreamOps.AsofInput].collect().toSeq
-    val queries = events.select(col("user_id"), lit(1).as("side"),
-        unix_micros(col("ts")).as("t_us"), col("event_id"),
-        lit(0L).as("orderkey"))
-      .as[StreamOps.AsofInput].collect().toSeq
-    val batch = graft.operators.AsofJoin.eventsAsofOrders(events, orders)
-      .collect().map(_.toString).sorted.toSeq
-    (quotes, queries, batch)
-  }
-
-  private def runAsof(batches: Seq[Seq[StreamOps.AsofInput]]): Seq[StreamOps.AsofOut] = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val buf = collection.mutable.ArrayBuffer[StreamOps.AsofOut]()
-    val source = MemoryStream[StreamOps.AsofInput]
-    val q = StreamOps.streamAsofJoin(source.toDS())
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.AsofOut], _: Long) =>
-        buf ++= b.collect(); ()
-      }.start()
-    try batches.foreach { rows =>
-      if (rows.nonEmpty) { source.addData(rows: _*); q.processAllAvailable() }
-    } finally q.stop()
-    buf.toSeq
-  }
-
-  test("s24 streaming as-of join: single-batch run row-exact vs batch q34") {
-    val (quotes, queries, batch) = asofFeeds()
-    assert(renderAsof(runAsof(Seq(quotes ++ queries))) == batch)
-  }
-
-  test("s24 streaming as-of join: dims-first multi-batch run row-exact vs batch q34") {
-    val (quotes, queries, batch) = asofFeeds()
-    // quotes bootstrap first (the GlobalKTable order), then events
-    // arrive across two batches with every user's queries interleaved
-    val (qa, qb) = queries.partition(_.event_id % 2 == 0)
-    assert(renderAsof(runAsof(Seq(quotes, qa, qb))) == batch)
-  }
-
-  test("s24 as-of contract: inclusive ties, same-date compaction, no-quote nulls, and the as-of-arrival divergence") {
-    import StreamOps.AsofInput
-    def quote(u: Long, t: Long, ok: Long) = AsofInput(u, 0, t, 0L, ok)
-    def query(u: Long, t: Long, eid: Long) = AsofInput(u, 1, t, eid, 0L)
-    val out = runAsof(Seq(
-      // batch 1: user 1's book {100→10}; event 1 at t=200 matches it;
-      // user 2 has same-date quotes 5 and 7 (compaction → 7) and an
-      // EQUAL-time event (inclusive as-of); user 9 has no quotes
-      Seq(quote(1, 100, 10), query(1, 200, 1),
-        quote(2, 500, 5), quote(2, 500, 7), query(2, 500, 2),
-        query(9, 50, 3)),
-      // batch 2: a LATE quote (t=150) that event 1 would have matched,
-      // and a new event that must see it
-      Seq(quote(1, 150, 20), query(1, 200, 4))))
-    val byEvent = out.groupBy(_.event_id)
-    assert(byEvent.values.forall(_.size == 1), "append mode: one row per event, ever")
-    assert(byEvent(1L).head == StreamOps.AsofOut(1, 1, 200, Some(10), Some(100)),
-      "event 1 keeps its as-of-ARRIVAL answer — the late quote does not retract it")
-    assert(byEvent(2L).head == StreamOps.AsofOut(2, 2, 500, Some(7), Some(500)),
-      "equal-time quote is visible (inclusive) and same-date compaction keeps max orderkey")
-    assert(byEvent(3L).head == StreamOps.AsofOut(3, 9, 50, None, None))
-    assert(byEvent(4L).head == StreamOps.AsofOut(4, 1, 200, Some(20), Some(150)),
-      "a later event DOES see the late quote")
-  }
-
-  // -- s48 streaming SCD2 ----------------------------------------------
-
-  private def fmtUs(us: Long): String =
-    java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L))
-      .atZone(java.time.ZoneOffset.UTC)
-      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-
-  test("s48 streaming SCD2: time-ordered batches converge row-exact to batch q92") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val ev = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
-    // per-key-monotone split: global (ts_us, event_id) order chunked in 3
-    val all = ev.as[StreamOps.ChangelogEvent].collect()
-      .sortBy(e => (e.ts_us, e.event_id))
-    val batch = graft.operators.Restore.scd2History(Tables.events(spark, sfDir))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((Option(r.getString(2)), r.getString(3), Option(r.getString(4)), r.getBoolean(5))))
-      .toMap
-    val live = collection.mutable.Map[(Long, Long), (Option[String], String, Option[String], Boolean)]()
-    val source = MemoryStream[StreamOps.ChangelogEvent]
-    val q = StreamOps.streamScd2(source.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Scd2Row], _: Long) =>
-        b.collect().foreach { r =>
-          live((r.user_id, r.version)) =
-            ((r.state, fmtUs(r.valid_from_us), r.valid_to_us.map(fmtUs), r.is_current))
-        }
-        ()
-      }.start()
-    try {
-      val n = all.length
-      Seq(all.slice(0, n / 3), all.slice(n / 3, 2 * n / 3), all.slice(2 * n / 3, n))
-        .foreach { chunk => source.addData(chunk.toIndexedSeq: _*); q.processAllAvailable() }
-    } finally q.stop()
-    assert(live.size == batch.size, s"${live.size} stream rows vs ${batch.size} batch")
-    batch.foreach { case (k, v) =>
-      assert(live.get(k).contains(v), s"key $k: stream ${live.get(k)} vs batch $v")
-    }
-  }
-
-  test("s48 streaming SCD2 contract: no-op re-assert, stale ignore, null transitions, ts ties") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import StreamOps.{ChangelogEvent, Scd2Row}
-    val live = collection.mutable.Map[(Long, Long), Scd2Row]()
-    val source = MemoryStream[ChangelogEvent]
-    val q = StreamOps.streamScd2(source.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Row], _: Long) =>
-        b.collect().foreach(r => live((r.user_id, r.version)) = r)
-        ()
-      }.start()
-    try {
-      // user 1: a, a (no-op), b; user 2: x, null, null (one change),
-      // x again; user 3: same-ts tie folds by event_id (b then c)
-      source.addData(
-        ChangelogEvent(1L, 1L, 100L, "a", 0.0),
-        ChangelogEvent(1L, 2L, 200L, "a", 0.0),
-        ChangelogEvent(1L, 3L, 300L, "b", 0.0),
-        ChangelogEvent(2L, 1L, 100L, "x", 0.0),
-        ChangelogEvent(2L, 2L, 200L, null, 0.0),
-        ChangelogEvent(2L, 3L, 300L, null, 0.0),
-        ChangelogEvent(2L, 4L, 400L, "x", 0.0),
-        ChangelogEvent(3L, 11L, 500L, "b", 0.0),
-        ChangelogEvent(3L, 10L, 500L, "a", 0.0))
-      q.processAllAvailable()
-      // user 1: a[100,300) closed, b[300,-) open — the no-op absorbed
-      assert(live((1L, 1L)) == Scd2Row(1L, 1L, Some("a"), 100L, Some(300L), false))
-      assert(live((1L, 2L)) == Scd2Row(1L, 2L, Some("b"), 300L, None, true))
-      // user 2: x -> null -> x (null==null is NO change)
-      assert(live((2L, 1L)) == Scd2Row(2L, 1L, Some("x"), 100L, Some(200L), false))
-      assert(live((2L, 2L)) == Scd2Row(2L, 2L, None, 200L, Some(400L), false))
-      assert(live((2L, 3L)) == Scd2Row(2L, 3L, Some("x"), 400L, None, true))
-      // user 3: ts tie 500 folds event_id 10 then 11 -> a then b
-      assert(live((3L, 1L)) == Scd2Row(3L, 1L, Some("a"), 500L, Some(500L), false))
-      assert(live((3L, 2L)) == Scd2Row(3L, 2L, Some("b"), 500L, None, true))
-
-      // stale replay: user 1 gets an event BELOW the high-water mark —
-      // ignored, history unchanged (the documented no-retract class)
-      val before = live.toMap
-      source.addData(ChangelogEvent(1L, 1L, 150L, "z", 0.0))
-      q.processAllAvailable()
-      // only the open row may re-emit, identical
-      assert(live.toMap == before, "stale event must not rewrite history")
-
-      // in-order continuation across batches: b -> c closes v2
-      source.addData(ChangelogEvent(1L, 9L, 900L, "c", 0.0))
-      q.processAllAvailable()
-      assert(live((1L, 2L)) == Scd2Row(1L, 2L, Some("b"), 300L, Some(900L), false))
-      assert(live((1L, 3L)) == Scd2Row(1L, 3L, Some("c"), 900L, None, true))
-    } finally q.stop()
-  }
-
-  test("s48 streaming SCD2: a key's initial null run opens NO version (batch q92 parity)") {
-    // r12 ADVICE: opening version 1 on a null first event diverged from
-    // batch q92 (whose null <=> null lag filter drops the initial null
-    // run) and shifted every later version number for the key
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import StreamOps.{ChangelogEvent, Scd2Row}
-    val live = collection.mutable.Map[(Long, Long), Scd2Row]()
-    val source = MemoryStream[ChangelogEvent]
-    val q = StreamOps.streamScd2(source.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Row], _: Long) =>
-        b.collect().foreach(r => live((r.user_id, r.version)) = r)
-        ()
-      }.start()
-    try {
-      // user 4: null, null, y, null — versions must be y=1 (from ts 300),
-      // null=2 (the POST-run null IS a change); user 5: all nulls, no rows
-      source.addData(
-        ChangelogEvent(4L, 1L, 100L, null, 0.0),
-        ChangelogEvent(4L, 2L, 200L, null, 0.0),
-        ChangelogEvent(5L, 1L, 100L, null, 0.0))
-      q.processAllAvailable()
-      assert(live.isEmpty, "initial null runs must emit nothing")
-      source.addData(
-        ChangelogEvent(4L, 3L, 300L, "y", 0.0),
-        ChangelogEvent(4L, 4L, 400L, null, 0.0),
-        ChangelogEvent(5L, 2L, 200L, null, 0.0))
-      q.processAllAvailable()
-      assert(live((4L, 1L)) == Scd2Row(4L, 1L, Some("y"), 300L, Some(400L), false))
-      assert(live((4L, 2L)) == Scd2Row(4L, 2L, None, 400L, None, true))
-      assert(!live.keySet.exists(_._1 == 5L), "an all-null key emits no versions")
-      // batch parity on the same log: version numbers and intervals equal
-      val batch = graft.operators.Restore.scd2History(
-        Seq[(Long, Long, Long, String)](
-            (4L, 1L, 100L, null), (4L, 2L, 200L, null), (4L, 3L, 300L, "y"),
-            (4L, 4L, 400L, null), (5L, 1L, 100L, null), (5L, 2L, 200L, null))
-          .map { case (u, e, t, s) =>
-            (u, e, new java.sql.Timestamp(t), s, 0.0) } // ms scale: order matches
-          .toDF("user_id", "event_id", "ts", "event_type", "value"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> Option(r.getString(2))).toMap
-      assert(batch.keySet == live.keySet.toSet, "stream/batch version sets must agree")
-      batch.foreach { case (k, st) => assert(live(k).state == st) }
-    } finally q.stop()
-  }
-
-  // -- s53 late-data audit (dead-letter accounting over the s48 fold) ----
-
-  test("s53 late audit: planted late arrivals are counted and attributed exactly, with the rejecting HWM") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import StreamOps.{ChangelogEvent, Scd2Emit}
-    val versions = collection.mutable.Map[(Long, Long), Scd2Emit]()
-    val drops = collection.mutable.ArrayBuffer[Scd2Emit]()
-    val source = MemoryStream[ChangelogEvent]
-    val q = StreamOps.streamScd2Audited(source.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Emit], _: Long) =>
-        b.collect().foreach { e =>
-          if (e.kind == "version") versions((e.user_id, e.version)) = e
-          else drops += e
-        }; ()
-      }.start()
-    try {
-      // batch 1: in-order history for user 1 — HWM ends at (300, 3)
-      source.addData(
-        ChangelogEvent(1L, 1L, 100L, "a", 0.0),
-        ChangelogEvent(1L, 3L, 300L, "b", 0.0))
-      q.processAllAvailable()
-      assert(drops.isEmpty, "in-order batch must drop nothing")
-      // batch 2: two LATE arrivals below the HWM + one on-time change;
-      // in-batch fold order is (50, 9) then (150, 7) then (900, 4)
-      source.addData(
-        ChangelogEvent(1L, 4L, 900L, "c", 0.0),
-        ChangelogEvent(1L, 7L, 150L, "z", 0.0),
-        ChangelogEvent(1L, 9L, 50L, null, 0.0))
-      q.processAllAvailable()
-      // exact accounting: both late rows audited, attributed to the
-      // (300, 3) HWM that rejected them (the on-time c@900 folds AFTER
-      // them in (ts, id) order, so it is not the rejector)
-      assert(drops.size == 2, s"expected 2 dead-letter rows, got ${drops.size}")
-      val d = drops.sortBy(_.ts_us)
-      assert(d(0).event_id == 9L && d(0).ts_us == 50L && d(0).state.isEmpty &&
-        d(0).hwm_ts_us == 300L && d(0).hwm_event_id == 3L)
-      assert(d(1).event_id == 7L && d(1).ts_us == 150L && d(1).state.contains("z") &&
-        d(1).hwm_ts_us == 300L && d(1).hwm_event_id == 3L)
-      // the history is exactly the on-time subset's: a, b, c
-      assert(versions((1L, 1L)).state.contains("a") && versions((1L, 2L)).state.contains("b"))
-      assert(versions((1L, 3L)).state.contains("c") && versions((1L, 3L)).is_current)
-      assert(!versions.keySet.exists(_._2 > 3L))
-    } finally q.stop()
-  }
-
-  test("s53 late audit: on a shuffled real-corpus feed, versions == batch q92 on the on-time subset and drops are the exact complement") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import StreamOps.{ChangelogEvent, Scd2Emit}
-    val ev = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
-      .as[StreamOps.ChangelogEvent].collect()
-    // a deterministic shuffle guarantees genuinely late cross-batch
-    // arrivals (events of one key land in earlier AND later batches
-    // out of time order)
-    val shuffled = new scala.util.Random(13L).shuffle(ev.toSeq)
-    val versions = collection.mutable.Map[(Long, Long), (Option[String], Long, Option[Long], Boolean)]()
-    val dropped = collection.mutable.Set[Long]() // event_ids
-    val source = MemoryStream[ChangelogEvent]
-    val q = StreamOps.streamScd2Audited(source.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Emit], _: Long) =>
-        b.collect().foreach { e =>
-          if (e.kind == "version")
-            versions((e.user_id, e.version)) =
-              ((e.state, e.valid_from_us, e.valid_to_us, e.is_current))
-          else dropped += e.event_id
-        }; ()
-      }.start()
-    try {
-      val n = shuffled.length
-      Seq(shuffled.slice(0, n / 3), shuffled.slice(n / 3, 2 * n / 3), shuffled.slice(2 * n / 3, n))
-        .foreach { chunk => source.addData(chunk.toIndexedSeq: _*); q.processAllAvailable() }
-    } finally q.stop()
-    assert(dropped.nonEmpty, "the shuffled feed must actually produce late arrivals")
-    // batch q92 parity ON THE ON-TIME SUBSET: replay the batch operator
-    // over exactly the accepted events — the stream's history must match
-    val accepted = ev.filter(e => !dropped(e.event_id)).toSeq
-    val batch = graft.operators.Restore.scd2History(
-        accepted.map(e => (e.user_id, e.event_id, e.ts_us, e.event_type, e.value))
-          .toDF("user_id", "event_id", "ts_us", "event_type", "value")
-          .withColumn("ts", expr("timestamp_micros(ts_us)"))) // micros preserved
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> Option(r.getString(2))).toMap
-    assert(versions.keySet == batch.keySet,
-      s"stream ${versions.size} version rows vs batch ${batch.size} on the on-time subset")
-    batch.foreach { case (k, st) =>
-      assert(versions(k)._1 == st, s"key $k state: stream ${versions(k)._1} vs batch $st")
-    }
-    // the audited twin must not drift from the unaudited s48: same feed,
-    // same batching → identical version table (shared-fold guarantee)
-    val plain = collection.mutable.Map[(Long, Long), (Option[String], Long, Option[Long], Boolean)]()
-    val src2 = MemoryStream[ChangelogEvent]
-    val q2 = StreamOps.streamScd2(src2.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Scd2Row], _: Long) =>
-        b.collect().foreach(r => plain((r.user_id, r.version)) =
-          ((r.state, r.valid_from_us, r.valid_to_us, r.is_current))); ()
-      }.start()
-    try {
-      val n = shuffled.length
-      Seq(shuffled.slice(0, n / 3), shuffled.slice(n / 3, 2 * n / 3), shuffled.slice(2 * n / 3, n))
-        .foreach { chunk => src2.addData(chunk.toIndexedSeq: _*); q2.processAllAvailable() }
-    } finally q2.stop()
-    assert(plain.toMap == versions.toMap, "audited and unaudited twins must emit identical histories")
-  }
-
   // -- s49 streaming winnow / s50 streaming z-encode ---------------------
 
   test("s49 streaming winnow: the per-doc selection kernel unmodified on a stream, row-exact") {
@@ -3028,347 +1055,5 @@ class StreamingSpec extends AnyFunSuite {
       "over-range key must clamp to the (pmax, smax) encode")
     assert(got((999992L, 1)) == edges(1),
       "under-range key must clamp to the (pmin, smin) encode")
-  }
-
-  // -- s51 streaming DP counts / s52 streaming k-anonymity ---------------
-
-  test("s51 streaming DP release: any batching converges row-exact to batch q98") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-      .select("doc_id", "source", "lang")
-      .as[(Long, String, String)].collect()
-    // NON-default seed on both sides: the frozen-config pair (seed is a
-    // parameter since r13; the spec must prove the stream threads it)
-    val batch = graft.operators.Privacy.dpCounts(
-        Tables.documents(spark, sfDir), seed = 7L)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    def run(order: Seq[(Long, String, String)], cuts: Int): Map[(String, String), Long] = {
-      val live = collection.mutable.Map[(String, String), Long]()
-      val source = MemoryStream[(Long, String, String)]
-      val q = StreamOps.streamDpCounts(source.toDS(), seed = 7L)
-        .writeStream.outputMode(OutputMode.Update())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.DpCell], _: Long) =>
-          b.collect().foreach(c => live((c.source, c.lang)) = c.n_noised)
-          ()
-        }.start()
-      try order.grouped(order.length / cuts + 1).foreach { ch =>
-        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      live.toMap
-    }
-    assert(run(docs.toSeq, 2) == batch, "forward 2-cut run must equal batch q98")
-    assert(run(docs.reverse.toSeq, 3) == batch, "reversed 3-cut run must equal batch q98")
-  }
-
-  test("s52 streaming k-anonymity: group table converges; release is monotone") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val cust = Tables.customer(spark, sfDir)
-      .select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal")
-      .as[(Long, Int, String, Double)].collect()
-      .map(r => (r._1, r._2.toLong, r._3, r._4))
-    val expected = cust.groupBy(r => (r._2, r._3, math.floor(r._4 / 1000.0).toLong))
-      .map { case (k, rows) => k -> rows.length.toLong }
-    val live = collection.mutable.Map[(Long, String, Long), (Long, Boolean)]()
-    val flips = collection.mutable.ArrayBuffer[(Long, String, Long)]()
-    val source = MemoryStream[(Long, Long, String, Double)]
-    val q = StreamOps.streamKanonGroups(source.toDS(), k = 5)
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KanonGroup], _: Long) =>
-        b.collect().foreach { g =>
-          val key = (g.nk, g.seg, g.bb)
-          live.get(key).foreach { case (_, wasReleased) =>
-            if (wasReleased && !g.released) flips += key
-          }
-          live(key) = ((g.group_size, g.released))
-        }
-        ()
-      }.start()
-    try cust.grouped(cust.length / 3 + 1).foreach { ch =>
-      source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    assert(flips.isEmpty, s"release must be monotone, saw un-releases: $flips")
-    assert(live.view.mapValues(_._1).toMap == expected,
-      "final group sizes must equal the batch QI group table")
-    live.foreach { case (k, (n, released)) =>
-      assert(released == (n >= 5), s"group $k disposition wrong at n=$n")
-    }
-  }
-
-  test("s54 streaming hybrid retrieval converges to batch q99 under shuffled multi-batch arrival") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.operators.Hybrid
-    val docs = Tables.documents(spark, sfDir)
-    val embs = Tables.embeddings(spark, sfDir)
-    val batch = Hybrid.hybridRrf(docs, embs).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getLong(3),
-          Option(r.get(4)).map(_.asInstanceOf[Long]),
-          Option(r.get(5)).map(_.asInstanceOf[Long])))).toMap
-    assert(batch.nonEmpty)
-    val model = Hybrid.hybridIndex(docs, embs)
-
-    // arrival stream: one row per id carrying whatever modalities
-    // exist (full outer join — text-only and vector-only rows are
-    // legitimate arrivals)
-    val feed: Array[(Long, String, Seq[Float])] = docs
-      .select(col("doc_id"), col("text"))
-      .join(embs.select(col("vec_id"), col("embedding")),
-        col("doc_id") === col("vec_id"), "full_outer")
-      .select(coalesce(col("doc_id"), col("vec_id")).as("id"),
-        col("text"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) null else r.getSeq[Float](2)))
-    // seeded shuffle: arrival order must not matter
-    val rng = new scala.util.Random(54L)
-    val shuffled = rng.shuffle(feed.toVector).toArray
-
-    val source = MemoryStream[(Long, String, Seq[Float])]
-    // latest generation per probe (the s16/s27 consumer contract)
-    val got = collection.mutable.Map[Long, Seq[(Long, Long, Long, Option[Long], Option[Long])]]()
-    val q = StreamOps.streamHybridRrf(source.toDS(), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.HybridHit], _: Long) =>
-        val rows = b.collect()
-        rows.map(_.query_id).distinct.foreach(got.remove)
-        rows.groupBy(_.query_id).foreach { case (qid, hs) =>
-          got(qid) = hs.sortBy(_.rank)
-            .map(h => (h.rank, h.doc_id, h.rrf_e6, h.lex_rank, h.sem_rank)).toSeq
-        }
-        ()
-      }.start()
-    try {
-      val third = shuffled.length / 3 + 1
-      shuffled.grouped(third).foreach { ch =>
-        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val gotFlat = got.toMap.flatMap { case (qid, hs) =>
-      hs.map(h => (qid, h._1) -> ((h._2, h._3, h._4, h._5)))
-    }
-    assert(gotFlat == batch,
-      s"stream generation diverges from batch q99: " +
-        s"${(gotFlat.toSet -- batch.toSet).take(3)} vs ${(batch.toSet -- gotFlat.toSet).take(3)}")
-  }
-
-  test("s54 at-least-once replay: a re-delivered doc occupies ONE pool slot (r13 ADVICE)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.operators.Hybrid
-    // poolR = 2 makes the failure mode sharp: replaying the pool's
-    // best doc would insert a duplicate entry and permanently evict
-    // the legitimate runner-up
-    val model = Hybrid.HybridModel(
-      qterms = Map(1L -> Map("zz" -> 65536L)),
-      probeVecs = Map(1L -> Seq(0L, 0L)), nDocs = 10L, aTok = 10L)
-    val source = MemoryStream[(Long, String, Seq[Float])]
-    val got = collection.mutable.Map[Long, Set[Long]]()
-    val q = StreamOps.streamHybridRrf(source.toDS(), model, poolR = 2, topK = 5)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.HybridHit], _: Long) =>
-        val rows = b.collect()
-        rows.map(_.query_id).distinct.foreach(got.remove)
-        rows.groupBy(_.query_id).foreach { case (qid, hs) =>
-          got(qid) = hs.map(_.doc_id).toSet }
-        ()
-      }.start()
-    try {
-      source.addData((10L, null, Seq(0.001f, 0f)), (11L, null, Seq(0.002f, 0f)))
-      q.processAllAvailable()
-      assert(got(1L) == Set(10L, 11L), s"pool should hold both docs: ${got(1L)}")
-      source.addData((10L, null, Seq(0.001f, 0f))) // at-least-once replay
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(got(1L) == Set(10L, 11L),
-      s"replaying doc 10 must not evict doc 11 from the bounded pool: ${got(1L)}")
-  }
-
-  test("s54 embedding-dimension mismatch fails loudly (batch l2_dist parity, r13 ADVICE)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.operators.Hybrid
-    val model = Hybrid.HybridModel(
-      qterms = Map(1L -> Map("zz" -> 65536L)),
-      probeVecs = Map(1L -> Seq(0L, 0L)), nDocs = 10L, aTok = 10L)
-    val source = MemoryStream[(Long, String, Seq[Float])]
-    val q = StreamOps.streamHybridRrf(source.toDS(), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (_: org.apache.spark.sql.Dataset[StreamOps.HybridHit], _: Long) => () }
-      .start()
-    // the contract is FAIL-LOUD: before the r13 ADVICE fix this fed a
-    // truncated (wrong) d2 into pool state and the stream kept running.
-    // The per-task IllegalArgumentException is wrapped by the engine
-    // (Spark 4.1 surfaces a commit-validation error whose cause chain
-    // drops the task failure), so the assertion is termination itself.
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try { source.addData((10L, null, Seq(1f, 2f, 3f))); q.processAllAvailable() }
-      finally q.stop()
-    }
-  }
-
-  test("s56 streaming unigram encode equals batch q101b under shuffled multi-batch arrival") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.operators.Unigram
-    val docs = Tables.documents(spark, sfDir)
-    val batch = Unigram.unigramEncode(docs).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
-    val model = Unigram.unigramFit(docs)
-    val feed = docs.select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val rng = new scala.util.Random(56L)
-    val shuffled = rng.shuffle(feed.toVector).toArray
-    val source = MemoryStream[(Long, String)]
-    val got = collection.mutable.Map[Long, (Long, String)]()
-    val q = StreamOps.streamUnigramEncode(source.toDS(), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.UnigramSegDoc], _: Long) =>
-        b.collect().foreach(d => got(d.doc_id) = ((d.n_pieces, d.subtext))); ()
-      }.start()
-    try {
-      val third = shuffled.length / 3 + 1
-      shuffled.grouped(third).foreach { ch =>
-        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(got.toMap == batch, "stateless encoder must equal batch q101b per arrival")
-  }
-
-  test("s57 streaming RAG converges to batch q102 under shuffled multimodal arrival") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.operators.Rag
-    val docs = Tables.documents(spark, sfDir)
-    val embs = Tables.embeddings(spark, sfDir)
-    val batch = Rag.ragSearch(docs, embs).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Long]), r.getLong(4),
-          Option(r.get(5)).map(_.asInstanceOf[Long]),
-          Option(r.get(6)).map(_.asInstanceOf[Long])))).toMap
-    assert(batch.nonEmpty)
-    // some batch hit must carry a passage attribution, some must not —
-    // else the test can't see the citation path
-    assert(batch.values.exists(_._2.isDefined) && batch.values.exists(_._2.isEmpty))
-    val model = Rag.ragModel(docs, embs)
-
-    val feed: Array[(Long, String, Seq[Float])] = docs
-      .select(col("doc_id"), col("text"))
-      .join(embs.select(col("vec_id"), col("embedding")),
-        col("doc_id") === col("vec_id"), "full_outer")
-      .select(coalesce(col("doc_id"), col("vec_id")).as("id"),
-        col("text"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) null else r.getSeq[Float](2)))
-    val shuffled = new scala.util.Random(57L).shuffle(feed.toVector).toArray
-
-    val source = MemoryStream[(Long, String, Seq[Float])]
-    val got = collection.mutable.Map[Long,
-      Seq[(Long, Long, Option[Long], Long, Option[Long], Option[Long])]]()
-    val q = StreamOps.streamRagSearch(source.toDS(), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.RagHit], _: Long) =>
-        val rows = b.collect()
-        rows.map(_.query_id).distinct.foreach(got.remove)
-        rows.groupBy(_.query_id).foreach { case (qid, hs) =>
-          got(qid) = hs.sortBy(_.rank).map(h =>
-            (h.rank, h.doc_id, h.passage_id, h.rrf_e6, h.lex_rank, h.sem_rank)).toSeq
-        }
-        ()
-      }.start()
-    try {
-      val third = shuffled.length / 3 + 1
-      shuffled.grouped(third).foreach { ch =>
-        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    val gotFlat = got.toMap.flatMap { case (qid, hs) =>
-      hs.map(h => (qid, h._1) -> ((h._2, h._3, h._4, h._5, h._6)))
-    }
-    assert(gotFlat == batch,
-      s"stream generation diverges from batch q102: " +
-        s"${(gotFlat.toSet -- batch.toSet).take(3)} vs ${(batch.toSet -- gotFlat.toSet).take(3)}")
-  }
-
-  test("s57 embedding-dimension mismatch fails loudly (the s54 contract)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.operators.Rag
-    val model = Rag.RagModel(
-      qterms = Map(1L -> Map("zz" -> 65536L)),
-      probeVecs = Map(1L -> Vector(0L, 0L)),
-      nPass = 10L, aTok = 10L, window = 4, stride = 2)
-    val source = MemoryStream[(Long, String, Seq[Float])]
-    val q = StreamOps.streamRagSearch(source.toDS(), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (_: org.apache.spark.sql.Dataset[StreamOps.RagHit], _: Long) => () }
-      .start()
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try { source.addData((10L, null, Seq(1f, 2f, 3f))); q.processAllAvailable() }
-      finally q.stop()
-    }
-  }
-
-  test("s55 live drift monitor converges to batch q100 under shuffled multi-batch arrival") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamOps
-    import graft.operators.Drift
-    val docs = Tables.documents(spark, sfDir)
-    val v1 = docs.filter(col("doc_id") % 3 =!= 0)
-    val v2 = docs.filter(col("doc_id") % 2 =!= 0)
-    val batch = Drift.driftPsi(v1, v2).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
-    assert(batch.nonEmpty)
-    val expected = Drift.expectedCounts(v1)
-
-    val feed = v2.select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .collect().map(r => StreamOps.DriftDoc(r.getLong(0), r.getString(1),
-        r.getString(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-    val rng = new scala.util.Random(55L)
-    val shuffled = rng.shuffle(feed.toVector).toArray
-
-    val source = MemoryStream[StreamOps.DriftDoc]
-    // latest generation per feature (the s16 consumer contract)
-    val got = collection.mutable.Map[String, Map[(String, String), (Long, Long, Long, Long, Long)]]()
-    val q = StreamOps.streamDriftPsi(source.toDS(),
-      Drift.DriftBaseline(expected, 256L, 15L))
-      .writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.DriftRow], _: Long) =>
-        b.collect().groupBy(_.feature).foreach { case (f, rs) =>
-          got(f) = rs.map(r => (r.feature, r.bucket) ->
-            ((r.n1, r.n2, r.p_e8, r.q_e8, r.psi_contrib))).toMap
-        }
-        ()
-      }.start()
-    try {
-      val third = shuffled.length / 3 + 1
-      shuffled.grouped(third).foreach { ch =>
-        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    assert(got.values.flatten.toMap == batch,
-      "end-of-stream PSI generations must equal batch q100")
-
-    // q100b parity: the alert derived from the live report (summed
-    // contributions through the shared pinned constants) must equal
-    // the batch driftAlert verdicts
-    val batchAlert = Drift.driftAlert(v1, v2).collect()
-      .map(r => r.getString(0) -> r.getString(3)).toMap
-    val streamAlert = got.map { case (f, rows) =>
-      f -> Drift.alertLevel(rows.values.map(_._5).sum) }
-    assert(streamAlert == batchAlert,
-      s"live alert must equal batch: $streamAlert vs $batchAlert")
   }
 }
