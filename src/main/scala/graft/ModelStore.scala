@@ -293,14 +293,175 @@ object ModelStore {
   }
 
   // -------- typed per-family helpers: the families a registered
-  // -------- query or a contract test loads by name
+  // -------- query, a contract test or a frozen-model streaming twin
+  // -------- loads by name; each returns exactly the type its consumer
+  // -------- takes, so the deploy path is load(...) |> consumer(...)
 
-  /** q60 centroids: table `centroids` = (cid INT, vec ARRAY<BIGINT>). */
+  /** q60 centroids (s26 router; also q79/q86's assignment input):
+    * table `centroids` = (cid INT, vec ARRAY<BIGINT>).
+    */
+  def saveKmeans(spark: SparkSession, dir: String,
+                 centroids: Seq[(Int, Seq[Long])], version: Long,
+                 params: Map[String, String] = Map.empty): Manifest = {
+    require(centroids.nonEmpty, "refusing to persist an empty centroid set")
+    import spark.implicits._
+    save(spark, dir, "kmeans", version,
+      params + ("k" -> centroids.size.toString, "dim" -> centroids.head._2.size.toString),
+      Map("centroids" -> centroids.toDF("cid", "vec")))
+  }
+
   def loadKmeans(spark: SparkSession, dir: String): Seq[(Int, Seq[Long])] = {
     val (_, t) = load(spark, dir, "kmeans")
     t("centroids").collect() // k rows — the kmeansCentroids bounded protocol
       .map(r => (r.getInt(0), r.getSeq[Long](1).toSeq))
       .sortBy(_._1).toSeq
+  }
+
+  /** q65 PQ codebook (s28 encoder): table `codebook` =
+    * (sub INT, code INT, vec ARRAY<BIGINT>).
+    */
+  def savePq(spark: SparkSession, dir: String,
+             codebook: Map[(Int, Int), Seq[Long]], version: Long,
+             params: Map[String, String] = Map.empty): Manifest = {
+    require(codebook.nonEmpty, "refusing to persist an empty PQ codebook")
+    import spark.implicits._
+    val rows = codebook.toSeq.map { case ((m, j), c) => (m, j, c) }
+      .sortBy(x => (x._1, x._2))
+    save(spark, dir, "pq", version,
+      params + ("M" -> (rows.map(_._1).max + 1).toString,
+        "kcode" -> (rows.map(_._2).max + 1).toString),
+      Map("codebook" -> rows.toDF("sub", "code", "vec")))
+  }
+
+  def loadPq(spark: SparkSession, dir: String): Map[(Int, Int), Seq[Long]] = {
+    val (_, t) = load(spark, dir, "pq")
+    t("codebook").collect() // M·kcode rows — bounded
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toSeq).toMap
+  }
+
+  /** q82 SQ8 grid (s40 encoder): table `grid` =
+    * (pos INT, mn BIGINT, span BIGINT), position-ordered on load.
+    */
+  def saveSq8(spark: SparkSession, dir: String, grid: Seq[(Long, Long)],
+              version: Long, params: Map[String, String] = Map.empty): Manifest = {
+    require(grid.nonEmpty, "refusing to persist an empty SQ8 grid")
+    import spark.implicits._
+    save(spark, dir, "sq8", version, params + ("dim" -> grid.size.toString),
+      Map("grid" -> grid.zipWithIndex
+        .map { case ((mn, sp), i) => (i, mn, sp) }.toDF("pos", "mn", "span")))
+  }
+
+  def loadSq8(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
+    val (_, t) = load(spark, dir, "sq8")
+    t("grid").collect().sortBy(_.getInt(0)) // dim rows — bounded
+      .map(r => (r.getLong(1), r.getLong(2))).toSeq
+  }
+
+  /** q67 BPE merge rules (s31 tokenizer): table `rules` = bpeTrain's
+    * output (rank, lhs, rhs, cnt) verbatim; the load returns the
+    * rank-ordered (lhs, rhs) list streamBpeEncode consumes.
+    */
+  def saveBpeRules(spark: SparkSession, dir: String, rules: DataFrame,
+                   version: Long, params: Map[String, String] = Map.empty): Manifest =
+    save(spark, dir, "bpe", version, params, Map("rules" -> rules))
+
+  def loadBpeRules(spark: SparkSession, dir: String): Seq[(String, String)] = {
+    val (_, t) = load(spark, dir, "bpe")
+    t("rules").collect() // ≤ merges rows — bounded
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .sortBy(_._1).map(x => (x._2, x._3)).toSeq
+  }
+
+  /** q93 z-order grid (s50 encoder): table `grid` = one row
+    * (pmin, pmax, smin, smax).
+    */
+  def saveZGrid(spark: SparkSession, dir: String,
+                grid: (Long, Long, Long, Long), version: Long,
+                params: Map[String, String] = Map.empty): Manifest = {
+    import spark.implicits._
+    save(spark, dir, "zgrid", version, params,
+      Map("grid" -> Seq(grid).toDF("pmin", "pmax", "smin", "smax")))
+  }
+
+  def loadZGrid(spark: SparkSession, dir: String): (Long, Long, Long, Long) = {
+    val (_, t) = load(spark, dir, "zgrid")
+    val r = t("grid").head() // 1 row
+    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+  }
+
+  /** q71 dup-window table — the DUPLICATION-sized family: table
+    * `dup_windows` = (h STRING md5-hex, fdoc BIGINT, fpos INT), exactly
+    * ExactSubstr.dupWindowTable's rows. [[loadDupTable]] returns that
+    * Map (bounded by the same cap the builder asserts);
+    * [[loadDupTableDf]] returns the parquet frame directly, with no
+    * collect anywhere.
+    */
+  def saveDupTable(spark: SparkSession, dir: String,
+                   dup: Map[String, (Long, Int)], version: Long,
+                   params: Map[String, String] = Map.empty): Manifest = {
+    require(dup.nonEmpty, "refusing to persist an empty dup-window table")
+    import spark.implicits._
+    save(spark, dir, "dup_windows", version, params,
+      Map("dup_windows" -> dup.toSeq.map { case (h, (d, p)) => (h, d, p) }
+        .sortBy(_._1).toDF("h", "fdoc", "fpos")))
+  }
+
+  def loadDupTable(spark: SparkSession, dir: String): Map[String, (Long, Int)] =
+    loadDupTableDf(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getInt(2))).toMap
+
+  def loadDupTableDf(spark: SparkSession, dir: String): DataFrame =
+    load(spark, dir, "dup_windows")._2("dup_windows")
+
+  /** q72 Naive-Bayes classifier (s-family admission scorer): table
+    * `weights` = (bucket BIGINT, w BIGINT), exactly B rows (the
+    * streaming twin requires full bucket coverage); the class prior
+    * and bucket count ride in params.
+    */
+  def saveNbModel(spark: SparkSession, dir: String,
+                  model: graft.operators.Classifier.NbModel, version: Long,
+                  params: Map[String, String] = Map.empty): Manifest = {
+    require(model.weights.size == model.buckets,
+      s"NB model must cover all ${model.buckets} buckets, has ${model.weights.size}")
+    import spark.implicits._
+    save(spark, dir, "nb", version,
+      params + ("prior_q16" -> model.priorQ16.toString,
+        "buckets" -> model.buckets.toString),
+      Map("weights" -> model.weights.toSeq.sortBy(_._1).toDF("bucket", "w")))
+  }
+
+  def loadNbModel(spark: SparkSession, dir: String)
+      : graft.operators.Classifier.NbModel = {
+    val (m, t) = load(spark, dir, "nb")
+    graft.operators.Classifier.NbModel(
+      t("weights").collect() // B rows — bounded
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      m.params("prior_q16").toLong, m.params("buckets").toInt)
+  }
+
+  /** q101's trained unigram model (family `unigram`, s56's segmenter):
+    * table `pieces` = (piece STRING, cnt BIGINT, cost_q16 BIGINT) —
+    * vocab-sized; the segmentation maxLen rides in params (pieces must
+    * be walked on the grid they were trained with).
+    */
+  def saveUnigram(spark: SparkSession, dir: String,
+                  model: graft.operators.Unigram.Model, maxLen: Int,
+                  version: Long,
+                  params: Map[String, String] = Map.empty): Manifest = {
+    require(model.pieces.nonEmpty, "refusing to persist an empty unigram model")
+    import spark.implicits._
+    save(spark, dir, "unigram", version, params + ("max_len" -> maxLen.toString),
+      Map("pieces" -> model.pieces.sortBy(_._1).toDF("piece", "cnt", "cost_q16")))
+  }
+
+  def loadUnigram(spark: SparkSession, dir: String)
+      : (graft.operators.Unigram.Model, Int) = {
+    val (m, t) = load(spark, dir, "unigram")
+    (graft.operators.Unigram.Model(
+      t("pieces").collect() // vocab-sized — bounded
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1).toSeq),
+      m.params("max_len").toInt)
   }
 
   /** q103's incremental-curation state (family `curate_state`): the

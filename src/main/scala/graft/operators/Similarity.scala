@@ -1224,6 +1224,13 @@ object Similarity {
     Some((cents, ex))
   }
 
+  /** The trained q65 codebook alone (for s28's frozen-model streaming
+    * encoder): same fit, the exploded frames discarded.
+    */
+  def pqCodebook(embeddings: DataFrame, kcode: Int = 8,
+                 iters: Int = 2): Map[(Int, Int), Seq[Long]] =
+    pqFit(embeddings, kcode, iters).map(_._1).getOrElse(Map.empty)
+
   /** One encoding pass over the exploded frame: per (vector, sub) the
     * argmin codeword via array_min over (d2, cid) structs from
     * LITERAL codewords, dispatched on `sub` by a when-chain — a PURE
@@ -1385,6 +1392,20 @@ object Similarity {
       .select(col("vec_id"), col("pos"), col("code"),
         expr("(v - mn) - (code * sp) div 255").as("err"))
   }
+
+  /** The trained q82 grid alone — per-dimension (min, span) pairs in
+    * the quantized integer domain, position-ordered — for s40's
+    * frozen-model streaming encode (the kmeansCentroids/pqCodebook
+    * protocol: a drifting grid would re-encode history). ONE 64-group
+    * aggregate, one bounded collect.
+    */
+  def sq8Grid(embeddings: DataFrame): Seq[(Long, Long)] =
+    embeddings.select(
+        expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0 + 0.5) AS BIGINT) + 1048576)").as("q"))
+      .select(posexplode(col("q")).as(Seq("pos", "v")))
+      .groupBy(col("pos")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
+      .collect().sortBy(_.getInt(0))
+      .map(r => (r.getLong(1), r.getLong(2) - r.getLong(1))).toSeq
 
   /** The q82 oracle: identical quantize-shift, per-dim min/max as one
     * grouped aggregate, same truncating `//` (nonnegative domain makes

@@ -10,6 +10,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the per-record shingle and minhash helpers that reproduce the batch
   * q25/q38 hashing outside a query plan.
   *
+  * A few streaming twins of batch queries stay with it, each pinned
+  * row-exact against its batch operator in StreamingSpec: the keyed
+  * folds s24 (as-of join, q34), s48/s53 (SCD2 history with late-drop
+  * audit, q92) and s52 (k-anonymity groups, q97); s07 (exact dedup);
+  * and the stateless frozen-model maps s13 (q38), s26 (q60), s28
+  * (q65), s31 (q68), s35 (q72), s40 (q82) and s56 (q101b), whose
+  * models ModelStore persists.
+  *
   * Each op is a pure stream→stream transform usable under any source
   * (Kafka in production, MemoryStream in tests, files in the driver
   * environment): the reference's Kafka-topic plumbing is a *source*
@@ -254,6 +262,27 @@ object StreamOps {
     streamOrderReassembly(enriched)
   }
 
+  /** s07: streaming exact deduplication — the streaming analog of the
+    * q20 batch pass. Keyed on the content hash, not the payload, so
+    * dedup state is a fixed-width key per distinct document. With an
+    * event-time column + watermark, `withinWatermark` bounds state
+    * (late duplicates beyond the watermark pass through — the standard
+    * trade; unbounded mode is exact-forever at O(distinct) state).
+    */
+  def streamDedupExact(docs: DataFrame,
+                       eventTimeCol: Option[String] = None,
+                       watermark: String = "1 hour"): DataFrame = {
+    val hashed = docs.withColumn("text_hash",
+      md5(regexp_replace(lower(graft.operators.TextOps.wsTrim(col("text"))), "\\s+", " ")))
+    eventTimeCol match {
+      case Some(tsCol) =>
+        hashed.withWatermark(tsCol, watermark)
+          .dropDuplicatesWithinWatermark("text_hash")
+      case None =>
+        hashed.dropDuplicates("text_hash")
+    }
+  }
+
   /** s03: stream ⋈ static-table join (Streams.java:137/147 — joining
     * the order stream against KTable dims). The static side is a plain
     * DataFrame; Spark broadcasts it when small, exactly the
@@ -400,6 +429,234 @@ object StreamOps {
       }
   }
 
+  /** s48 per-key state: the OPEN SCD2 version plus the (ts, event_id)
+    * high-water mark that guards against stale cross-batch replays.
+    */
+  case class Scd2State(version: Long, state: Option[String],
+                       valid_from_us: Long, last_ts_us: Long, last_event_id: Long)
+
+  /** s48 output: one batch-q92 row in the micros domain; the open
+    * version re-emits each batch (Update mode) with `is_current` true
+    * until a change closes it.
+    */
+  case class Scd2Row(user_id: Long, version: Long, state: Option[String],
+                     valid_from_us: Long, valid_to_us: Option[Long],
+                     is_current: Boolean)
+
+  /** s48: q92's SCD Type-2 history maintained CONTINUOUSLY — the
+    * warehouse-dimension twin of s23 (s23 keeps "state now", this
+    * keeps the whole validity history): each arriving change CLOSES
+    * the open version (emitting it with its final valid_to) and opens
+    * the next; re-asserting the current state is a no-op (the
+    * IS-DISTINCT-FROM rule, null-safe — batch q92's contract).
+    *
+    * Batch-order contract (the s24 discipline): rows are folded in
+    * (ts_us, event_id) order WITHIN a batch — one batch, or any
+    * per-key-monotone batch split, is row-exact vs batch q92 on the
+    * final emission per (user, version). An event arriving BELOW the
+    * key's (ts, event_id) high-water mark is IGNORED (an online
+    * history cannot retroactively split an already-closed interval —
+    * the same no-retract class as s20/s24, spec-asserted), where the
+    * batch fold would have inserted it; in-order delivery is the
+    * converge condition.
+    *
+    * Scale: state is ONE open version + two longs per key (closed
+    * versions are emitted, never retained), hash-partitioned; per
+    * batch one fold pass per key, no sort beyond the per-key batch
+    * slice, no window.
+    */
+  /** One dead-letter row (s53): an arriving event REJECTED by its
+    * key's (ts, event_id) high-water mark, with the HWM that rejected
+    * it — the attribution an ingest SLA needs (which key, which event,
+    * how far behind the key's clock it arrived).
+    */
+  case class LateDrop(user_id: Long, event_id: Long, ts_us: Long,
+                      event_type: Option[String],
+                      hwm_ts_us: Long, hwm_event_id: Long)
+
+  /** s53 union output: `kind` = "version" (a batch-q92 row, the s48
+    * emission) or "late_drop" (a [[LateDrop]] flattened in) — one
+    * stream, two sinks at the writer (the foreachBatch split-by-kind
+    * pattern), so the audit needs NO second stateful query.
+    */
+  case class Scd2Emit(kind: String, user_id: Long,
+                      version: Long, state: Option[String], valid_from_us: Long,
+                      valid_to_us: Option[Long], is_current: Boolean,
+                      event_id: Long, ts_us: Long,
+                      hwm_ts_us: Long, hwm_event_id: Long)
+
+  /** THE s48/s53 fold — single definition so the audited and
+    * unaudited operators cannot drift: processes a batch's rows for
+    * one key in (ts_us, event_id) order against the open-version
+    * state, returning (closed+open version emissions, late drops,
+    * new state). The HWM advances only on ACCEPTED rows, and (the r12
+    * ADVICE fix) a key's initial null run opens no version — matching
+    * batch q92's null <=> null lag filter.
+    */
+  private def scd2FoldBatch(key: Long, batchRows: Seq[ChangelogEvent],
+                            st0: Option[Scd2State])
+      : (Seq[Scd2Row], Seq[LateDrop], Option[Scd2State]) = {
+    val out = collection.mutable.ArrayBuffer[Scd2Row]()
+    val drops = collection.mutable.ArrayBuffer[LateDrop]()
+    var st = st0.orNull
+    batchRows.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
+      val stale = st != null && (e.ts_us < st.last_ts_us ||
+        (e.ts_us == st.last_ts_us && e.event_id <= st.last_event_id))
+      if (stale)
+        drops += LateDrop(key, e.event_id, e.ts_us, Option(e.event_type),
+          st.last_ts_us, st.last_event_id)
+      else {
+        val et = Option(e.event_type)
+        if (st == null) {
+          if (et.isDefined)
+            st = Scd2State(1L, et, e.ts_us, e.ts_us, e.event_id)
+        } else if (et != st.state) { // null-safe: Option equality
+          out += Scd2Row(key, st.version, st.state, st.valid_from_us,
+            Some(e.ts_us), is_current = false)
+          st = Scd2State(st.version + 1, et, e.ts_us, e.ts_us, e.event_id)
+        } else
+          st = st.copy(last_ts_us = e.ts_us, last_event_id = e.event_id)
+      }
+    }
+    val opens =
+      if (st == null) Seq.empty
+      else Seq(Scd2Row(key, st.version, st.state,
+        st.valid_from_us, None, is_current = true))
+    (out.toSeq ++ opens, drops.toSeq, Option(st))
+  }
+
+  def streamScd2(changelog: Dataset[ChangelogEvent]): Dataset[Scd2Row] = {
+    import changelog.sparkSession.implicits._
+    changelog
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[Scd2State, Scd2Row](
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (key: Long, rows: Iterator[ChangelogEvent], state: GroupState[Scd2State]) =>
+          val (versions, _, st) = scd2FoldBatch(key, rows.toSeq, state.getOption)
+          st.foreach(state.update)
+          versions.iterator
+      }
+  }
+
+  /** s53: the s48 SCD2 stream WITH dead-letter accounting — the one
+    * streaming production surface the family left silent: every
+    * below-watermark arrival s48 ignores by contract (the s20/s24
+    * no-retract class) is COUNTED AND ATTRIBUTED here instead of
+    * vanishing. The fold is [[scd2FoldBatch]], shared verbatim with
+    * [[streamScd2]], so the version emissions are identical by
+    * construction and the audit rows are EXACTLY the events the
+    * unaudited twin dropped (spec-asserted); each drop carries the
+    * HWM that rejected it, so the SLA dashboard can histogram
+    * lateness (hwm_ts_us − ts_us) per key. State is unchanged (one
+    * open version + the HWM — late rows never touch it); the writer
+    * splits the union by `kind` into the dimension table and the
+    * dead-letter queue in one foreachBatch.
+    */
+  def streamScd2Audited(changelog: Dataset[ChangelogEvent]): Dataset[Scd2Emit] = {
+    import changelog.sparkSession.implicits._
+    changelog
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[Scd2State, Scd2Emit](
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (key: Long, rows: Iterator[ChangelogEvent], state: GroupState[Scd2State]) =>
+          val (versions, drops, st) = scd2FoldBatch(key, rows.toSeq, state.getOption)
+          st.foreach(state.update)
+          versions.iterator.map(v =>
+            Scd2Emit("version", v.user_id, v.version, v.state, v.valid_from_us,
+              v.valid_to_us, v.is_current, -1L, -1L, -1L, -1L)) ++
+            drops.iterator.map(d =>
+              Scd2Emit("late_drop", d.user_id, -1L, d.event_type, -1L,
+                None, is_current = false, d.event_id, d.ts_us,
+                d.hwm_ts_us, d.hwm_event_id))
+      }
+  }
+
+  /** The s24 tagged input: side 0 = QUOTE (an order version — t_us is
+    * o_orderdate as epoch micros, orderkey set), side 1 = QUERY (an
+    * event — t_us is the event time, event_id set). One stream carries
+    * both, the union-tag shape batch q34 uses.
+    */
+  case class AsofInput(user_id: Long, side: Int, t_us: Long,
+                       event_id: Long, orderkey: Long)
+
+  /** s24 output: batch q34's row with timestamps in epoch micros
+    * (None where the user had no quote at or before the event). */
+  case class AsofOut(event_id: Long, user_id: Long, event_ts_us: Long,
+                     last_orderkey: Option[Long], last_orderdate_us: Option[Long])
+
+  /** s24: the as-of join run CONTINUOUSLY — each arriving event is
+    * enriched with the latest order version at or before its event
+    * time, which is exactly what the reference's stream-KTable join
+    * semantics deliver (the KTable holds "the latest value as of now",
+    * Streams.java:137; batch q34 reconstructs it point-in-time,
+    * this maintains it live).
+    *
+    * State per user: the quote book — (o_orderdate_us → max orderkey),
+    * stored sorted by date. Bounded by DISTINCT order dates per key
+    * (quotes on the same date compact to max orderkey, batch q34's
+    * pre-dedup), i.e. the compacted-topic retention a KTable holds; a
+    * deployment facing unbounded version churn adds watermark-based
+    * eviction of versions older than the event watermark.
+    *
+    * Batch-order contract (the s16/s17 as-of-ARRIVAL discipline):
+    * within a batch, quotes fold into the book BEFORE any query is
+    * answered (the GlobalKTable bootstrap order — the reference
+    * populates dim tables before streams flow) and queries are
+    * answered in (t_us, event_id) order; a quote at t == query-t IS
+    * visible (inclusive as-of, batch q34's (t, side) sort). So a run
+    * whose quotes arrive no later than their queries — one batch, or
+    * dims-first batches — is ROW-EXACT vs batch q34. A quote arriving
+    * in a LATER batch than a query it would have matched does NOT
+    * retract the already-emitted row (an online enricher cannot
+    * retract; the same keep-first divergence class as s20, asserted
+    * both ways in the spec).
+    *
+    * Scale: one shuffle on user_id per batch; state lookups are a
+    * sorted scan per query (versions-per-key bounded); no sort, no
+    * window, no dim re-read per batch.
+    */
+  def streamAsofJoin(inputs: Dataset[AsofInput]): Dataset[AsofOut] = {
+    import inputs.sparkSession.implicits._
+    inputs
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[List[(Long, Long)], AsofOut](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (key: Long, rows: Iterator[AsofInput], state: GroupState[List[(Long, Long)]]) =>
+          val rs = rows.toSeq
+          // 1. quotes first: fold into the book, same-date compaction
+          //    to max orderkey (batch q34's per-(user, date) pre-dedup)
+          var book: Map[Long, Long] = state.getOption.getOrElse(Nil).toMap
+          val quotes = rs.filter(_.side == 0)
+          quotes.foreach { qr =>
+            book = book.updated(qr.t_us,
+              math.max(qr.orderkey, book.getOrElse(qr.t_us, Long.MinValue)))
+          }
+          if (quotes.nonEmpty) state.update(book.toList.sortBy(_._1))
+          val sorted = book.toSeq.sortBy(_._1)
+          // 2. queries in (t, event_id) order — iterator order is a
+          //    shuffle artifact (the s12 class of fix)
+          rs.filter(_.side == 1).sortBy(r => (r.t_us, r.event_id)).iterator.map { e =>
+            val m = sorted.takeWhile(_._1 <= e.t_us).lastOption
+            AsofOut(e.event_id, key, e.t_us, m.map(_._2), m.map(_._1))
+          }
+      }
+  }
+
+  /** The batch tokenization (wsTrim → lower → split → drop empties),
+    * evaluated INSIDE executors — byte-identical to the q39/q40/q45
+    * token stream; the s35 scorer featurizes with it.
+    */
+  def normTokens(text: String): Array[String] =
+    // null-safe: the batch twins evaluate split(lower(NULL)) to NULL
+    // and explode nothing — one bad record must degrade the same way
+    // here, not kill the query with an NPE
+    if (text == null) Array.empty
+    else text.replaceAll("^\\s+|\\s+$", "")
+      // Locale.ROOT: Spark's lower() is locale-independent; the JVM
+      // default-locale overload would break the row-exact-vs-batch
+      // contracts under e.g. a Turkish locale ('I' → dotless i)
+      .toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+
   /** Distinct word n-gram poly-hashes of one text, evaluated INSIDE
     * executors — IDENTICAL normalization + hashing to the batch
     * `Dedup.postings` (wsTrim → lower → split → n-gram join → base-31
@@ -438,6 +695,10 @@ object StreamOps {
     }
   }
 
+  /** s13 output: one row per streamed document — the q38 columns. */
+  case class ContamReport(doc_id: Long, n_shingles: Long, n_overlap: Long,
+                          contaminated: Long)
+
   /** Collect a benchmark's distinct shingle hashes to the driver —
     * eval sets are small by definition (thousands of docs against a
     * corpus of billions), so the set broadcasts; the same assumption
@@ -449,6 +710,279 @@ object StreamOps {
     graft.operators.Dedup.postings(benchmark, shingleN)
       .select(col("shingle")).distinct()
       .collect().map(_.getLong(0)).toSet
+  }
+
+  /** s52 output: one QI-group disposition row (the q97 group table —
+    * the per-row suppression join is downstream batch work, the s42
+    * close-of-stream discipline).
+    */
+  case class KanonGroup(nk: Long, seg: String, bb: Long,
+                        group_size: Long, released: Boolean)
+
+  /** s52: STREAMING k-anonymity group dispositions — q97's group-size
+    * table maintained as customers arrive: keyed state per QI triple
+    * is ONE counter; a group crossing k flips suppressed→released
+    * (Update mode re-emits the disposition — monotone, a release can
+    * never un-release, spec-asserted). End-of-stream group table is
+    * ROW-EXACT vs batch q97's sizes under any batching.
+    */
+  def streamKanonGroups(cust: Dataset[(Long, Long, String, Double)],
+                        k: Int = 5): Dataset[KanonGroup] = {
+    import cust.sparkSession.implicits._
+    cust.groupByKey(r => (r._2, r._3, math.floor(r._4 / 1000.0).toLong))
+      .flatMapGroupsWithState[Long, KanonGroup](
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (key, rows, state: GroupState[Long]) =>
+          val n = state.getOption.getOrElse(0L) + rows.size
+          state.update(n)
+          Iterator.single(KanonGroup(key._1, key._2, key._3, n, n >= k))
+      }
+  }
+
+  /** s13: STREAMING train/eval decontamination — q38 as an online
+    * admission check (the shape an ingest service runs: score each
+    * arriving document against the frozen eval set BEFORE it enters
+    * the training corpus). Stateless: the benchmark set rides as a
+    * broadcast value, each doc maps to its overlap report — no state
+    * store, no shuffle, scales with input rate. Shingle bytes are
+    * IDENTICAL to batch q38 (shared wordShingleHashes), so the spec
+    * asserts row-exact parity with `TextOps.decontaminate`.
+    */
+  def streamDecontaminate(docs: Dataset[(Long, String)], benchShingles: Set[Long],
+                          shingleN: Int = 4, minOverlap: Int = 1): Dataset[ContamReport] = {
+    import docs.sparkSession.implicits._
+    val bc = docs.sparkSession.sparkContext.broadcast(benchShingles)
+    docs.map { case (id, text) =>
+      val shs = wordShingleHashes(text, shingleN)
+      val bench = bc.value
+      val overlap = shs.count(bench.contains)
+      ContamReport(id, shs.size.toLong, overlap.toLong,
+        if (overlap >= minOverlap) 1L else 0L)
+    }
+  }
+
+  /** s26 output: the q60 columns — one assignment per vector. */
+  case class KmAssign(vec_id: Long, cluster: Long, d2: Long)
+
+  /** s26: STREAMING k-means assignment — q60 as an online router
+    * (the shape a training pipeline runs once a clustering exists:
+    * every arriving embedding is bucketed to its semantic shard by a
+    * FROZEN codebook; the model must not drift with the stream).
+    * Stateless: the k·dim centroid table rides as a broadcast, each
+    * vector maps to its (cluster, d2) — no state store, no shuffle.
+    * The quantization (`floor(v·2²⁰+0.5)+2²⁰`) and the (d2 ASC, cid
+    * ASC) argmin replay batch q60's integer arithmetic EXACTLY, so
+    * streaming the training corpus against
+    * `Similarity.kmeansCentroids` reproduces q60 row-for-row
+    * (spec-asserted).
+    */
+  def streamKmeansAssign(vecs: Dataset[(Long, Seq[Float])],
+                         centroids: Seq[(Int, Seq[Long])]): Dataset[KmAssign] = {
+    import vecs.sparkSession.implicits._
+    require(centroids.nonEmpty, "frozen codebook must be non-empty")
+    val bc = vecs.sparkSession.sparkContext.broadcast(
+      centroids.map { case (cid, c) => (cid, c.toArray) }.toArray)
+    vecs.map { case (id, emb) =>
+      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
+      var bestD = Long.MaxValue
+      var bestC = Int.MaxValue
+      bc.value.foreach { case (cid, c) =>
+        var d = 0L
+        var i = 0
+        while (i < q.length) { val x = q(i) - c(i); d += x * x; i += 1 }
+        if (d < bestD || (d == bestD && cid < bestC)) { bestD = d; bestC = cid }
+      }
+      KmAssign(id, bestC.toLong, bestD)
+    }
+  }
+
+  /** s28 output: the q65 columns — M rows per vector. */
+  case class PqCode(vec_id: Long, sub: Long, code: Long, d2: Long)
+
+  /** s28: STREAMING PQ ENCODING — q65 as an online compressor: every
+    * arriving embedding is encoded to its M sub-codes by a FROZEN
+    * codebook (Similarity.pqCodebook — the s26 frozen-model protocol:
+    * a drifting codebook would re-encode history). Stateless: the
+    * M·kcode·PQ_D-long codeword table rides as a broadcast, each
+    * vector flatMaps to M (sub, code, d2) rows — no state store, no
+    * shuffle. The quantization and (d2 ASC, cid ASC) argmin replay
+    * batch q65's integer arithmetic EXACTLY, so streaming the
+    * training corpus reproduces q65 row-for-row (spec-asserted).
+    */
+  def streamPqEncode(vecs: Dataset[(Long, Seq[Float])],
+                     codebook: Map[(Int, Int), Seq[Long]]): Dataset[PqCode] = {
+    import vecs.sparkSession.implicits._
+    require(codebook.nonEmpty, "frozen PQ codebook must be non-empty")
+    val M = codebook.keys.map(_._1).max + 1
+    val subDim = codebook.values.head.length
+    val bc = vecs.sparkSession.sparkContext.broadcast(
+      codebook.map { case ((m, j), c) => (m, j) -> c.toArray })
+    vecs.flatMap { case (id, emb) =>
+      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
+      (0 until M).iterator.map { m =>
+        var bestD = Long.MaxValue
+        var bestJ = Int.MaxValue
+        bc.value.foreach { case ((mm, j), c) =>
+          if (mm == m) {
+            var d = 0L
+            var i = 0
+            while (i < subDim) { val x = q(m * subDim + i) - c(i); d += x * x; i += 1 }
+            if (d < bestD || (d == bestD && j < bestJ)) { bestD = d; bestJ = j }
+          }
+        }
+        PqCode(id, m.toLong, bestJ.toLong, bestD)
+      }
+    }
+  }
+
+  /** s40 output: the q82 columns — one row per dimension. */
+  case class Sq8Code(vec_id: Long, pos: Long, code: Long, err: Long)
+
+  /** s40: STREAMING SQ8 ENCODING — q82 as an online compressor: every
+    * arriving embedding is encoded to its per-dimension byte codes by
+    * a FROZEN grid (Similarity.sq8Grid — the s26/s28 frozen-model
+    * protocol: a drifting grid would re-encode history). Stateless:
+    * the 64 (min, span) pairs ride as a broadcast-closure array, each
+    * vector flatMaps to its 64 (pos, code, err) rows — no state
+    * store, no shuffle. The quantize-shift and truncating division
+    * replay batch q82's integer arithmetic EXACTLY on in-grid inputs,
+    * so streaming the training corpus reproduces q82 row-for-row
+    * under any batching (spec-asserted).
+    *
+    * Novel inputs (a streamed vector OUTSIDE the frozen grid — the
+    * case batch training never sees) CLAMP to the grid ends, the
+    * production SQ rule: code pins to 0/255 and `err` carries the
+    * signed residual vs the clamped reconstruction — attributable,
+    * never an exception (the s36 unknown-lang-→-tail discipline).
+    * In-grid rows never clamp, so the batch contract is untouched.
+    */
+  def streamSq8Encode(vecs: Dataset[(Long, Seq[Float])],
+                      grid: Seq[(Long, Long)]): Dataset[Sq8Code] = {
+    import vecs.sparkSession.implicits._
+    require(grid.nonEmpty, "frozen SQ8 grid must be non-empty")
+    val g = grid.toArray
+    vecs.flatMap { case (id, emb) =>
+      val q = emb.toArray.map(v => math.floor(v.toDouble * 1048576.0 + 0.5).toLong + 1048576L)
+      q.indices.iterator.map { i =>
+        val (mn, sp) = g(i)
+        val x = q(i) - mn
+        // in-grid (0 <= x <= sp): identical to batch q82 (nonnegative
+        // operands make / floor); out-of-grid: clamp to the byte ends
+        val code =
+          if (sp <= 0L) 0L
+          else if (x < 0L) 0L
+          else if (x > sp) 255L
+          else x * 255L / sp
+        val err = if (sp <= 0L) x else x - code * sp / 255L
+        Sq8Code(id, i.toLong, code, err)
+      }
+    }
+  }
+
+  /** s31 output: the q68 columns — one row per arriving document. */
+  case class BpeDoc(doc_id: Long, n_subwords: Long, subtext: String)
+
+  /** s31: STREAMING BPE ENCODING — q68 as an online tokenizer: every
+    * arriving document is subword-encoded by a FROZEN rule list
+    * (Bpe.bpeTrain's output collected once — the s26/s28 frozen-model
+    * protocol: evolving rules would re-segment history). Stateless: a
+    * rank-ordered array of (pattern, replacement) pairs rides as a
+    * broadcast, each doc maps to its subword stream with plain
+    * java String.replace per rule — the same left-to-right
+    * non-overlapping semantics as the batch expression and the DuckDB
+    * oracle (the q67 run contract), so streaming the training corpus
+    * reproduces q68 row-for-row (spec-asserted).
+    */
+  def streamBpeEncode(docs: Dataset[(Long, String)],
+                      rules: Seq[(String, String)]): Dataset[BpeDoc] = {
+    import docs.sparkSession.implicits._
+    require(rules.nonEmpty, "frozen BPE rule list must be non-empty")
+    val SEP = "\u0001"
+    val bc = docs.sparkSession.sparkContext.broadcast(rules.map { case (l, r) =>
+      (SEP + l + SEP + r + SEP, SEP + l + r + SEP)
+    }.toArray)
+    docs.map { case (id, text) =>
+      val toks = Option(text).getOrElse("").trim.toLowerCase(java.util.Locale.ROOT)
+        .split("\\s+").filter(t => t.nonEmpty && !t.contains(SEP))
+      val subtext = toks.map { t =>
+        var packed = SEP + t.map(c => s"$c$SEP").mkString
+        bc.value.foreach { case (p, s) => packed = packed.replace(p, s) }
+        packed.replace(SEP, " ").trim
+      }.mkString(" ")
+      val n = if (subtext.isEmpty) 0L else subtext.split(" ").length.toLong
+      BpeDoc(id, n, subtext)
+    }
+  }
+
+  /** s35 output: the q72 columns — one row per arriving document. */
+  case class NbScore(doc_id: Long, is_train: Long, n_feats: Long,
+                     score_q16: Long, pred: Long)
+
+  /** s35: STREAMING NB classification — q72 as an online scorer:
+    * every arriving document is scored by the FROZEN weight table +
+    * prior (Classifier.nbModel, exactly B entries — the s26/s28/s31
+    * frozen-model protocol: a live-updating model would re-score
+    * history). Every possible bucket has a weight (add-one smoothing
+    * covers unseen features), so scoring is total: stateless
+    * broadcast + one pure map, no shuffle, no state. Streams are
+    * ROW-EXACT vs batch q72 on any corpus (spec, multi-batch) because
+    * per-doc scores depend only on the doc and the frozen model.
+    */
+  def streamNbClassify(docs: Dataset[(Long, String)],
+                       model: graft.operators.Classifier.NbModel): Dataset[NbScore] = {
+    import docs.sparkSession.implicits._
+    require(model.weights.size == model.buckets, "frozen model must cover all buckets")
+    val bc = docs.sparkSession.sparkContext.broadcast(model)
+    val ha = graft.operators.Dedup.ReplayableHash.a(218)
+    val hb = graft.operators.Dedup.ReplayableHash.b(218)
+    val P = graft.operators.Dedup.ReplayableHash.P
+    docs.map { case (id, text) =>
+      val m = bc.value
+      val ts = normTokens(text)
+      val feats = ts.iterator ++
+        ts.iterator.sliding(2).withPartial(false).map(_.mkString(" "))
+      var n = 0L; var s = m.priorQ16
+      feats.foreach { f =>
+        val b = ((ha * graft.functions.PolyHashExpr.hash(f) + hb) % P) % m.buckets
+        n += 1L; s += m.weights(b)
+      }
+      NbScore(id, if (id % 2 == 0) 1L else 0L, n, s, if (s >= 0L) 1L else 0L)
+    }
+  }
+
+  /** s56 output: the q101b columns per arrival. */
+  case class UnigramSegDoc(doc_id: Long, n_pieces: Long, subtext: String)
+
+  /** s56: STREAMING UNIGRAM ENCODE — q101b as a continuous tokenizer
+    * service: each arriving document is Viterbi-segmented against the
+    * FROZEN q101 model (the s25/s31 frozen-model rule — a live-trained
+    * vocab would re-segment history; ModelStore family `unigram` is
+    * the artifact). A pure stateless map — the cheapest streaming
+    * class: no state, no shuffle, trivially row-exact vs batch q101b
+    * under any batching (ModelStoreSpec asserts it from the LOADED
+    * artifact; StreamingSpec under shuffled multi-batch arrival). The
+    * normalization is the batch column chain's JVM twin
+    * (lower(wsTrim(coalesce(text,''))) — Locale.ROOT lowering, the
+    * s21 GreedyTokenStats parity precedent; the segmenter itself
+    * skips whitespace, so the trim is absorbed).
+    */
+  def streamUnigramEncode(docs: Dataset[(Long, String)],
+                          model: graft.operators.Unigram.Model,
+                          maxLen: Int = 4): Dataset[UnigramSegDoc] = {
+    import docs.sparkSession.implicits._
+    require(model.pieces.nonEmpty, "frozen unigram model must be non-empty")
+    val bc = docs.sparkSession.sparkContext.broadcast {
+      val m = new java.util.HashMap[String, java.lang.Long]()
+      model.costs.foreach { case (p, c) => m.put(p, c) }
+      m
+    }
+    docs.map { case (id, text) =>
+      val norm = (if (text == null) "" else text)
+        .toLowerCase(java.util.Locale.ROOT)
+      val pieces = graft.functions.UnigramSegExpr.segment(
+        norm, bc.value, maxLen, graft.operators.Unigram.UnkCostQ16)
+      UnigramSegDoc(id, pieces.length.toLong, pieces.mkString(" "))
+    }
   }
 }
 

@@ -1,16 +1,27 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 
-/** ModelStore's generic contract: the manifest round-trips and
-  * refuses a wrong family or an uncommitted directory; a tampered table
-  * refuses at load; duplication-sized families keep the row-count
-  * proxy; versioned releases list, pin and garbage-collect. The one
-  * typed family a registered query loads (`curate_state`, q103) is
-  * pinned in PipelineSpec.
+/** ModelStore contracts. The generic ones: the manifest round-trips
+  * and refuses a wrong family or an uncommitted directory; a tampered
+  * table refuses at load; duplication-sized families keep the
+  * row-count proxy; versioned releases list, pin and garbage-collect.
+  * Then, per typed family: batch-train → SAVE → LOAD → run the
+  * frozen-model consumer with the LOADED artifact (never the
+  * in-process value) → assert row-exact equality against the batch
+  * operator. This is the serialize/load handoff a production ingest
+  * service performs — the reference's analog is bootstrapping KTable
+  * state from its compacted topics (Streams.java:102-115) before the
+  * stream flows. The typed family a registered query loads
+  * (`curate_state`, q103) is pinned in PipelineSpec.
   */
 class ModelStoreSpec extends AnyFunSuite {
   import SparkTestSession._
+  import graft.sources.Tables
+  import graft.streaming.StreamOps
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"modelstore_$name").toString
@@ -145,5 +156,217 @@ class ModelStoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ModelStore.gc(spark, base, keepN = 0))
     assert(ModelStore.loadKmeans(spark,
       ModelStore.resolve(spark, base)) == Seq((3, Seq(3L))))
+  }
+
+  test("kmeans: stream from the LOADED artifact is row-exact vs batch q60") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val embs = Tables.embeddings(spark, sfDir)
+    val batch = graft.operators.Similarity.kmeansAssign(embs, k = 8, iters = 3)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val cents = graft.operators.Similarity.kmeansCentroids(embs, k = 8, iters = 3)
+    val dir = tmp("kmeans")
+    ModelStore.saveKmeans(spark, dir, cents, version = 1L)
+    val loaded = ModelStore.loadKmeans(spark, dir)
+    assert(loaded == cents.sortBy(_._1), "centroids must round-trip bit-exact")
+
+    val source = MemoryStream[(Long, Seq[Float])]
+    val got = collection.mutable.Map[Long, (Long, Long)]()
+    val q = StreamOps.streamKmeansAssign(source.toDS(), loaded)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KmAssign], _: Long) =>
+        b.collect().foreach(r => got(r.vec_id) = (r.cluster, r.d2)); ()
+      }.start()
+    try {
+      val rows = embs.select(col("vec_id"), col("embedding"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+      rows.grouped(rows.length / 2 + 1).foreach { ch =>
+        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(got.toMap == batch, "loaded-artifact stream must equal batch q60")
+  }
+
+  test("pq: stream from the LOADED codebook is row-exact vs batch q65") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val embs = Tables.embeddings(spark, sfDir)
+    val batch = graft.operators.Similarity.pqCodes(embs, kcode = 16, iters = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val book = graft.operators.Similarity.pqCodebook(embs, kcode = 16, iters = 3)
+    val dir = tmp("pq")
+    ModelStore.savePq(spark, dir, book, version = 3L)
+    assert(ModelStore.manifest(spark, dir).params("kcode") == "16")
+    val loaded = ModelStore.loadPq(spark, dir)
+    assert(loaded == book, "codebook must round-trip bit-exact")
+
+    val source = MemoryStream[(Long, Seq[Float])]
+    val got = collection.mutable.Map[(Long, Long), (Long, Long)]()
+    val q = StreamOps.streamPqEncode(source.toDS(), loaded)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PqCode], _: Long) =>
+        b.collect().foreach(r => got((r.vec_id, r.sub)) = (r.code, r.d2)); ()
+      }.start()
+    try {
+      val rows = embs.select(col("vec_id"), col("embedding"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+      source.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
+    } finally q.stop()
+    assert(got.toMap == batch, "loaded-artifact stream must equal batch q65")
+  }
+
+  test("sq8: stream from the LOADED grid is row-exact vs batch q82") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val embs = Tables.embeddings(spark, sfDir)
+    val batch = graft.operators.Similarity.sq8Codes(embs)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val grid = graft.operators.Similarity.sq8Grid(embs)
+    val dir = tmp("sq8")
+    ModelStore.saveSq8(spark, dir, grid, version = 2L)
+    val loaded = ModelStore.loadSq8(spark, dir)
+    assert(loaded == grid, "grid must round-trip bit-exact, position order preserved")
+
+    val source = MemoryStream[(Long, Seq[Float])]
+    val got = collection.mutable.Map[(Long, Long), (Long, Long)]()
+    val q = StreamOps.streamSq8Encode(source.toDS(), loaded)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Sq8Code], _: Long) =>
+        b.collect().foreach(r => got((r.vec_id, r.pos)) = (r.code, r.err)); ()
+      }.start()
+    try {
+      val rows = embs.select(col("vec_id"), col("embedding"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+      source.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
+    } finally q.stop()
+    assert(got.toMap == batch, "loaded-artifact stream must equal batch q82")
+  }
+
+  test("bpe: stream from the LOADED rules is row-exact vs batch q68") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val d = Tables.documents(spark, sfDir)
+    val batch = graft.operators.Bpe.bpeEncode(d)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val rulesDf = graft.operators.Bpe.bpeTrain(d)
+    val dir = tmp("bpe")
+    ModelStore.saveBpeRules(spark, dir, rulesDf, version = 24L,
+      params = Map("merges" -> "24", "vocabCap" -> "256"))
+    val loaded = ModelStore.loadBpeRules(spark, dir)
+    assert(loaded.size == 24, "rank-ordered rule list must load complete")
+    assert(loaded == rulesDf.collect().sortBy(_.getLong(0))
+      .map(r => (r.getString(1), r.getString(2))).toSeq)
+
+    val source = MemoryStream[(Long, String)]
+    val got = collection.mutable.Map[Long, (Long, String)]()
+    val q = StreamOps.streamBpeEncode(source.toDS(), loaded)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.BpeDoc], _: Long) =>
+        b.collect().foreach(r => got(r.doc_id) = (r.n_subwords, r.subtext)); ()
+      }.start()
+    try {
+      val rows = d.select(col("doc_id"), col("text"))
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      source.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
+    } finally q.stop()
+    assert(got.toMap == batch, "loaded-artifact stream must equal batch q68")
+  }
+
+  test("zgrid: stream from the LOADED grid is row-exact vs batch q93's encode") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.operators.Layout
+    val li = Tables.lineitem(spark, sfDir)
+      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
+    val grid = Layout.zGrid(li)
+    val dir = tmp("zgrid")
+    ModelStore.saveZGrid(spark, dir, grid, version = 9L)
+    val (pmin, pmax, smin, smax) = ModelStore.loadZGrid(spark, dir)
+    assert((pmin, pmax, smin, smax) == grid)
+    val batch = Layout.zorderEncode(li).collect()
+      .map(r => (r.getLong(0), r.getInt(1)) -> ((r.getLong(4), r.getLong(5)))).toMap
+    val rows = li.as[(Long, Int, Long, Long)].collect()
+    val got = collection.mutable.Map[(Long, Int), (Long, Long)]()
+    val source = MemoryStream[(Long, Int, Long, Long)]
+    val q = Layout.zEncodeFrozen(
+        source.toDS().toDF("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
+        pmin, pmax, smin, smax)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.collect().foreach(r => got((r.getLong(0), r.getInt(1))) = ((r.getLong(4), r.getLong(5))))
+        ()
+      }.start()
+    try { source.addData(rows.toIndexedSeq: _*); q.processAllAvailable() }
+    finally q.stop()
+    assert(got.toMap == batch, "loaded-grid stream encode must equal batch q93")
+  }
+
+  test("dup_windows: the duplication-sized family round-trips without a collect on the save path") {
+    val docs = Tables.documents(spark, sfDir)
+    val dup = graft.operators.ExactSubstr.dupWindowTable(docs, k = 6)
+    assert(dup.nonEmpty, "corpus must have planted dup windows for this test to bite")
+    val dir = tmp("dup")
+    ModelStore.saveDupTable(spark, dir, dup, version = 4L)
+    assert(ModelStore.loadDupTable(spark, dir) == dup,
+      "digest -> first-occurrence map must round-trip exactly")
+    // the scale path: the parquet frame itself, for stream-static joins
+    assert(ModelStore.loadDupTableDf(spark, dir).count() == dup.size)
+  }
+
+  test("nb: stream classification from the LOADED model is row-exact vs batch q72") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val d = Tables.documents(spark, sfDir)
+    val batch = graft.operators.Classifier.nbClassify(d).collect()
+      .map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    val model = graft.operators.Classifier.nbModel(d)
+    val dir = tmp("nb")
+    ModelStore.saveNbModel(spark, dir, model, version = 6L)
+    val loaded = ModelStore.loadNbModel(spark, dir)
+    assert(loaded == model, "bucket weights + prior must round-trip exactly")
+
+    val source = MemoryStream[(Long, String)]
+    val got = collection.mutable.Map[Long, (Long, Long, Long, Long)]()
+    val q = StreamOps.streamNbClassify(source.toDS(), loaded)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.NbScore], _: Long) =>
+        b.collect().foreach(r =>
+          got(r.doc_id) = (r.is_train, r.n_feats, r.score_q16, r.pred)); ()
+      }.start()
+    try {
+      source.addData(d.select(col("doc_id"), col("text"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toIndexedSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(got.toMap == batch, "loaded-artifact stream must equal batch q72")
+  }
+
+  test("unigram: the s56 encoder from the LOADED artifact is row-exact vs batch q101b") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.operators.Unigram
+    val docs = Tables.documents(spark, sfDir)
+    val batch = Unigram.unigramEncode(docs).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
+    val model = Unigram.unigramFit(docs)
+    val dir = tmp("unigram")
+    ModelStore.saveUnigram(spark, dir, model, maxLen = 4, version = 3L)
+    val (loaded, maxLen) = ModelStore.loadUnigram(spark, dir)
+    assert(loaded.pieces.toSet == model.pieces.toSet && maxLen == 4,
+      "pieces + grid must round-trip exactly (order is not part of the model)")
+
+    val feed = docs.select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    val source = MemoryStream[(Long, String)]
+    val got = collection.mutable.Map[Long, (Long, String)]()
+    val q = StreamOps.streamUnigramEncode(source.toDS(), loaded, maxLen)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.UnigramSegDoc], _: Long) =>
+        b.collect().foreach(d => got(d.doc_id) = ((d.n_pieces, d.subtext))); ()
+      }.start()
+    try { source.addData(feed.toIndexedSeq: _*); q.processAllAvailable() }
+    finally q.stop()
+    assert(got.toMap == batch, "loaded-artifact encoder must equal batch q101b")
   }
 }

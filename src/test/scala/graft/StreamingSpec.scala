@@ -238,6 +238,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(j.filter(abs(col("order_total") - col("stream_total")) > 1e-3).count() == 0)
   }
 
+  test("s07 streaming dedup emits each distinct document exactly once") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val docs = Tables.documents(spark, sfDir)
+      .select("doc_id", "text", "lang", "source", "n_chars")
+      .as[graft.sources.Models.Document].collect()
+    // duplicate the whole corpus across two batches under new ids
+    val clones = docs.map(d => d.copy(doc_id = d.doc_id + 100000))
+
+    val source = MemoryStream[graft.sources.Models.Document]
+    val q = graft.streaming.StreamOps.streamDedupExact(source.toDF())
+      .writeStream.format("memory").queryName("s07_out")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      source.addData(docs.toSeq); q.processAllAvailable()
+      source.addData(clones.toSeq); q.processAllAvailable()
+    } finally q.stop()
+
+    val out = spark.table("s07_out")
+    assert(out.count() == docs.length)             // clones all suppressed
+    assert(out.select("text_hash").distinct().count() == docs.length)
+    assert(out.filter(col("doc_id") >= 100000).count() == 0) // first wins
+  }
+
   private def freshDir(name: String): String = {
     val dir = new java.io.File(s"/tmp/graft-test-$name")
     if (dir.exists()) { import scala.reflect.io.Directory; new Directory(dir).deleteRecursively() }
@@ -628,6 +652,193 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("s13 streaming decontamination is row-exact vs batch q38") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val docsAll = Tables.documents(spark, sfDir)
+    val bench = docsAll.filter(col("doc_id") % 97 === 0)
+    val corpus = docsAll.filter(col("doc_id") % 97 =!= 0)
+
+    val batch = graft.operators.TextOps.decontaminate(corpus, bench)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+
+    val benchSet = StreamOps.benchmarkShingleSet(bench)
+    val source = MemoryStream[(Long, String)]
+    val got = collection.mutable.Map[Long, (Long, Long, Long)]()
+    val q = StreamOps.streamDecontaminate(source.toDS(), benchSet)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.ContamReport], _: Long) =>
+        b.collect().foreach(r =>
+          got(r.doc_id) = (r.n_shingles, r.n_overlap, r.contaminated))
+        ()
+      }.start()
+    try {
+      val rows = corpus.select(col("doc_id"), col("text"))
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      // stream in two uneven batches
+      source.addData(rows.take(rows.length / 3).toSeq: _*)
+      q.processAllAvailable()
+      source.addData(rows.drop(rows.length / 3).toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(got.size == batch.size, s"stream ${got.size} vs batch ${batch.size}")
+    val mismatches = batch.collect {
+      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
+    }
+    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
+    // and some contamination actually occurred, so the parity is non-vacuous
+    assert(got.values.exists(_._3 == 1L))
+  }
+
+  test("s26 streaming k-means assignment is row-exact vs batch q60 under the frozen codebook") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val embs = Tables.embeddings(spark, sfDir)
+    val batch = graft.operators.Similarity.kmeansAssign(embs, k = 8, iters = 3)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val cents = graft.operators.Similarity.kmeansCentroids(embs, k = 8, iters = 3)
+    assert(cents.size == 8)
+
+    val source = MemoryStream[(Long, Seq[Float])]
+    val got = collection.mutable.Map[Long, (Long, Long)]()
+    val q = StreamOps.streamKmeansAssign(source.toDS(), cents)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KmAssign], _: Long) =>
+        b.collect().foreach(r => got(r.vec_id) = (r.cluster, r.d2)); ()
+      }.start()
+    try {
+      val rows = embs.select(col("vec_id"), col("embedding"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+      source.addData(rows.take(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+      source.addData(rows.drop(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(got.size == batch.size)
+    val mismatches = batch.collect {
+      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
+    }
+    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
+    // non-vacuous: more than one cluster is actually used
+    assert(got.values.map(_._1).toSet.size > 1)
+  }
+
+  test("s28 streaming PQ encoding is row-exact vs batch q65 under the frozen codebook") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val embs = Tables.embeddings(spark, sfDir)
+    val batch = graft.operators.Similarity.pqCodes(embs, kcode = 16, iters = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val book = graft.operators.Similarity.pqCodebook(embs, kcode = 16, iters = 3)
+    assert(book.size == 8 * 16)
+
+    val source = MemoryStream[(Long, Seq[Float])]
+    val got = collection.mutable.Map[(Long, Long), (Long, Long)]()
+    val q = StreamOps.streamPqEncode(source.toDS(), book)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.PqCode], _: Long) =>
+        b.collect().foreach(r => got((r.vec_id, r.sub)) = (r.code, r.d2)); ()
+      }.start()
+    try {
+      val rows = embs.select(col("vec_id"), col("embedding"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+      source.addData(rows.take(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+      source.addData(rows.drop(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(got.size == batch.size)
+    val mismatches = batch.collect {
+      case (k, b) if got(k) != b => s"$k: stream ${got(k)} batch $b"
+    }
+    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
+    assert(got.values.map(_._1).toSet.size > 1, "more than one code in use")
+  }
+
+  test("s40 streaming SQ8 encoding is row-exact vs batch q82 under the frozen grid; novel inputs clamp") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val embs = Tables.embeddings(spark, sfDir)
+    val batch = graft.operators.Similarity.sq8Codes(embs)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val grid = graft.operators.Similarity.sq8Grid(embs)
+    assert(grid.size == 64)
+
+    def run(rows: Seq[(Long, Seq[Float])], cut: Int): Map[(Long, Long), (Long, Long)] = {
+      val source = MemoryStream[(Long, Seq[Float])]
+      val got = collection.mutable.Map[(Long, Long), (Long, Long)]()
+      val q = StreamOps.streamSq8Encode(source.toDS(), grid)
+        .writeStream.outputMode(OutputMode.Append())
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Sq8Code], _: Long) =>
+          b.collect().foreach(r => got((r.vec_id, r.pos)) = (r.code, r.err)); ()
+        }.start()
+      try {
+        source.addData(rows.take(cut): _*)
+        q.processAllAvailable()
+        source.addData(rows.drop(cut): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      got.toMap
+    }
+
+    val rows = embs.select(col("vec_id"), col("embedding"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    val got = run(rows, rows.length / 2)
+    assert(got.size == batch.size)
+    val mism = batch.collect { case (k, b) if got(k) != b => s"$k: stream ${got(k)} batch $b" }
+    assert(mism.isEmpty, mism.take(5).mkString("; "))
+
+    // novel out-of-grid vectors clamp to the byte ends, never throw:
+    // far below every dim -> code 0 (negative residual), far above ->
+    // code 255 (positive residual)
+    val novel = run(Seq((-1L, Seq.fill(64)(-100.0f)), (-2L, Seq.fill(64)(100.0f))), 1)
+    assert(novel.size == 128)
+    assert(novel.collect { case ((-1L, _), (c, e)) => c == 0L && e < 0L }.forall(identity))
+    assert(novel.collect { case ((-2L, _), (c, e)) => c == 255L && e > 0L }.forall(identity))
+  }
+
+  test("s31 streaming BPE encoding is row-exact vs batch q68 under the frozen rules") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val d = Tables.documents(spark, sfDir)
+    val batch = graft.operators.Bpe.bpeEncode(d)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val rules = graft.operators.Bpe.bpeTrain(d)
+      .collect().sortBy(_.getLong(0)).map(r => (r.getString(1), r.getString(2))).toSeq
+    assert(rules.size == 24)
+
+    val source = MemoryStream[(Long, String)]
+    val got = collection.mutable.Map[Long, (Long, String)]()
+    val q = StreamOps.streamBpeEncode(source.toDS(), rules)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.BpeDoc], _: Long) =>
+        b.collect().foreach(r => got(r.doc_id) = (r.n_subwords, r.subtext)); ()
+      }.start()
+    try {
+      val rows = d.select(col("doc_id"), col("text"))
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      source.addData(rows.take(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+      source.addData(rows.drop(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(got.size == batch.size)
+    val mismatches = batch.collect {
+      case (id, b) if got(id) != b => s"$id: stream ${got(id)._1} batch ${b._1}"
+    }
+    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
+    assert(got.values.exists(_._1 > 0L))
+  }
+
   test("s09+s04 source re-delivery lands exactly-once through the keyed sink") {
     import spark.implicits._
     import graft.streaming.{ExactlyOnceSink, KafkaIO}
@@ -893,6 +1104,42 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.table("s44_out").collect().map(_.toString).sorted.toSeq == batch)
   }
 
+  test("s35 streaming NB classification is row-exact vs batch q72 under the frozen model") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    val d = Tables.documents(spark, sfDir)
+    val batch = graft.operators.Classifier.nbClassify(d)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    val model = graft.operators.Classifier.nbModel(d)
+
+    val source = MemoryStream[(Long, String)]
+    val got = collection.mutable.Map[Long, (Long, Long, Long, Long)]()
+    val q = StreamOps.streamNbClassify(source.toDS(), model)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.NbScore], _: Long) =>
+        b.collect().foreach(r =>
+          got(r.doc_id) = (r.is_train, r.n_feats, r.score_q16, r.pred)); ()
+      }.start()
+    try {
+      val rows = d.select(col("doc_id"), col("text"))
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      source.addData(rows.take(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+      source.addData(rows.drop(rows.length / 2).toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(got.size == batch.size)
+    val mismatches = batch.collect {
+      case (id, b) if got(id) != b => s"$id: stream ${got(id)} batch $b"
+    }
+    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
+    // both classes actually predicted (the model is not a constant)
+    assert(got.values.exists(_._4 == 1L) && got.values.exists(_._4 == 0L))
+  }
+
   test("s23 streaming restore: multi-batch changelog converges row-exact to the batch LWW fold") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -982,6 +1229,344 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** Render s24's micros-typed output through the SAME Spark
+    * date_format/session-tz path batch q34 uses, so the parity compare
+    * is string-identical end to end. */
+  private def renderAsof(outs: Seq[StreamOps.AsofOut]): Seq[String] = {
+    import spark.implicits._
+    outs.toDS()
+      .select(col("event_id"), col("user_id"),
+        date_format(timestamp_micros(col("event_ts_us")), "yyyy-MM-dd HH:mm:ss").as("event_ts"),
+        col("last_orderkey"),
+        date_format(timestamp_micros(col("last_orderdate_us")), "yyyy-MM-dd").as("last_orderdate"))
+      .collect().map(_.toString).sorted.toSeq
+  }
+
+  private def asofFeeds(): (Seq[StreamOps.AsofInput], Seq[StreamOps.AsofInput], Seq[String]) = {
+    import spark.implicits._
+    val events = Tables.events(spark, sfDir)
+    val orders = Tables.orders(spark, sfDir)
+    // RAW orders as quotes — the state fold performs batch q34's
+    // per-(user, date) max-orderkey compaction itself
+    val quotes = orders.select(col("o_custkey").as("user_id"), lit(0).as("side"),
+        unix_micros(col("o_orderdate").cast("timestamp")).as("t_us"),
+        lit(0L).as("event_id"), col("o_orderkey").as("orderkey"))
+      .as[StreamOps.AsofInput].collect().toSeq
+    val queries = events.select(col("user_id"), lit(1).as("side"),
+        unix_micros(col("ts")).as("t_us"), col("event_id"),
+        lit(0L).as("orderkey"))
+      .as[StreamOps.AsofInput].collect().toSeq
+    val batch = graft.operators.AsofJoin.eventsAsofOrders(events, orders)
+      .collect().map(_.toString).sorted.toSeq
+    (quotes, queries, batch)
+  }
+
+  private def runAsof(batches: Seq[Seq[StreamOps.AsofInput]]): Seq[StreamOps.AsofOut] = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val buf = collection.mutable.ArrayBuffer[StreamOps.AsofOut]()
+    val source = MemoryStream[StreamOps.AsofInput]
+    val q = StreamOps.streamAsofJoin(source.toDS())
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.AsofOut], _: Long) =>
+        buf ++= b.collect(); ()
+      }.start()
+    try batches.foreach { rows =>
+      if (rows.nonEmpty) { source.addData(rows: _*); q.processAllAvailable() }
+    } finally q.stop()
+    buf.toSeq
+  }
+
+  test("s24 streaming as-of join: single-batch run row-exact vs batch q34") {
+    val (quotes, queries, batch) = asofFeeds()
+    assert(renderAsof(runAsof(Seq(quotes ++ queries))) == batch)
+  }
+
+  test("s24 streaming as-of join: dims-first multi-batch run row-exact vs batch q34") {
+    val (quotes, queries, batch) = asofFeeds()
+    // quotes bootstrap first (the GlobalKTable order), then events
+    // arrive across two batches with every user's queries interleaved
+    val (qa, qb) = queries.partition(_.event_id % 2 == 0)
+    assert(renderAsof(runAsof(Seq(quotes, qa, qb))) == batch)
+  }
+
+  test("s24 as-of contract: inclusive ties, same-date compaction, no-quote nulls, and the as-of-arrival divergence") {
+    import StreamOps.AsofInput
+    def quote(u: Long, t: Long, ok: Long) = AsofInput(u, 0, t, 0L, ok)
+    def query(u: Long, t: Long, eid: Long) = AsofInput(u, 1, t, eid, 0L)
+    val out = runAsof(Seq(
+      // batch 1: user 1's book {100→10}; event 1 at t=200 matches it;
+      // user 2 has same-date quotes 5 and 7 (compaction → 7) and an
+      // EQUAL-time event (inclusive as-of); user 9 has no quotes
+      Seq(quote(1, 100, 10), query(1, 200, 1),
+        quote(2, 500, 5), quote(2, 500, 7), query(2, 500, 2),
+        query(9, 50, 3)),
+      // batch 2: a LATE quote (t=150) that event 1 would have matched,
+      // and a new event that must see it
+      Seq(quote(1, 150, 20), query(1, 200, 4))))
+    val byEvent = out.groupBy(_.event_id)
+    assert(byEvent.values.forall(_.size == 1), "append mode: one row per event, ever")
+    assert(byEvent(1L).head == StreamOps.AsofOut(1, 1, 200, Some(10), Some(100)),
+      "event 1 keeps its as-of-ARRIVAL answer — the late quote does not retract it")
+    assert(byEvent(2L).head == StreamOps.AsofOut(2, 2, 500, Some(7), Some(500)),
+      "equal-time quote is visible (inclusive) and same-date compaction keeps max orderkey")
+    assert(byEvent(3L).head == StreamOps.AsofOut(3, 9, 50, None, None))
+    assert(byEvent(4L).head == StreamOps.AsofOut(4, 1, 200, Some(20), Some(150)),
+      "a later event DOES see the late quote")
+  }
+
+  // -- s48 streaming SCD2 ----------------------------------------------
+
+  private def fmtUs(us: Long): String =
+    java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L))
+      .atZone(java.time.ZoneOffset.UTC)
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+
+  test("s48 streaming SCD2: time-ordered batches converge row-exact to batch q92") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ev = Tables.events(spark, sfDir)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
+    // per-key-monotone split: global (ts_us, event_id) order chunked in 3
+    val all = ev.as[StreamOps.ChangelogEvent].collect()
+      .sortBy(e => (e.ts_us, e.event_id))
+    val batch = graft.operators.Restore.scd2History(Tables.events(spark, sfDir))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        ((Option(r.getString(2)), r.getString(3), Option(r.getString(4)), r.getBoolean(5))))
+      .toMap
+    val live = collection.mutable.Map[(Long, Long), (Option[String], String, Option[String], Boolean)]()
+    val source = MemoryStream[StreamOps.ChangelogEvent]
+    val q = StreamOps.streamScd2(source.toDS())
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Scd2Row], _: Long) =>
+        b.collect().foreach { r =>
+          live((r.user_id, r.version)) =
+            ((r.state, fmtUs(r.valid_from_us), r.valid_to_us.map(fmtUs), r.is_current))
+        }
+        ()
+      }.start()
+    try {
+      val n = all.length
+      Seq(all.slice(0, n / 3), all.slice(n / 3, 2 * n / 3), all.slice(2 * n / 3, n))
+        .foreach { chunk => source.addData(chunk.toIndexedSeq: _*); q.processAllAvailable() }
+    } finally q.stop()
+    assert(live.size == batch.size, s"${live.size} stream rows vs ${batch.size} batch")
+    batch.foreach { case (k, v) =>
+      assert(live.get(k).contains(v), s"key $k: stream ${live.get(k)} vs batch $v")
+    }
+  }
+
+  test("s48 streaming SCD2 contract: no-op re-assert, stale ignore, null transitions, ts ties") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import StreamOps.{ChangelogEvent, Scd2Row}
+    val live = collection.mutable.Map[(Long, Long), Scd2Row]()
+    val source = MemoryStream[ChangelogEvent]
+    val q = StreamOps.streamScd2(source.toDS())
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Row], _: Long) =>
+        b.collect().foreach(r => live((r.user_id, r.version)) = r)
+        ()
+      }.start()
+    try {
+      // user 1: a, a (no-op), b; user 2: x, null, null (one change),
+      // x again; user 3: same-ts tie folds by event_id (b then c)
+      source.addData(
+        ChangelogEvent(1L, 1L, 100L, "a", 0.0),
+        ChangelogEvent(1L, 2L, 200L, "a", 0.0),
+        ChangelogEvent(1L, 3L, 300L, "b", 0.0),
+        ChangelogEvent(2L, 1L, 100L, "x", 0.0),
+        ChangelogEvent(2L, 2L, 200L, null, 0.0),
+        ChangelogEvent(2L, 3L, 300L, null, 0.0),
+        ChangelogEvent(2L, 4L, 400L, "x", 0.0),
+        ChangelogEvent(3L, 11L, 500L, "b", 0.0),
+        ChangelogEvent(3L, 10L, 500L, "a", 0.0))
+      q.processAllAvailable()
+      // user 1: a[100,300) closed, b[300,-) open — the no-op absorbed
+      assert(live((1L, 1L)) == Scd2Row(1L, 1L, Some("a"), 100L, Some(300L), false))
+      assert(live((1L, 2L)) == Scd2Row(1L, 2L, Some("b"), 300L, None, true))
+      // user 2: x -> null -> x (null==null is NO change)
+      assert(live((2L, 1L)) == Scd2Row(2L, 1L, Some("x"), 100L, Some(200L), false))
+      assert(live((2L, 2L)) == Scd2Row(2L, 2L, None, 200L, Some(400L), false))
+      assert(live((2L, 3L)) == Scd2Row(2L, 3L, Some("x"), 400L, None, true))
+      // user 3: ts tie 500 folds event_id 10 then 11 -> a then b
+      assert(live((3L, 1L)) == Scd2Row(3L, 1L, Some("a"), 500L, Some(500L), false))
+      assert(live((3L, 2L)) == Scd2Row(3L, 2L, Some("b"), 500L, None, true))
+
+      // stale replay: user 1 gets an event BELOW the high-water mark —
+      // ignored, history unchanged (the documented no-retract class)
+      val before = live.toMap
+      source.addData(ChangelogEvent(1L, 1L, 150L, "z", 0.0))
+      q.processAllAvailable()
+      // only the open row may re-emit, identical
+      assert(live.toMap == before, "stale event must not rewrite history")
+
+      // in-order continuation across batches: b -> c closes v2
+      source.addData(ChangelogEvent(1L, 9L, 900L, "c", 0.0))
+      q.processAllAvailable()
+      assert(live((1L, 2L)) == Scd2Row(1L, 2L, Some("b"), 300L, Some(900L), false))
+      assert(live((1L, 3L)) == Scd2Row(1L, 3L, Some("c"), 900L, None, true))
+    } finally q.stop()
+  }
+
+  test("s48 streaming SCD2: a key's initial null run opens NO version (batch q92 parity)") {
+    // r12 ADVICE: opening version 1 on a null first event diverged from
+    // batch q92 (whose null <=> null lag filter drops the initial null
+    // run) and shifted every later version number for the key
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import StreamOps.{ChangelogEvent, Scd2Row}
+    val live = collection.mutable.Map[(Long, Long), Scd2Row]()
+    val source = MemoryStream[ChangelogEvent]
+    val q = StreamOps.streamScd2(source.toDS())
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Row], _: Long) =>
+        b.collect().foreach(r => live((r.user_id, r.version)) = r)
+        ()
+      }.start()
+    try {
+      // user 4: null, null, y, null — versions must be y=1 (from ts 300),
+      // null=2 (the POST-run null IS a change); user 5: all nulls, no rows
+      source.addData(
+        ChangelogEvent(4L, 1L, 100L, null, 0.0),
+        ChangelogEvent(4L, 2L, 200L, null, 0.0),
+        ChangelogEvent(5L, 1L, 100L, null, 0.0))
+      q.processAllAvailable()
+      assert(live.isEmpty, "initial null runs must emit nothing")
+      source.addData(
+        ChangelogEvent(4L, 3L, 300L, "y", 0.0),
+        ChangelogEvent(4L, 4L, 400L, null, 0.0),
+        ChangelogEvent(5L, 2L, 200L, null, 0.0))
+      q.processAllAvailable()
+      assert(live((4L, 1L)) == Scd2Row(4L, 1L, Some("y"), 300L, Some(400L), false))
+      assert(live((4L, 2L)) == Scd2Row(4L, 2L, None, 400L, None, true))
+      assert(!live.keySet.exists(_._1 == 5L), "an all-null key emits no versions")
+      // batch parity on the same log: version numbers and intervals equal
+      val batch = graft.operators.Restore.scd2History(
+        Seq[(Long, Long, Long, String)](
+            (4L, 1L, 100L, null), (4L, 2L, 200L, null), (4L, 3L, 300L, "y"),
+            (4L, 4L, 400L, null), (5L, 1L, 100L, null), (5L, 2L, 200L, null))
+          .map { case (u, e, t, s) =>
+            (u, e, new java.sql.Timestamp(t), s, 0.0) } // ms scale: order matches
+          .toDF("user_id", "event_id", "ts", "event_type", "value"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> Option(r.getString(2))).toMap
+      assert(batch.keySet == live.keySet.toSet, "stream/batch version sets must agree")
+      batch.foreach { case (k, st) => assert(live(k).state == st) }
+    } finally q.stop()
+  }
+
+  // -- s53 late-data audit (dead-letter accounting over the s48 fold) ----
+
+  test("s53 late audit: planted late arrivals are counted and attributed exactly, with the rejecting HWM") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import StreamOps.{ChangelogEvent, Scd2Emit}
+    val versions = collection.mutable.Map[(Long, Long), Scd2Emit]()
+    val drops = collection.mutable.ArrayBuffer[Scd2Emit]()
+    val source = MemoryStream[ChangelogEvent]
+    val q = StreamOps.streamScd2Audited(source.toDS())
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Emit], _: Long) =>
+        b.collect().foreach { e =>
+          if (e.kind == "version") versions((e.user_id, e.version)) = e
+          else drops += e
+        }; ()
+      }.start()
+    try {
+      // batch 1: in-order history for user 1 — HWM ends at (300, 3)
+      source.addData(
+        ChangelogEvent(1L, 1L, 100L, "a", 0.0),
+        ChangelogEvent(1L, 3L, 300L, "b", 0.0))
+      q.processAllAvailable()
+      assert(drops.isEmpty, "in-order batch must drop nothing")
+      // batch 2: two LATE arrivals below the HWM + one on-time change;
+      // in-batch fold order is (50, 9) then (150, 7) then (900, 4)
+      source.addData(
+        ChangelogEvent(1L, 4L, 900L, "c", 0.0),
+        ChangelogEvent(1L, 7L, 150L, "z", 0.0),
+        ChangelogEvent(1L, 9L, 50L, null, 0.0))
+      q.processAllAvailable()
+      // exact accounting: both late rows audited, attributed to the
+      // (300, 3) HWM that rejected them (the on-time c@900 folds AFTER
+      // them in (ts, id) order, so it is not the rejector)
+      assert(drops.size == 2, s"expected 2 dead-letter rows, got ${drops.size}")
+      val d = drops.sortBy(_.ts_us)
+      assert(d(0).event_id == 9L && d(0).ts_us == 50L && d(0).state.isEmpty &&
+        d(0).hwm_ts_us == 300L && d(0).hwm_event_id == 3L)
+      assert(d(1).event_id == 7L && d(1).ts_us == 150L && d(1).state.contains("z") &&
+        d(1).hwm_ts_us == 300L && d(1).hwm_event_id == 3L)
+      // the history is exactly the on-time subset's: a, b, c
+      assert(versions((1L, 1L)).state.contains("a") && versions((1L, 2L)).state.contains("b"))
+      assert(versions((1L, 3L)).state.contains("c") && versions((1L, 3L)).is_current)
+      assert(!versions.keySet.exists(_._2 > 3L))
+    } finally q.stop()
+  }
+
+  test("s53 late audit: on a shuffled real-corpus feed, versions == batch q92 on the on-time subset and drops are the exact complement") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import StreamOps.{ChangelogEvent, Scd2Emit}
+    val ev = Tables.events(spark, sfDir)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
+      .as[StreamOps.ChangelogEvent].collect()
+    // a deterministic shuffle guarantees genuinely late cross-batch
+    // arrivals (events of one key land in earlier AND later batches
+    // out of time order)
+    val shuffled = new scala.util.Random(13L).shuffle(ev.toSeq)
+    val versions = collection.mutable.Map[(Long, Long), (Option[String], Long, Option[Long], Boolean)]()
+    val dropped = collection.mutable.Set[Long]() // event_ids
+    val source = MemoryStream[ChangelogEvent]
+    val q = StreamOps.streamScd2Audited(source.toDS())
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Scd2Emit], _: Long) =>
+        b.collect().foreach { e =>
+          if (e.kind == "version")
+            versions((e.user_id, e.version)) =
+              ((e.state, e.valid_from_us, e.valid_to_us, e.is_current))
+          else dropped += e.event_id
+        }; ()
+      }.start()
+    try {
+      val n = shuffled.length
+      Seq(shuffled.slice(0, n / 3), shuffled.slice(n / 3, 2 * n / 3), shuffled.slice(2 * n / 3, n))
+        .foreach { chunk => source.addData(chunk.toIndexedSeq: _*); q.processAllAvailable() }
+    } finally q.stop()
+    assert(dropped.nonEmpty, "the shuffled feed must actually produce late arrivals")
+    // batch q92 parity ON THE ON-TIME SUBSET: replay the batch operator
+    // over exactly the accepted events — the stream's history must match
+    val accepted = ev.filter(e => !dropped(e.event_id)).toSeq
+    val batch = graft.operators.Restore.scd2History(
+        accepted.map(e => (e.user_id, e.event_id, e.ts_us, e.event_type, e.value))
+          .toDF("user_id", "event_id", "ts_us", "event_type", "value")
+          .withColumn("ts", expr("timestamp_micros(ts_us)"))) // micros preserved
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> Option(r.getString(2))).toMap
+    assert(versions.keySet == batch.keySet,
+      s"stream ${versions.size} version rows vs batch ${batch.size} on the on-time subset")
+    batch.foreach { case (k, st) =>
+      assert(versions(k)._1 == st, s"key $k state: stream ${versions(k)._1} vs batch $st")
+    }
+    // the audited twin must not drift from the unaudited s48: same feed,
+    // same batching → identical version table (shared-fold guarantee)
+    val plain = collection.mutable.Map[(Long, Long), (Option[String], Long, Option[Long], Boolean)]()
+    val src2 = MemoryStream[ChangelogEvent]
+    val q2 = StreamOps.streamScd2(src2.toDS())
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.Scd2Row], _: Long) =>
+        b.collect().foreach(r => plain((r.user_id, r.version)) =
+          ((r.state, r.valid_from_us, r.valid_to_us, r.is_current))); ()
+      }.start()
+    try {
+      val n = shuffled.length
+      Seq(shuffled.slice(0, n / 3), shuffled.slice(n / 3, 2 * n / 3), shuffled.slice(2 * n / 3, n))
+        .foreach { chunk => src2.addData(chunk.toIndexedSeq: _*); q2.processAllAvailable() }
+    } finally q2.stop()
+    assert(plain.toMap == versions.toMap, "audited and unaudited twins must emit identical histories")
+  }
+
   // -- s49 streaming winnow / s50 streaming z-encode ---------------------
 
   test("s49 streaming winnow: the per-doc selection kernel unmodified on a stream, row-exact") {
@@ -1055,5 +1640,69 @@ class StreamingSpec extends AnyFunSuite {
       "over-range key must clamp to the (pmax, smax) encode")
     assert(got((999992L, 1)) == edges(1),
       "under-range key must clamp to the (pmin, smin) encode")
+  }
+
+  test("s52 streaming k-anonymity: group table converges; release is monotone") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val cust = Tables.customer(spark, sfDir)
+      .select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal")
+      .as[(Long, Int, String, Double)].collect()
+      .map(r => (r._1, r._2.toLong, r._3, r._4))
+    val expected = cust.groupBy(r => (r._2, r._3, math.floor(r._4 / 1000.0).toLong))
+      .map { case (k, rows) => k -> rows.length.toLong }
+    val live = collection.mutable.Map[(Long, String, Long), (Long, Boolean)]()
+    val flips = collection.mutable.ArrayBuffer[(Long, String, Long)]()
+    val source = MemoryStream[(Long, Long, String, Double)]
+    val q = StreamOps.streamKanonGroups(source.toDS(), k = 5)
+      .writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.KanonGroup], _: Long) =>
+        b.collect().foreach { g =>
+          val key = (g.nk, g.seg, g.bb)
+          live.get(key).foreach { case (_, wasReleased) =>
+            if (wasReleased && !g.released) flips += key
+          }
+          live(key) = ((g.group_size, g.released))
+        }
+        ()
+      }.start()
+    try cust.grouped(cust.length / 3 + 1).foreach { ch =>
+      source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
+    } finally q.stop()
+    assert(flips.isEmpty, s"release must be monotone, saw un-releases: $flips")
+    assert(live.view.mapValues(_._1).toMap == expected,
+      "final group sizes must equal the batch QI group table")
+    live.foreach { case (k, (n, released)) =>
+      assert(released == (n >= 5), s"group $k disposition wrong at n=$n")
+    }
+  }
+
+  test("s56 streaming unigram encode equals batch q101b under shuffled multi-batch arrival") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamOps
+    import graft.operators.Unigram
+    val docs = Tables.documents(spark, sfDir)
+    val batch = Unigram.unigramEncode(docs).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
+    val model = Unigram.unigramFit(docs)
+    val feed = docs.select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    val rng = new scala.util.Random(56L)
+    val shuffled = rng.shuffle(feed.toVector).toArray
+    val source = MemoryStream[(Long, String)]
+    val got = collection.mutable.Map[Long, (Long, String)]()
+    val q = StreamOps.streamUnigramEncode(source.toDS(), model)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamOps.UnigramSegDoc], _: Long) =>
+        b.collect().foreach(d => got(d.doc_id) = ((d.n_pieces, d.subtext))); ()
+      }.start()
+    try {
+      val third = shuffled.length / 3 + 1
+      shuffled.grouped(third).foreach { ch =>
+        source.addData(ch.toIndexedSeq: _*); q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(got.toMap == batch, "stateless encoder must equal batch q101b per arrival")
   }
 }
